@@ -24,9 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.functions.distance import l1_distance, l2_distance
-from dbscan_pyspark_spark.operators.components import connected_components
-from dbscan_pyspark_spark.operators.eps_join import _dim_of, _metric_fn, eps_self_join
+from dbscan_pyspark_spark.operators.dbscan import _rep_labels
+from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
 
 
 def cluster_centroids(
@@ -197,102 +196,6 @@ def information_loss(
     )
 
 
-def _sweep_assignments_driver(
-    pairs_pdf, reps_pdf, eps_values, min_pts, min_cluster_size, id_col
-):
-    """Solve EVERY ε level's cluster assignment in one driver pass (a
-    Kruskal sweep) over the max-ε pair relation.
-
-    Equivalence to the per-ε chain (filter → weighted counts → cores →
-    core-incident edges → CC → component masses):
-
-    - a rep's weighted neighbor count at ε is Σ{mult_b : d < ε}, which
-      only grows with ε, so core status is monotone: a is core at ε iff
-      ε > dthr(a), where dthr(a) = min{D : Σ{mult_b : d <= D} >= k};
-    - the per-ε edge set is {(a, b) : d < ε and a core}, so the
-      UNDIRECTED pair {a, b} is connected at ε iff
-      ε > max(d, min(dthr(a), dthr(b))) — its activation threshold;
-    - a rep participates (is CC-labeled) at ε iff some directed edge
-      touches it; the self-pair (a, a, d=0) the ε-join emits makes a
-      lone core participate at exactly ε > dthr(a), so participation is
-      "incident to an active pair" with no special cases;
-    - union-by-min-root union-find labels components with their min rep
-      id — the same labels connected_components produces.
-
-    Returns {ε: pandas DataFrame(id, cluster_id)} holding only the
-    CLUSTERED reps (callers left-join: absent = noise/edgeless)."""
-    import numpy as np
-    import pandas as pd
-
-    rid = reps_pdf[id_col].to_numpy(dtype="int64")
-    rmult = reps_pdf["_mult"].to_numpy(dtype="int64")
-    order = np.argsort(rid)
-    rid, rmult = rid[order], rmult[order]
-    n = len(rid)
-    ai = np.searchsorted(rid, pairs_pdf["a_id"].to_numpy(dtype="int64"))
-    bi = np.searchsorted(rid, pairs_pdf["b_id"].to_numpy(dtype="int64"))
-    d = pairs_pdf["distance"].to_numpy(dtype="float64")
-    m = pairs_pdf["_mult_b"].to_numpy(dtype="int64")
-
-    # dthr per rep: running weighted count up the sorted distance list
-    # (ties share a distance value, so the first row whose running sum
-    # reaches k carries exactly min{D : sum over d<=D >= k})
-    dthr = np.full(n, np.inf)
-    if len(d):
-        df = pd.DataFrame({"ai": ai, "d": d, "m": m}).sort_values(
-            ["ai", "d"], kind="mergesort"
-        )
-        cum = df.groupby("ai")["m"].cumsum()
-        hits = df.loc[cum >= min_pts].groupby("ai")["d"].first()
-        dthr[hits.index.to_numpy()] = hits.to_numpy()
-
-    # per-pair activation threshold and per-rep participation threshold
-    t = np.maximum(d, np.minimum(dthr[ai], dthr[bi]))
-    part = np.full(n, np.inf)
-    if len(t):
-        np.minimum.at(part, ai, t)
-        np.minimum.at(part, bi, t)
-
-    # Kruskal: union pairs by ascending threshold, snapshot per ε
-    eorder = np.argsort(t, kind="stable")
-    ai, bi, t = ai[eorder], bi[eorder], t[eorder]
-    parent = np.arange(n)
-    out = {}
-    lo_edge = 0
-    for eps in sorted(set(float(e) for e in eps_values)):
-        hi_edge = int(np.searchsorted(t, eps, side="left"))  # t < eps
-        bu, bv = ai[lo_edge:hi_edge], bi[lo_edge:hi_edge]
-        lo_edge = hi_edge
-        while True:
-            while True:  # full path compression (pointer jumping)
-                grand = parent[parent]
-                if np.array_equal(grand, parent):
-                    break
-                parent = grand
-            pu, pv = parent[bu], parent[bv]
-            hooks = pu != pv
-            if not hooks.any():
-                break
-            lo = np.minimum(pu[hooks], pv[hooks])
-            hi = np.maximum(pu[hooks], pv[hooks])
-            np.minimum.at(parent, hi, lo)  # min root survives the merge
-        participating = part < eps
-        mass = np.bincount(
-            parent[participating], weights=rmult[participating],
-            minlength=n,
-        )
-        keep = participating & (mass[parent] >= min_cluster_size)
-        cid = rid[parent[keep]]
-        kid = rid[keep]
-        if min_cluster_size <= 1:
-            # edgeless reps form their own singleton clusters
-            solo = ~participating
-            kid = np.concatenate([kid, rid[solo]])
-            cid = np.concatenate([cid, rid[solo]])
-        out[eps] = pd.DataFrame({id_col: kid, "cluster_id": cid})
-    return out
-
-
 def eps_sweep(
     points: DataFrame,
     eps_values: list[float],
@@ -302,17 +205,17 @@ def eps_sweep(
     features: str = "features",
     id_col: str = "id",
     dim: int | None = None,
-    driver_threshold: int = 5_000_000,
 ) -> tuple[DataFrame, float]:
     """Sweep ε over ``eps_values`` (the reference's outer loop,
     ``DBSCAN.py:158``), computing the pair set ONCE at max ε.
 
     Scale design: the whole sweep runs on the *contracted* point set
     (distinct feature vectors weighted by multiplicity — see dbscan.py):
-    one grid join at max ε over reps, then per ε only filters, weighted
-    aggregations and a CC fixpoint on the rep graph. Per-point metrics
-    are exact because duplicates share features:
-    Σ_points dist = Σ_reps mult·dist, and centroids are
+    one grid join at max ε over reps, then ``dbscan``'s labeling core
+    labels every ε level (one driver pass up to its pair bound, a
+    distributed chain per ε above it), and per ε only weighted
+    aggregations follow. Per-point metrics are exact because duplicates
+    share features: Σ_points dist = Σ_reps mult·dist, and centroids are
     multiplicity-weighted means.
 
     Returns (metrics DataFrame with one row per ε, best_eps) where best
@@ -324,182 +227,102 @@ def eps_sweep(
     if dim is None:
         dim = _dim_of(points, features)
     dist = _metric_fn(metric, dim)
-    max_eps = max(eps_values)
     spark = points.sparkSession
 
-    # scalar per-dimension group keys — see dbscan.py's contraction note
-    from dbscan_pyspark_spark.operators.eps_join import _contract_key_cols
-
-    _kc = [f"_f{i}" for i in range(dim)]
-    reps = (
-        points.select(F.col(id_col), *_contract_key_cols(features, dim))
-        .groupBy(*_kc)
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_mult"))
-        .select(
-            F.array(*[F.col(k) for k in _kc]).alias(features),
-            F.col(id_col),
-            F.col("_mult"),
-        )
-        .persist()
-    )
-    from dbscan_pyspark_spark.operators.eps_join import eps_join
-
-    all_pairs = (
-        eps_join(reps, reps, max_eps, metric=metric, features=features,
-                 id_col=id_col, dim=dim, payload_b=["_mult"])
-        .withColumnRenamed("b__mult", "_mult_b")
-        .persist()
-    )
+    reps = _contract(points, features, id_col, dim).persist()
+    all_pairs = eps_join(
+        reps, reps, max(eps_values), metric=metric, features=features,
+        id_col=id_col, dim=dim, payload_b=["_mult"],
+    ).persist()
     n_total = points.count()
     inf = float("inf")
 
-    # Kruskal sweep (guide §1.2 "the distributed algorithm"): when the
-    # max-ε pair relation fits the driver (same 5M bound as
-    # connected_components' union-find fast path), ONE collect + one
-    # incremental union-find pass yields every ε level's assignment —
-    # replacing each ε's counts/cores/edges/CC/sizes job chain. Metrics
-    # still run through the unchanged Spark aggregations below, so the
-    # declared query computes exactly what it did. Larger pair sets
-    # fall back to the per-ε distributed chain.
-    label_pdfs = None
-    if driver_threshold > 0 and all_pairs.count() <= driver_threshold:
-        try:
-            label_pdfs = _sweep_assignments_driver(
-                all_pairs.select("a_id", "b_id", "distance", "_mult_b").toPandas(),
-                reps.select(id_col, "_mult").toPandas(),
-                eps_values, min_pts, min_cluster_size, id_col,
-            )
-        except ImportError:  # numpy/pandas-free env: distributed path
-            label_pdfs = None
-
     def _one_eps(eps):
-            # one ε's labels + weighted metrics — unchanged math;
-            # bodies for different ε run concurrently (guide §2.6: the
-            # per-ε chain is many small dependent jobs, so overlapping
-            # sweeps hides per-job scheduling latency; 2-3 in flight)
-            if label_pdfs is not None:
-                lab = spark.createDataFrame(
-                    label_pdfs[float(eps)],
-                    f"{id_col} long, cluster_id long",
-                )
-                rep_labels = (
-                    reps.select(id_col, features, "_mult")
-                    .join(lab, id_col, "left")
-                    .persist()
-                )
-            else:
-                pairs = all_pairs.where(F.col("distance") < F.lit(float(eps)))
-                counts = pairs.groupBy("a_id").agg(F.sum("_mult_b").alias("n"))
-                cores = counts.where(F.col("n") >= min_pts).select(
-                    F.col("a_id").alias("core_id")
-                )
-                edges = pairs.join(cores, pairs["a_id"] == cores["core_id"]).select(
-                    F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-                )
-                participating = (
-                    edges.select(F.col("src").alias(id_col))
-                    .union(edges.select(F.col("dst").alias(id_col)))
-                    .distinct()
-                )
-                labels = connected_components(
-                    edges, vertices=participating, id_col=id_col
-                )
-                sizes = (
-                    labels.join(reps.select(id_col, "_mult"), id_col)
-                    .groupBy("component")
-                    .agg(F.sum("_mult").alias("_n"))
-                )
-                # reps in the graph: cluster if component mass >= k, else
-                # noise. Edgeless reps: every original row is its own
-                # singleton component -> noise whenever
-                # min_cluster_size > 1.
-                rep_labels = (
-                    reps.select(id_col, features, "_mult")
-                    .join(
-                        labels.join(sizes, "component").select(
-                            id_col,
-                            F.when(
-                                F.col("_n") >= min_cluster_size,
-                                F.col("component"),
-                            ).alias("cluster_id"),
-                            F.lit(True).alias("_in_graph"),
-                        ),
-                        id_col,
-                        "left",
-                    )
-                    .select(
-                        id_col,
-                        features,
-                        "_mult",
-                        F.when(
-                            F.col("_in_graph").isNull()
-                            & F.lit(min_cluster_size <= 1),
-                            F.col(id_col),
-                        )
-                        .otherwise(F.col("cluster_id"))
-                        .alias("cluster_id"),
-                    )
-                    .persist()
-                )
+        # one ε's labels + weighted metrics; bodies for different ε
+        # run concurrently (guide §2.6: the per-ε chain is many small
+        # dependent jobs, so overlapping sweeps hides per-job
+        # scheduling latency; 2-3 in flight). An unlabeled rep with
+        # min_cluster_size <= 1 is edgeless: each of its rows is a
+        # singleton cluster at the rep's point.
+        solo = F.col("cluster_id").isNull() & F.lit(min_cluster_size <= 1)
+        rep_labels = (
+            reps.join(labels_at(eps), id_col, "left")
+            .select(
+                id_col,
+                features,
+                "_mult",
+                F.when(solo, F.col(id_col))
+                .otherwise(F.col("cluster_id"))
+                .alias("cluster_id"),
+                solo.alias("_solo"),
+            )
+            .persist()
+        )
 
-            clustered = rep_labels.where(F.col("cluster_id").isNotNull())
+        clustered = rep_labels.where(F.col("cluster_id").isNotNull())
 
-            # weighted centroids
-            cents = (
-                clustered.groupBy("cluster_id")
-                .agg(
-                    *[
-                        (
-                            F.sum(F.col(features)[i] * F.col("_mult"))
-                            / F.sum("_mult")
-                        ).alias(f"_c{i}")
-                        for i in range(dim)
-                    ]
-                )
-                .select(
-                    "cluster_id",
-                    F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
-                )
+        # weighted centroids
+        cents = (
+            clustered.groupBy("cluster_id")
+            .agg(
+                *[
+                    (
+                        F.sum(F.col(features)[i] * F.col("_mult"))
+                        / F.sum("_mult")
+                    ).alias(f"_c{i}")
+                    for i in range(dim)
+                ]
             )
-            cluster_agg = clustered.join(cents, "cluster_id").agg(
-                F.count_distinct("cluster_id").alias("n_clusters"),
-                F.sum(F.col("_mult") * dist(features, "centroid")).alias("err"),
+            .select(
+                "cluster_id",
+                F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
             )
-            noise = rep_labels.where(F.col("cluster_id").isNull())
-            noise_agg = (
-                assign_nearest(
-                    noise, cents, metric=metric, features=features,
-                    id_col=id_col, dim=dim,
-                )
-                .join(noise.select(id_col, "_mult"), id_col)
-                .agg(
-                    F.coalesce(F.sum("_mult"), F.lit(0)).alias("n_noise"),
-                    F.coalesce(F.sum(F.col("_mult") * F.col("distance")), F.lit(0.0)).alias("nerr"),
-                )
+        )
+        cluster_agg = clustered.join(cents, "cluster_id").agg(
+            (
+                F.count_distinct(F.when(~F.col("_solo"), F.col("cluster_id")))
+                + F.coalesce(F.sum(F.when(F.col("_solo"), F.col("_mult"))), F.lit(0))
+            ).alias("n_clusters"),
+            F.sum(F.col("_mult") * dist(features, "centroid")).alias("err"),
+        )
+        noise = rep_labels.where(F.col("cluster_id").isNull())
+        noise_agg = (
+            assign_nearest(
+                noise, cents, metric=metric, features=features,
+                id_col=id_col, dim=dim,
             )
-            # ONE action per ε: both 1-row aggregates ride a single
-            # crossJoin job (replacing isEmpty + two .first()s — the
-            # per-ε cost is job-scheduling latency, not data)
-            stats = cluster_agg.crossJoin(noise_agg).first()
-            rep_labels.unpersist()
-            if not stats["n_clusters"]:
-                # zero clusters at this ε: every original row is noise
-                # and there is no centroid to measure error against
-                return (float(eps), 0, n_total, 0.0, inf, inf)
-            ce = float(stats["err"] or 0.0)
-            ne = float(stats["nerr"] or 0.0)
-            return (
-                float(eps),
-                int(stats["n_clusters"]),
-                int(stats["n_noise"]),
-                ce,
-                ne,
-                ce + ne,
+            .join(noise.select(id_col, "_mult"), id_col)
+            .agg(
+                F.coalesce(F.sum("_mult"), F.lit(0)).alias("n_noise"),
+                F.coalesce(F.sum(F.col("_mult") * F.col("distance")), F.lit(0.0)).alias("nerr"),
             )
+        )
+        # ONE action per ε: both 1-row aggregates ride a single
+        # crossJoin job (replacing isEmpty + two .first()s — the
+        # per-ε cost is job-scheduling latency, not data)
+        stats = cluster_agg.crossJoin(noise_agg).first()
+        rep_labels.unpersist()
+        if not stats["n_clusters"]:
+            # zero clusters at this ε: every original row is noise
+            # and there is no centroid to measure error against
+            return (float(eps), 0, n_total, 0.0, inf, inf)
+        ce = float(stats["err"] or 0.0)
+        ne = float(stats["nerr"] or 0.0)
+        return (
+            float(eps),
+            int(stats["n_clusters"]),
+            int(stats["n_noise"]),
+            ce,
+            ne,
+            ce + ne,
+        )
 
     try:
         from dbscan_pyspark_spark.compat import concurrent_map_ordered
 
+        labels_at = _rep_labels(
+            reps, all_pairs, eps_values, min_pts, min_cluster_size, "cc", id_col
+        )
         rows = concurrent_map_ordered(_one_eps, sorted(eps_values))
     finally:
         all_pairs.unpersist()

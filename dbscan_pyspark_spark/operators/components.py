@@ -115,6 +115,31 @@ def _small_star(edges: DataFrame, pre_oriented: bool = False) -> DataFrame:
     )
 
 
+def _union(parent, u, v):
+    """Merge the index pairs (u[i], v[i]) into the forest ``parent`` by
+    vectorized hooking + pointer jumping (O(E) per round, O(log n)
+    rounds). Links always hook the larger root to the smaller, so every
+    root is its component's minimum index. Returns the fully
+    path-compressed forest (every entry points at its root)."""
+    import numpy as np
+
+    while True:
+        # full path compression (pointer jumping to fixpoint)
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+        pu, pv = parent[u], parent[v]
+        hooks = pu != pv
+        if not hooks.any():
+            return parent
+        lo = np.minimum(pu[hooks], pv[hooks])
+        hi = np.maximum(pu[hooks], pv[hooks])
+        # min-accumulate handles multiple hooks onto the same root
+        np.minimum.at(parent, hi, lo)
+
+
 def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
     """Small-graph fast path: collect edges, solve components on the
     driver, return pandas (id, component). Chosen adaptively by observed edge
@@ -122,12 +147,11 @@ def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
     whose *contracted* cluster graph fits in driver memory (it usually
     does: components, not rows) also takes this path.
 
-    Vectorized hooking + pointer jumping over numpy arrays (O(E) per
-    round, O(log n) rounds) — ~10x the per-edge Python union-find loop
-    at hundreds of thousands of edges. Duplicate / mirrored edges and
-    self-loops are all tolerated. Components are labeled by their
-    minimum member id: links always hook the larger dense index to the
-    smaller, and dense indices are id-sorted (np.unique)."""
+    Vectorized union-find over numpy arrays (``_union``) — ~10x the
+    per-edge Python union-find loop at hundreds of thousands of edges.
+    Duplicate / mirrored edges and self-loops are all tolerated.
+    Components are labeled by their minimum member id: ``_union`` keeps
+    the smaller root, and dense indices are id-sorted (np.unique)."""
     import numpy as np
     import pandas as pd
 
@@ -137,25 +161,7 @@ def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
     u = pdf["u"].to_numpy(dtype="int64", copy=False)
     v = pdf["v"].to_numpy(dtype="int64", copy=False)
     ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-    eu, ev = inv[: len(u)], inv[len(u):]
-    parent = np.arange(len(ids))
-
-    while True:
-        # full path compression (pointer jumping to fixpoint)
-        while True:
-            grand = parent[parent]
-            if np.array_equal(grand, parent):
-                break
-            parent = grand
-        pu, pv = parent[eu], parent[ev]
-        hooks = pu != pv
-        if not hooks.any():
-            break
-        lo = np.minimum(pu[hooks], pv[hooks])
-        hi = np.maximum(pu[hooks], pv[hooks])
-        # min-accumulate handles multiple hooks onto the same root
-        np.minimum.at(parent, hi, lo)
-
+    parent = _union(np.arange(len(ids)), inv[: len(u)], inv[len(u):])
     return pd.DataFrame({id_col: ids, "component": ids[parent]})
 
 

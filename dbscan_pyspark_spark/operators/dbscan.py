@@ -1,27 +1,28 @@
 """Distributed DBSCAN with the reference's exact cluster semantics.
 
-Pipeline (all DataFrame ops — SURVEY.md §3.1 rebuilt declaratively):
+Reference pipeline (``DBSCAN.py:157-181``):
 
-1. ε-pairs via the grid-bucketed self-join (not cartesian);
+1. ε-pairs via cartesian self-join, self-pairs included;
 2. core points: neighbor count (incl. self and duplicate rows) >=
    min_pts (``DBSCAN.py:161``, HAVING semantics — P3);
 3. edges core -> every ε-neighbor (``flattenPair``, ``DBSCAN.py:119-124,162``);
-4. undirected connected components over those edges, vertices = all
-   points (``DBSCAN.py:157,169-172``) — or, with ``variant='scc'``,
-   only mutual core-core edges survive, reproducing the directed
-   strongly-connected-components variant
+4. undirected connected components over those edges — or, with
+   ``variant='scc'``, only mutual core-core edges, reproducing the
+   directed strongly-connected-components variant
    (``DBSCAN-strongly-connected-component.py:174``): clusters are sets
    of mutually-reachable core points, border points fall out;
 5. components with >= min_cluster_size members are clusters, everything
    else is noise (``DBSCAN.py:176-181`` — the anonymity k, not min_pts).
 
-Scale design — duplicate contraction (on by default): points sharing a
-feature vector are interchangeable (same neighbors, same core status,
-same component), so the join/CC graph runs over *distinct* vectors
-weighted by multiplicity and labels are broadcast back by vector
-equality. Low-cardinality/quantized data (the anonymization use case —
-integer quasi-identifiers) contracts orders of magnitude; continuous
-data contracts to ~n and costs one extra groupBy. All counts use
+Here ``dbscan(eps)`` is the one-level case of the ε-sweep
+(``anonymize.eps_sweep``): both run one labeling core, ``_rep_labels``,
+over the grid-bucketed ε-join (not cartesian) of the *contracted* point
+set. Points sharing a feature vector are interchangeable (same
+neighbors, same core status, same component), so the join and the
+labeling run over distinct vectors weighted by multiplicity and labels
+go back to the points by vector equality. Quantized data (the
+anonymization use case) contracts orders of magnitude; continuous data
+contracts to ~n and costs one extra groupBy. All counts use
 multiplicities, so the result is bit-identical to the uncontracted run:
 neighbor counts still include self and duplicate rows, and an edgeless
 duplicate group is still |group| singleton components, not one
@@ -37,15 +38,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.components import connected_components
-from dbscan_pyspark_spark.operators.eps_join import eps_join
+from dbscan_pyspark_spark.operators.components import _union, connected_components
+from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, eps_join
 
-# pair_strategy='auto' crossover: below this rep count the join is cheap
-# and stage overhead dominates (symmetric measured faster at 58k reps,
-# sf0.1); above it per-pair distance compute dominates and the half-pair
-# join's 2x saving wins. A judgment call between the measured regimes —
-# revisit with a cluster-scale measurement.
-_HALF_PAIR_THRESHOLD = 500_000
+# Up to this many ε-pairs (the symmetric relation at the largest ε) the
+# labeling core solves every ε level in one driver pass; above it, it
+# runs the distributed per-ε chain. Same bound as connected_components'
+# union-find fast path: four 8-byte columns per pair, ~160 MB at the
+# bound.
+_DRIVER_PAIRS_THRESHOLD = 5_000_000
 
 # Below this rep count the label map (rep features + cluster id) is
 # broadcast for the final expansion join, so the original points are
@@ -55,6 +56,150 @@ _HALF_PAIR_THRESHOLD = 500_000
 # shuffle join keyed by the feature hash (cheap long key, exact
 # feature-equality residual).
 _BROADCAST_EXPAND_THRESHOLD = 1_000_000
+
+
+def _kruskal(pairs_pdf, reps_pdf, eps_values, min_pts, min_cluster_size, variant, id_col):
+    """Solve EVERY ε level's rep labels in one driver pass (a Kruskal
+    sweep) over the max-ε pair relation.
+
+    Equivalence to the per-ε chain (``_chain_labels``):
+
+    - a rep's weighted neighbor count at ε is Σ{mult_b : d < ε}, which
+      only grows with ε, so core status is monotone: a is core at ε iff
+      ε > dthr(a), where dthr(a) = min{D : Σ{mult_b : d <= D} >= k};
+    - the ``cc`` edge set at ε is {(a, b) : d < ε and a core}, so the
+      UNDIRECTED pair {a, b} is connected at ε iff
+      ε > max(d, min(dthr(a), dthr(b))) — its activation threshold;
+      ``scc`` keeps core-core pairs only, so there it is
+      ε > max(d, max(dthr(a), dthr(b)));
+    - a rep participates (is CC-labeled) at ε iff some active pair
+      touches it; the self-pair (a, a, d=0) the ε-join emits makes a
+      lone core participate at exactly ε > dthr(a), so participation
+      needs no special case;
+    - union-by-min-root union-find labels components with their min rep
+      id — the same labels connected_components produces.
+
+    Returns {ε: pandas DataFrame(id, cluster_id)} holding only the
+    clustered reps."""
+    import numpy as np
+    import pandas as pd
+
+    rid = reps_pdf[id_col].to_numpy(dtype="int64")
+    rmult = reps_pdf["_mult"].to_numpy(dtype="int64")
+    order = np.argsort(rid)
+    rid, rmult = rid[order], rmult[order]
+    n = len(rid)
+    ai = np.searchsorted(rid, pairs_pdf["a_id"].to_numpy(dtype="int64"))
+    bi = np.searchsorted(rid, pairs_pdf["b_id"].to_numpy(dtype="int64"))
+    d = pairs_pdf["distance"].to_numpy(dtype="float64")
+    m = pairs_pdf["b__mult"].to_numpy(dtype="int64")
+
+    # dthr per rep: running weighted count up the sorted distance list
+    # (ties share a distance value, so the first row whose running sum
+    # reaches k carries exactly min{D : sum over d<=D >= k})
+    dthr = np.full(n, np.inf)
+    if len(d):
+        df = pd.DataFrame({"ai": ai, "d": d, "m": m}).sort_values(
+            ["ai", "d"], kind="mergesort"
+        )
+        cum = df.groupby("ai")["m"].cumsum()
+        hits = df.loc[cum >= min_pts].groupby("ai")["d"].first()
+        dthr[hits.index.to_numpy()] = hits.to_numpy()
+
+    # per-pair activation threshold and per-rep participation threshold
+    core_of_pair = np.maximum if variant == "scc" else np.minimum
+    t = np.maximum(d, core_of_pair(dthr[ai], dthr[bi]))
+    part = np.full(n, np.inf)
+    if len(t):
+        np.minimum.at(part, ai, t)
+        np.minimum.at(part, bi, t)
+
+    # Kruskal: union pairs by ascending threshold, snapshot per ε
+    eorder = np.argsort(t, kind="stable")
+    ai, bi, t = ai[eorder], bi[eorder], t[eorder]
+    parent = np.arange(n)
+    out = {}
+    lo_edge = 0
+    for eps in sorted(set(float(e) for e in eps_values)):
+        hi_edge = int(np.searchsorted(t, eps, side="left"))  # t < eps
+        parent = _union(parent, ai[lo_edge:hi_edge], bi[lo_edge:hi_edge])
+        lo_edge = hi_edge
+        participating = part < eps
+        mass = np.bincount(
+            parent[participating], weights=rmult[participating], minlength=n
+        )
+        keep = participating & (mass[parent] >= min_cluster_size)
+        out[eps] = pd.DataFrame({id_col: rid[keep], "cluster_id": rid[parent[keep]]})
+    return out
+
+
+def _chain_labels(reps, pairs, eps, min_pts, min_cluster_size, variant, id_col):
+    """Distributed twin of ``_kruskal`` for one ε level: filter → weighted
+    counts → cores → core-incident edges (core-core for ``scc``) →
+    connected components → component masses. Returns
+    DataFrame(id, cluster_id) of the clustered reps."""
+    at_eps = pairs.where(F.col("distance") < F.lit(float(eps)))
+    cores = (
+        at_eps.groupBy("a_id")
+        .agg(F.sum("b__mult").alias("_n"))
+        .where(F.col("_n") >= F.lit(int(min_pts)))
+        .select(F.col("a_id").alias("_core"))
+    )
+    edges = at_eps.join(cores, at_eps["a_id"] == cores["_core"]).select(
+        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
+    )
+    if variant == "scc":
+        # directed mutual reachability == both orientations present ==
+        # core-core ε-pairs
+        edges = edges.intersect(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    # connected_components labels every edge participant, including
+    # cores whose only edge is their self-loop
+    labels = connected_components(edges, id_col=id_col)
+    mass = (
+        labels.join(reps.select(id_col, "_mult"), id_col)
+        .groupBy("component")
+        .agg(F.sum("_mult").alias("_n"))
+    )
+    return (
+        labels.join(mass, "component")
+        .where(F.col("_n") >= F.lit(int(min_cluster_size)))
+        .select(id_col, F.col("component").alias("cluster_id"))
+    )
+
+
+def _rep_labels(reps, pairs, eps_values, min_pts, min_cluster_size, variant, id_col):
+    """The labeling core of ``dbscan`` and ``eps_sweep``.
+
+    ``reps`` is the contraction (``_contract``) and ``pairs`` its
+    symmetric ε-join at max(eps_values) with ``keep_distance=True`` and
+    ``payload_b=["_mult"]``; the caller persists both. Returns a function
+    ε -> DataFrame(id, cluster_id) listing the clustered reps. A rep not
+    listed is noise, except that with ``min_cluster_size <= 1`` an
+    edgeless rep stands for one singleton cluster per original row.
+
+    Up to ``_DRIVER_PAIRS_THRESHOLD`` pairs every level is solved at once
+    by ``_kruskal`` on the driver; above it, or when the driver pass
+    fails (no numpy/pandas, driver memory, Arrow conversion), each call
+    runs the distributed ``_chain_labels``. Both give every component
+    its minimum rep id."""
+    spark = reps.sparkSession
+    if pairs.count() <= _DRIVER_PAIRS_THRESHOLD:
+        try:
+            pdfs = _kruskal(
+                pairs.select("a_id", "b_id", "distance", "b__mult").toPandas(),
+                reps.select(id_col, "_mult").toPandas(),
+                eps_values, min_pts, min_cluster_size, variant, id_col,
+            )
+            return lambda eps: spark.createDataFrame(
+                pdfs[float(eps)], f"{id_col} long, cluster_id long"
+            )
+        except (ImportError, MemoryError, ValueError, TypeError):
+            pass  # fall through to the distributed twin
+    return lambda eps: _chain_labels(
+        reps, pairs, eps, min_pts, min_cluster_size, variant, id_col
+    )
 
 
 def dbscan(
@@ -67,8 +212,6 @@ def dbscan(
     id_col: str = "id",
     dim: int | None = None,
     variant: str = "cc",
-    contract_duplicates: bool = True,
-    pair_strategy: str = "auto",
 ) -> DataFrame:
     """Cluster ``points`` -> DataFrame(id, cluster_id, is_noise).
 
@@ -77,211 +220,37 @@ def dbscan(
     NULL for noise. ``min_cluster_size`` defaults to ``min_pts`` and is
     the reference's k-anonymity threshold (``DBSCAN.py:47,176``).
 
-    ``pair_strategy`` — how the ε-pair relation is built (AQE-style
-    size-adaptive choice, measured not guessed):
-
-    - ``'symmetric'``: one join emitting both pair orientations. Fewer
-      stages; wins when duplicate contraction has already shrunk the
-      graph so the join is cheap and the CC fixpoint dominates
-      (A/B at sf0.1, 600k rows -> 58k reps: ~11.6s vs ~17.7s).
-    - ``'half'``: unique-pairs join (half the candidate build, half the
-      distance evaluations, (3^d+1)/2 probe-cell explode instead of
-      3^d) + narrow mirror maps. Wins when the rep set stays large —
-      continuous features at cluster scale — and per-pair compute, not
-      stage count, is the bottleneck.
-    - ``'auto'``: symmetric below ``_HALF_PAIR_THRESHOLD`` reps, half
-      above; the rep count is one cheap job over the already-persisted
-      contraction.
+    Runs the ε-sweep's labeling core at the single level ``eps`` (see
+    the module docstring), then expands rep labels to the points.
     """
     if min_cluster_size is None:
         min_cluster_size = min_pts
     if variant not in ("cc", "scc"):
         raise ValueError(f"variant must be 'cc' or 'scc', got {variant!r}")
-    if pair_strategy not in ("auto", "symmetric", "half"):
-        raise ValueError(
-            f"pair_strategy must be 'auto', 'symmetric' or 'half', got {pair_strategy!r}"
-        )
 
     # The input lineage (often a window/exchange-bearing view) feeds both
     # the contraction and the final expansion join — cache it once.
     points = points.persist()
-    if dim is None:
-        from dbscan_pyspark_spark.operators.eps_join import _dim_of
-
-        dim = _dim_of(points, features)
-
-    if contract_duplicates:
-        # Group by one SCALAR double column per dimension, not by the
-        # array: the array key runs an interpreted normalize lambda per
-        # row per aggregation pass, scalar keys stay in codegen. Same
-        # equivalence classes (per-element NaN/-0.0 normalization both
-        # ways; feature arrays are non-null fixed-dim by construction
-        # at every call site) and the rebuilt array carries the same
-        # normalized element values the array key emitted.
-        from dbscan_pyspark_spark.operators.eps_join import _contract_key_cols
-
-        key_cols = [f"_f{i}" for i in range(dim)]
-        reps = (
-            points.select(F.col(id_col), *_contract_key_cols(features, dim))
-            .groupBy(*key_cols)
-            .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_mult"))
-            .select(
-                F.array(*[F.col(k) for k in key_cols]).alias(features),
-                F.col(id_col),
-                F.col("_mult"),
-            )
-        )
-    else:
-        reps = points.select(features, id_col).withColumn("_mult", F.lit(1))
-    reps = reps.persist()
-
-    # One cheap job over the persisted contraction sizes BOTH adaptive
-    # choices: the pair-join shape and the expansion-join strategy.
-    n_reps = reps.count()
-    if pair_strategy == "auto":
-        pair_strategy = "half" if n_reps >= _HALF_PAIR_THRESHOLD else "symmetric"
-
-    # Multiplicities (how many original rows each rep stands for) ride
-    # through the cell join as payload — joining them onto the pair set
-    # afterwards would shuffle the pairs a second time.
-    pairs = edges = None
+    reps = pairs = None
     try:
-        if pair_strategy == "half":
-            pairs = eps_join(
-                reps, reps, eps, metric=metric, features=features,
-                id_col=id_col, dim=dim, keep_distance=False,
-                payload_a=["_mult"], payload_b=["_mult"], unique_pairs=True,
-            ).persist()
-            # each a<b pair feeds both endpoints' counts; every rep also
-            # counts its own rows (the reference's self-pairs).
-            legs = pairs.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a_id").alias("pid"), F.col("b__mult").alias("m")
-                        ),
-                        F.struct(
-                            F.col("b_id").alias("pid"), F.col("a__mult").alias("m")
-                        ),
-                    )
-                ).alias("e")
-            ).select("e.pid", "e.m")
-            counts = (
-                legs.unionAll(
-                    reps.select(F.col(id_col).alias("pid"), F.col("_mult").alias("m"))
-                )
-                .groupBy("pid")
-                .agg(F.sum("m").alias("n_neighbors"))
-            )
-            cores = counts.where(
-                F.col("n_neighbors") >= F.lit(int(min_pts))
-            ).select(F.col("pid").alias("core_id"))
-            if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-                # <= n_reps single-long rows: broadcasting turns the
-                # core-filter join into a map-side probe of the cached
-                # pairs instead of shuffling the whole pair relation.
-                cores = F.broadcast(cores)
-            # reference edges run core -> every ε-neighbor incl. itself:
-            # mirror the cached half pairs and add core self-loops.
-            sym = pairs.select(
-                F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-            ).unionAll(
-                pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
-            )
-            edges = sym.join(cores, sym["src"] == cores["core_id"]).select(
-                "src", "dst"
-            ).unionAll(
-                cores.select(
-                    F.col("core_id").alias("src"), F.col("core_id").alias("dst")
-                )
-            )
-        else:
-            pairs = eps_join(
-                reps, reps, eps, metric=metric, features=features, id_col=id_col,
-                dim=dim, keep_distance=False, payload_b=["_mult"],
-            ).withColumnRenamed("b__mult", "_mult_b").persist()
-            counts = pairs.groupBy("a_id").agg(
-                F.sum("_mult_b").alias("n_neighbors")
-            )
-            cores = counts.where(
-                F.col("n_neighbors") >= F.lit(int(min_pts))
-            ).select(F.col("a_id").alias("core_id"))
-            if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-                cores = F.broadcast(cores)
-            edges = pairs.join(cores, pairs["a_id"] == cores["core_id"]).select(
-                F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-            )
-        if variant == "scc":
-            # Directed mutual reachability == both orientations present ==
-            # core-core ε-pairs.
-            rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            edges = edges.intersect(rev)
-        edges = edges.persist()
-
-        # Reps that appear in no edge expand to singleton components per
-        # ORIGINAL row (an edgeless duplicate group is |group| singletons).
-        # connected_components labels every edge participant, including
-        # cores whose only edge is their self-loop (a duplicate group
-        # dense enough to be its own cluster), so no vertex list — and
-        # no distinct over the full edge relation — is needed here.
-        labels = connected_components(edges, id_col=id_col, as_pandas=True)
-        import pandas as pd
-
-        labels_is_pdf = isinstance(labels, pd.DataFrame)
-        if labels_is_pdf and not (
-            n_reps <= _BROADCAST_EXPAND_THRESHOLD
-            or len(labels) <= _BROADCAST_EXPAND_THRESHOLD
-        ):
-            # Graph small enough for driver union-find but the label set
-            # is too big to broadcast back — rehydrate and take the
-            # distributed finish.
-            labels = points.sparkSession.createDataFrame(
-                labels, f"{id_col} long, component long"
-            )
-            labels_is_pdf = False
-        if labels_is_pdf or n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-            # Driver-side finish. Every structure here — graph labels,
-            # rep multiplicities, the per-component mass — is bounded by
-            # n_reps, the same bound that makes rep_map broadcastable
-            # below, so this adds no scale risk the broadcast didn't
-            # already accept. It replaces a chain of four small shuffle
-            # joins (sizes, rep_labels, and their recomputed branches)
-            # with two Arrow pulls and vectorized pandas: measured ~8 s
-            # -> ~2 s on the sf0.1 lineitem cloud (58k reps).
-            lab = labels if labels_is_pdf else labels.toPandas()
-            mult = reps.select(id_col, "_mult").toPandas()
-            m = lab.merge(mult, on=id_col, how="left")
-            mass = m.groupby("component")["_mult"].transform("sum")
-            cluster = m["component"].astype("Int64").where(
-                mass >= int(min_cluster_size)
-            )
-            rep_labels_pdf = pd.DataFrame(
-                {
-                    "_rep_id": m[id_col].astype("int64"),
-                    "cluster_id": cluster,
-                    "_in_graph": True,
-                }
-            )
-            rep_labels = F.broadcast(
-                points.sparkSession.createDataFrame(
-                    rep_labels_pdf,
-                    "_rep_id long, cluster_id long, _in_graph boolean",
-                )
-            )
-        else:
-            # component mass = sum of member multiplicities (original rows)
-            sizes = (
-                labels.join(reps.select(id_col, "_mult"), id_col)
-                .groupBy("component")
-                .agg(F.sum("_mult").alias("_n"))
-            )
-            rep_labels = labels.join(sizes, "component").select(
-                F.col(id_col).alias("_rep_id"),
-                F.when(
-                    F.col("_n") >= F.lit(int(min_cluster_size)), F.col("component")
-                ).alias("cluster_id"),
-                F.lit(True).alias("_in_graph"),
-            )
+        if dim is None:
+            dim = _dim_of(points, features)
+        reps = _contract(points, features, id_col, dim).persist()
+        # one cheap job over the persisted contraction sizes the
+        # expansion join
+        small = reps.count() <= _BROADCAST_EXPAND_THRESHOLD
+        # Multiplicities (how many original rows each rep stands for)
+        # ride through the cell join as payload — joining them onto the
+        # pair set afterwards would shuffle the pairs a second time.
+        pairs = eps_join(
+            reps, reps, eps, metric=metric, features=features, id_col=id_col,
+            dim=dim, keep_distance=True, payload_b=["_mult"],
+        ).persist()
+        labels = _rep_labels(
+            reps, pairs, [eps], min_pts, min_cluster_size, variant, id_col
+        )(eps)
+        if small:
+            labels = F.broadcast(labels)
 
         # Expand back to original rows by feature equality, equi-keyed on
         # the 64-bit feature hash (cheap to shuffle/compare; the exact
@@ -290,10 +259,10 @@ def dbscan(
         # never shuffled.
         rep_map = reps.select(
             F.col(features).alias("_rep_features"), F.col(id_col).alias("_rep_id")
-        ).join(rep_labels, "_rep_id", "left").withColumn(
-            "_rep_h", F.xxhash64("_rep_features")
-        )
-        if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
+        ).join(
+            labels.withColumnRenamed(id_col, "_rep_id"), "_rep_id", "left"
+        ).withColumn("_rep_h", F.xxhash64("_rep_features"))
+        if small:
             rep_map = F.broadcast(rep_map)
         pts_h = points.withColumn("_h", F.xxhash64(F.col(features)))
         out = pts_h.join(
@@ -303,10 +272,10 @@ def dbscan(
             "left",
         ).select(
             pts_h[id_col],
-            # edgeless rep (no CC row): every original row is a singleton
-            # component -> cluster of itself iff min_cluster_size <= 1
+            # unlabeled rep with min_cluster_size <= 1: it is edgeless,
+            # and every original row is a cluster of itself
             F.when(
-                F.col("_in_graph").isNull() & F.lit(min_cluster_size <= 1),
+                F.col("cluster_id").isNull() & F.lit(min_cluster_size <= 1),
                 pts_h[id_col],
             )
             .otherwise(F.col("cluster_id"))
@@ -314,14 +283,9 @@ def dbscan(
         ).withColumn("is_noise", F.col("cluster_id").isNull())
         out = out.localCheckpoint(eager=True)
     finally:
-        for df in (pairs, edges):
+        for df in (pairs, reps, points):
             if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        reps.unpersist()
-        points.unpersist()
+                df.unpersist()
     return out
 
 

@@ -26,8 +26,6 @@ cartesian semantics — neighbor counts *include self* (SURVEY.md §2.2 P3).
 
 from __future__ import annotations
 
-from itertools import product
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -61,28 +59,45 @@ def _dim_of(df: DataFrame, features: str) -> int:
     return int(row["d"])
 
 
-def _contract_key_cols(features: str, dim: int) -> list:
-    """Per-dimension scalar key columns (``_f0``.. ``_f{dim-1}``) for
-    duplicate contraction, with a ragged-input guard folded into
-    dimension 0: indexing a short (or null) feature array yields equal
-    NULL keys, which would silently merge distinct vectors — a wrong
-    length raises instead. One ``size()`` comparison per row, still
-    whole-stage codegen."""
+def _contract(points: DataFrame, features: str, id_col: str, dim: int) -> DataFrame:
+    """Duplicate contraction -> DataFrame(features, id_col, _mult): one
+    rep per distinct feature vector, its id the minimum member id and
+    ``_mult`` its member count.
+
+    The rep id is deterministic, so it stays consistent even when an
+    unpersisted contraction subtree re-executes in different join
+    branches. Groups by one SCALAR column per dimension, not by the
+    array: the array key runs an interpreted normalize lambda per row
+    per aggregation pass, scalar keys stay in codegen. Same equivalence
+    classes (per-element NaN/-0.0 normalization both ways), and the
+    rebuilt array carries the same normalized element values.
+
+    Indexing a short (or null) feature array yields equal NULL keys,
+    which would silently merge distinct vectors, so a ragged-input
+    guard folded into dimension 0 raises instead — one ``size()``
+    comparison per row, still whole-stage codegen."""
     f = F.col(features)
-    guard = F.when(F.size(f) == dim, f[0]).otherwise(
+    size = F.coalesce(F.size(f), F.lit(-1))  # size(NULL) is NULL off legacy mode
+    guard = F.when(size == dim, f[0]).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(
                     "duplicate contraction expects fixed "
                     f"{dim}-dim feature vectors, got size "
                 ),
-                F.size(f).cast("string"),
+                size.cast("string"),
             )
         )
     )
-    return [guard.alias("_f0")] + [
-        f[i].alias(f"_f{i}") for i in range(1, dim)
-    ]
+    keys = [f"_f{i}" for i in range(dim)]
+    return (
+        points.select(
+            F.col(id_col), guard.alias("_f0"), *[f[i].alias(keys[i]) for i in range(1, dim)]
+        )
+        .groupBy(*keys)
+        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_mult"))
+        .select(F.array(*keys).alias(features), F.col(id_col), F.col("_mult"))
+    )
 
 
 def eps_join(
@@ -155,42 +170,27 @@ def eps_join(
         *cell_cols("_bc"),
     )
 
-    zero = (0,) * dim
+    # Neighbor offsets as ONE exploded index k in [0, 3^d): the offset
+    # in dimension i is base-3 digit i of k, minus 1 — k enumerates the
+    # offsets in lexicographic order, so the zero offset sits at the
+    # center, (3^d - 1) / 2. A runtime sequence instead of 3^d struct
+    # literals keeps the plan O(d): at d=6 (729 offsets) planning the
+    # join took ~8-10x less time on a 4-core host. With
+    # ``unique_pairs`` only the center and the lex-positive half above
+    # it are exploded.
+    center = (3**dim - 1) // 2
+    b = b.withColumn(
+        "_k", F.explode(F.sequence(F.lit(center if unique_pairs else 0), F.lit(3**dim - 1)))
+    )
+    cond = None
+    for i in range(dim):
+        off = F.floor(b["_k"] / F.lit(3 ** (dim - 1 - i))) % 3 - 1
+        eq = a[f"_ac{i}"] == b[f"_bc{i}"] + off
+        cond = eq if cond is None else cond & eq
     if unique_pairs:
-        # zero offset (flagged) + the lex-positive half: (3^d+1)/2
-        # struct literals, exploded once; probe cell = base + offset
-        # per dimension, all scalar adds.
-        entries = F.array(
-            *[
-                F.struct(
-                    *[F.lit(o).alias(f"o{i}") for i, o in enumerate(offs)],
-                    F.lit(offs == zero).alias("z"),
-                )
-                for offs in product((-1, 0, 1), repeat=dim)
-                if offs >= zero
-            ]
-        )
-        b = b.withColumn("_e", F.explode(entries))
-        cell_eq = [
-            a[f"_ac{i}"] == (b[f"_bc{i}"] + b["_e"][f"o{i}"]) for i in range(dim)
-        ]
         # same-cell (zero-offset) matches de-dup on id order; cross-cell
         # matches are already unique because only one of ±δ is exploded.
-        cond = (~b["_e"]["z"] | (a["a_id"] < b["b_id"]))
-        for eq in cell_eq:
-            cond = eq & cond
-    else:
-        offsets = F.array(
-            *[
-                F.struct(*[F.lit(o).alias(f"o{i}") for i, o in enumerate(offs)])
-                for offs in product((-1, 0, 1), repeat=dim)
-            ]
-        )
-        b = b.withColumn("_e", F.explode(offsets))
-        cond = None
-        for i in range(dim):
-            eq = a[f"_ac{i}"] == (b[f"_bc{i}"] + b["_e"][f"o{i}"])
-            cond = eq if cond is None else cond & eq
+        cond = cond & ((b["_k"] != center) | (a["a_id"] < b["b_id"]))
 
     pairs = a.join(b, cond).withColumn(
         "distance", dist("a_features", "b_features")
@@ -299,30 +299,11 @@ def neighbor_counts(
         ).unionAll(points.select(id_col))
         return legs.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_neighbors"))
 
-    # rep id = min member id: deterministic, so the id is consistent
-    # even when the (unpersisted) contraction subtree is re-executed in
-    # different join branches — exchange reuse makes that rare, but
-    # correctness must not depend on it. Scalar per-dimension group
-    # keys (not the array) keep the hash-agg in codegen — see
-    # dbscan.py's contraction note.
     if dim is None:
         dim = _dim_of(points, features)
-    key_cols = [f"_f{i}" for i in range(dim)]
-    reps = (
-        points.select(F.col(id_col), *_contract_key_cols(features, dim))
-        .groupBy(*key_cols)
-        .agg(
-            F.min(id_col).alias("_rid"),
-            F.count(F.lit(1)).alias("_mult"),
-        )
-        .select(
-            F.array(*[F.col(k) for k in key_cols]).alias(features),
-            F.col("_rid"),
-            F.col("_mult"),
-        )
-    )
+    reps = _contract(points, features, id_col, dim)
     pairs = eps_join(
-        reps, reps, eps, metric=metric, features=features, id_col="_rid", dim=dim,
+        reps, reps, eps, metric=metric, features=features, id_col=id_col, dim=dim,
         keep_distance=False, payload_a=["_mult"], payload_b=["_mult"],
         unique_pairs=True,
     )
@@ -336,7 +317,7 @@ def neighbor_counts(
     ).select("e.pid", "e.m")
     counts = (
         legs.unionAll(
-            reps.select(F.col("_rid").alias("pid"), F.col("_mult").alias("m"))
+            reps.select(F.col(id_col).alias("pid"), F.col("_mult").alias("m"))
         )
         .groupBy("pid")
         .agg(F.sum("m").alias("n_neighbors"))
@@ -346,9 +327,7 @@ def neighbor_counts(
     # miscount). The rep side is tiny relative to points — AQE's
     # size-based planning upgrades this to a broadcast join at runtime,
     # so the points side is never shuffled.
-    rep_n = reps.select(features, "_rid").join(
-        counts, reps["_rid"] == counts["pid"]
-    ).select(
+    rep_n = reps.join(counts, reps[id_col] == counts["pid"]).select(
         F.col(features).alias("_rep_features"),
         F.xxhash64(features).alias("_rep_h"),
         "n_neighbors",

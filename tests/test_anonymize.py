@@ -87,24 +87,44 @@ def test_information_loss_and_sweep(spark):
     assert best in (2.0, 4.0)
 
 
-def test_eps_sweep_matches_single_runs(spark):
+def _dbscan_module():
+    import importlib
+
+    return importlib.import_module("dbscan_pyspark_spark.operators.dbscan")
+
+
+def test_eps_sweep_matches_single_runs(spark, monkeypatch):
     rng = random.Random(29)
     pts = _blobs(rng, [(0, 0), (20, 20)], 20, 2.0)
     df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
-    metrics, _ = eps_sweep(df, [2.0, 5.0], min_pts=4)
-    for r in metrics.collect():
-        labels = dbscan(df, r["eps"], 4, 4)
-        single = information_loss(df, labels).first()
-        assert r["n_clusters"] == single["n_clusters"]
-        assert r["n_noise"] == single["n_noise"]
-        assert abs(r["total_error"] - single["total_error"]) < 1e-6
+    # min_cluster_size=1 with an edgeless duplicate pair (ids 100, 101):
+    # each of its rows is its own singleton cluster, so 3 clusters
+    dups = spark.createDataFrame(
+        [(i, [float(i % 3), 0.0], 0) for i in range(6)]
+        + [(100, [50.0, 50.0], 0), (101, [50.0, 50.0], 0)],
+        ["id", "features", "sensitive"],
+    )
+    cases = [(df, [2.0, 5.0], 4, None, None), (dups, [1.5], 4, 1, 3)]
+    mod = _dbscan_module()
+    for threshold in (mod._DRIVER_PAIRS_THRESHOLD, 0):  # driver pass, distributed twin
+        monkeypatch.setattr(mod, "_DRIVER_PAIRS_THRESHOLD", threshold)
+        for frame, eps_values, min_pts, mcs, n_clusters in cases:
+            metrics, _ = eps_sweep(frame, eps_values, min_pts, min_cluster_size=mcs)
+            for r in metrics.collect():
+                labels = dbscan(frame, r["eps"], min_pts, mcs)
+                single = information_loss(frame, labels).first()
+                assert r["n_clusters"] == single["n_clusters"]
+                assert r["n_noise"] == single["n_noise"]
+                assert abs(r["total_error"] - single["total_error"]) < 1e-6
+                if n_clusters is not None:
+                    assert r["n_clusters"] == n_clusters
 
 
-def test_eps_sweep_kruskal_matches_per_eps_chain(spark):
+def test_eps_sweep_kruskal_matches_per_eps_chain(spark, monkeypatch):
     """The driver Kruskal sweep (one union-find pass labeling every
     eps level) must produce the same metrics as the per-eps
-    counts/cores/edges/CC chain it replaces (forced via
-    driver_threshold=0)."""
+    counts/cores/edges/CC chain, its distributed twin (forced by a
+    zero pair bound)."""
     rng = random.Random(31)
     pts = _blobs(rng, [(0, 0), (15, 15), (40, 0)], 18, 2.0)
     # add exact duplicates so the contraction multiplicities matter
@@ -117,18 +137,53 @@ def test_eps_sweep_kruskal_matches_per_eps_chain(spark):
         ([2.0, 5.0], 1, 1),       # mcs<=1: edgeless singleton clusters
     ]:
         m_new, b_new = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
-        m_old, b_old = eps_sweep(
-            df, eps_values, min_pts, min_cluster_size=mcs, driver_threshold=0
-        )
+        with monkeypatch.context() as m:
+            m.setattr(_dbscan_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
+            m_old, b_old = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
         assert b_new == b_old
-        rn = sorted(m_new.collect(), key=lambda r: r["eps"])
-        ro = sorted(m_old.collect(), key=lambda r: r["eps"])
-        for a, b in zip(rn, ro):
-            assert a["eps"] == b["eps"]
-            assert a["n_clusters"] == b["n_clusters"]
-            assert a["n_noise"] == b["n_noise"]
-            for col in ("cluster_error", "noise_error", "total_error"):
-                if a[col] == float("inf"):
-                    assert b[col] == float("inf")
-                else:
-                    assert abs(a[col] - b[col]) < 1e-6
+        _assert_same_metrics(m_new, m_old)
+
+
+def _assert_same_metrics(m_new, m_old):
+    rn = sorted(m_new.collect(), key=lambda r: r["eps"])
+    ro = sorted(m_old.collect(), key=lambda r: r["eps"])
+    assert len(rn) == len(ro)
+    for a, b in zip(rn, ro):
+        assert a["eps"] == b["eps"]
+        assert a["n_clusters"] == b["n_clusters"]
+        assert a["n_noise"] == b["n_noise"]
+        for col in ("cluster_error", "noise_error", "total_error"):
+            if a[col] == float("inf"):
+                assert b[col] == float("inf")
+            else:
+                assert abs(a[col] - b[col]) < 1e-6
+
+
+def test_driver_pass_failure_falls_back(spark, monkeypatch):
+    """A driver Kruskal pass that fails (here: driver memory) falls
+    back to the distributed twin with identical labels and metrics."""
+    rng = random.Random(37)
+    pts = _blobs(rng, [(0, 0), (15, 15)], 15, 2.0)
+    pts = pts + [(10_000 + i, list(pts[i][1]), pts[i][2]) for i in range(6)]
+    df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
+
+    def _labels():
+        return sorted(
+            (r["id"], r["cluster_id"]) for r in dbscan(df, 2.0, 4, 4).collect()
+        )
+
+    labels = _labels()
+    metrics, best = eps_sweep(df, [1.0, 2.0, 4.0], 4)
+
+    calls = []
+
+    def _oom(*args, **kwargs):
+        calls.append(1)
+        raise MemoryError("driver out of memory")
+
+    monkeypatch.setattr(_dbscan_module(), "_kruskal", _oom)
+    assert _labels() == labels
+    m_fb, best_fb = eps_sweep(df, [1.0, 2.0, 4.0], 4)
+    assert len(calls) == 2  # both calls tried the driver pass first
+    assert best_fb == best
+    _assert_same_metrics(m_fb, metrics)

@@ -10,7 +10,9 @@ import random
 from dbscan_pyspark_spark.operators import dbscan
 
 
-def _oracle(pts, eps, min_pts, k):
+def _oracle(pts, eps, min_pts, k, variant="cc"):
+    """``variant='scc'`` keeps core-core edges only: a component is the
+    cores it connects, and a border point is a singleton."""
     ids = [i for i, _ in pts]
     coords = dict(pts)
 
@@ -35,7 +37,8 @@ def _oracle(pts, eps, min_pts, k):
 
     for c in cores:
         for nb in nbrs[c]:
-            union(c, nb)
+            if variant == "cc" or nb in cores:
+                union(c, nb)
     comp = {}
     for i in ids:
         comp.setdefault(find(i), set()).add(i)
@@ -79,23 +82,34 @@ def test_dbscan_random_matches_oracle(spark):
         assert got == expected
 
 
-def test_dbscan_pair_strategies_identical(spark):
-    """'half' (unique-pairs + mirror) and 'symmetric' produce
-    bit-identical labels — and both match the brute-force oracle —
-    so the auto crossover can never change results."""
+def test_dbscan_driver_matches_distributed(spark, monkeypatch):
+    """The driver Kruskal pass and its distributed twin (the per-ε
+    chain, forced by a zero pair bound) give identical labels for both
+    variants, and both match the brute-force oracles — so the size
+    crossover can never change results."""
+    import importlib
+
+    dbscan_mod = importlib.import_module("dbscan_pyspark_spark.operators.dbscan")
     rng = random.Random(23)
     pts = [
         (i, [float(rng.randint(0, 20)), float(rng.randint(0, 20))])
         for i in range(120)
     ] + [(1000 + i, [5.0, 5.0]) for i in range(10)]  # duplicate group
     df = spark.createDataFrame(pts, ["id", "features"]).repartition(4)
-    expected = _oracle(pts, 3.0, 6, 6)
-    for strategy in ("symmetric", "half"):
-        got = {
+    for variant in ("cc", "scc"):
+        expected = _oracle(pts, 3.0, 6, 6, variant)
+        driver = {
             r["id"]: r["cluster_id"]
-            for r in dbscan(df, 3.0, 6, 6, pair_strategy=strategy).collect()
+            for r in dbscan(df, 3.0, 6, 6, variant=variant).collect()
         }
-        assert got == expected, strategy
+        with monkeypatch.context() as m:
+            m.setattr(dbscan_mod, "_DRIVER_PAIRS_THRESHOLD", 0)
+            distributed = {
+                r["id"]: r["cluster_id"]
+                for r in dbscan(df, 3.0, 6, 6, variant=variant).collect()
+            }
+        assert driver == expected, variant
+        assert distributed == expected, variant
 
 
 def test_dbscan_scc_variant_smaller_clusters(spark):
@@ -108,6 +122,7 @@ def test_dbscan_scc_variant_smaller_clusters(spark):
     cc_members = {i for i, c in cc.items() if c is not None}
     scc_members = {i for i, c in scc.items() if c is not None}
     assert scc_members <= cc_members
+    assert scc == _oracle(pts, 2.0, 8, 8, "scc")
 
 
 def test_dbscan_assign_labels_new_points(spark):
@@ -152,7 +167,8 @@ def test_dbscan_assign_tie_breaks_deterministically(spark):
 def test_ragged_features_fail_loudly(spark):
     """The scalar contraction keys assume fixed-dim vectors; ragged
     input must raise instead of silently contracting distinct vectors
-    into one rep (ADVICE r10)."""
+    into one rep, and a NULL array must raise a readable message too,
+    not a NULL one."""
     import pytest as _pytest
 
     bad = spark.createDataFrame(
@@ -161,3 +177,10 @@ def test_ragged_features_fail_loudly(spark):
     )
     with _pytest.raises(Exception, match="duplicate contraction expects"):
         dbscan(bad, eps=1.5, min_pts=2).count()
+    null_row = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, None)], "id long, features array<double>"
+    )
+    with _pytest.raises(
+        Exception, match="expects fixed 2-dim feature vectors, got size -1"
+    ):
+        dbscan(null_row, eps=1.5, min_pts=2, dim=2).count()
