@@ -17,15 +17,49 @@ Rebuilds the reference's anonymization stage declaratively:
 The ε-sweep computes the pair set ONCE at max ε and filters per ε
 (neighbors at ε ⊆ neighbors at ε' > ε) — turning the reference's
 Σ O(n²) sweep into one grid join (SURVEY.md §4 'iterative compute').
+Where each level is scored follows where it was labeled: when
+``dbscan._rep_labels`` solved the sweep on the driver, every level's
+metrics are weighted numpy sums over the labels and reps it already
+holds (``_score_levels``); otherwise (pairs or noise-to-centroid work
+above ``_DRIVER_PAIRS_THRESHOLD``, or a failed driver attempt) the
+concurrent per-ε Spark bodies score them — the distributed twin.
+
+Small driver-built frames (metric rows, centroid and repair tables)
+go through ``_local_frame``: Arrow ships them to the JVM, so scanning
+or broadcasting them never starts a Python task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from importlib import import_module
 
-from dbscan_pyspark_spark.operators.dbscan import _rep_labels
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+from dbscan_pyspark_spark.operators.dbscan import _DRIVER_FAILURES, _rep_labels
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
+
+# the module, not the ``dbscan`` function the operators package exports
+# under the same name; its pair bound is read at call time
+_dbscan = import_module("dbscan_pyspark_spark.operators.dbscan")
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """DataFrame of driver-side ``rows`` under the DDL schema ``ddl``.
+
+    Built as a pandas frame and shipped as one Arrow table, so Spark
+    scans it in the JVM. A list of tuples would go through
+    ``parallelize`` instead, and every scan of it (each broadcast
+    included) would run Python tasks; so would an empty pandas frame,
+    which ``createDataFrame`` converts without Arrow. Empty ``rows``
+    give an empty frame of the same schema."""
+    import pandas as pd
+    import pyarrow as pa
+
+    schema = DataType.fromDDL(ddl)
+    pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
 
 
 def cluster_centroids(
@@ -170,7 +204,8 @@ def information_loss(
     if labels.where(F.col("cluster_id").isNotNull()).isEmpty():
         n = points.count()
         inf = float("inf")
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [(0, n, 0.0, inf, inf)],
             "n_clusters long, n_noise long, cluster_error double, "
             "noise_error double, total_error double",
@@ -196,6 +231,86 @@ def information_loss(
     )
 
 
+def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, features, id_col):
+    """Every ε level's metrics row, computed on the driver from
+    ``_rep_labels``' per-level label frames ``levels`` and its collect of
+    the reps — ``eps_sweep``'s per-ε Spark body, term for term, in
+    numpy:
+
+    - with ``min_cluster_size <= 1`` an unlabeled rep is a singleton
+      cluster: its centroid is its own point and it adds ``_mult``
+      clusters;
+    - centroids are ``_mult``-weighted means; cluster_error is
+      Σ ``_mult``·dist(x, own centroid);
+    - n_noise is Σ ``_mult`` over noise reps; noise_error is
+      Σ ``_mult``·min over all centroids (singletons included);
+    - a level with no cluster gives ``(eps, 0, n_total, 0.0, inf, inf)``.
+
+    Returns None (the caller runs the Spark body) when Σ over levels of
+    noise reps × centroids exceeds ``_DRIVER_PAIRS_THRESHOLD``; within it,
+    noise distances are built one dimension at a time in row blocks of
+    at most that many cells."""
+    import numpy as np
+
+    bound = _dbscan._DRIVER_PAIRS_THRESHOLD
+    ids = reps_pdf[id_col].to_numpy(dtype="int64")
+    mult = reps_pdf["_mult"].to_numpy(dtype="int64")
+    x = np.stack(reps_pdf[features].to_numpy()).astype("float64")
+    order = np.argsort(ids)
+    n_total = int(mult.sum())
+
+    def dist(a, b):
+        # per-dimension accumulation in index order, as the unrolled
+        # Spark expression adds its terms
+        acc = np.zeros(np.broadcast_shapes(a.shape, b.shape)[:-1])
+        for j in range(x.shape[1]):
+            diff = a[..., j] - b[..., j]
+            acc += np.abs(diff) if metric == "l1" else diff * diff
+        return acc if metric == "l1" else np.sqrt(acc)
+
+    levels_out, work = [], 0
+    for eps in sorted(eps_values):
+        lab = levels[float(eps)]
+        pos = order[np.searchsorted(ids[order], lab[id_col].to_numpy(dtype="int64"))]
+        labeled = np.zeros(len(ids), dtype=bool)
+        labeled[pos] = True
+        cid = ids.copy()  # an unlabeled rep's singleton cluster is its own id
+        cid[pos] = lab["cluster_id"].to_numpy(dtype="int64")
+        solo = ~labeled if min_cluster_size <= 1 else np.zeros(len(ids), dtype=bool)
+        clustered = labeled | solo
+        _, inv = np.unique(cid[clustered], return_inverse=True)
+        n_clusters = len(np.unique(cid[labeled])) + int(mult[solo].sum())
+        if not n_clusters:
+            levels_out.append((float(eps), None))
+            continue
+        w = mult[clustered].astype("float64")
+        xc = x[clustered]
+        cents = np.stack(
+            [np.bincount(inv, weights=xc[:, j] * w) for j in range(x.shape[1])], axis=1
+        ) / np.bincount(inv, weights=w)[:, None]
+        ce = float((w * dist(xc, cents[inv])).sum())
+        noise = np.flatnonzero(~clustered)
+        work += len(noise) * len(cents)
+        levels_out.append((float(eps), (n_clusters, ce, noise, cents)))
+    if work > bound:
+        return None
+
+    rows = []
+    for eps, level in levels_out:
+        if level is None:
+            rows.append((eps, 0, n_total, 0.0, float("inf"), float("inf")))
+            continue
+        n_clusters, ce, noise, cents = level
+        step = max(1, bound // len(cents))
+        ne = 0.0
+        for lo in range(0, len(noise), step):
+            blk = noise[lo : lo + step]
+            nearest = dist(x[blk][:, None, :], cents[None, :, :]).min(axis=1)
+            ne += float((mult[blk] * nearest).sum())
+        rows.append((eps, n_clusters, int(mult[noise].sum()), ce, ne, ce + ne))
+    return rows
+
+
 def eps_sweep(
     points: DataFrame,
     eps_values: list[float],
@@ -212,10 +327,15 @@ def eps_sweep(
     Scale design: the whole sweep runs on the *contracted* point set
     (distinct feature vectors weighted by multiplicity — see dbscan.py):
     one grid join at max ε over reps, then ``dbscan``'s labeling core
-    labels every ε level (one driver pass up to its pair bound, a
-    distributed chain per ε above it), and per ε only weighted
-    aggregations follow. Per-point metrics are exact because duplicates
-    share features: Σ_points dist = Σ_reps mult·dist, and centroids are
+    ``_rep_labels`` labels every ε level and decides where. When it
+    solved them in one driver pass, every level is scored on the driver
+    too (``_score_levels``: weighted numpy sums over the labels and reps
+    that pass already holds, no Spark job). The concurrent per-ε Spark
+    bodies below are only the distributed twin: they score the levels
+    when the labeling ran distributed, when the scoring's noise ×
+    centroid work exceeds the same pair bound, or when the driver
+    scoring fails. Per-point metrics are exact because duplicates share
+    features: Σ_points dist = Σ_reps mult·dist, and centroids are
     multiplicity-weighted means.
 
     Returns (metrics DataFrame with one row per ε, best_eps) where best
@@ -234,7 +354,6 @@ def eps_sweep(
         reps, reps, max(eps_values), metric=metric, features=features,
         id_col=id_col, dim=dim, payload_b=["_mult"],
     ).persist()
-    n_total = points.count()
     inf = float("inf")
 
     def _one_eps(eps):
@@ -320,15 +439,26 @@ def eps_sweep(
     try:
         from dbscan_pyspark_spark.compat import concurrent_map_ordered
 
-        labels_at = _rep_labels(
+        labels_at, driver = _rep_labels(
             reps, all_pairs, eps_values, min_pts, min_cluster_size, "cc", id_col
         )
-        rows = concurrent_map_ordered(_one_eps, sorted(eps_values))
+        rows = None
+        if driver is not None:
+            try:
+                rows = _score_levels(
+                    *driver, eps_values, min_cluster_size, metric, features, id_col
+                )
+            except _DRIVER_FAILURES:
+                pass  # the distributed twin below scores every level
+        if rows is None:
+            n_total = points.count()  # read by _one_eps
+            rows = concurrent_map_ordered(_one_eps, sorted(eps_values))
     finally:
         all_pairs.unpersist()
         reps.unpersist()
 
-    metrics = spark.createDataFrame(
+    metrics = _local_frame(
+        spark,
         rows,
         "eps double, n_clusters long, n_noise long, cluster_error double, "
         "noise_error double, total_error double",

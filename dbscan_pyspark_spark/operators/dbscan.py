@@ -57,6 +57,10 @@ _DRIVER_PAIRS_THRESHOLD = 5_000_000
 # feature-equality residual).
 _BROADCAST_EXPAND_THRESHOLD = 1_000_000
 
+# What a driver fast path may raise and still fall back to its
+# distributed twin: no numpy/pandas, driver memory, Arrow conversion.
+_DRIVER_FAILURES = (ImportError, MemoryError, ValueError, TypeError)
+
 
 def _kruskal(pairs_pdf, reps_pdf, eps_values, min_pts, min_cluster_size, variant, id_col):
     """Solve EVERY ε level's rep labels in one driver pass (a Kruskal
@@ -174,31 +178,43 @@ def _rep_labels(reps, pairs, eps_values, min_pts, min_cluster_size, variant, id_
 
     ``reps`` is the contraction (``_contract``) and ``pairs`` its
     symmetric ε-join at max(eps_values) with ``keep_distance=True`` and
-    ``payload_b=["_mult"]``; the caller persists both. Returns a function
-    ε -> DataFrame(id, cluster_id) listing the clustered reps. A rep not
-    listed is noise, except that with ``min_cluster_size <= 1`` an
-    edgeless rep stands for one singleton cluster per original row.
+    ``payload_b=["_mult"]``; the caller persists both. Returns
+    ``(labels_at, driver)``. ``labels_at`` maps ε -> DataFrame(id,
+    cluster_id) listing the clustered reps. A rep not listed is noise,
+    except that with ``min_cluster_size <= 1`` an edgeless rep stands for
+    one singleton cluster per original row.
 
-    Up to ``_DRIVER_PAIRS_THRESHOLD`` pairs every level is solved at once
-    by ``_kruskal`` on the driver; above it, or when the driver pass
-    fails (no numpy/pandas, driver memory, Arrow conversion), each call
-    runs the distributed ``_chain_labels``. Both give every component
-    its minimum rep id."""
+    This is the one driver-vs-distributed decision. Up to
+    ``_DRIVER_PAIRS_THRESHOLD`` pairs every level is solved at once by
+    ``_kruskal`` on the driver, and ``driver`` is ``({ε: pandas
+    DataFrame(id, cluster_id)}, reps as pandas)``: the per-level label
+    frames plus the one collect of the reps (features, id, ``_mult``),
+    which ``eps_sweep`` scores on the driver and ``dbscan`` ignores.
+    Above the bound, or when the driver pass fails (no numpy/pandas,
+    driver memory, Arrow conversion), ``driver`` is None and each
+    ``labels_at`` call runs the distributed ``_chain_labels``. Both give
+    every component its minimum rep id."""
     spark = reps.sparkSession
     if pairs.count() <= _DRIVER_PAIRS_THRESHOLD:
         try:
+            reps_pdf = reps.toPandas()
             pdfs = _kruskal(
                 pairs.select("a_id", "b_id", "distance", "b__mult").toPandas(),
-                reps.select(id_col, "_mult").toPandas(),
-                eps_values, min_pts, min_cluster_size, variant, id_col,
+                reps_pdf, eps_values, min_pts, min_cluster_size, variant, id_col,
             )
-            return lambda eps: spark.createDataFrame(
-                pdfs[float(eps)], f"{id_col} long, cluster_id long"
+            return (
+                lambda eps: spark.createDataFrame(
+                    pdfs[float(eps)], f"{id_col} long, cluster_id long"
+                ),
+                (pdfs, reps_pdf),
             )
-        except (ImportError, MemoryError, ValueError, TypeError):
+        except _DRIVER_FAILURES:
             pass  # fall through to the distributed twin
-    return lambda eps: _chain_labels(
-        reps, pairs, eps, min_pts, min_cluster_size, variant, id_col
+    return (
+        lambda eps: _chain_labels(
+            reps, pairs, eps, min_pts, min_cluster_size, variant, id_col
+        ),
+        None,
     )
 
 
@@ -246,9 +262,10 @@ def dbscan(
             reps, reps, eps, metric=metric, features=features, id_col=id_col,
             dim=dim, keep_distance=True, payload_b=["_mult"],
         ).persist()
-        labels = _rep_labels(
+        labels_at, _ = _rep_labels(
             reps, pairs, [eps], min_pts, min_cluster_size, variant, id_col
-        )(eps)
+        )
+        labels = labels_at(eps)
         if small:
             labels = F.broadcast(labels)
 

@@ -37,7 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.anonymize import assign_nearest
+from dbscan_pyspark_spark.operators.anonymize import _local_frame, assign_nearest
 from dbscan_pyspark_spark.operators.eps_join import _dim_of
 
 
@@ -106,7 +106,8 @@ def _repair(
 
         # farthest-beyond-k members of surplus clusters are up for grabs
         surplus_ids = F.broadcast(
-            spark.createDataFrame(
+            _local_frame(
+                spark,
                 [(c,) for c, cnt in counts.items() if cnt > k],
                 "cluster_id int",
             )
@@ -123,9 +124,7 @@ def _repair(
 
         # claim: nearest deficient centroid per released point
         deficient_df = F.broadcast(
-            spark.createDataFrame(
-                [(c,) for c in deficient], "cluster_id int"
-            )
+            _local_frame(spark, [(c,) for c in deficient], "cluster_id int")
         )
         deficient_cents = centroids.join(deficient_df, "cluster_id", "left_semi")
         claims = assign_nearest(
@@ -138,9 +137,7 @@ def _repair(
 
         # cap: each deficient cluster takes only its (k - cnt) nearest claimants
         need = F.broadcast(
-            spark.createDataFrame(
-                list(deficient.items()), "cluster_id int, _need int"
-            )
+            _local_frame(spark, list(deficient.items()), "cluster_id int, _need int")
         )
         wc = Window.partitionBy("cluster_id").orderBy(
             F.col("distance").asc(), F.col(id_col).asc()
@@ -196,7 +193,8 @@ def kmember_kmeans(
         .limit(n_clusters)
         .collect()
     )
-    centroids = spark.createDataFrame(
+    centroids = _local_frame(
+        spark,
         [(i, [float(x) for x in r[features]], 0) for i, r in enumerate(init_rows)],
         "cluster_id int, centroid array<double>, n_members long",
     )
@@ -319,7 +317,8 @@ def kmember_search(
             best = res
             best_idx = len(rows) - 1
     assert best is not None
-    metrics = points.sparkSession.createDataFrame(
+    metrics = _local_frame(
+        points.sparkSession,
         [
             (c, r, cost, n_it, 1 if i == best_idx else 0)
             for i, (c, r, cost, n_it) in enumerate(rows)
@@ -411,7 +410,8 @@ def _repair_quantized(
             (cid, vec) for cid, vec in centroids if cid in deficient
         ]
         need_df = F.broadcast(
-            assign.sparkSession.createDataFrame(
+            _local_frame(
+                assign.sparkSession,
                 [(cid, n) for cid, n in deficient.items()],
                 "cluster int, _need int",
             )
@@ -657,7 +657,8 @@ def kmember_search_quantized(
         rows = [(c, r, cost) for c, r, cost, _ in results]
         runs = {(c, r): out for c, r, cost, out in results}
         best_c, best_r, _ = min(rows, key=lambda t: (t[2], t[0], t[1]))
-        metrics = points.sparkSession.createDataFrame(
+        metrics = _local_frame(
+            points.sparkSession,
             [
                 (
                     c,

@@ -120,28 +120,67 @@ def test_eps_sweep_matches_single_runs(spark, monkeypatch):
                     assert r["n_clusters"] == n_clusters
 
 
+def _anonymize_module():
+    import importlib
+
+    return importlib.import_module("dbscan_pyspark_spark.operators.anonymize")
+
+
+def _no_assign(*args, **kwargs):
+    raise AssertionError("assign_nearest called")
+
+
+def _tie_frame(spark):
+    """Two plus-shaped 5-point clusters with L1 centroids (0, 0) and
+    (10, 0), and a noise point at (5, 0), L1-equidistant from both. At
+    eps 1.0 each plus is a cluster and the point is noise; at eps 6.0
+    the point is a core that merges everything, so no noise is left."""
+    plus = [(0.0, 0.0), (0.5, 0.0), (-0.5, 0.0), (0.0, 0.5), (0.0, -0.5)]
+    pts = [(i, [x, y], 0) for i, (x, y) in enumerate(plus)]
+    pts += [(10 + i, [x + 10.0, y], 0) for i, (x, y) in enumerate(plus)]
+    pts.append((99, [5.0, 0.0], 0))
+    return spark.createDataFrame(pts, ["id", "features", "sensitive"])
+
+
 def test_eps_sweep_kruskal_matches_per_eps_chain(spark, monkeypatch):
-    """The driver Kruskal sweep (one union-find pass labeling every
-    eps level) must produce the same metrics as the per-eps
-    counts/cores/edges/CC chain, its distributed twin (forced by a
-    zero pair bound)."""
+    """The driver path (one Kruskal pass labeling every eps level, then
+    numpy scoring of every level) must produce the same metrics as the
+    per-eps counts/cores/edges/CC chain and Spark scoring, its
+    distributed twin (forced by a zero pair bound)."""
     rng = random.Random(31)
     pts = _blobs(rng, [(0, 0), (15, 15), (40, 0)], 18, 2.0)
     # add exact duplicates so the contraction multiplicities matter
     pts = pts + [(10_000 + i, list(pts[i][1]), pts[i][2]) for i in range(12)]
     df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
-    for eps_values, min_pts, mcs in [
+    tie = _tie_frame(spark)
+    for frame, eps_values, min_pts, mcs, metric in [
         # 0.01 is the degenerate zero-cluster level (covered by
         # test_information_loss_and_sweep's assertion of that branch)
-        ([0.01, 0.5, 2.0, 6.0], 4, None),
-        ([2.0, 5.0], 1, 1),       # mcs<=1: edgeless singleton clusters
+        (df, [0.01, 0.5, 2.0, 6.0], 4, None, "l1"),
+        (df, [2.0, 5.0], 1, 1, "l1"),       # mcs<=1: edgeless singleton clusters
+        (df, [0.01, 1.5, 4.0], 4, None, "l2"),
+        (tie, [1.0, 6.0], 4, None, "l1"),   # equidistant noise; empty noise set
     ]:
-        m_new, b_new = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
+        with monkeypatch.context() as m:
+            # the driver path scores every level without the twin's
+            # noise join, so a silent fallback cannot pass for it
+            m.setattr(_anonymize_module(), "assign_nearest", _no_assign)
+            m_new, b_new = eps_sweep(
+                frame, eps_values, min_pts, min_cluster_size=mcs, metric=metric
+            )
         with monkeypatch.context() as m:
             m.setattr(_dbscan_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
-            m_old, b_old = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
+            m_old, b_old = eps_sweep(
+                frame, eps_values, min_pts, min_cluster_size=mcs, metric=metric
+            )
         assert b_new == b_old
         _assert_same_metrics(m_new, m_old)
+        if frame is tie:
+            rows = {r["eps"]: r for r in m_new.collect()}
+            assert (rows[1.0]["n_clusters"], rows[1.0]["n_noise"]) == (2, 1)
+            assert rows[1.0]["noise_error"] == 5.0
+            assert (rows[6.0]["n_clusters"], rows[6.0]["n_noise"]) == (1, 0)
+            assert rows[6.0]["noise_error"] == 0.0
 
 
 def _assert_same_metrics(m_new, m_old):
@@ -160,12 +199,14 @@ def _assert_same_metrics(m_new, m_old):
 
 
 def test_driver_pass_failure_falls_back(spark, monkeypatch):
-    """A driver Kruskal pass that fails (here: driver memory) falls
-    back to the distributed twin with identical labels and metrics."""
+    """A driver Kruskal pass or a driver scoring pass that fails (here:
+    driver memory) falls back to the distributed twin with identical
+    labels and metrics."""
     rng = random.Random(37)
     pts = _blobs(rng, [(0, 0), (15, 15)], 15, 2.0)
     pts = pts + [(10_000 + i, list(pts[i][1]), pts[i][2]) for i in range(6)]
     df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
+    eps_values = [1.0, 2.0, 4.0]
 
     def _labels():
         return sorted(
@@ -173,17 +214,83 @@ def test_driver_pass_failure_falls_back(spark, monkeypatch):
         )
 
     labels = _labels()
-    metrics, best = eps_sweep(df, [1.0, 2.0, 4.0], 4)
+    metrics, best = eps_sweep(df, eps_values, 4)
+    with monkeypatch.context() as m:
+        m.setattr(_dbscan_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
+        m_twin, best_twin = eps_sweep(df, eps_values, 4)
+    assert best_twin == best
+    _assert_same_metrics(m_twin, metrics)
 
     calls = []
 
-    def _oom(*args, **kwargs):
-        calls.append(1)
-        raise MemoryError("driver out of memory")
+    def _oom(name):
+        def fail(*args, **kwargs):
+            calls.append(name)
+            raise MemoryError("driver out of memory")
 
-    monkeypatch.setattr(_dbscan_module(), "_kruskal", _oom)
+        return fail
+
+    with monkeypatch.context() as m:
+        m.setattr(_anonymize_module(), "_score_levels", _oom("score"))
+        m_fb, best_fb = eps_sweep(df, eps_values, 4)
+    assert calls == ["score"]  # the Kruskal pass succeeded, its scoring was tried
+    assert best_fb == best_twin
+    _assert_same_metrics(m_fb, m_twin)
+
+    calls.clear()
+    monkeypatch.setattr(_dbscan_module(), "_kruskal", _oom("kruskal"))
+    monkeypatch.setattr(_anonymize_module(), "_score_levels", _oom("score"))
     assert _labels() == labels
-    m_fb, best_fb = eps_sweep(df, [1.0, 2.0, 4.0], 4)
-    assert len(calls) == 2  # both calls tried the driver pass first
+    m_fb, best_fb = eps_sweep(df, eps_values, 4)
+    # both calls tried the driver pass first; with no driver labels
+    # there is nothing to score on the driver
+    assert calls == ["kruskal", "kruskal"]
     assert best_fb == best
     _assert_same_metrics(m_fb, metrics)
+
+
+def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
+    """Under the default pair bound the sweep scores on the driver
+    (``assign_nearest``, the twin's noise join, is never reached), and
+    every driver-built frame is Arrow-backed (no list goes through
+    ``createDataFrame``): eps_sweep, the zero-cluster information_loss
+    row and a k-member run with a repair round all still succeed."""
+    from pyspark.sql import SparkSession
+
+    from dbscan_pyspark_spark.operators import kmember
+
+    rng = random.Random(41)
+    df = spark.createDataFrame(
+        _blobs(rng, [(0, 0), (20, 20)], 15, 2.0), ["id", "features", "sensitive"]
+    )
+    grid = spark.createDataFrame(
+        [(i, [float(i % 7), float(i // 7)]) for i in range(30)], ["id", "features"]
+    )
+    all_noise = dbscan(df, 0.01, 4)
+
+    create = SparkSession.createDataFrame
+
+    def _no_lists(self, data, *args, **kwargs):
+        if isinstance(data, list):
+            raise AssertionError("createDataFrame from a list")
+        return create(self, data, *args, **kwargs)
+
+    built = []
+    local_frame = kmember._local_frame
+
+    def _spy(spark_, rows, ddl):
+        built.append(ddl)
+        return local_frame(spark_, rows, ddl)
+
+    monkeypatch.setattr(_anonymize_module(), "assign_nearest", _no_assign)
+    monkeypatch.setattr(SparkSession, "createDataFrame", _no_lists)
+    monkeypatch.setattr(kmember, "_local_frame", _spy)
+
+    metrics, best = eps_sweep(df, [0.01, 2.0, 4.0], 4)
+    assert len(metrics.collect()) == 3 and best in (2.0, 4.0)
+    loss = information_loss(df, all_noise).first()
+    assert (loss["n_clusters"], loss["n_noise"]) == (0, df.count())
+    res = kmember.kmember_kmeans(grid, k=10, n_clusters=3, max_iter=3)
+    assert "cluster_id int, _need int" in built  # a repair round ran
+    sizes = [r["count"] for r in res.assignments.groupBy("cluster_id").count().collect()]
+    assert sorted(sizes) == [10, 10, 10]
