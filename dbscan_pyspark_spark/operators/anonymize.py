@@ -21,8 +21,9 @@ Where each level is scored follows where it was labeled: when
 ``dbscan._rep_labels`` solved the sweep on the driver, every level's
 metrics are weighted numpy sums over the labels and reps it already
 holds (``_score_levels``); otherwise (pairs or noise-to-centroid work
-above ``_DRIVER_PAIRS_THRESHOLD``, or a failed driver attempt) the
-concurrent per-ε Spark bodies score them — the distributed twin.
+above ``components._DRIVER_PAIRS_THRESHOLD``, or a failed driver
+attempt) the concurrent per-ε Spark bodies score them — the distributed
+twin.
 
 Small driver-built frames (metric rows, centroid and repair tables)
 go through ``_local_frame``: Arrow ships them to the JVM, so scanning
@@ -31,18 +32,13 @@ or broadcasting them never starts a Python task.
 
 from __future__ import annotations
 
-from importlib import import_module
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
+from dbscan_pyspark_spark.operators import components as _components
 from dbscan_pyspark_spark.operators.dbscan import _DRIVER_FAILURES, _rep_labels
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
-
-# the module, not the ``dbscan`` function the operators package exports
-# under the same name; its pair bound is read at call time
-_dbscan = import_module("dbscan_pyspark_spark.operators.dbscan")
 
 
 def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -247,12 +243,12 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
     - a level with no cluster gives ``(eps, 0, n_total, 0.0, inf, inf)``.
 
     Returns None (the caller runs the Spark body) when Σ over levels of
-    noise reps × centroids exceeds ``_DRIVER_PAIRS_THRESHOLD``; within it,
-    noise distances are built one dimension at a time in row blocks of
-    at most that many cells."""
+    noise reps × centroids exceeds ``components._DRIVER_PAIRS_THRESHOLD``;
+    within it, noise distances are built one dimension at a time in row
+    blocks of at most that many cells."""
     import numpy as np
 
-    bound = _dbscan._DRIVER_PAIRS_THRESHOLD
+    bound = _components._DRIVER_PAIRS_THRESHOLD
     ids = reps_pdf[id_col].to_numpy(dtype="int64")
     mult = reps_pdf["_mult"].to_numpy(dtype="int64")
     x = np.stack(reps_pdf[features].to_numpy()).astype("float64")

@@ -31,6 +31,15 @@ _COALESCE_KEY = "spark.sql.adaptive.coalescePartitions.enabled"
 _COALESCE_LOCK = threading.Lock()
 _COALESCE_STATE: dict[int, list] = {}  # id(session) -> [depth, prev]
 
+# The one driver-vs-distributed size gate of the DBSCAN path: up to this
+# many edges (pairs) connected_components solves on the driver by
+# union-find, dbscan's labeling core solves every ε level in one driver
+# Kruskal pass, and eps_sweep scores every level in numpy (there the
+# count is Σ noise reps × centroids). Four 8-byte columns per pair,
+# ~160 MB at the bound. Read as a module attribute at call time; 0
+# forces every distributed twin.
+_DRIVER_PAIRS_THRESHOLD = 5_000_000
+
 
 def _coalesce_flip_enter(spark) -> None:
     with _COALESCE_LOCK:
@@ -172,9 +181,7 @@ def connected_components(
     dst: str = "dst",
     id_col: str = "id",
     max_iter: int = 50,
-    driver_threshold: int = 5_000_000,
-    as_pandas: bool = False,
-):
+) -> DataFrame:
     """Labels every vertex with the minimum vertex id of its component.
 
     ``edges``: DataFrame with ``src``/``dst`` (undirected; self-loops and
@@ -184,14 +191,11 @@ def connected_components(
     component, and the output is restricted to this set.
     Returns ``DataFrame(id, component)``.
 
-    Adaptive execution: if the raw edge list has <= ``driver_threshold``
-    rows it is solved by driver union-find (one job, O(E α)); larger
-    graphs run distributed star-contraction (O(log n) shuffling rounds).
-    With ``as_pandas=True`` the driver path returns its labels as a
-    pandas DataFrame (skipping a pandas -> Spark -> pandas roundtrip for
-    callers that finish driver-side); the distributed path still returns
-    a Spark DataFrame — check the type. Ignored when ``vertices`` is
-    given.
+    Adaptive execution: if the raw edge list has <=
+    ``_DRIVER_PAIRS_THRESHOLD`` rows it is solved by driver union-find
+    (one job, O(E α)); larger graphs run distributed star-contraction
+    (O(log n) shuffling rounds), finished on the driver once a round
+    shrinks the edge set under the same bound.
     Each round localCheckpoints the edge set — lineage truncation, the
     discipline the reference needed ``setCheckpointDir`` for
     (``DBSCAN.py:171``) and its k-means notebook lacked entirely
@@ -215,16 +219,15 @@ def connected_components(
         # recompute its full edge lineage for each.
         raw = raw.localCheckpoint(eager=True)
 
+    driver_max = _DRIVER_PAIRS_THRESHOLD
     n_edges = raw.count()
-    if driver_threshold > 0 and n_edges <= driver_threshold:
+    if driver_max > 0 and n_edges <= driver_max:
         # Union-find tolerates self-loops (a hook where u == v is a
         # no-op), and a node whose only edges are self-loops appears in
         # the pulled id set and comes out labeled with itself — so the
         # driver path needs ONE Arrow pull over the raw edge list, no
         # self-loop distinct, no anti-join.
         labels_pdf = _driver_union_find(raw, id_col)
-        if as_pandas and vertices is None:
-            return labels_pdf
         labels = edges.sparkSession.createDataFrame(
             labels_pdf, f"{id_col} long, component long"
         )
@@ -280,9 +283,9 @@ def connected_components(
                 f"star-contraction checkpoints but only "
                 f"{heap / 2**30:.1f} GiB is configured — set "
                 f"spark.driver.memory to at least "
-                f"{max(1, int(needed / 2**30) + 1)}g (or raise "
-                f"driver_threshold to take the union-find path: it "
-                f"needs only ~16 B/edge)"
+                f"{max(1, int(needed / 2**30) + 1)}g (graphs of at "
+                f"most {driver_max:,} edges take the driver union-find "
+                f"path, which needs only ~16 B/edge)"
             )
 
     # NOTE: SQL confs are session-global — flipping coalescing off for
@@ -311,7 +314,7 @@ def connected_components(
             if sig == prev_sig:
                 break
             prev_sig = sig
-            if driver_threshold > 0 and sig[0] <= driver_threshold:
+            if driver_max > 0 and sig[0] <= driver_max:
                 # Hybrid finish: rounds preserve connectivity and never
                 # drop a node (every node re-emits as a relink target or
                 # self-link until fixpoint), and a component's minimum

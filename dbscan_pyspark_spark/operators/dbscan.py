@@ -38,15 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.operators import components as _components
 from dbscan_pyspark_spark.operators.components import _union, connected_components
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, eps_join
-
-# Up to this many ε-pairs (the symmetric relation at the largest ε) the
-# labeling core solves every ε level in one driver pass; above it, it
-# runs the distributed per-ε chain. Same bound as connected_components'
-# union-find fast path: four 8-byte columns per pair, ~160 MB at the
-# bound.
-_DRIVER_PAIRS_THRESHOLD = 5_000_000
 
 # Below this rep count the label map (rep features + cluster id) is
 # broadcast for the final expansion join, so the original points are
@@ -184,9 +178,10 @@ def _rep_labels(reps, pairs, eps_values, min_pts, min_cluster_size, variant, id_
     except that with ``min_cluster_size <= 1`` an edgeless rep stands for
     one singleton cluster per original row.
 
-    This is the one driver-vs-distributed decision. Up to
-    ``_DRIVER_PAIRS_THRESHOLD`` pairs every level is solved at once by
-    ``_kruskal`` on the driver, and ``driver`` is ``({ε: pandas
+    This is the one driver-vs-distributed labeling decision. Up to
+    ``components._DRIVER_PAIRS_THRESHOLD`` pairs (the bound the chain's
+    connected_components applies to its edges) every level is solved at
+    once by ``_kruskal`` on the driver, and ``driver`` is ``({ε: pandas
     DataFrame(id, cluster_id)}, reps as pandas)``: the per-level label
     frames plus the one collect of the reps (features, id, ``_mult``),
     which ``eps_sweep`` scores on the driver and ``dbscan`` ignores.
@@ -195,7 +190,7 @@ def _rep_labels(reps, pairs, eps_values, min_pts, min_cluster_size, variant, id_
     ``labels_at`` call runs the distributed ``_chain_labels``. Both give
     every component its minimum rep id."""
     spark = reps.sparkSession
-    if pairs.count() <= _DRIVER_PAIRS_THRESHOLD:
+    if pairs.count() <= _components._DRIVER_PAIRS_THRESHOLD:
         try:
             reps_pdf = reps.toPandas()
             pdfs = _kruskal(

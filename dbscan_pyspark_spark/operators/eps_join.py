@@ -267,38 +267,25 @@ def neighbor_counts(
     features: str = "features",
     id_col: str = "id",
     dim: int | None = None,
-    contract_duplicates: bool = True,
 ) -> DataFrame:
     """Per-point ε-neighborhood size, **including self and duplicate
     rows** (reference ``reduceByKey`` list length at ``DBSCAN.py:161``).
     Never materializes neighbor lists — count only, partial-aggregated
     map-side.
 
-    Runs the join once per *unordered* pair (half the distance
-    evaluations) and mirrors counts by a 3-leg union: each a<b pair
-    contributes to both endpoints, and every vector contributes its own
-    self-pair(s).
-
-    ``contract_duplicates``: run the join over *distinct* feature
-    vectors weighted by multiplicity and broadcast counts back by
-    vector equality (the dbscan.py contraction). Quantized data (the
+    The join runs over *distinct* feature vectors weighted by
+    multiplicity (the dbscan.py contraction, ``_contract``), once per
+    *unordered* pair (half the distance evaluations): each a<b pair adds
+    the other side's multiplicity to both endpoints, and every vector
+    adds its own. Counts go back to the points by vector equality and
+    are bit-identical to counting over the raw rows. Quantized data (the
     anonymization use case) contracts many-fold — the customer point
     cloud at sf0.1 is 15k rows over ~2.7k vectors, a ~30x drop in
-    candidate pairs. Counts are bit-identical to the uncontracted run.
+    candidate pairs. Duplicate-free data contracts to ~n and pays the rep
+    groupBy and the expansion join for nothing: ~2.4x the wall time of
+    a plain per-row count at 50k unique 3-d points (0.93M pairs, 4-core
+    local mode).
     """
-    if not contract_duplicates:
-        pairs = eps_self_join(
-            points, eps, metric=metric, features=features, id_col=id_col, dim=dim,
-            keep_distance=False, unique_pairs=True,
-        )
-        # explode, not a 2-leg union: a union would reference (and
-        # re-run) the join subtree once per leg — Catalyst does not CSE
-        # across union branches.
-        legs = pairs.select(
-            F.explode(F.array("a_id", "b_id")).alias(id_col)
-        ).unionAll(points.select(id_col))
-        return legs.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_neighbors"))
-
     if dim is None:
         dim = _dim_of(points, features)
     reps = _contract(points, features, id_col, dim)
@@ -348,12 +335,10 @@ def core_points(
     features: str = "features",
     id_col: str = "id",
     dim: int | None = None,
-    contract_duplicates: bool = True,
 ) -> DataFrame:
     """Points with >= min_pts ε-neighbors (HAVING filter, SURVEY.md §2.2 P3)."""
     counts = neighbor_counts(
         points, eps, metric=metric, features=features, id_col=id_col, dim=dim,
-        contract_duplicates=contract_duplicates,
     )
     return counts.where(F.col("n_neighbors") >= F.lit(int(min_pts)))
 

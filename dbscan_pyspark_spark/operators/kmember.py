@@ -37,7 +37,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.anonymize import _local_frame, assign_nearest
+from dbscan_pyspark_spark.operators.anonymize import (
+    _local_frame,
+    assign_nearest,
+    cluster_centroids,
+)
 from dbscan_pyspark_spark.operators.eps_join import _dim_of
 
 
@@ -47,24 +51,6 @@ class KMemberResult:
     centroids: DataFrame  # (cluster_id, centroid, n_members)
     cost: float
     n_iter: int
-
-
-def _recompute_centroids(
-    points: DataFrame, assign: DataFrame, id_col: str, features: str, dim: int
-) -> DataFrame:
-    aggs = [F.avg(F.col(features)[i]).alias(f"_c{i}") for i in range(dim)] + [
-        F.count(F.lit(1)).alias("n_members")
-    ]
-    return (
-        points.join(assign.select(id_col, "cluster_id"), id_col)
-        .groupBy("cluster_id")
-        .agg(*aggs)
-        .select(
-            "cluster_id",
-            F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
-            "n_members",
-        )
-    )
 
 
 def _repair(
@@ -209,8 +195,8 @@ def kmember_kmeans(
             points, assign, centroids, k, metric, id_col, features,
             max_rounds=2 * n_clusters + 8,
         )
-        new_centroids = _recompute_centroids(
-            points, assign, id_col, features, dim
+        new_centroids = cluster_centroids(
+            points, assign, features=features, id_col=id_col, dim=dim
         ).localCheckpoint(eager=False)  # the drift .first() is the action
 
         # |drift|: max L1 movement of any centroid (abs version of F6)

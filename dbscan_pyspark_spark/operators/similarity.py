@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.functions.distance import dot, l2_distance_sq, norm2
 from dbscan_pyspark_spark.functions.text import normalized
-from dbscan_pyspark_spark.operators.windows import partial_top_k_per_group
 
 # Above this many vectors the exact all-pairs near-dup path refuses to
 # run (see cosine_near_dup_pairs): at 100k vectors the upper triangle is
@@ -29,7 +28,7 @@ from dbscan_pyspark_spark.operators.windows import partial_top_k_per_group
 EXACT_PAIRS_MAX_VECTORS = 100_000
 
 # Above this many query rows the broadcast in cosine_topk stops being
-# "small dim table" shaped; route to ivf_cosine_topk instead.
+# "small dim table" shaped; route to ivf_quantized_topk instead.
 TOPK_MAX_QUERIES = 1_000_000
 
 
@@ -50,7 +49,6 @@ def cosine_topk(
     query_id_col: str | None = None,
     include_self: bool = False,
     max_queries: int | None = TOPK_MAX_QUERIES,
-    local_reduce: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -61,15 +59,14 @@ def cosine_topk(
 
     Scale shape: queries broadcast, scoring map-side over the vector
     scan, then one rank window over the scored relation. The exchange
-    carries n x q scored rows; MEASURED (sf0.1, 50k x 500 = 25M scored
-    rows): the JVM window plan runs 1.3 s, while routing the same rows
-    through an Arrow ``mapInPandas`` partial top-k
-    (``local_reduce=True``, kept for completeness) runs 2.4-2.7 s —
-    the Python transfer of the full scored relation costs more than
-    the exchange it avoids, at every size (both scale with n x q).
+    carries n x q scored rows. An Arrow ``mapInPandas`` partial top-k
+    in front of the window never paid for its Python transfer of the
+    full scored relation: MEASURED 1.3 s (window) vs 2.4-2.7 s at 50k x
+    500 = 25M scored rows on 32 cores, and level (median 14.5 vs
+    13.8 s) at 50k x 200 on 4 cores.
     The real scale lever when n x q explodes is candidate PRUNING, not
-    local reduction: :func:`ivf_cosine_topk`. Refuses query sets larger
-    than ``max_queries`` (pass None to override): beyond that the
+    local reduction: :func:`ivf_quantized_topk`. Refuses query sets
+    larger than ``max_queries`` (pass None to override): beyond that the
     broadcast itself is the bottleneck and IVF is the path.
     """
     qid = query_id_col or id_col
@@ -78,7 +75,7 @@ def cosine_topk(
         if n_q > max_queries:
             raise ValueError(
                 f"cosine_topk: {n_q} query vectors exceeds max_queries="
-                f"{max_queries}; use ivf_cosine_topk (cell-pruned ANN) "
+                f"{max_queries}; use ivf_quantized_topk (cell-pruned ANN) "
                 "or pass max_queries=None to force the broadcast"
             )
     q = F.broadcast(
@@ -98,21 +95,12 @@ def cosine_topk(
     )
     if not include_self:
         scored = scored.where(F.col("query_id") != F.col(id_col))
-    if local_reduce:
-        ranked = partial_top_k_per_group(
-            scored,
-            ["query_id"],
-            [("score", False), (id_col, True)],
-            k,
-            rank_col="rank",
-        )
-    else:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc_nulls_last(), F.col(id_col).asc()
-        )
-        ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc_nulls_last(), F.col(id_col).asc()
+    )
+    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
     return ranked.select("query_id", id_col, "score", "rank")
 
 

@@ -93,6 +93,12 @@ def _dbscan_module():
     return importlib.import_module("dbscan_pyspark_spark.operators.dbscan")
 
 
+def _components_module():
+    import importlib
+
+    return importlib.import_module("dbscan_pyspark_spark.operators.components")
+
+
 def test_eps_sweep_matches_single_runs(spark, monkeypatch):
     rng = random.Random(29)
     pts = _blobs(rng, [(0, 0), (20, 20)], 20, 2.0)
@@ -105,7 +111,7 @@ def test_eps_sweep_matches_single_runs(spark, monkeypatch):
         ["id", "features", "sensitive"],
     )
     cases = [(df, [2.0, 5.0], 4, None, None), (dups, [1.5], 4, 1, 3)]
-    mod = _dbscan_module()
+    mod = _components_module()
     for threshold in (mod._DRIVER_PAIRS_THRESHOLD, 0):  # driver pass, distributed twin
         monkeypatch.setattr(mod, "_DRIVER_PAIRS_THRESHOLD", threshold)
         for frame, eps_values, min_pts, mcs, n_clusters in cases:
@@ -168,11 +174,21 @@ def test_eps_sweep_kruskal_matches_per_eps_chain(spark, monkeypatch):
             m_new, b_new = eps_sweep(
                 frame, eps_values, min_pts, min_cluster_size=mcs, metric=metric
             )
+        calls = []
+        comp = _components_module()
+        union_find = comp._driver_union_find
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return union_find(*args, **kwargs)
+
         with monkeypatch.context() as m:
-            m.setattr(_dbscan_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
+            m.setattr(comp, "_DRIVER_PAIRS_THRESHOLD", 0)
+            m.setattr(comp, "_driver_union_find", spy)
             m_old, b_old = eps_sweep(
                 frame, eps_values, min_pts, min_cluster_size=mcs, metric=metric
             )
+        assert calls == []  # the chain's components ran star contraction
         assert b_new == b_old
         _assert_same_metrics(m_new, m_old)
         if frame is tie:
@@ -216,7 +232,7 @@ def test_driver_pass_failure_falls_back(spark, monkeypatch):
     labels = _labels()
     metrics, best = eps_sweep(df, eps_values, 4)
     with monkeypatch.context() as m:
-        m.setattr(_dbscan_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
+        m.setattr(_components_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
         m_twin, best_twin = eps_sweep(df, eps_values, 4)
     assert best_twin == best
     _assert_same_metrics(m_twin, metrics)

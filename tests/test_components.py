@@ -2,7 +2,7 @@
 
 import random
 
-from dbscan_pyspark_spark.operators import connected_components
+from dbscan_pyspark_spark.operators import components, connected_components
 
 
 def _uf_components(n_vertices, edges):
@@ -35,7 +35,7 @@ def test_simple_chain(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5, 7: 7}
 
 
-def test_random_graph_matches_union_find(spark):
+def test_random_graph_matches_union_find(spark, monkeypatch):
     rng = random.Random(13)
     n = 300
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(220)]
@@ -44,11 +44,10 @@ def test_random_graph_matches_union_find(spark):
     vdf = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     # both physical strategies must agree with the oracle
     for thr in (5_000_000, 0):  # driver union-find / distributed star-contraction
+        monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", thr)
         got = {
             r["id"]: r["component"]
-            for r in connected_components(
-                edf, vertices=vdf, driver_threshold=thr
-            ).collect()
+            for r in connected_components(edf, vertices=vdf).collect()
         }
         assert got == expected, f"strategy threshold={thr}"
 
@@ -75,7 +74,7 @@ def test_empty_edges(spark):
     assert got == {1: 1, 2: 2}
 
 
-def test_hybrid_early_exit_matches_other_strategies(spark):
+def test_hybrid_early_exit_matches_other_strategies(spark, monkeypatch):
     """A threshold between 0 and the edge count triggers >=1 distributed
     round followed by the driver union-find finish; labels must equal
     both pure strategies (min member id per component)."""
@@ -85,15 +84,13 @@ def test_hybrid_early_exit_matches_other_strategies(spark):
     n = 400
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(600)]
     edf = spark.createDataFrame(edges, ["src", "dst"])
+    monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 10_000_000)
     baseline = {
-        r["id"]: r["component"]
-        for r in connected_components(edf, driver_threshold=10_000_000).collect()
+        r["id"]: r["component"] for r in connected_components(edf).collect()
     }
     for thr in (50, 200, 500):
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components(edf, driver_threshold=thr).collect()
-        }
+        monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", thr)
+        got = {r["id"]: r["component"] for r in connected_components(edf).collect()}
         assert got == baseline, f"hybrid threshold={thr}"
 
 

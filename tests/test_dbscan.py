@@ -86,10 +86,11 @@ def test_dbscan_driver_matches_distributed(spark, monkeypatch):
     """The driver Kruskal pass and its distributed twin (the per-ε
     chain, forced by a zero pair bound) give identical labels for both
     variants, and both match the brute-force oracles — so the size
-    crossover can never change results."""
-    import importlib
+    crossover can never change results. The same bound gates the
+    chain's connected components, so the forced side never labels on
+    the driver."""
+    from dbscan_pyspark_spark.operators import components
 
-    dbscan_mod = importlib.import_module("dbscan_pyspark_spark.operators.dbscan")
     rng = random.Random(23)
     pts = [
         (i, [float(rng.randint(0, 20)), float(rng.randint(0, 20))])
@@ -102,12 +103,21 @@ def test_dbscan_driver_matches_distributed(spark, monkeypatch):
             r["id"]: r["cluster_id"]
             for r in dbscan(df, 3.0, 6, 6, variant=variant).collect()
         }
+        union_find = components._driver_union_find
+        calls = []
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return union_find(*args, **kwargs)
+
         with monkeypatch.context() as m:
-            m.setattr(dbscan_mod, "_DRIVER_PAIRS_THRESHOLD", 0)
+            m.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+            m.setattr(components, "_driver_union_find", spy)
             distributed = {
                 r["id"]: r["cluster_id"]
                 for r in dbscan(df, 3.0, 6, 6, variant=variant).collect()
             }
+        assert calls == [], variant  # star contraction, no driver finish
         assert driver == expected, variant
         assert distributed == expected, variant
 

@@ -58,15 +58,6 @@ def test_eps_join_is_not_cartesian(spark):
     assert_no_cartesian(pairs)
 
 
-def test_core_points_single_agg_shuffle(spark):
-    # uncontracted path: the cell join broadcasts at this scale, so the
-    # only exchange is the count aggregation itself.
-    pts = points_from_customer(spark, SF)
-    cp = core_points(pts, 3.0, 4, contract_duplicates=False)
-    assert shuffle_count(cp) <= 1
-    assert_no_cartesian(cp)
-
-
 def test_core_points_contracted_bounded_shuffles(spark):
     # duplicate contraction trades a bounded number of extra exchanges
     # (rep groupBy, weighted count, expansion join) for orders of

@@ -13,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.operators import components
 from dbscan_pyspark_spark.operators.components import connected_components
 from dbscan_pyspark_spark.operators.eps_join import eps_join
 from dbscan_pyspark_spark.operators.windows import anti_top_k_per_group, top_k_per_group
@@ -122,10 +123,12 @@ def test_components_driver_path_matches_union_find(spark, edges):
 @given(edges=edges_strategy)
 def test_components_star_contraction_matches_union_find(spark, edges):
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(e, id_col="id", driver_threshold=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(e, id_col="id").collect()
+        }
     assert got == _python_components(edges)
 
 

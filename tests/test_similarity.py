@@ -165,25 +165,6 @@ def test_tfidf_top_terms_truncation_bounds_candidates(spark):
     assert match == 1
 
 
-def test_cosine_topk_local_reduce_variants_agree(spark):
-    """local_reduce=True routes the scored rows through the Arrow
-    partial top-k (MapInPandas feeding the window); the default JVM
-    window plan (measured faster — see cosine_topk docstring) must not.
-    Both must return identical results."""
-    vecs = _make_vectors(n=60, dim=4, seed=7)
-    df = spark.createDataFrame(vecs, ["vec_id", "embedding"]).repartition(4)
-    queries = df.where(df.vec_id < 2)
-    reduced = cosine_topk(df, queries, k=3, local_reduce=True)
-    plain = cosine_topk(df, queries, k=3)
-    plan_r = reduced._jdf.queryExecution().executedPlan().toString()
-    plan_p = plain._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_r
-    win = plan_r.find("Window")
-    assert win != -1 and "MapInPandas" in plan_r[win:], "local reduce must feed the window"
-    assert "MapInPandas" not in plan_p
-    assert sorted(map(tuple, reduced.collect())) == sorted(map(tuple, plain.collect()))
-
-
 def test_exact_pairs_size_guard(spark):
     import pytest
     from dbscan_pyspark_spark.operators.similarity import cosine_near_dup_pairs
@@ -207,7 +188,7 @@ def test_cosine_topk_query_guard(spark):
         F.col("id").alias("vec_id"),
         F.array(F.rand(seed=1)).alias("embedding"),
     )
-    with pytest.raises(ValueError, match="ivf_cosine_topk"):
+    with pytest.raises(ValueError, match="ivf_quantized_topk"):
         cosine_topk(big.limit(10), big, k=1)
 
 

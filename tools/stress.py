@@ -145,23 +145,28 @@ def main() -> None:
     )
 
     # --- distributed connected components (star contraction) ---
-    # driver_threshold=0 forces the large-star/small-star path even when
-    # the driver could absorb the graph, so the 100 TB code path has a
-    # measured number. Random graph: 2 edges per node -> a few giant
+    # A zero driver bound forces the large-star/small-star path even
+    # when the driver could absorb the graph, so the 100 TB code path
+    # has a measured number. Random graph: 2 edges per node -> a few giant
     # components, the classic CC workload.
     n_nodes = max(N_POINTS * 2, 1_000_000)
     edges = spark.range(n_nodes * 2).select(
         (F.col("id") % n_nodes).alias("src"),
         (F.abs(F.xxhash64("id", F.lit(1))) % n_nodes).alias("dst"),
     )
-    from dbscan_pyspark_spark.operators.components import connected_components
+    from dbscan_pyspark_spark.operators import components
 
     t0 = time.time()
-    labels_cc = connected_components(edges, driver_threshold=0)
-    cc_stats = labels_cc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("component").alias("components"),
-    ).first()
+    bound = components._DRIVER_PAIRS_THRESHOLD
+    components._DRIVER_PAIRS_THRESHOLD = 0
+    try:
+        labels_cc = components.connected_components(edges)
+        cc_stats = labels_cc.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("component").alias("components"),
+        ).first()
+    finally:
+        components._DRIVER_PAIRS_THRESHOLD = bound
     print(
         json.dumps(
             {
