@@ -32,30 +32,13 @@ or broadcasting them never starts a Python task.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
 
 from dbscan_pyspark_spark.operators import components as _components
 from dbscan_pyspark_spark.operators.dbscan import _DRIVER_FAILURES, _rep_labels
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
-
-
-def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """DataFrame of driver-side ``rows`` under the DDL schema ``ddl``.
-
-    Built as a pandas frame and shipped as one Arrow table, so Spark
-    scans it in the JVM. A list of tuples would go through
-    ``parallelize`` instead, and every scan of it (each broadcast
-    included) would run Python tasks; so would an empty pandas frame,
-    which ``createDataFrame`` converts without Arrow. Empty ``rows``
-    give an empty frame of the same schema."""
-    import pandas as pd
-    import pyarrow as pa
-
-    schema = DataType.fromDDL(ddl)
-    pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
-    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
+from dbscan_pyspark_spark.session import _local_frame
 
 
 def cluster_centroids(

@@ -7,10 +7,14 @@ algorithmic shape (assign → recompute means → repeat) but re-expresses
 each iteration as TWO dataframe operations with the scale profile you
 want on a 1000-executor cluster:
 
-- **assignment is map-side only.** The k centroids are embedded in the
-  plan as an array-of-struct literal, and the nearest-centroid argmin is
-  a single ``array_min(transform(...))`` expression — no join, no
-  shuffle, no broadcast table. Every iteration is one scan.
+- **assignment is map-side only.** The k centroids ship as ONE
+  broadcast row (``_centroid_table``: ``_c array<struct<cid, c>>``)
+  cross-joined onto the points, and the nearest-centroid argmin is a
+  single ``array_min(transform(_c, ...))`` expression (``_nearest``) —
+  no shuffle of the points, and the plan's size does not grow with
+  k×dim. Every iteration is one scan. k-member, the IVF probes and
+  streaming inference rank against the same row with the same
+  expression.
 - **the centroid update is one k×dim-row shuffle.** Per-dimension sums
   are expressed as ``dim`` independent ``sum(v[i])`` aggregates, all
   partially aggregated map-side, so the exchange carries k rows of dim
@@ -30,13 +34,31 @@ chained CTEs (see ``__spark_entry__.kmeans_oracle``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dbscan_pyspark_spark.session import _local_frame
 
 
 def _quantized(vec_col: str, scale: int) -> F.Column:
     return F.transform(
         vec_col, lambda x: F.round(x * scale, 0).cast("long")
+    )
+
+
+def _quantized_rows(
+    df: DataFrame, vec_col: str, scale: int | None, out_col: str = "_v"
+) -> DataFrame:
+    """``df`` plus ``out_col``: ``vec_col`` on the integer grid (cast to
+    ``array<bigint>`` when ``scale`` is None), NULL and empty vectors
+    dropped — the one row filter training and inference share."""
+    q = (
+        _quantized(vec_col, scale)
+        if scale is not None
+        else F.col(vec_col).cast("array<bigint>")
+    )
+    return df.withColumn(out_col, q).where(
+        F.col(out_col).isNotNull() & (F.size(out_col) > 0)
     )
 
 
@@ -51,32 +73,60 @@ def _sq_l2(v, c) -> F.Column:
     )
 
 
-def _centroid_literal(centroids: list[tuple[int, list[int]]]) -> F.Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(int(x)) for x in vec])
-                .cast("array<bigint>")
-                .alias("c"),
-            )
-            for cid, vec in centroids
-        ]
+def _l1_int(v, c) -> F.Column:
+    """Exact integer L1 between two long arrays (the reference
+    pipeline's k-member metric, F1/A4) — order-free, engine-exact."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda a, b: F.abs(a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
     )
 
 
-def _assign_expr(centroids: list[tuple[int, list[int]]], v_col: str) -> F.Column:
-    """Map-side nearest-centroid id: min over (distance, cid) structs."""
-    cents = _centroid_literal(centroids)
-    return F.array_min(
-        F.transform(
-            cents,
-            lambda c: F.struct(
-                _sq_l2(F.col(v_col), c.getField("c")).alias("d"),
-                c.getField("cid").alias("cid"),
-            ),
-        )
-    ).getField("cid")
+def _centroid_table(
+    spark: SparkSession, centroids: list[tuple[int, list[int]]]
+) -> DataFrame:
+    """The centroid table as one broadcast row
+    ``_c array<struct<cid int, c array<bigint>>>``: crossJoin it and
+    rank against ``_c`` with :func:`_nearest`. The k×dim integers ship
+    to the workers once, so the plan stays the same size whatever
+    k×dim is."""
+    row = [{"cid": int(cid), "c": [int(x) for x in vec]} for cid, vec in centroids]
+    return F.broadcast(
+        _local_frame(spark, [(row,)], "_c array<struct<cid: int, c: array<bigint>>>")
+    )
+
+
+def _nearest(
+    cents: F.Column, v: F.Column, n: int | None = None, dist=_sq_l2
+) -> F.Column:
+    """Rank the vector ``v`` against the centroid array ``cents`` (an
+    ``array<struct<cid, c>>`` column) by ``(d, cid)`` structs, so ties
+    break toward the lower cid: the nearest struct when ``n`` is None,
+    else the ``n`` nearest in order."""
+    ranked = F.transform(
+        cents,
+        lambda c: F.struct(
+            dist(v, c.getField("c")).alias("d"),
+            c.getField("cid").alias("cid"),
+        ),
+    )
+    return F.array_min(ranked) if n is None else F.slice(F.array_sort(ranked), 1, n)
+
+
+def _assign(
+    df: DataFrame,
+    centroids: list[tuple[int, list[int]]],
+    v_col: str = "_v",
+    out_col: str = "cluster",
+) -> DataFrame:
+    """``df`` plus ``out_col``: the cid of the centroid nearest to
+    ``v_col`` under exact squared L2."""
+    return (
+        df.crossJoin(_centroid_table(df.sparkSession, centroids))
+        .withColumn(out_col, _nearest(F.col("_c"), F.col(v_col)).getField("cid"))
+        .drop("_c")
+    )
 
 
 def kmeans_quantized(
@@ -116,66 +166,56 @@ def kmeans_fit(
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """:func:`kmeans_quantized` returning (assignments, centroids) —
     the centroid list is the trained model in quantized units, ready
-    for `_assign_expr`-style map-side inference."""
-    if scale is not None:
-        q = vectors.select(
-            F.col(id_col), _quantized(vec_col, scale).alias("_v")
-        )
-    else:
-        q = vectors.select(
-            F.col(id_col), F.col(vec_col).cast("array<bigint>").alias("_v")
-        )
-    q = q.where(F.col("_v").isNotNull() & (F.size("_v") > 0))
+    for :func:`assign_with_model` or streaming inference."""
     # the loop scans q n_iter+1 times: materialize the quantized
     # projection once instead of re-deriving it from the source each
     # pass (at 2M x 64-d this halves the run; with a real file source
-    # it also avoids n_iter+1 scans of the table)
-    q = q.persist()
-
-    init_rows = q.orderBy(id_col).limit(k).collect()
-    if not init_rows:
-        q.unpersist()
-        return (
-            q.select(
-                F.col(id_col), F.lit(None).cast("int").alias("cluster")
-            ),
-            [],
-        )
-    centroids = [(i, list(r["_v"])) for i, r in enumerate(init_rows)]
-    dim = len(centroids[0][1])
-
-    for _ in range(n_iter):
-        assigned = q.select(
-            F.col(id_col),
-            F.col("_v"),
-            _assign_expr(centroids, "_v").alias("cluster"),
-        )
-        # dim independent partial-agg sums: the exchange carries k rows.
-        sums = [
-            F.sum(F.col("_v")[i]).alias(f"s{i}") for i in range(dim)
-        ]
-        upd = (
-            assigned.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n"), *sums)
-            .collect()
-        )
-        centroids = sorted(
-            (
-                int(r["cluster"]),
-                # floor(sum / n) in exact integer arithmetic (Python //
-                # floors toward -inf; the oracle mirrors with floor()).
-                [int(r[f"s{i}"] // r["n"]) for i in range(dim)],
+    # it also avoids n_iter+1 scans of the table). try/finally so a job
+    # failure mid-fit cannot leak the persisted relation.
+    q = _quantized_rows(vectors, vec_col, scale).select(id_col, "_v").persist()
+    try:
+        init_rows = q.orderBy(id_col).limit(k).collect()
+        if not init_rows:
+            return (
+                q.select(
+                    F.col(id_col), F.lit(None).cast("int").alias("cluster")
+                ),
+                [],
             )
-            for r in upd
-        )
+        centroids = [(i, list(r["_v"])) for i, r in enumerate(init_rows)]
+        dim = len(centroids[0][1])
 
-    out = q.select(
-        F.col(id_col), _assign_expr(centroids, "_v").alias("cluster")
-    )
-    # pin the final assignment, then release the cached projection so a
-    # long-running caller doesn't leak a cached relation per call
-    out = out.localCheckpoint(eager=True)
-    q.unpersist()
+        for _ in range(n_iter):
+            # dim independent partial-agg sums: the exchange carries k rows.
+            sums = [
+                F.sum(F.col("_v")[i]).alias(f"s{i}") for i in range(dim)
+            ]
+            upd = (
+                _assign(q, centroids)
+                .groupBy("cluster")
+                .agg(F.count(F.lit(1)).alias("n"), *sums)
+                .collect()
+            )
+            centroids = sorted(
+                (
+                    int(r["cluster"]),
+                    # floor(sum / n) in exact integer arithmetic (Python //
+                    # floors toward -inf; the oracle mirrors with floor()).
+                    [int(r[f"s{i}"] // r["n"]) for i in range(dim)],
+                )
+                for r in upd
+            )
+
+        # pin the final assignment before the cached projection is
+        # released, so a long-running caller doesn't leak a cached
+        # relation per call
+        out = (
+            _assign(q, centroids)
+            .select(id_col, "cluster")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        q.unpersist()
     return out, centroids
 
 
@@ -225,16 +265,8 @@ def assign_with_model(
 ) -> DataFrame:
     """Map-side assignment of new vectors to a fitted model — identical
     expression AND row filter to the training assignment (null/empty
-    vectors are dropped, as kmeans_fit drops them), zero shuffle."""
-    q = (
-        _quantized(vec_col, scale)
-        if scale is not None
-        else F.col(vec_col).cast("array<bigint>")
-    )
-    return (
-        vectors.withColumn("_qv", q)
-        .where(F.col("_qv").isNotNull() & (F.size("_qv") > 0))
-        .select(
-            F.col(id_col), _assign_expr(centroids, "_qv").alias("cluster")
-        )
+    vectors are dropped, as kmeans_fit drops them); the points side
+    never shuffles."""
+    return _assign(_quantized_rows(vectors, vec_col, scale), centroids).select(
+        id_col, "cluster"
     )

@@ -37,12 +37,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.anonymize import (
-    _local_frame,
-    assign_nearest,
-    cluster_centroids,
-)
+from dbscan_pyspark_spark.operators.anonymize import assign_nearest, cluster_centroids
 from dbscan_pyspark_spark.operators.eps_join import _dim_of
+from dbscan_pyspark_spark.operators.kmeans import (
+    _centroid_table,
+    _l1_int,
+    _nearest,
+    _quantized_rows,
+)
+from dbscan_pyspark_spark.session import _local_frame
 
 
 @dataclass
@@ -314,31 +317,23 @@ def kmember_search(
     return metrics, best
 
 
-def _l1_int(v, c) -> F.Column:
-    """Exact integer L1 between two long arrays (the reference
-    pipeline's k-member metric, F1/A4) — order-free, engine-exact."""
-    return F.aggregate(
-        F.zip_with(v, c, lambda a, b: F.abs(a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _assign_struct_l1(
-    centroids: list[tuple[int, list[int]]], v_col: str
-) -> F.Column:
-    """Map-side nearest-centroid (dist, cid) struct under integer L1 —
-    ties break toward the lower centroid id via the struct order."""
-    from dbscan_pyspark_spark.operators.kmeans import _centroid_literal
-
-    cents = _centroid_literal(centroids)
-    return F.array_min(
-        F.transform(
-            cents,
-            lambda c: F.struct(
-                _l1_int(F.col(v_col), c.getField("c")).alias("d"),
-                c.getField("cid").alias("cid"),
-            ),
+def _nearest_l1(
+    df: DataFrame, centroids: list[tuple[int, list[int]]], id_col: str
+) -> DataFrame:
+    """(id, _v, cluster, dist): each ``_v`` row's nearest centroid under
+    integer L1, ties toward the lower cid."""
+    return (
+        df.crossJoin(_centroid_table(df.sparkSession, centroids))
+        .select(
+            id_col,
+            "_v",
+            _nearest(F.col("_c"), F.col("_v"), dist=_l1_int).alias("_a"),
+        )
+        .select(
+            id_col,
+            "_v",
+            F.col("_a.cid").alias("cluster"),
+            F.col("_a.d").alias("dist"),
         )
     )
 
@@ -366,7 +361,7 @@ def _repair_quantized(
 
     One job per round: the non-eager round checkpoint is materialized
     by the next count collect (or the caller's next action) — and the
-    incoming literal-argmin assignment is checkpointed up front so the
+    incoming argmin assignment is checkpointed up front so the
     round job reads it instead of re-evaluating the per-row centroid
     scan in every subtree."""
     assign = assign.localCheckpoint(eager=False)
@@ -402,16 +397,7 @@ def _repair_quantized(
                 "cluster int, _need int",
             )
         )
-        claims = released.select(
-            id_col,
-            _assign_struct_l1(deficient_cents, "_v").alias("_a"),
-            "_v",
-        ).select(
-            id_col,
-            F.col("_a.cid").alias("cluster"),
-            F.col("_a.d").alias("dist"),
-            "_v",
-        )
+        claims = _nearest_l1(released, deficient_cents, id_col)
         wc = Window.partitionBy("cluster").orderBy(
             F.col("dist").asc(), F.col(id_col).asc()
         )
@@ -459,29 +445,19 @@ def kmember_quantized(
     centroid updates plus a final assign+repair, distance in quantized
     L1 units against the final centroids' repair-time values.
 
-    Scale shape: assignment is map-side only (centroid literals in the
-    plan — one scan, no join); each centroid update shuffles
-    n_clusters rows of dim partial sums; each repair round is two
+    Scale shape: assignment is map-side only (one broadcast centroid
+    row, ranked per point — one scan, no shuffle); each centroid update
+    shuffles n_clusters rows of dim partial sums; each repair round is two
     ranked windows over the (small) surplus/claim relations plus one
     id-keyed anti-join. Driver state is the n_clusters-row count/
     centroid tables only.
     """
     if k < 1 or n_clusters < 1:
         raise ValueError("kmember_quantized: k and n_clusters must be >= 1")
-    from dbscan_pyspark_spark.operators.kmeans import _quantized
-
-    if scale is not None:
-        q = points.select(
-            F.col(id_col), _quantized(features, scale).alias("_v")
-        )
-    else:
-        q = points.select(
-            F.col(id_col), F.col(features).cast("array<bigint>").alias("_v")
-        )
     # try/finally so a job failure mid-iteration (or an exception in
     # _repair_quantized) cannot leak the persisted relation for the
     # session — the unpersist runs on EVERY exit path
-    q = q.where(F.col("_v").isNotNull() & (F.size("_v") > 0)).persist()
+    q = _quantized_rows(points, features, scale).select(id_col, "_v").persist()
     try:
         n = q.count()
         if n < k * n_clusters:
@@ -526,14 +502,7 @@ def _kmember_quantized_core(
 
     assign = None
     for it in range(n_iter + 1):
-        assign = q.select(
-            id_col, "_v", _assign_struct_l1(centroids, "_v").alias("_a")
-        ).select(
-            id_col,
-            "_v",
-            F.col("_a.cid").alias("cluster"),
-            F.col("_a.d").alias("dist"),
-        )
+        assign = _nearest_l1(q, centroids, id_col)
         assign = _repair_quantized(
             assign, centroids, k, repair_rounds, id_col
         )
@@ -599,17 +568,7 @@ def kmember_search_quantized(
         raise ValueError("kmember_search_quantized: k must be >= 1")
     if restarts < 1:
         raise ValueError("kmember_search_quantized: restarts must be >= 1")
-    from dbscan_pyspark_spark.operators.kmeans import _quantized
-
-    if scale is not None:
-        q = points.select(
-            F.col(id_col), _quantized(features, scale).alias("_v")
-        )
-    else:
-        q = points.select(
-            F.col(id_col), F.col(features).cast("array<bigint>").alias("_v")
-        )
-    q = q.where(F.col("_v").isNotNull() & (F.size("_v") > 0)).persist()
+    q = _quantized_rows(points, features, scale).select(id_col, "_v").persist()
     try:
         n = q.count()
         if candidates is None:

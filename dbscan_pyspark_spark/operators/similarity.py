@@ -179,14 +179,15 @@ def auto_band_size(
 
 
 # Largest cell count a SINGLE-level quantizer may use: the centroid set
-# is embedded in the plan as a literal (`_centroid_literal`) and every
-# row evaluates one distance per centroid map-side, so both the plan
-# size and the per-row assignment cost grow linearly with C. Past this
-# bound :func:`ivf_quantized_topk` switches to the TWO-LEVEL quantizer
-# (`ivf_fit_two_level`): k1 ~ sqrt(C) literal coarse centroids route
-# map-side, k2 ~ C/k1 sub-centroids per coarse cell live in a small
-# broadcast RELATION keyed by the coarse cell — per-row cost drops from
-# C to k1 + k2 ~ 2*sqrt(C) and nothing driver-side exceeds sqrt(C).
+# ships as one broadcast row (`kmeans._centroid_table`), so the plan no
+# longer grows with C, but every row still evaluates one distance per
+# centroid, so the per-row assignment cost (and the broadcast row) grow
+# linearly with C. Past this bound :func:`ivf_quantized_topk` switches
+# to the TWO-LEVEL quantizer (`ivf_fit_two_level`): k1 ~ sqrt(C) coarse
+# centroids route map-side, k2 ~ C/k1 sub-centroids per coarse cell
+# live in a small broadcast RELATION keyed by the coarse cell — per-row
+# cost drops from C to k1 + k2 ~ 2*sqrt(C) and nothing driver-side
+# exceeds sqrt(C).
 _FLAT_MAX_CELLS = 4096
 
 
@@ -992,8 +993,9 @@ class IVFTwoLevelModel:
     """Fitted two-level IVF coarse quantizer (see
     :func:`ivf_fit_two_level`): ``assign`` is the corpus cell
     assignment DataFrame(id_col, cluster int); ``l1_centroids`` is the
-    k1-entry quantized-units literal list (the only driver-side
-    structure — bounded by sqrt(n_cells)); ``l2_cells`` is the small
+    k1-entry quantized-units centroid list (the only driver-side
+    structure — bounded by sqrt(n_cells), shipped to the workers as one
+    broadcast row per use); ``l2_cells`` is the small
     broadcast relation DataFrame(_l1 int, subcents
     array<struct<cid int, c array<bigint>>>) holding each coarse
     cell's sub-centroids sorted by global cell id."""
@@ -1068,22 +1070,21 @@ def ivf_fit_two_level(
     train_cap: int | None = None,
 ) -> IVFTwoLevelModel:
     """Two-level IVF coarse quantizer — the path past
-    ``_FLAT_MAX_CELLS``, where a single-level quantizer's
-    plan-embedded centroid literal and per-row C-way argmin both stop
-    scaling (the round-9 verdict's one `weak`).
+    ``_FLAT_MAX_CELLS``, where a single-level quantizer's per-row
+    C-way argmin stops scaling (the round-9 verdict's one `weak`).
 
     Level 1 routes: k1 = ceil(sqrt(n_cells)) centroids trained with the
     deterministic grid-quantized Lloyd's
     (:func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit`) and
-    embedded as a literal — bounded by sqrt(n_cells) <= 4096, so the
-    A7 driver-bounded-collect discipline holds at any corpus size.
+    shipped as one broadcast row — bounded by sqrt(n_cells) <= 4096, so
+    the A7 driver-bounded-collect discipline holds at any corpus size.
     Level 2 refines: k2 = ceil(n_cells / k1) sub-centroids PER coarse
     cell, trained by per-group Lloyd's inside ``applyInPandas`` on a
     deterministic per-cell sample (the ``train_cap`` smallest-id
     members — one slim (id, l1, vec) shuffle, the only corpus shuffle
     in the fit). Sub-centroids live in a C-row broadcast RELATION
-    keyed by the coarse cell — never a literal — so assignment is a
-    map-side broadcast equi-join: per-row cost k1 + k2 ~ 2*sqrt(C)
+    keyed by the coarse cell, so assignment is a map-side broadcast
+    equi-join: per-row cost k1 + k2 ~ 2*sqrt(C)
     instead of C, the shape the verdict asked for (`ivf_knn_graph`'s
     cell-keyed join, generalized to the quantizer itself).
 
@@ -1093,9 +1094,9 @@ def ivf_fit_two_level(
     import math
 
     from dbscan_pyspark_spark.operators.kmeans import (
-        _assign_expr,
-        _quantized,
-        _sq_l2,
+        _assign,
+        _nearest,
+        _quantized_rows,
         kmeans_fit,
     )
 
@@ -1116,14 +1117,12 @@ def ivf_fit_two_level(
     if not cents1:
         raise ValueError("empty vectors")
 
-    q = (
-        vectors.select(F.col(id_col), _quantized(vec_col, scale).alias("_v"))
-        .where(F.col("_v").isNotNull() & (F.size("_v") > 0))
-    )
-    routed = q.select(
-        F.col(id_col).alias("_tid"),
-        F.col("_v"),
-        _assign_expr(cents1, "_v").alias("_l1"),
+    routed = _assign(
+        _quantized_rows(vectors, vec_col, scale).select(
+            F.col(id_col).alias("_tid"), "_v"
+        ),
+        cents1,
+        out_col="_l1",
     )
 
     # Deterministic per-cell training sample: the train_cap smallest-id
@@ -1150,15 +1149,7 @@ def ivf_fit_two_level(
         .localCheckpoint(eager=True)  # C slim rows; cut the fit lineage
     )
 
-    nearest_sub = F.array_min(
-        F.transform(
-            F.col("subcents"),
-            lambda s: F.struct(
-                _sq_l2(F.col("_v"), s.getField("c")).alias("d"),
-                s.getField("cid").alias("cid"),
-            ),
-        )
-    ).getField("cid")
+    nearest_sub = _nearest(F.col("subcents"), F.col("_v")).getField("cid")
     assign = (
         routed.join(F.broadcast(l2_cells), "_l1")
         .select(F.col("_tid").alias(id_col), nearest_sub.alias("cluster"))
@@ -1171,6 +1162,11 @@ def ivf_fit_two_level(
     return IVFTwoLevelModel(assign, cents1, l2_cells, k1, k2, n_cells)
 
 
+def _cids(ranked: F.Column) -> F.Column:
+    """The cids of an array of ranked ``(d, cid)`` structs, in order."""
+    return F.transform(ranked, lambda s: s.getField("cid"))
+
+
 def _two_level_probe_cells(
     qv: DataFrame,
     model: IVFTwoLevelModel,
@@ -1179,14 +1175,15 @@ def _two_level_probe_cells(
 ) -> DataFrame:
     """Probe-cell selection against a two-level quantizer: rank the
     query's nprobe_l1 = ceil(nprobe / k2) + 1 nearest COARSE cells
-    map-side over the k1-entry literal, fan out to their sub-centroids
-    via the broadcast l2 relation (per-query work nprobe_l1 * k2 ~
-    2*sqrt(C), never C), keep each coarse row's nprobe best sub-cells
-    BEFORE the per-query merge (global top-nprobe is a subset of the
-    per-row top-nprobes since every cell lives in exactly one coarse
-    row — so the merge shuffles nprobe_l1 * nprobe structs per query,
-    not nprobe_l1 * k2), then merge to the final nprobe cells with the
-    flat path's (distance, cid) total-order tie-break. Returns
+    map-side against the k1 coarse centroids (one broadcast row), fan
+    out to their sub-centroids via the broadcast l2 relation (per-query
+    work nprobe_l1 * k2 ~ 2*sqrt(C), never C), keep each coarse row's
+    nprobe best sub-cells BEFORE the per-query merge (global
+    top-nprobe is a subset of the per-row top-nprobes since every cell
+    lives in exactly one coarse row — so the merge shuffles nprobe_l1 *
+    nprobe structs per query, not nprobe_l1 * k2), then merge to the
+    final nprobe cells with the flat path's (distance, cid) total-order
+    tie-break, both rankings via ``kmeans._nearest``. Returns
     DataFrame(query_id, cell). With nprobe >= n_cells the coarse fan
     covers every cell, so 'exhaustive probe' degenerates correctly.
 
@@ -1197,51 +1194,19 @@ def _two_level_probe_cells(
     callers can widen the coarse beam explicitly."""
     import math
 
-    from dbscan_pyspark_spark.operators.kmeans import (
-        _centroid_literal,
-        _sq_l2,
-    )
+    from dbscan_pyspark_spark.operators.kmeans import _centroid_table, _nearest
 
     if nprobe_l1 is None:
         nprobe_l1 = int(math.ceil(nprobe / model.k2)) + 1
     nprobe_l1 = min(model.k1, nprobe_l1)
-    cl = _centroid_literal(model.l1_centroids)
-    l1_cells = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    cl,
-                    lambda c: F.struct(
-                        _sq_l2(F.col("_qv"), c.getField("c")).alias("d"),
-                        c.getField("cid").alias("cid"),
-                    ),
-                )
-            ),
-            1,
-            nprobe_l1,
-        ),
-        lambda s: s.getField("cid"),
-    )
+    l1_cells = _cids(_nearest(F.col("_c"), F.col("_qv"), nprobe_l1))
     per_l1 = (
-        qv.select(
-            "query_id", "_qv", F.explode(l1_cells).alias("_l1")
-        )
+        qv.crossJoin(_centroid_table(qv.sparkSession, model.l1_centroids))
+        .select("query_id", "_qv", F.explode(l1_cells).alias("_l1"))
         .join(F.broadcast(model.l2_cells), "_l1")
         .select(
             "query_id",
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        F.col("subcents"),
-                        lambda s: F.struct(
-                            _sq_l2(F.col("_qv"), s.getField("c")).alias("d"),
-                            s.getField("cid").alias("cid"),
-                        ),
-                    )
-                ),
-                1,
-                nprobe,
-            ).alias("_top"),
+            _nearest(F.col("subcents"), F.col("_qv"), nprobe).alias("_top"),
         )
     )
     return (
@@ -1250,10 +1215,7 @@ def _two_level_probe_cells(
         .select(
             "query_id",
             F.explode(
-                F.transform(
-                    F.slice(F.array_sort("_all"), 1, nprobe),
-                    lambda s: s.getField("cid"),
-                )
+                _cids(F.slice(F.array_sort("_all"), 1, nprobe))
             ).alias("cell"),
         )
     )
@@ -1286,7 +1248,8 @@ def ivf_quantized_topk(
     The coarse quantizer is grid-quantized Lloyd's
     (:func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit` — integer
     centroids, bit-reproducible), cell probing is a map-side
-    sort-and-slice over literal centroids (no shuffle), and scoring is
+    sort-and-slice against one broadcast centroid row (no shuffle of the
+    queries), and scoring is
     integer dot products on the quantized vectors with round-6 cosine —
     so the ENTIRE approximate pipeline replays bit-exact in SQL
     (`ivf_ann_topk_exact` carries an unrolled-CTE DuckDB oracle, unlike
@@ -1295,9 +1258,9 @@ def ivf_quantized_topk(
     relation shuffles once on the id join.
     """
     from dbscan_pyspark_spark.operators.kmeans import (
-        _centroid_literal,
+        _centroid_table,
+        _nearest,
         _quantized,
-        _sq_l2,
         kmeans_fit,
     )
 
@@ -1309,7 +1272,8 @@ def ivf_quantized_topk(
     # call. With model=None the level count is picked by the resolved
     # cell count: past _FLAT_MAX_CELLS (~2M vectors at the auto target
     # of 512/cell) the two-level quantizer takes over, keeping the
-    # plan literal and the per-row assignment cost at ~2*sqrt(C).
+    # broadcast centroid row and the per-row assignment cost at
+    # ~2*sqrt(C).
     if model is None:
         resolved = _resolve_n_cells(vectors, n_cells)
         if resolved > _FLAT_MAX_CELLS:
@@ -1333,26 +1297,10 @@ def ivf_quantized_topk(
         assign, cents = model
         if not cents:
             raise ValueError("empty vectors")
-        cl = _centroid_literal(cents)
-        probe_cells = F.transform(
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        cl,
-                        lambda c: F.struct(
-                            _sq_l2(F.col("_qv"), c.getField("c")).alias("d"),
-                            c.getField("cid").alias("cid"),
-                        ),
-                    )
-                ),
-                1,
-                nprobe,
-            ),
-            lambda s: s.getField("cid"),
-        )
-        probe_side = qv.select(
-            "query_id", F.explode(probe_cells).alias("cell")
-        )
+        probe_cells = _cids(_nearest(F.col("_c"), F.col("_qv"), nprobe))
+        probe_side = qv.crossJoin(
+            _centroid_table(qv.sparkSession, cents)
+        ).select("query_id", F.explode(probe_cells).alias("cell"))
     if broadcast_probes:
         probe_side = F.broadcast(probe_side)
     cand = (

@@ -357,21 +357,20 @@ def streaming_kmeans_assign(
     """Streaming k-means inference: label each arriving vector with its
     nearest centroid from a trained ``kmeans_quantized`` model.
 
-    The centroid table rides the plan as a literal (the same map-side
-    argmin expression batch k-means uses for assignment), so this is a
-    stateless projection — no state store, no shuffle, composable with
-    any downstream watermarked aggregation, and the micro-batch labels
-    are bit-identical to what a batch re-run would assign (integer
-    arithmetic end to end).
+    It runs the batch inference path of
+    :func:`~dbscan_pyspark_spark.operators.kmeans.assign_with_model`:
+    the same quantize step and row filter (NULL and empty vectors are
+    dropped), and the same argmin against the centroid table, which
+    joins each micro-batch as one broadcast row. So this is a stateless
+    projection — no state store, no shuffle of the stream, composable
+    with any downstream watermarked aggregation — and the micro-batch
+    labels are bit-identical to what a batch re-run would assign
+    (integer arithmetic end to end).
     """
-    from dbscan_pyspark_spark.operators.kmeans import (
-        _assign_expr,
-        _quantized,
-    )
+    from dbscan_pyspark_spark.operators.kmeans import _assign, _quantized_rows
 
-    q = _quantized(vec_col, scale) if scale is not None else F.col(vec_col)
-    return stream.withColumn("_qv", q).withColumn(
-        out_col, _assign_expr(centroids, "_qv")
+    return _assign(
+        _quantized_rows(stream, vec_col, scale, "_qv"), centroids, "_qv", out_col
     ).drop("_qv")
 
 

@@ -11,7 +11,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from dbscan_pyspark_spark.operators import kmeans
 from dbscan_pyspark_spark.operators.kmeans import kmeans_quantized
+from dbscan_pyspark_spark.plans import broadcast_join_count, shuffle_count
 
 
 def _df(spark, vecs):
@@ -91,18 +93,44 @@ def test_empty_input(spark):
     assert kmeans_quantized(df, k=3, n_iter=2).count() == 0
 
 
-def test_assignment_is_map_side_only(spark):
-    """The final assignment pass must not shuffle: centroids live in the
-    plan as literals, so the explained plan has no Exchange after the
-    scan (the whole point of the argmin-as-expression design)."""
+def test_assignment_is_map_side_only(spark, monkeypatch):
+    """The final assignment pass must not shuffle the points: the
+    centroids join as one broadcast row and the argmin is one
+    expression over it (the whole point of the argmin-as-expression
+    design)."""
     rng = np.random.default_rng(1)
     df = _df(spark, rng.normal(size=(20, 3)))
-    out = kmeans_quantized(df, k=2, n_iter=1)
-    # out = one projection over the input; re-deriving it must be a
-    # single stage. The iteration shuffles happen during the call (the
-    # groupBy updates); the returned frame itself is exchange-free.
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    # the fit checkpoints its final assignment pass; the iteration
+    # shuffles (the groupBy updates) happen in other jobs
+    checkpointed = []
+    real = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    kmeans_quantized(df, k=2, n_iter=1)
+    (final,) = checkpointed
+    assert shuffle_count(final) == 0
+    assert broadcast_join_count(final) >= 1
+
+
+def test_fit_failure_releases_cached_projection(spark, monkeypatch):
+    """A job that raises after the init collect must not leave the
+    quantized projection persisted for the rest of the session."""
+    rng = np.random.default_rng(2)
+    df = _df(spark, rng.normal(size=(20, 3)))
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("assignment failed")
+
+    monkeypatch.setattr(kmeans, "_assign", boom)
+    with pytest.raises(RuntimeError, match="assignment failed"):
+        kmeans.kmeans_fit(df, k=2, n_iter=1)
+    assert persistent().size() == before
 
 
 def test_model_save_load_roundtrip_and_assign(spark, tmp_path):
@@ -131,9 +159,34 @@ def test_model_save_load_roundtrip_and_assign(spark, tmp_path):
     a = sorted(map(tuple, assign.collect()))
     b = sorted(map(tuple, re_assigned.collect()))
     assert a == b
-    # and the plan stays exchange-free (pure map-side inference)
-    plan = re_assigned._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    # and the points never shuffle (pure map-side inference)
+    assert shuffle_count(re_assigned) == 0
+    assert broadcast_join_count(re_assigned) >= 1
+
+
+def test_assign_plan_size_does_not_grow_with_centroids(spark):
+    """The centroid table reaches the workers as one broadcast row, not
+    as plan literals: a sentinel coordinate never shows in the analyzed
+    plan, and the plan is as long for 64 x 64 centroids as for 2 x 3
+    (expression ids masked, their digit counts vary between plans)."""
+    import re
+
+    from dbscan_pyspark_spark.operators.kmeans import assign_with_model
+
+    sentinel = 987654321
+    lengths = []
+    for k, dim in ((2, 3), (64, 64)):
+        cents = [(c, [sentinel] + [c] * (dim - 1)) for c in range(k)]
+        df = _df(spark, np.zeros((4, dim)))
+        plan = (
+            assign_with_model(df, cents, scale=None)
+            ._jdf.queryExecution()
+            .analyzed()
+            .toString()
+        )
+        assert str(sentinel) not in plan
+        lengths.append(len(re.sub(r"\d+", "0", plan)))
+    assert lengths[0] == lengths[1]
 
 
 def test_load_model_rejects_wrong_format(spark, tmp_path):

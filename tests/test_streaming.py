@@ -346,7 +346,10 @@ def test_streaming_kmeans_assign_matches_batch(spark, tmp_path):
     import json
     import numpy as np
 
-    from dbscan_pyspark_spark.operators.kmeans import kmeans_quantized
+    from dbscan_pyspark_spark.operators.kmeans import (
+        assign_with_model,
+        kmeans_quantized,
+    )
     from dbscan_pyspark_spark.streaming.events import streaming_kmeans_assign
 
     rng = np.random.default_rng(21)
@@ -381,6 +384,8 @@ def test_streaming_kmeans_assign_matches_batch(spark, tmp_path):
         {"vec_id": int(1000 + i), "embedding": [float(x) for x in v]}
         for i, v in enumerate(rng.normal(loc=6.0, scale=0.1, size=(5, 4)))
     ]
+    # a NULL and an empty embedding: batch inference drops both rows
+    rows += [{"vec_id": 2000, "embedding": None}, {"vec_id": 2001, "embedding": []}]
     with open(d / "b1.json", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
@@ -398,11 +403,11 @@ def test_streaming_kmeans_assign_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = {r["vec_id"]: r["cluster"] for r in spark.sql("SELECT * FROM t_kassign").collect()}
-    # batch equivalence on the same frame
+    # equivalence with batch inference on the same rows
     batch_df = spark.read.json(str(d), schema="vec_id long, embedding array<double>")
     want = {
         r["vec_id"]: r["cluster"]
-        for r in streaming_kmeans_assign(batch_df, cents).collect()
+        for r in assign_with_model(batch_df, cents).collect()
     }
     assert got == want and len(got) == 5
     # all new points sit near the second blob -> one cluster
