@@ -324,8 +324,10 @@ def dbscan_assign(
     passing a core-filtered ``labels``.
 
     Scale shape: the same grid-bucketed ε-join as training (no
-    cartesian), cluster ids riding the join as payload; one groupBy on
-    the new-point id for the argmin; the trained side shuffles once.
+    cartesian), keyed on the dimensions that span ≥ 3 grid cells over
+    new ∪ member points (one span aggregate job over both when called),
+    cluster ids riding the join as payload; one groupBy on the
+    new-point id for the argmin; the trained side shuffles once.
     Returns DataFrame(id, cluster_id, is_noise) for the new points.
     """
     members = trained_points.join(

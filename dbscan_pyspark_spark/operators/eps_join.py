@@ -6,15 +6,24 @@ the reference's JVM at 10^4 rows (hs_err_pid*.log, BASELINE.md).
 Strategy (pure DataFrame — Catalyst plans a shuffled hash equi-join):
 
 1. every point gets a grid cell id ``floor(coord / eps)`` per dimension;
-2. the *probe* side explodes each point into its 3^d neighboring cells;
-3. equi-join build.home_cell == probe.neighbor_cell;
-4. exact distance post-filter ``dist < eps``.
+2. one aggregate over build ∪ probe measures each dimension's occupied
+   cell span, max − min of the cell ids; the join is keyed only on the
+   k dimensions whose cells span ≥ 3 (max − min ≥ 2), or, when none
+   does, on the single widest one, so it stays an equi-join;
+3. the *probe* side explodes each point into its 3^k neighboring cells
+   over the key dimensions;
+4. equi-join build.home_cell == probe.neighbor_cell;
+5. exact distance post-filter ``dist < eps``.
 
 Any pair within ε (L1 or L2) differs by < ε per coordinate, so the
-build point's home cell is always one of the probe point's 3^d
+build point's home cell is always one of the probe point's 3^k
 neighbor cells — and exactly one of them, so no pair dedup is needed.
-Cost is O(n · 3^d + candidate pairs); with cell-sized buckets the
-candidate set is near-linear for non-adversarial data.
+A dimension left out of the key occupies at most 2 cells, which the
+−1..+1 offsets would cover anyway: keying on it removes no candidate
+pair and only triples the probe. Cost is O(n · 3^k + candidate pairs);
+with cell-sized buckets the candidate set is near-linear for
+non-adversarial data. The paper's 6 quasi-identifiers at ε = 20 key on
+3 dimensions: 27 offsets per probe point instead of 729.
 
 Scale posture: the equi-join shuffles both sides partitioned by cell id.
 Dense cells (skew) are split by AQE skew-join handling (enabled in
@@ -26,7 +35,7 @@ cartesian semantics — neighbor counts *include self* (SURVEY.md §2.2 P3).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.functions.distance import (
@@ -100,6 +109,39 @@ def _contract(points: DataFrame, features: str, id_col: str, dim: int) -> DataFr
     )
 
 
+def _cell(features: str, i: int, eps: float) -> Column:
+    return F.floor(F.col(features)[i] / F.lit(float(eps)))
+
+
+def _key_dims(
+    build: DataFrame, probe: DataFrame, eps: float, features: str, dim: int
+) -> list[int]:
+    """The dimensions the cell join keys on: those whose cell ids span
+    max − min ≥ 2 over build ∪ probe (3 or more occupied cells), else the
+    single widest one. One job — one pass over the frame when ``probe is
+    build``: the min/max are observed on a no-op write, which has no
+    exchange, where a global aggregate's shuffle would be a second job
+    under AQE. The spans are subtracted in Python, so cells at the long
+    range ends (infinite coordinates) cannot overflow."""
+    cells = [_cell(features, i, eps).alias(f"_c{i}") for i in range(dim)]
+    both = build.select(*cells)
+    if probe is not build:
+        both = both.unionAll(probe.select(*cells))
+    obs = Observation()
+    both.observe(
+        obs,
+        *[F.min(f"_c{i}").alias(f"lo{i}") for i in range(dim)],
+        *[F.max(f"_c{i}").alias(f"hi{i}") for i in range(dim)],
+    ).write.format("noop").mode("overwrite").save()
+    row = obs.get
+    # an all-NULL dimension (empty input) spans nothing
+    spans = [
+        -1 if row[f"lo{i}"] is None else row[f"hi{i}"] - row[f"lo{i}"] for i in range(dim)
+    ]
+    wide = [i for i in range(dim) if spans[i] >= 2]
+    return wide or [max(range(dim), key=lambda i: spans[i])]
+
+
 def eps_join(
     build: DataFrame,
     probe: DataFrame,
@@ -122,10 +164,15 @@ def eps_join(
     pair set afterwards, which would be a second shuffle of the (much
     larger) pair relation.
 
+    The join keys on the k dimensions that span ≥ 3 grid cells over
+    build ∪ probe (see the module docstring), measured by one span
+    aggregate (one job over both inputs) when this is called; each
+    probe row explodes into 3^k neighbor cells.
+
     ``unique_pairs`` (self-joins): emit each unordered pair once, with
     ``a_id < b_id`` in the output. The probe side explodes to only the
     lexicographically-positive half of the neighbor offsets —
-    (3^d+1)/2 cells instead of 3^d — so the candidate-pair build, its
+    (3^k+1)/2 cells instead of 3^k — so the candidate-pair build, its
     shuffle, AND the per-pair distance evaluations are all halved, not
     just post-filtered. Self-pairs vanish. Callers that need symmetric
     counts mirror the pair list (a narrow map over the result, not a
@@ -151,11 +198,11 @@ def eps_join(
     # scalar columns keep the cell arithmetic and the composite join
     # keys inside whole-stage codegen (measured ~35% off the dbscan
     # pair phase at sf0.1).
+    keys = _key_dims(build, probe, eps, features, dim)
+    k = len(keys)
+
     def cell_cols(prefix: str) -> list:
-        return [
-            F.floor(F.col(features)[i] / F.lit(float(eps))).alias(f"{prefix}{i}")
-            for i in range(dim)
-        ]
+        return [_cell(features, i, eps).alias(f"{prefix}{i}") for i in keys]
 
     a = build.select(
         F.col(id_col).alias("a_id"),
@@ -170,21 +217,21 @@ def eps_join(
         *cell_cols("_bc"),
     )
 
-    # Neighbor offsets as ONE exploded index k in [0, 3^d): the offset
-    # in dimension i is base-3 digit i of k, minus 1 — k enumerates the
-    # offsets in lexicographic order, so the zero offset sits at the
-    # center, (3^d - 1) / 2. A runtime sequence instead of 3^d struct
-    # literals keeps the plan O(d): at d=6 (729 offsets) planning the
-    # join took ~8-10x less time on a 4-core host. With
+    # Neighbor offsets as ONE exploded index _k in [0, 3^k): the offset
+    # in the j-th key dimension is base-3 digit j of _k, minus 1 — _k
+    # enumerates the offsets in lexicographic order, so the zero offset
+    # sits at the center, (3^k - 1) / 2. A runtime sequence instead of
+    # 3^k struct literals keeps the plan O(k): at k=6 (729 offsets)
+    # planning the join took ~8-10x less time on a 4-core host. With
     # ``unique_pairs`` only the center and the lex-positive half above
     # it are exploded.
-    center = (3**dim - 1) // 2
+    center = (3**k - 1) // 2
     b = b.withColumn(
-        "_k", F.explode(F.sequence(F.lit(center if unique_pairs else 0), F.lit(3**dim - 1)))
+        "_k", F.explode(F.sequence(F.lit(center if unique_pairs else 0), F.lit(3**k - 1)))
     )
     cond = None
-    for i in range(dim):
-        off = F.floor(b["_k"] / F.lit(3 ** (dim - 1 - i))) % 3 - 1
+    for j, i in enumerate(keys):
+        off = F.floor(b["_k"] / F.lit(3 ** (k - 1 - j))) % 3 - 1
         eq = a[f"_ac{i}"] == b[f"_bc{i}"] + off
         cond = eq if cond is None else cond & eq
     if unique_pairs:

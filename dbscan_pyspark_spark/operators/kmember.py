@@ -98,7 +98,7 @@ def _repair(
             _local_frame(
                 spark,
                 [(c,) for c, cnt in counts.items() if cnt > k],
-                "cluster_id int",
+                "cluster_id long",
             )
         )
         surplus_members = assign.join(surplus_ids, "cluster_id", "left_semi")
@@ -113,7 +113,7 @@ def _repair(
 
         # claim: nearest deficient centroid per released point
         deficient_df = F.broadcast(
-            _local_frame(spark, [(c,) for c in deficient], "cluster_id int")
+            _local_frame(spark, [(c,) for c in deficient], "cluster_id long")
         )
         deficient_cents = centroids.join(deficient_df, "cluster_id", "left_semi")
         claims = assign_nearest(
@@ -126,7 +126,7 @@ def _repair(
 
         # cap: each deficient cluster takes only its (k - cnt) nearest claimants
         need = F.broadcast(
-            _local_frame(spark, list(deficient.items()), "cluster_id int, _need int")
+            _local_frame(spark, list(deficient.items()), "cluster_id long, _need int")
         )
         wc = Window.partitionBy("cluster_id").orderBy(
             F.col("distance").asc(), F.col(id_col).asc()

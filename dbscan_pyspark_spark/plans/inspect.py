@@ -85,3 +85,28 @@ def assert_no_cartesian(df: DataFrame, allow_broadcast_nl: bool = True) -> None:
         raise AssertionError("plan contains CartesianProduct:\n" + plan)
     if not allow_broadcast_nl and "BroadcastNestedLoopJoin" in plan:
         raise AssertionError("plan contains BroadcastNestedLoopJoin:\n" + plan)
+
+
+def node_metrics(df: DataFrame, node: str, metric: str = "numOutputRows") -> list[int]:
+    """Values of one SQL metric (e.g. ``numOutputRows``, shown as "number
+    of output rows" in the Spark UI) on every physical node named
+    ``node`` (e.g. ``Generate``) in the plan ``df`` last executed, so run
+    ``df.collect()`` first. Walks the AQE-final plan through its query
+    stages. Classic sessions only: it reads the JVM plan."""
+    out = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(p.plan())
+        elif name == node:
+            m = p.metrics().get(metric)
+            if m.isDefined():
+                out.append(int(m.get().value()))
+        children = p.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out

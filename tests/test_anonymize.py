@@ -307,6 +307,6 @@ def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
     loss = information_loss(df, all_noise).first()
     assert (loss["n_clusters"], loss["n_noise"]) == (0, df.count())
     res = kmember.kmember_kmeans(grid, k=10, n_clusters=3, max_iter=3)
-    assert "cluster_id int, _need int" in built  # a repair round ran
+    assert "cluster_id long, _need int" in built  # a repair round ran
     sizes = [r["count"] for r in res.assignments.groupBy("cluster_id").count().collect()]
     assert sorted(sizes) == [10, 10, 10]

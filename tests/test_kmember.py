@@ -174,3 +174,22 @@ def test_kmember_quantized_contracts(spark):
     )
     out = kmember_quantized(dfi, k=4, n_clusters=3, scale=None)
     assert out.count() == 12
+
+
+def test_repair_keeps_cluster_ids_beyond_int_range(spark):
+    # the repair's driver-built surplus/deficient/need frames carry the
+    # cluster ids as bigint: ids past 2^31 move members, not overflow
+    from dbscan_pyspark_spark.operators.anonymize import assign_nearest
+    from dbscan_pyspark_spark.operators.kmember import _repair
+
+    big = 2**33
+    points = spark.createDataFrame(
+        [(1, [0.0]), (2, [1.0]), (3, [2.0]), (4, [10.0])], "id long, features array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(big, [0.5]), (big + 1, [10.0])], "cluster_id long, centroid array<double>"
+    )
+    assign = assign_nearest(points, cents)
+    out = _repair(points, assign, cents, 2, "l1", "id", "features", max_rounds=4)
+    got = {r["id"]: r["cluster_id"] for r in out.collect()}
+    assert got == {1: big, 2: big, 3: big + 1, 4: big + 1}

@@ -11,6 +11,9 @@ Usage: python tools/stress.py [n_points] [n_vectors]
   the reference's use case behaves.
 - IVF cosine ANN: n_vectors 16-d unit-ish vectors, 64 queries, top-5,
   8 cells, nprobe 3 — the bucketed scale path of similarity search.
+- ε-join: the one-cell skew worst case, and 10^5 rows of the paper's
+  6-d quasi-identifier shape (``eps_join_stages``; it reports the key
+  dimensions and the probe's exploded row count).
 
 Prints one JSON line per stage with wall seconds and result stats.
 """
@@ -27,6 +30,100 @@ N_POINTS = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
 N_VECS = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
 N_SKEW_DOCS = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000_000
 N_2L_VECS = int(sys.argv[4]) if len(sys.argv) > 4 else 5_000_000
+
+
+def eps_join_stages(spark, n_skew: int) -> None:
+    """The ε-join stages: the adversarial one-cell skew over ``n_skew``
+    points, and the paper's 6-d anonymization shape over 10^5 rows."""
+    from importlib import import_module
+
+    from pyspark.sql import functions as F
+
+    from dbscan_pyspark_spark.plans.inspect import node_metrics
+
+    # the module, not the function the operators package re-exports
+    ej = import_module("dbscan_pyspark_spark.operators.eps_join")
+
+    # --- adversarial ε-join skew: every point in ONE grid cell ---
+    # Distinct coordinates (duplicate contraction cannot shrink it), all
+    # inside a single eps-sized cell, so the cell equi-join degenerates
+    # to one hot key. This is the worst case the grid strategy has:
+    # candidate pairs are quadratic in the cell population no matter how
+    # you partition, so the knobs under test are (a) AQE skew-split
+    # parallelizing the hot partition and (b) the per-pair distance eval
+    # cost. Points are spread uniformly in the cell; ~13% of pairs fall
+    # within L1 eps, so the run is candidate-bound, not output-bound.
+    hs = F.abs(F.xxhash64("id"))
+    skew_pts = spark.range(n_skew).select(
+        F.col("id"),
+        F.array(
+            ((hs % 97650) / 97650.0),           # [0, 1) distinct-ish
+            (((hs / 97650).cast("long") % 9973) / 9973.0),
+            (((hs / 1021).cast("long") % 1013) / 1013.0),
+        ).alias("features"),
+    )
+    t0 = time.time()
+    n_skew_pairs = ej.eps_self_join(
+        skew_pts, eps=1.0, unique_pairs=True, keep_distance=False
+    ).count()
+    print(
+        json.dumps(
+            {
+                "stage": "eps_join_one_cell_skew",
+                "n_points": n_skew,
+                "wall_s": round(time.time() - t0, 1),
+                "result_pairs": n_skew_pairs,
+            }
+        ),
+        flush=True,
+    )
+
+    # --- the paper's 6-d shape at 10^5 rows ---
+    # Integer rows in the data10k_6attr quasi-identifier ranges,
+    # contracted to reps and ε-joined at eps 12, the symmetric max-ε
+    # join of eps_sweep and dbscan. At eps 12 three of the six dimensions
+    # span >= 3 cells, so the join keys on them (27 offsets per rep
+    # instead of 729), and the ~1.5M pairs stay under the 5M driver bound
+    # (components._DRIVER_PAIRS_THRESHOLD) the sweep's Kruskal pass needs.
+    ranges = [(15, 90), (130, 190), (30, 100), (2, 23), (0, 5), (0, 20)]
+    n_6d = 100_000
+    eps_6d = 12.0
+    pts_6d = spark.range(n_6d).select(
+        F.col("id"),
+        F.array(
+            *[
+                (F.lit(lo) + F.abs(F.xxhash64("id", F.lit(c))) % (hi - lo + 1)).cast(
+                    "double"
+                )
+                for c, (lo, hi) in enumerate(ranges)
+            ]
+        ).alias("features"),
+    )
+    t0 = time.time()
+    reps = ej._contract(pts_6d, "features", "id", 6).persist()
+    pairs = ej.eps_join(
+        reps, reps, eps_6d, dim=6, keep_distance=True, payload_b=["_mult"]
+    )
+    counted = pairs.agg(F.count(F.lit(1)).alias("n"))
+    n_6d_pairs = counted.collect()[0]["n"]
+    wall = round(time.time() - t0, 1)
+    keys = ej._key_dims(reps, reps, eps_6d, "features", 6)
+    print(
+        json.dumps(
+            {
+                "stage": "eps_join_6d",
+                "n_points": n_6d,
+                "reps": reps.count(),
+                "eps": eps_6d,
+                "key_dims": keys,
+                "probe_rows": sum(node_metrics(counted, "Generate")),
+                "result_pairs": n_6d_pairs,
+                "wall_s": wall,
+            }
+        ),
+        flush=True,
+    )
+    reps.unpersist()
 
 
 def main() -> None:
@@ -107,42 +204,7 @@ def main() -> None:
         flush=True,
     )
 
-    # --- adversarial ε-join skew: every point in ONE grid cell ---
-    # Distinct coordinates (duplicate contraction cannot shrink it), all
-    # inside a single eps-sized cell, so the cell equi-join degenerates
-    # to one hot key. This is the worst case the grid strategy has:
-    # candidate pairs are quadratic in the cell population no matter how
-    # you partition, so the knobs under test are (a) AQE skew-split
-    # parallelizing the hot partition and (b) the per-pair distance eval
-    # cost. Points are spread uniformly in the cell; ~13% of pairs fall
-    # within L1 eps, so the run is candidate-bound, not output-bound.
-    n_skew = max(N_POINTS // 60, 10_000)
-    hs = F.abs(F.xxhash64("id"))
-    skew_pts = spark.range(n_skew).select(
-        F.col("id"),
-        F.array(
-            ((hs % 97650) / 97650.0),           # [0, 1) distinct-ish
-            (((hs / 97650).cast("long") % 9973) / 9973.0),
-            (((hs / 1021).cast("long") % 1013) / 1013.0),
-        ).alias("features"),
-    )
-    from dbscan_pyspark_spark.operators.eps_join import eps_self_join
-
-    t0 = time.time()
-    n_skew_pairs = eps_self_join(
-        skew_pts, eps=1.0, unique_pairs=True, keep_distance=False
-    ).count()
-    print(
-        json.dumps(
-            {
-                "stage": "eps_join_one_cell_skew",
-                "n_points": n_skew,
-                "wall_s": round(time.time() - t0, 1),
-                "result_pairs": n_skew_pairs,
-            }
-        ),
-        flush=True,
-    )
+    eps_join_stages(spark, max(N_POINTS // 60, 10_000))
 
     # --- distributed connected components (star contraction) ---
     # A zero driver bound forces the large-star/small-star path even
