@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators import components as _components
-from dbscan_pyspark_spark.operators.dbscan import _DRIVER_FAILURES, _rep_labels
+from dbscan_pyspark_spark.operators.components import _DRIVER_FAILURES
+from dbscan_pyspark_spark.operators.dbscan import _rep_labels
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
 from dbscan_pyspark_spark.session import _local_frame
 
@@ -210,6 +211,22 @@ def information_loss(
     )
 
 
+def _driver_dist(a, b, metric: str):
+    """numpy twin of ``_metric_fn(metric, dim)`` over the last axis of
+    broadcastable float arrays: the per-dimension terms are added in
+    index order, as the unrolled Spark expression adds them, so the
+    sums match it bit for bit."""
+    import numpy as np
+
+    if metric not in ("l1", "l2"):
+        raise ValueError(f"unknown metric {metric!r} (use 'l1' or 'l2')")
+    acc = np.zeros(np.broadcast_shapes(a.shape, b.shape)[:-1])
+    for j in range(a.shape[-1]):
+        diff = a[..., j] - b[..., j]
+        acc += np.abs(diff) if metric == "l1" else diff * diff
+    return acc if metric == "l1" else np.sqrt(acc)
+
+
 def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, features, id_col):
     """Every ε level's metrics row, computed on the driver from
     ``_rep_labels``' per-level label frames ``levels`` and its collect of
@@ -238,15 +255,6 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
     order = np.argsort(ids)
     n_total = int(mult.sum())
 
-    def dist(a, b):
-        # per-dimension accumulation in index order, as the unrolled
-        # Spark expression adds its terms
-        acc = np.zeros(np.broadcast_shapes(a.shape, b.shape)[:-1])
-        for j in range(x.shape[1]):
-            diff = a[..., j] - b[..., j]
-            acc += np.abs(diff) if metric == "l1" else diff * diff
-        return acc if metric == "l1" else np.sqrt(acc)
-
     levels_out, work = [], 0
     for eps in sorted(eps_values):
         lab = levels[float(eps)]
@@ -267,7 +275,7 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
         cents = np.stack(
             [np.bincount(inv, weights=xc[:, j] * w) for j in range(x.shape[1])], axis=1
         ) / np.bincount(inv, weights=w)[:, None]
-        ce = float((w * dist(xc, cents[inv])).sum())
+        ce = float((w * _driver_dist(xc, cents[inv], metric)).sum())
         noise = np.flatnonzero(~clustered)
         work += len(noise) * len(cents)
         levels_out.append((float(eps), (n_clusters, ce, noise, cents)))
@@ -284,7 +292,7 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
         ne = 0.0
         for lo in range(0, len(noise), step):
             blk = noise[lo : lo + step]
-            nearest = dist(x[blk][:, None, :], cents[None, :, :]).min(axis=1)
+            nearest = _driver_dist(x[blk][:, None, :], cents[None, :, :], metric).min(axis=1)
             ne += float((mult[blk] * nearest).sum())
         rows.append((eps, n_clusters, int(mult[noise].sum()), ce, ne, ce + ne))
     return rows

@@ -37,8 +37,13 @@ _COALESCE_STATE: dict[int, list] = {}  # id(session) -> [depth, prev]
 # Kruskal pass, and eps_sweep scores every level in numpy (there the
 # count is Σ noise reps × centroids). Four 8-byte columns per pair,
 # ~160 MB at the bound. Read as a module attribute at call time; 0
-# forces every distributed twin.
+# forces every distributed twin. k-member k-means applies the same bound
+# to points × clusters.
 _DRIVER_PAIRS_THRESHOLD = 5_000_000
+
+# What a driver fast path may raise and still fall back to its
+# distributed twin: no numpy/pandas, driver memory, Arrow conversion.
+_DRIVER_FAILURES = (ImportError, MemoryError, ValueError, TypeError)
 
 
 def _coalesce_flip_enter(spark) -> None:
@@ -195,7 +200,9 @@ def connected_components(
     ``_DRIVER_PAIRS_THRESHOLD`` rows it is solved by driver union-find
     (one job, O(E α)); larger graphs run distributed star-contraction
     (O(log n) shuffling rounds), finished on the driver once a round
-    shrinks the edge set under the same bound.
+    shrinks the edge set under the same bound. A driver union-find that
+    raises one of ``_DRIVER_FAILURES`` hands the graph to star
+    contraction, which then runs to its fixpoint.
     Each round localCheckpoints the edge set — lineage truncation, the
     discipline the reference needed ``setCheckpointDir`` for
     (``DBSCAN.py:171``) and its k-means notebook lacked entirely
@@ -221,13 +228,18 @@ def connected_components(
 
     driver_max = _DRIVER_PAIRS_THRESHOLD
     n_edges = raw.count()
+    labels_pdf = None
     if driver_max > 0 and n_edges <= driver_max:
         # Union-find tolerates self-loops (a hook where u == v is a
         # no-op), and a node whose only edges are self-loops appears in
         # the pulled id set and comes out labeled with itself — so the
         # driver path needs ONE Arrow pull over the raw edge list, no
         # self-loop distinct, no anti-join.
-        labels_pdf = _driver_union_find(raw, id_col)
+        try:
+            labels_pdf = _driver_union_find(raw, id_col)
+        except _DRIVER_FAILURES:
+            driver_max = 0  # star contraction below, to the fixpoint
+    if labels_pdf is not None:
         labels = edges.sparkSession.createDataFrame(
             labels_pdf, f"{id_col} long, component long"
         )
@@ -284,7 +296,7 @@ def connected_components(
                 f"{heap / 2**30:.1f} GiB is configured — set "
                 f"spark.driver.memory to at least "
                 f"{max(1, int(needed / 2**30) + 1)}g (graphs of at "
-                f"most {driver_max:,} edges take the driver union-find "
+                f"most {_DRIVER_PAIRS_THRESHOLD:,} edges take the driver union-find "
                 f"path, which needs only ~16 B/edge)"
             )
 
@@ -323,7 +335,11 @@ def connected_components(
                 # bound, union-find on the remnant yields the same
                 # min-id labels as iterating to fixpoint, minus the
                 # remaining O(log n) rounds.
-                labels_pdf = _driver_union_find(e, id_col)
+                try:
+                    labels_pdf = _driver_union_find(e, id_col)
+                except _DRIVER_FAILURES:
+                    driver_max = 0  # keep contracting to the fixpoint
+                    continue
                 labels = spark.createDataFrame(
                     labels_pdf, f"{id_col} long, component long"
                 )

@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators import components as _components
-from dbscan_pyspark_spark.operators.components import _union, connected_components
+from dbscan_pyspark_spark.operators.components import (
+    _DRIVER_FAILURES,
+    _union,
+    connected_components,
+)
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, eps_join
 
 # Below this rep count the label map (rep features + cluster id) is
@@ -50,10 +54,6 @@ from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, eps_join
 # shuffle join keyed by the feature hash (cheap long key, exact
 # feature-equality residual).
 _BROADCAST_EXPAND_THRESHOLD = 1_000_000
-
-# What a driver fast path may raise and still fall back to its
-# distributed twin: no numpy/pandas, driver memory, Arrow conversion.
-_DRIVER_FAILURES = (ImportError, MemoryError, ValueError, TypeError)
 
 
 def _kruskal(pairs_pdf, reps_pdf, eps_values, min_pts, min_cluster_size, variant, id_col):

@@ -5,9 +5,18 @@ every cluster keeps >= k members, for k-anonymity.
 The reference runs the repair inside the assignment step as a driver
 loop of RDD jobs — 30 restarts x 20 iterations x a multi-job while-loop
 (SURVEY.md §3.2: thousands of jobs for 10k rows, with an unbounded
-``.union().cache()`` lineage chain). Here each Lloyd iteration is one
+``.union().cache()`` lineage chain).
+
+Where :func:`kmember_kmeans` runs is decided once, by size. When points
+× clusters is at most ``components._DRIVER_PAIRS_THRESHOLD`` (the pair
+bound of the DBSCAN path; one iteration's distance matrix), the whole
+algorithm runs on the driver in numpy after one Arrow pull
+(``_kmember_driver``). Above it, or when the driver solve raises one of
+``components._DRIVER_FAILURES``, the Spark loop runs: its distributed
+twin, which gives the same result. There each Lloyd iteration is one
 DataFrame pass (broadcast argmin assign) and the constraint repair is a
-bounded loop of window-ranked moves:
+bounded loop of window-ranked moves; the driver solver takes the same
+steps with the same tie-breaks:
 
   release:   clusters > k give up their farthest-beyond-k members (W2);
   claim:     each released point goes to its nearest *deficient*
@@ -18,8 +27,8 @@ bounded loop of window-ranked moves:
 
 Feasible inputs (n >= k * n_clusters) terminate: every round either
 fills a deficient cluster or strictly shrinks the deficiency total.
-Lineage is truncated per round (localCheckpoint) — the discipline the
-notebook lacked.
+In the Spark loop, lineage is truncated per round (localCheckpoint) —
+the discipline the notebook lacked.
 
 Deviations from the reference, on purpose (SURVEY.md §7 flag list):
 - convergence uses |drift| (the notebook's live version sums *signed*
@@ -37,8 +46,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.anonymize import assign_nearest, cluster_centroids
-from dbscan_pyspark_spark.operators.eps_join import _dim_of
+from dbscan_pyspark_spark.operators import components as _components
+from dbscan_pyspark_spark.operators.anonymize import (
+    _driver_dist,
+    assign_nearest,
+    cluster_centroids,
+)
+from dbscan_pyspark_spark.operators.components import _DRIVER_FAILURES
+from dbscan_pyspark_spark.operators.eps_join import _dim_of, _metric_fn
 from dbscan_pyspark_spark.operators.kmeans import (
     _centroid_table,
     _l1_int,
@@ -147,6 +162,110 @@ def _repair(
     raise RuntimeError(f"k-member repair did not converge in {max_rounds} rounds")
 
 
+def _ranks(groups, *keys):
+    """Each row's 0-based rank within its ``groups`` value, ordered by
+    ``keys`` (the first key leads): ``row_number() - 1`` over a window
+    partitioned by ``groups`` and ordered by ``keys``."""
+    import numpy as np
+
+    order = np.lexsort(tuple(reversed(keys)) + (groups,))
+    g = groups[order]
+    rank = np.empty(len(g), dtype="int64")
+    rank[order] = np.arange(len(g)) - np.searchsorted(g, g)
+    return rank
+
+
+def _kmember_driver(
+    points: DataFrame,
+    k: int,
+    n_clusters: int,
+    max_iter: int,
+    tol: float,
+    seed: int,
+    metric: str,
+    features: str,
+    id_col: str,
+) -> KMemberResult:
+    """The whole of :func:`kmember_kmeans` in numpy, after one Arrow pull
+    of (id, features, init hash): the Spark loop's init, argmin, repair,
+    centroid means and |drift| stop, step for step.
+
+    - argmin ties go to the lower cluster id, and release and cap rank
+      members by (distance, id), as ``assign_nearest`` and ``_repair``
+      do;
+    - a cluster that loses every member leaves the centroid set, and
+      only clusters with members are counted, so an empty one is never
+      deficient;
+    - distances add their dimensions in index order (``_driver_dist``),
+      centroids are per-dimension sums over the count, and the repair
+      raises after the same number of rounds.
+
+    The n × clusters distance matrix of each iteration serves its argmin
+    and every repair claim."""
+    import numpy as np
+
+    pdf = points.select(
+        id_col, features, F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h")
+    ).toPandas()
+    ids = pdf[id_col].to_numpy()
+    x = np.stack(pdf[features].to_numpy()).astype("float64")
+    cid = np.arange(n_clusters)  # live cluster ids, ascending
+    cents = x[np.argsort(pdf["_h"].to_numpy(), kind="stable")[:n_clusters]]
+    max_rounds = 2 * n_clusters + 8
+
+    for n_iter in range(1, max_iter + 1):
+        d = _driver_dist(x[:, None, :], cents[None, :, :], metric)
+        # argmin ties go to the first minimum: the lower cluster id
+        assign, dist = cid[d.argmin(axis=1)], d.min(axis=1)
+        for _ in range(max_rounds):
+            present, counts = np.unique(assign, return_counts=True)
+            deficient = present[counts < k]
+            if not len(deficient):
+                break
+            # release: members ranked beyond k in their (surplus) cluster
+            released = np.flatnonzero(_ranks(assign, dist, ids) >= k)
+            # claim: each released point's nearest deficient centroid
+            sub = d[released][:, np.searchsorted(cid, deficient)]
+            claim, claim_d = deficient[sub.argmin(axis=1)], sub.min(axis=1)
+            # cap: a deficient cluster takes its (k - count) nearest claimants
+            need = k - counts[np.searchsorted(present, claim)]
+            ok = _ranks(claim, claim_d, ids[released]) < need
+            assign[released[ok]], dist[released[ok]] = claim[ok], claim_d[ok]
+        else:
+            raise RuntimeError(
+                f"k-member repair did not converge in {max_rounds} rounds"
+            )
+        present, inv, counts = np.unique(
+            assign, return_inverse=True, return_counts=True
+        )
+        new = np.stack(
+            [np.bincount(inv, weights=x[:, j]) for j in range(x.shape[1])], axis=1
+        ) / counts[:, None]
+        # |drift|: max L1 movement of any centroid that kept members
+        drift = _driver_dist(cents[np.searchsorted(cid, present)], new, "l1").max()
+        cid, cents = present, new
+        if drift < tol:
+            break
+
+    final = _driver_dist(x, cents[np.searchsorted(cid, assign)], metric)
+    spark = points.sparkSession
+    id_type = points.schema[id_col].dataType.simpleString()
+    return KMemberResult(
+        assignments=_local_frame(
+            spark,
+            list(zip(ids.tolist(), assign.tolist(), final.tolist())),
+            f"{id_col} {id_type}, cluster_id int, distance double",
+        ),
+        centroids=_local_frame(
+            spark,
+            list(zip(cid.tolist(), cents.tolist(), counts.tolist())),
+            "cluster_id int, centroid array<double>, n_members long",
+        ),
+        cost=float(final.sum()),
+        n_iter=n_iter,
+    )
+
+
 def kmember_kmeans(
     points: DataFrame,
     k: int,
@@ -164,9 +283,18 @@ def kmember_kmeans(
     ``n_clusters`` defaults to the reference's upper search bound
     ``n // k`` (``cell0:L12-13``, py2 floor division). Init = seeded
     random sample, as ``takeSample(False, want_cluster)`` (W4).
+
+    Where it runs: when n × n_clusters is at most
+    ``components._DRIVER_PAIRS_THRESHOLD`` (the DBSCAN path's pair
+    bound, here the cells of one iteration's distance matrix), the whole
+    loop runs on the driver (``_kmember_driver``): one Arrow pull, numpy
+    iterations, two Arrow-built result frames, and no Spark job after
+    the pull. Above the bound, or when the driver solve raises one of
+    ``components._DRIVER_FAILURES``, the Spark loop below runs: the
+    distributed twin, with one broadcast argmin, the ``_repair`` rounds
+    and a centroid aggregate per iteration. Both give the same clusters,
+    centroids, cost and ``n_iter``.
     """
-    if dim is None:
-        dim = _dim_of(points, features)
     n = points.count()
     if n_clusters is None:
         n_clusters = max(n // k, 1)
@@ -174,7 +302,16 @@ def kmember_kmeans(
         raise ValueError(
             f"infeasible: n={n} < k*n_clusters={k * n_clusters}"
         )
+    if n * n_clusters <= _components._DRIVER_PAIRS_THRESHOLD:
+        try:
+            return _kmember_driver(
+                points, k, n_clusters, max_iter, tol, seed, metric, features, id_col
+            )
+        except _DRIVER_FAILURES:
+            pass  # the Spark loop below is the distributed twin
 
+    if dim is None:
+        dim = _dim_of(points, features)
     spark = points.sparkSession
     init_rows = (
         points.select(id_col, features)
@@ -226,8 +363,6 @@ def kmember_kmeans(
         .join(points.select(id_col, features), id_col)
         .join(F.broadcast(centroids.select("cluster_id", "centroid")), "cluster_id")
     )
-    from dbscan_pyspark_spark.operators.eps_join import _metric_fn
-
     dist = _metric_fn(metric, dim)
     final_assign = final_assign.select(
         id_col, "cluster_id", dist(features, "centroid").alias("distance")

@@ -270,7 +270,9 @@ def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
     (``assign_nearest``, the twin's noise join, is never reached), and
     every driver-built frame is Arrow-backed (no list goes through
     ``createDataFrame``): eps_sweep, the zero-cluster information_loss
-    row and a k-member run with a repair round all still succeed."""
+    row and a k-member run with a repair round all still succeed. The
+    k-member run is forced onto its Spark loop (pair bound 0), the path
+    that builds the repair frames; its driver solver builds none."""
     from pyspark.sql import SparkSession
 
     from dbscan_pyspark_spark.operators import kmember
@@ -306,7 +308,9 @@ def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
     assert len(metrics.collect()) == 3 and best in (2.0, 4.0)
     loss = information_loss(df, all_noise).first()
     assert (loss["n_clusters"], loss["n_noise"]) == (0, df.count())
-    res = kmember.kmember_kmeans(grid, k=10, n_clusters=3, max_iter=3)
+    with monkeypatch.context() as m:
+        m.setattr(_components_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
+        res = kmember.kmember_kmeans(grid, k=10, n_clusters=3, max_iter=3)
     assert "cluster_id long, _need int" in built  # a repair round ran
     sizes = [r["count"] for r in res.assignments.groupBy("cluster_id").count().collect()]
     assert sorted(sizes) == [10, 10, 10]

@@ -457,3 +457,22 @@ def test_coalesce_flip_guard_is_refcounted():
     C._coalesce_flip_enter(s2)
     C._coalesce_flip_exit(s2)
     assert C._COALESCE_KEY not in s2.conf.d
+
+
+def test_driver_union_find_failure_falls_back(spark, monkeypatch):
+    """A driver union-find that runs out of memory hands the graph to
+    star contraction, with identical labels: a chain, a self-loop-only
+    vertex and an isolated vertex from ``vertices=``."""
+    edges = spark.createDataFrame([(0, 1), (1, 2), (3, 3)], ["src", "dst"])
+    verts = spark.createDataFrame([(i,) for i in range(5)], ["id"])
+    want = {r["id"]: r["component"] for r in connected_components(edges, vertices=verts).collect()}
+    calls = []
+
+    def oom(*args, **kwargs):
+        calls.append(1)
+        raise MemoryError("driver out of memory")
+
+    monkeypatch.setattr(components, "_driver_union_find", oom)
+    got = {r["id"]: r["component"] for r in connected_components(edges, vertices=verts).collect()}
+    assert calls == [1]  # tried once; no hybrid finish retries it
+    assert got == want == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4}

@@ -6,11 +6,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.operators import components
+from dbscan_pyspark_spark.operators import kmember as kmember_module
 from dbscan_pyspark_spark.operators.kmember import (
     kmember_anonymize,
     kmember_kmeans,
     kmember_search,
 )
+from dbscan_pyspark_spark.session import _local_frame
 
 
 @pytest.fixture(scope="module")
@@ -193,3 +196,118 @@ def test_repair_keeps_cluster_ids_beyond_int_range(spark):
     out = _repair(points, assign, cents, 2, "l1", "id", "features", max_rounds=4)
     got = {r["id"]: r["cluster_id"] for r in out.collect()}
     assert got == {1: big, 2: big, 3: big + 1, 4: big + 1}
+
+
+def _fail(name):
+    def fail(*args, **kwargs):
+        raise AssertionError(f"{name} called")
+
+    return fail
+
+
+def _driver_run(monkeypatch, df, **kw):
+    # the driver solver: the Spark loop's argmin and repair never run
+    with monkeypatch.context() as m:
+        m.setattr(kmember_module, "assign_nearest", _fail("assign_nearest"))
+        m.setattr(kmember_module, "_repair", _fail("_repair"))
+        m.setattr(kmember_module, "cluster_centroids", _fail("cluster_centroids"))
+        return kmember_kmeans(df, **kw)
+
+
+def _twin_run(monkeypatch, df, **kw):
+    # a zero pair bound forces the Spark loop; the driver solver never runs
+    with monkeypatch.context() as m:
+        m.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+        m.setattr(kmember_module, "_kmember_driver", _fail("_kmember_driver"))
+        return kmember_kmeans(df, **kw)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _assert_same_result(got, want):
+    assert got.assignments.dtypes == want.assignments.dtypes
+    assert got.centroids.dtypes == want.centroids.dtypes
+    assert _rows(got.assignments) == _rows(want.assignments)
+    assert _rows(got.centroids) == _rows(want.centroids)
+    assert got.cost == pytest.approx(want.cost, rel=1e-12)
+    assert got.n_iter == want.n_iter
+
+
+# Inputs are Arrow-built (``_local_frame``): every scan of them stays in
+# the JVM, which keeps the Spark loop's many small jobs cheap.
+
+
+def _grid(spark):
+    # 30 points on a 7-wide grid, 3 clusters of k=10: the argmin leaves
+    # clusters short, so the repair moves members
+    return _local_frame(
+        spark,
+        [(i, [float(i % 7), float(i // 7)]) for i in range(30)],
+        "id long, features array<double>",
+    )
+
+
+def _two_spots(spark):
+    # 2 distinct vectors for 3 clusters: two init centroids coincide, the
+    # higher cluster id gets no member on the tie and drops out
+    return _local_frame(
+        spark,
+        [(i, [10.0 * (i % 2), 10.0 * (i % 2)]) for i in range(24)],
+        "id long, features array<double>",
+    )
+
+
+def _ties(spark):
+    # integer lattice: points equidistant from two centroids and equal
+    # distances within clusters, so argmins, releases and caps hit their
+    # tie-breaks
+    return _local_frame(
+        spark, [(i, [i % 6, i // 6]) for i in range(36)], "id long, features array<bigint>"
+    )
+
+
+@pytest.mark.parametrize("metric", ["l1", "l2"])
+def test_driver_solver_matches_spark_twin(spark, monkeypatch, metric):
+    """The driver solver and the Spark loop give the same assignments,
+    centroids, member counts, cost and n_iter, on the path each is
+    meant for: spies fail the run if the other path's pieces are
+    called."""
+    cases = [  # (points, arguments, clusters left at the end)
+        (_grid(spark), dict(k=10, n_clusters=3, max_iter=2), 3),
+        (_two_spots(spark), dict(k=5, n_clusters=3, max_iter=2, seed=7), 2),
+        (_ties(spark), dict(k=6, n_clusters=4, max_iter=2, seed=3), 4),
+    ]
+    for df, kw, live in cases:
+        got = _driver_run(monkeypatch, df, metric=metric, **kw)
+        want = _twin_run(monkeypatch, df, metric=metric, **kw)
+        _assert_same_result(got, want)
+        sizes = [r["n_members"] for r in got.centroids.collect()]
+        assert len(sizes) == live
+        assert min(sizes) >= kw["k"] and sum(sizes) == df.count()
+
+
+def test_driver_solver_failure_falls_back(spark, monkeypatch):
+    """A driver solve that runs out of memory falls back to the Spark
+    loop, whose result equals the driver solver's (and so the twin's)."""
+    df = _two_spots(spark)
+    kw = dict(k=5, n_clusters=3, max_iter=2, seed=7)
+    want = _driver_run(monkeypatch, df, **kw)
+    calls = []
+
+    def oom(*args, **kwargs):
+        calls.append("driver")
+        raise MemoryError("driver out of memory")
+
+    repair = kmember_module._repair
+
+    def repair_spy(*args, **kwargs):
+        calls.append("repair")
+        return repair(*args, **kwargs)
+
+    monkeypatch.setattr(kmember_module, "_kmember_driver", oom)
+    monkeypatch.setattr(kmember_module, "_repair", repair_spy)
+    got = kmember_kmeans(df, **kw)
+    assert calls[:2] == ["driver", "repair"]  # tried the driver, then the loop ran
+    _assert_same_result(got, want)

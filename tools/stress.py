@@ -14,6 +14,10 @@ Usage: python tools/stress.py [n_points] [n_vectors]
 - ε-join: the one-cell skew worst case, and 10^5 rows of the paper's
   6-d quasi-identifier shape (``eps_join_stages``; it reports the key
   dimensions and the probe's exploded row count).
+- k-member k-means: 10^5 rows of the same 6-d shape, k = 10, 40
+  clusters, on its driver solver and on its Spark loop
+  (``kmember_stage``; it reports wall time, jobs and whether the two
+  costs agree).
 
 Prints one JSON line per stage with wall seconds and result stats.
 """
@@ -126,6 +130,66 @@ def eps_join_stages(spark, n_skew: int) -> None:
     reps.unpersist()
 
 
+def kmember_stage(spark) -> None:
+    """k-member k-means over 10^5 integer rows in the data10k_6attr
+    quasi-identifier ranges, k = 10, 40 clusters: 4M distances per
+    iteration, under the 5M driver pair bound, so it runs on the driver
+    solver; then again with the bound at 0, on the Spark loop."""
+    from pyspark.sql import functions as F
+
+    from dbscan_pyspark_spark.operators import components
+    from dbscan_pyspark_spark.operators import kmember as km
+
+    ranges = [(15, 90), (130, 190), (30, 100), (2, 23), (0, 5), (0, 20)]
+    n, k, n_clusters, max_iter = 100_000, 10, 40, 5
+    pts = spark.range(n).select(
+        F.col("id"),
+        F.array(
+            *[
+                F.lit(lo) + F.abs(F.xxhash64("id", F.lit(c))) % (hi - lo + 1)
+                for c, (lo, hi) in enumerate(ranges)
+            ]
+        ).alias("features"),
+    ).persist()
+    pts.count()
+    sc = spark.sparkContext
+    out = {}
+    bound = components._DRIVER_PAIRS_THRESHOLD
+    try:
+        for path, threshold in (("driver", bound), ("spark_loop", 0)):
+            components._DRIVER_PAIRS_THRESHOLD = threshold
+            sc.setJobGroup(f"kmember_{path}", path)
+            t0 = time.time()
+            res = km.kmember_kmeans(pts, k=k, n_clusters=n_clusters, max_iter=max_iter)
+            out[path] = {
+                "wall_s": round(time.time() - t0, 1),
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(f"kmember_{path}")),
+                "cost": res.cost,
+                "n_iter": res.n_iter,
+            }
+            sizes = res.centroids.agg(F.min("n_members"), F.sum("n_members")).first()
+            assert sizes[0] >= k and sizes[1] == n
+    finally:
+        components._DRIVER_PAIRS_THRESHOLD = bound
+        sc.setJobGroup("", "")
+        pts.unpersist()
+    print(
+        json.dumps(
+            {
+                "stage": "kmember_kmeans_6d",
+                "n_points": n,
+                "k": k,
+                "n_clusters": n_clusters,
+                "max_iter": max_iter,
+                **out,
+                "same_cost": abs(out["driver"]["cost"] - out["spark_loop"]["cost"])
+                <= 1e-9 * out["spark_loop"]["cost"],
+            }
+        ),
+        flush=True,
+    )
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -205,6 +269,7 @@ def main() -> None:
     )
 
     eps_join_stages(spark, max(N_POINTS // 60, 10_000))
+    kmember_stage(spark)
 
     # --- distributed connected components (star contraction) ---
     # A zero driver bound forces the large-star/small-star path even
