@@ -3,23 +3,33 @@
 Reference parity: the reference's ``k-means.ipynb`` runs Lloyd's over
 RDD tuples with random restarts and a driver loop per iteration
 (``k-means.ipynb cell0:L12-15,75-86``). This module keeps the
-algorithmic shape (assign → recompute means → repeat) but re-expresses
-each iteration as TWO dataframe operations with the scale profile you
-want on a 1000-executor cluster:
+algorithmic shape (assign → recompute means → repeat). Where
+:func:`kmeans_fit` runs is decided once, by size:
 
-- **assignment is map-side only.** The k centroids ship as ONE
-  broadcast row (``_centroid_table``: ``_c array<struct<cid, c>>``)
-  cross-joined onto the points, and the nearest-centroid argmin is a
-  single ``array_min(transform(_c, ...))`` expression (``_nearest``) —
-  no shuffle of the points, and the plan's size does not grow with
-  k×dim. Every iteration is one scan. k-member, the IVF probes and
-  streaming inference rank against the same row with the same
-  expression.
-- **the centroid update is one k×dim-row shuffle.** Per-dimension sums
-  are expressed as ``dim`` independent ``sum(v[i])`` aggregates, all
-  partially aggregated map-side, so the exchange carries k rows of dim
-  sums — never the point set. No ``posexplode`` (which would shuffle
-  n×dim rows).
+- **on the driver** when vectors × (k + dim) is at most
+  ``components._DRIVER_PAIRS_THRESHOLD`` (the DBSCAN path's pair bound;
+  here the cells of one iteration's distance matrix plus the pulled
+  vectors). One Arrow pull of (id, vector), then every iteration in
+  numpy (:func:`_lloyd`, the package's one numpy Lloyd's, which the
+  two-level IVF fitter runs per coarse cell too), and the assignment
+  ships back as one Arrow-built frame.
+- **in Spark** above the bound, or when the driver path raises one of
+  ``components._DRIVER_FAILURES``: the distributed twin, each iteration
+  TWO dataframe operations:
+
+  - **assignment is map-side only.** The k centroids ship as ONE
+    broadcast row (``_centroid_table``: ``_c array<struct<cid, c>>``)
+    cross-joined onto the points, and the nearest-centroid argmin is a
+    single ``array_min(transform(_c, ...))`` expression (``_nearest``)
+    — no shuffle of the points, and the plan's size does not grow with
+    k×dim. Every iteration is one scan. k-member, the IVF probes and
+    streaming inference rank against the same row with the same
+    expression.
+  - **the centroid update is one k×dim-row shuffle.** Per-dimension
+    sums are expressed as ``dim`` independent ``sum(v[i])`` aggregates,
+    all partially aggregated map-side, so the exchange carries k rows
+    of dim sums — never the point set. No ``posexplode`` (which would
+    shuffle n×dim rows).
 
 Determinism (and hence DuckDB-oracle-ability, which no random-restart
 k-means has): inputs are quantized to a integer grid (``round(x *
@@ -37,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.operators import components as _components
+from dbscan_pyspark_spark.operators.components import _DRIVER_FAILURES
 from dbscan_pyspark_spark.session import _local_frame
 
 
@@ -129,6 +141,73 @@ def _assign(
     )
 
 
+def _lloyd(vs, k: int, n_iter: int):
+    """Lloyd's in numpy over the int64 matrix ``vs``, rows in id order:
+    the k first rows as the initial centroids (cids 0..k-1), exact
+    integer ``‖v‖² + ‖c‖² − 2v·c`` distances, argmin ties to the first
+    (lowest) cid, ``floor_divide`` centroid updates, and clusters left
+    empty dropped with the other cids kept. Returns ``(cid, cents,
+    label)``: the live cids ascending, their centroids, and each row's
+    cid against the final centroids. Exact while ``dim·(2·max|v|)²``
+    and ``rows·max|v|`` fit int64 (the caller's check)."""
+    import numpy as np
+
+    cid = np.arange(min(k, len(vs)))
+    cents = vs[: len(cid)]
+    vs2 = (vs * vs).sum(axis=1)
+
+    def nearest(cents):
+        d = vs2[:, None] + (cents * cents).sum(axis=1)[None, :] - 2 * (vs @ cents.T)
+        return d.argmin(axis=1)  # the first minimum: the lowest cid
+
+    for _ in range(n_iter):
+        pos = nearest(cents)
+        order = np.argsort(pos, kind="stable")
+        live, start, counts = np.unique(
+            pos[order], return_index=True, return_counts=True
+        )
+        sums = np.add.reduceat(vs[order], start, axis=0)
+        # floors toward -inf like the twin's Python //
+        cid, cents = cid[live], np.floor_divide(sums, counts[:, None])
+    return cid, cents, cid[nearest(cents)]
+
+
+def _fit_driver(
+    q: DataFrame, k: int, n_iter: int, id_col: str
+) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
+    """:func:`kmeans_fit` on the driver: one Arrow pull of ``q`` (id,
+    ``_v``), :func:`_lloyd`, and the assignment as one Arrow-built
+    frame. Raises ValueError, so that the twin runs, where the twin's
+    behaviour is not a plain Lloyd's: vectors that do not stack into one
+    integer matrix (ragged, or holding NULLs), NULL or duplicate ids
+    (the twin's lowest-id init is then not one fixed set), and
+    coordinates large enough for the int64 arithmetic to overflow
+    (where the twin raises under ANSI)."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = q.toPandas()
+    ids = pdf[id_col].to_numpy()
+    if pd.isna(ids).any() or len(pd.unique(ids)) < len(ids):
+        raise ValueError("kmeans driver path: NULL or duplicate ids")
+    vs = np.stack(pdf["_v"].to_numpy())  # ValueError when ragged
+    if vs.dtype.kind != "i":
+        raise ValueError("kmeans driver path: NULL coordinates")
+    order = np.argsort(ids, kind="stable")
+    ids, vs = ids[order], vs[order]
+    m = max(int(vs.max()), -int(vs.min()))
+    if vs.shape[1] * (2 * m) ** 2 >= 2**63 or len(vs) * m >= 2**63:
+        raise ValueError("kmeans driver path: int64 overflow")
+    cid, cents, label = _lloyd(vs, k, n_iter)
+    id_type = q.schema[id_col].dataType.simpleString()
+    out = _local_frame(
+        q.sparkSession,
+        list(zip(ids.tolist(), label.tolist())),
+        f"{id_col} {id_type}, cluster int",
+    )
+    return out, list(zip(cid.tolist(), cents.tolist()))
+
+
 def kmeans_quantized(
     vectors: DataFrame,
     k: int = 10,
@@ -145,10 +224,6 @@ def kmeans_quantized(
     already holds integral longs. :func:`kmeans_fit` additionally
     returns the fitted centroids (the model) for downstream inference
     (streaming assignment, IVF coarse quantization).
-
-    Driver state per iteration is the k×dim centroid table only (the
-    bounded-collect discipline of SURVEY §2 A7); the point set is
-    scanned ``n_iter + 1`` times and shuffled never.
     """
     return kmeans_fit(
         vectors, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
@@ -166,13 +241,39 @@ def kmeans_fit(
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """:func:`kmeans_quantized` returning (assignments, centroids) —
     the centroid list is the trained model in quantized units, ready
-    for :func:`assign_with_model` or streaming inference."""
-    # the loop scans q n_iter+1 times: materialize the quantized
+    for :func:`assign_with_model` or streaming inference. ``n_iter=0``
+    assigns to the initial centroids.
+
+    One aggregate counts the vectors and reads their dimension. When
+    vectors × (k + dim) is at most ``components._DRIVER_PAIRS_THRESHOLD``
+    the fit runs on the driver (``_fit_driver``: one Arrow pull, numpy
+    iterations, an Arrow-built assignment, and no Spark job after the
+    pull). Above the bound, or when the driver path raises one of
+    ``components._DRIVER_FAILURES``, the Spark loop below runs: the
+    distributed twin, whose driver state per iteration is the k×dim
+    centroid table only (the bounded-collect discipline of SURVEY §2
+    A7), the quantized point set scanned ``n_iter + 2`` times after the
+    gate's scan, and shuffled never.
+    Both give the same assignment and centroid list."""
+    if n_iter < 0:
+        raise ValueError(f"kmeans_fit: n_iter must be >= 0, got {n_iter}")
+    q = _quantized_rows(vectors, vec_col, scale).select(id_col, "_v")
+    n, dim = q.agg(F.count(F.lit(1)), F.max(F.size("_v"))).first()
+    # empty input and k < 1 keep the twin's empty-init branch
+    if min(n, k) > 0 and n * (k + dim) <= _components._DRIVER_PAIRS_THRESHOLD:
+        try:
+            return _fit_driver(q, k, n_iter, id_col)
+        except _DRIVER_FAILURES:
+            pass  # the Spark loop below is the distributed twin
+
+    # the loop scans q n_iter+2 times: materialize the quantized
     # projection once instead of re-deriving it from the source each
     # pass (at 2M x 64-d this halves the run; with a real file source
-    # it also avoids n_iter+1 scans of the table). try/finally so a job
-    # failure mid-fit cannot leak the persisted relation.
-    q = _quantized_rows(vectors, vec_col, scale).select(id_col, "_v").persist()
+    # it also avoids repeated scans of the table). It is persisted only
+    # here: a cached scan runs one more job, which the driver path's
+    # two scans do not earn back. try/finally so a job failure mid-fit
+    # cannot leak the persisted relation.
+    q = q.persist()
     try:
         init_rows = q.orderBy(id_col).limit(k).collect()
         if not init_rows:

@@ -295,6 +295,8 @@ def kmember_kmeans(
     and a centroid aggregate per iteration. Both give the same clusters,
     centroids, cost and ``n_iter``.
     """
+    if max_iter < 1:
+        raise ValueError(f"kmember_kmeans: max_iter must be >= 1, got {max_iter}")
     n = points.count()
     if n_clusters is None:
         n_clusters = max(n // k, 1)
@@ -325,8 +327,6 @@ def kmember_kmeans(
         "cluster_id int, centroid array<double>, n_members long",
     )
 
-    assign = None
-    n_iter = 0
     for n_iter in range(1, max_iter + 1):
         assign = assign_nearest(
             points, centroids, metric=metric, features=features, id_col=id_col

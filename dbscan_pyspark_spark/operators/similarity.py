@@ -1014,46 +1014,30 @@ class IVFTwoLevelModel:
 def _l2_subcent_fitter(k2: int, n_iter: int):
     """Per-coarse-cell Lloyd's for the second quantizer level, run
     inside ``applyInPandas`` over groups of BOUNDED size (the caller
-    caps each group at ``train_cap`` smallest-id rows). Mirrors
-    :func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit` exactly:
-    init = the k2 smallest-id members, argmin tie-break = smallest
-    centroid id, centroid update = exact-integer floor division
-    (numpy's ``//`` floors toward -inf like Python's), empty clusters
-    dropped with surviving labels preserved — so the fit is
+    caps each group at ``train_cap`` smallest-id rows): the members in
+    id order through :func:`~dbscan_pyspark_spark.operators.kmeans._lloyd`,
+    the numpy Lloyd's of :func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit`
+    (init = the k2 smallest-id members, argmin tie-break = smallest
+    centroid id, exact-integer floor-division updates, empty clusters
+    dropped with surviving labels preserved) — so the fit is
     deterministic given the corpus, the property every IVF oracle
     relies on."""
     import numpy as np
     import pandas as pd
 
+    from dbscan_pyspark_spark.operators.kmeans import _lloyd
+
     def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("_tid", kind="mergesort")
         l1 = int(pdf["_l1"].iloc[0])
         vs = np.array(pdf["_v"].tolist(), dtype=np.int64)
-        m = vs.shape[0]
-        kk = min(k2, m)
-        # (cid-offset j, centroid) pairs; j indexes within the coarse
-        # cell so the global cell id is l1 * k2 + j
-        cents = [(j, vs[j].copy()) for j in range(kk)]
-        vs2 = (vs * vs).sum(axis=1)
-        for _ in range(n_iter):
-            c = np.stack([v for _, v in cents])
-            # exact-integer ||x-c||^2 via the expanded form: no
-            # (m, k, dim) intermediate, just one int64 matmul
-            d = vs2[:, None] + (c * c).sum(axis=1)[None, :] - 2 * (vs @ c.T)
-            lab = d.argmin(axis=1)  # first occurrence = smallest cid
-            nxt = []
-            for pos, (j, _) in enumerate(cents):
-                mask = lab == pos
-                n = int(mask.sum())
-                if n == 0:
-                    continue  # empty cluster dropped, labels preserved
-                nxt.append((j, vs[mask].sum(axis=0) // n))
-            cents = nxt
+        # cid j indexes within the coarse cell: the global cell id is l1 * k2 + j
+        cid, cents, _ = _lloyd(vs, k2, n_iter)
         return pd.DataFrame(
             {
-                "_l1": [l1] * len(cents),
-                "cid": [l1 * k2 + j for j, _ in cents],
-                "c": [[int(x) for x in v] for _, v in cents],
+                "_l1": [l1] * len(cid),
+                "cid": (l1 * k2 + cid).tolist(),
+                "c": cents.tolist(),
             }
         )
 
@@ -1075,11 +1059,13 @@ def ivf_fit_two_level(
 
     Level 1 routes: k1 = ceil(sqrt(n_cells)) centroids trained with the
     deterministic grid-quantized Lloyd's
-    (:func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit`) and
-    shipped as one broadcast row — bounded by sqrt(n_cells) <= 4096, so
-    the A7 driver-bounded-collect discipline holds at any corpus size.
-    Level 2 refines: k2 = ceil(n_cells / k1) sub-centroids PER coarse
-    cell, trained by per-group Lloyd's inside ``applyInPandas`` on a
+    (:func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit`: on the
+    driver while vectors × (k1 + dim) fits the pair bound, else its
+    Spark loop) and shipped as one broadcast row — bounded by
+    sqrt(n_cells) <= 4096, so the A7 driver-bounded-collect discipline
+    holds at any corpus size. Level 2 refines: k2 = ceil(n_cells / k1)
+    sub-centroids PER coarse cell, trained by the same numpy Lloyd's
+    (``kmeans._lloyd``) per group inside ``applyInPandas`` on a
     deterministic per-cell sample (the ``train_cap`` smallest-id
     members — one slim (id, l1, vec) shuffle, the only corpus shuffle
     in the fit). Sub-centroids live in a C-row broadcast RELATION
@@ -1247,7 +1233,9 @@ def ivf_quantized_topk(
 
     The coarse quantizer is grid-quantized Lloyd's
     (:func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit` — integer
-    centroids, bit-reproducible), cell probing is a map-side
+    centroids, bit-reproducible; fit on the driver in numpy while
+    vectors × (n_cells + dim) fits ``components._DRIVER_PAIRS_THRESHOLD``,
+    by its Spark loop above that), cell probing is a map-side
     sort-and-slice against one broadcast centroid row (no shuffle of the
     queries), and scoring is
     integer dot products on the quantized vectors with round-6 cosine —

@@ -11,9 +11,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from dbscan_pyspark_spark.operators import kmeans
+from dbscan_pyspark_spark.operators import components, kmeans
 from dbscan_pyspark_spark.operators.kmeans import kmeans_quantized
 from dbscan_pyspark_spark.plans import broadcast_join_count, shuffle_count
+from dbscan_pyspark_spark.session import _local_frame
 
 
 def _df(spark, vecs):
@@ -97,7 +98,8 @@ def test_assignment_is_map_side_only(spark, monkeypatch):
     """The final assignment pass must not shuffle the points: the
     centroids join as one broadcast row and the argmin is one
     expression over it (the whole point of the argmin-as-expression
-    design)."""
+    design). The bound at 0 pins the fit to its Spark loop."""
+    monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
     rng = np.random.default_rng(1)
     df = _df(spark, rng.normal(size=(20, 3)))
     # the fit checkpoints its final assignment pass; the iteration
@@ -118,7 +120,9 @@ def test_assignment_is_map_side_only(spark, monkeypatch):
 
 def test_fit_failure_releases_cached_projection(spark, monkeypatch):
     """A job that raises after the init collect must not leave the
-    quantized projection persisted for the rest of the session."""
+    quantized projection persisted for the rest of the session. The
+    bound at 0 pins the fit to its Spark loop."""
+    monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
     rng = np.random.default_rng(2)
     df = _df(spark, rng.normal(size=(20, 3)))
     persistent = spark.sparkContext._jsc.getPersistentRDDs
@@ -200,3 +204,175 @@ def test_load_model_rejects_wrong_format(spark, tmp_path):
     p.write_text(json.dumps({"format": "other"}))
     with pytest.raises(ValueError, match="not a kmeans_quantized model"):
         load_kmeans_model(str(p))
+
+
+# -- the driver path and its distributed twin ---------------------------------
+# Inputs are Arrow-built integer vectors (``scale=None``), tiny on purpose:
+# every twin fit runs a handful of Spark jobs.
+
+
+def _int_df(spark, rows, ddl="vec_id long, embedding array<bigint>"):
+    return _local_frame(spark, rows, ddl)
+
+
+def _fail(name):
+    def fail(*args, **kwargs):
+        raise AssertionError(f"{name} called")
+
+    return fail
+
+
+def _driver_fit(monkeypatch, df, **kw):
+    # the driver path: the Spark loop's assignment never runs
+    with monkeypatch.context() as m:
+        m.setattr(kmeans, "_assign", _fail("_assign"))
+        m.setattr(kmeans, "_centroid_table", _fail("_centroid_table"))
+        return kmeans.kmeans_fit(df, scale=None, **kw)
+
+
+def _twin_fit(monkeypatch, df, **kw):
+    # a zero pair bound forces the Spark loop; the numpy kernel never runs
+    with monkeypatch.context() as m:
+        m.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+        m.setattr(kmeans, "_lloyd", _fail("_lloyd"))
+        return kmeans.kmeans_fit(df, scale=None, **kw)
+
+
+def _fallback_fit(monkeypatch, df, **kw):
+    # under the bound on input the driver path refuses: it raises
+    # ValueError before the kernel runs, then the Spark loop runs
+    raised = []
+    fit_driver = kmeans._fit_driver
+
+    def spy(*args, **kwargs):
+        try:
+            return fit_driver(*args, **kwargs)
+        except Exception as e:
+            raised.append(type(e))
+            raise
+
+    with monkeypatch.context() as m:
+        m.setattr(kmeans, "_fit_driver", spy)
+        m.setattr(kmeans, "_lloyd", _fail("_lloyd"))
+        out = kmeans.kmeans_fit(df, scale=None, **kw)
+    assert raised == [ValueError]
+    return out
+
+
+def _assert_same_fit(got, want):
+    (got_assign, got_cents), (want_assign, want_cents) = got, want
+    assert got_assign.dtypes == want_assign.dtypes
+    assert sorted(map(tuple, got_assign.collect())) == sorted(
+        map(tuple, want_assign.collect())
+    )
+    assert got_cents == want_cents
+
+    def types(cents):
+        return [(type(c), {type(x) for x in v}) for c, v in cents]
+
+    assert types(got_cents) == types(want_cents) == [(int, {int})] * len(want_cents)
+
+
+def _equivalence_cases(spark):
+    return [  # (name, points, k, centroids left after one or more updates)
+        # integer lattice, init (0,0), (2,0), (4,0): the odd columns are
+        # equidistant from two centroids at every iteration
+        (
+            "lattice",
+            _int_df(spark, [(i, [(2 * i) % 5, (2 * i) // 5]) for i in range(15)]),
+            3,
+            3,
+        ),
+        # ids 0 and 2 coincide: cid 2 loses every tie to cid 0 and drops out
+        (
+            "empties",
+            _int_df(spark, [(i, [5 * (i % 2), 5 * (i % 2)]) for i in range(8)]),
+            3,
+            2,
+        ),
+        # negative sums that do not divide evenly: floor, not truncation
+        (
+            "negative",
+            _int_df(spark, [(i, [-((7 * i) % 11), (5 * i) % 13 - 9]) for i in range(12)]),
+            3,
+            3,
+        ),
+        # more clusters than points: every point is its own centroid
+        ("k_over_n", _int_df(spark, [(i, [3 * i, -i]) for i in range(3)]), 5, 3),
+    ]
+
+
+@pytest.mark.parametrize("n_iter", [0, 1, 2])
+def test_driver_fit_matches_spark_twin(spark, monkeypatch, n_iter):
+    """The numpy fit and the Spark loop give the same assignments (with
+    the same column types) and the same centroid list (Python ints), on
+    the path each is meant for: spies fail the run if the other path's
+    pieces are called. The driver path leaves nothing persisted."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    for name, df, k, live in _equivalence_cases(spark):
+        before = persistent().size()
+        got = _driver_fit(monkeypatch, df, k=k, n_iter=n_iter)
+        assert persistent().size() == before, name
+        want = _twin_fit(monkeypatch, df, k=k, n_iter=n_iter)
+        _assert_same_fit(got, want)
+        assert len(got[1]) == (min(k, df.count()) if n_iter == 0 else live), name
+
+
+def test_driver_fit_failure_falls_back(spark, monkeypatch):
+    """A driver fit that runs out of memory falls back to the Spark loop,
+    whose result equals the driver path's."""
+    df = _equivalence_cases(spark)[0][1]
+    want = _driver_fit(monkeypatch, df, k=3, n_iter=2)
+    calls = []
+
+    def oom(*args, **kwargs):
+        calls.append("driver")
+        raise MemoryError("driver out of memory")
+
+    assign = kmeans._assign
+
+    def assign_spy(*args, **kwargs):
+        calls.append("assign")
+        return assign(*args, **kwargs)
+
+    monkeypatch.setattr(kmeans, "_lloyd", oom)
+    monkeypatch.setattr(kmeans, "_assign", assign_spy)
+    got = kmeans.kmeans_fit(df, k=3, n_iter=2, scale=None)
+    assert calls[:2] == ["driver", "assign"]  # tried the driver, then the loop ran
+    _assert_same_fit(got, want)
+
+
+def test_ragged_vectors_fall_back(spark, monkeypatch):
+    """Vectors of different lengths do not stack into one matrix: the
+    Spark loop runs, with its own reading of the short centroids."""
+    df = _int_df(spark, [(i, [i, -i] + [1] * (i % 3 == 2)) for i in range(9)])
+    _assert_same_fit(
+        _fallback_fit(monkeypatch, df, k=2, n_iter=1),
+        _twin_fit(monkeypatch, df, k=2, n_iter=1),
+    )
+
+
+def test_duplicate_ids_fall_back(spark, monkeypatch):
+    """Duplicate ids leave the lowest-id init to the Spark loop."""
+    df = _int_df(spark, [(min(i, 6), [i % 3, i]) for i in range(9)])
+    got = _fallback_fit(monkeypatch, df, k=2, n_iter=1)
+    _assert_same_fit(got, _twin_fit(monkeypatch, df, k=2, n_iter=1))
+    assert got[0].count() == 9
+
+
+def test_int64_overflow_risk_falls_back(spark, monkeypatch):
+    """Coordinates whose expanded squared distance could overflow int64
+    (dim·(2·max|v|)² = 2^63 here) go to the Spark loop, whose exact
+    differences still fit."""
+    big = 2**30
+    df = _int_df(spark, [(i, [big * (i % 2), big * (i % 3 == 0)]) for i in range(6)])
+    _assert_same_fit(
+        _fallback_fit(monkeypatch, df, k=2, n_iter=2),
+        _twin_fit(monkeypatch, df, k=2, n_iter=2),
+    )
+
+
+def test_negative_n_iter_rejected(spark):
+    df = _int_df(spark, [(0, [1, 2])])
+    with pytest.raises(ValueError, match="n_iter must be >= 0"):
+        kmeans.kmeans_fit(df, k=1, n_iter=-1, scale=None)

@@ -56,6 +56,14 @@ def test_kmember_infeasible_raises(spark):
         kmember_kmeans(df, k=10, n_clusters=3)
 
 
+@pytest.mark.parametrize("bound", [None, 0])  # driver solver, Spark loop
+def test_kmember_rejects_max_iter_below_one(spark, monkeypatch, bound):
+    if bound is not None:
+        monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", bound)
+    with pytest.raises(ValueError, match="max_iter must be >= 1"):
+        kmember_kmeans(_grid(spark), k=10, n_clusters=3, max_iter=0)
+
+
 def test_kmember_anonymize_shape(spark, blob_points):
     res = kmember_kmeans(blob_points, k=12, n_clusters=4, max_iter=5)
     out = kmember_anonymize(blob_points, res)

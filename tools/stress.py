@@ -18,6 +18,10 @@ Usage: python tools/stress.py [n_points] [n_vectors]
   clusters, on its driver solver and on its Spark loop
   (``kmember_stage``; it reports wall time, jobs and whether the two
   costs agree).
+- IVF coarse quantizer: ``kmeans_fit`` over 50 000 32-d vectors at 64
+  cells, on its driver path and on its Spark loop
+  (``ivf_quantizer_stage``; it reports wall time and jobs, and asserts
+  the two centroid lists are identical).
 
 Prints one JSON line per stage with wall seconds and result stats.
 """
@@ -190,6 +194,65 @@ def kmember_stage(spark) -> None:
     )
 
 
+def ivf_quantizer_stage(spark) -> None:
+    """The IVF coarse quantizer's fit, ``kmeans_fit`` with the
+    ``ivf_quantized_topk`` defaults (scale 1000, 2 iterations), over
+    50 000 32-d vectors at 64 cells: 50 000 × (64 + 32) = 4.8M cells,
+    under the 5M driver pair bound, so it runs on the driver path; then
+    again with the bound at 0, on the Spark loop."""
+    from pyspark.sql import functions as F
+
+    from dbscan_pyspark_spark.operators import components
+    from dbscan_pyspark_spark.operators import kmeans as km
+
+    n, dim, cells, n_iter = 50_000, 32, 64, 2
+    vecs = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[
+                (F.abs(F.xxhash64("id", F.lit(i))) % 2001 - 1000) / 1000.0
+                for i in range(dim)
+            ]
+        ).alias("embedding"),
+    ).persist()
+    vecs.count()
+    sc = spark.sparkContext
+    out, cents = {}, {}
+    bound = components._DRIVER_PAIRS_THRESHOLD
+    try:
+        for path, threshold in (("driver", bound), ("spark_loop", 0)):
+            components._DRIVER_PAIRS_THRESHOLD = threshold
+            sc.setJobGroup(f"ivf_quantizer_{path}", path)
+            t0 = time.time()
+            assign, cents[path] = km.kmeans_fit(vecs, k=cells, n_iter=n_iter)
+            n_assigned = assign.count()
+            out[path] = {
+                "wall_s": round(time.time() - t0, 1),
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(f"ivf_quantizer_{path}")),
+            }
+            assert n_assigned == n
+    finally:
+        components._DRIVER_PAIRS_THRESHOLD = bound
+        sc.setJobGroup("", "")
+        vecs.unpersist()
+    assert cents["driver"] == cents["spark_loop"]
+    print(
+        json.dumps(
+            {
+                "stage": "ivf_quantizer_fit",
+                "n_vectors": n,
+                "dim": dim,
+                "n_cells": cells,
+                "n_iter": n_iter,
+                "live_cells": len(cents["driver"]),
+                **out,
+                "same_centroids": True,
+            }
+        ),
+        flush=True,
+    )
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -270,6 +333,7 @@ def main() -> None:
 
     eps_join_stages(spark, max(N_POINTS // 60, 10_000))
     kmember_stage(spark)
+    ivf_quantizer_stage(spark)
 
     # --- distributed connected components (star contraction) ---
     # A zero driver bound forces the large-star/small-star path even
