@@ -20,10 +20,9 @@ The ε-sweep computes the pair set ONCE at max ε and filters per ε
 Where each level is scored follows where it was labeled: when
 ``dbscan._rep_labels`` solved the sweep on the driver, every level's
 metrics are weighted numpy sums over the labels and reps it already
-holds (``_score_levels``); otherwise (pairs or noise-to-centroid work
-above ``components._DRIVER_PAIRS_THRESHOLD``, or a failed driver
-attempt) the concurrent per-ε Spark bodies score them — the distributed
-twin.
+holds (``_score_levels``); otherwise the concurrent per-ε Spark bodies
+score them — the distributed twin. ``components._on_driver`` makes both
+choices.
 
 Small driver-built frames (metric rows, centroid and repair tables)
 go through ``_local_frame``: Arrow ships them to the JVM, so scanning
@@ -35,8 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators import components as _components
-from dbscan_pyspark_spark.operators.components import _DRIVER_FAILURES
+from dbscan_pyspark_spark.operators.components import _on_driver
 from dbscan_pyspark_spark.operators.dbscan import _rep_labels
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
 from dbscan_pyspark_spark.session import _local_frame
@@ -242,20 +240,18 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
       Σ ``_mult``·min over all centroids (singletons included);
     - a level with no cluster gives ``(eps, 0, n_total, 0.0, inf, inf)``.
 
-    Returns None (the caller runs the Spark body) when Σ over levels of
-    noise reps × centroids exceeds ``components._DRIVER_PAIRS_THRESHOLD``;
-    within it, noise distances are built one dimension at a time in row
-    blocks of at most that many cells."""
+    The caller gates it on Σ over levels of noise reps × centroids, the
+    cells of its noise distance matrices, which are built one dimension
+    at a time."""
     import numpy as np
 
-    bound = _components._DRIVER_PAIRS_THRESHOLD
     ids = reps_pdf[id_col].to_numpy(dtype="int64")
     mult = reps_pdf["_mult"].to_numpy(dtype="int64")
     x = np.stack(reps_pdf[features].to_numpy()).astype("float64")
     order = np.argsort(ids)
     n_total = int(mult.sum())
 
-    levels_out, work = [], 0
+    rows = []
     for eps in sorted(eps_values):
         lab = levels[float(eps)]
         pos = order[np.searchsorted(ids[order], lab[id_col].to_numpy(dtype="int64"))]
@@ -268,7 +264,7 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
         _, inv = np.unique(cid[clustered], return_inverse=True)
         n_clusters = len(np.unique(cid[labeled])) + int(mult[solo].sum())
         if not n_clusters:
-            levels_out.append((float(eps), None))
+            rows.append((float(eps), 0, n_total, 0.0, float("inf"), float("inf")))
             continue
         w = mult[clustered].astype("float64")
         xc = x[clustered]
@@ -277,24 +273,9 @@ def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, featur
         ) / np.bincount(inv, weights=w)[:, None]
         ce = float((w * _driver_dist(xc, cents[inv], metric)).sum())
         noise = np.flatnonzero(~clustered)
-        work += len(noise) * len(cents)
-        levels_out.append((float(eps), (n_clusters, ce, noise, cents)))
-    if work > bound:
-        return None
-
-    rows = []
-    for eps, level in levels_out:
-        if level is None:
-            rows.append((eps, 0, n_total, 0.0, float("inf"), float("inf")))
-            continue
-        n_clusters, ce, noise, cents = level
-        step = max(1, bound // len(cents))
-        ne = 0.0
-        for lo in range(0, len(noise), step):
-            blk = noise[lo : lo + step]
-            nearest = _driver_dist(x[blk][:, None, :], cents[None, :, :], metric).min(axis=1)
-            ne += float((mult[blk] * nearest).sum())
-        rows.append((eps, n_clusters, int(mult[noise].sum()), ce, ne, ce + ne))
+        nearest = _driver_dist(x[noise][:, None, :], cents[None, :, :], metric).min(axis=1)
+        ne = float((mult[noise] * nearest).sum())
+        rows.append((float(eps), n_clusters, int(mult[noise].sum()), ce, ne, ce + ne))
     return rows
 
 
@@ -317,11 +298,9 @@ def eps_sweep(
     ``_rep_labels`` labels every ε level and decides where. When it
     solved them in one driver pass, every level is scored on the driver
     too (``_score_levels``: weighted numpy sums over the labels and reps
-    that pass already holds, no Spark job). The concurrent per-ε Spark
-    bodies below are only the distributed twin: they score the levels
-    when the labeling ran distributed, when the scoring's noise ×
-    centroid work exceeds the same pair bound, or when the driver
-    scoring fails. Per-point metrics are exact because duplicates share
+    that pass already holds, no Spark job) unless ``_on_driver`` sends
+    its noise × centroid work to the distributed twin, the concurrent
+    per-ε Spark bodies below. Per-point metrics are exact because duplicates share
     features: Σ_points dist = Σ_reps mult·dist, and centroids are
     multiplicity-weighted means.
 
@@ -342,6 +321,7 @@ def eps_sweep(
         id_col=id_col, dim=dim, payload_b=["_mult"],
     ).persist()
     inf = float("inf")
+    n_total = None  # the twin counts it
 
     def _one_eps(eps):
         # one ε's labels + weighted metrics; bodies for different ε
@@ -423,23 +403,29 @@ def eps_sweep(
             ce + ne,
         )
 
-    try:
+    def twin():
         from dbscan_pyspark_spark.compat import concurrent_map_ordered
 
+        nonlocal n_total
+        n_total = points.count()  # read by _one_eps
+        return concurrent_map_ordered(_one_eps, sorted(eps_values))
+
+    try:
         labels_at, driver = _rep_labels(
             reps, all_pairs, eps_values, min_pts, min_cluster_size, "cc", id_col
         )
-        rows = None
-        if driver is not None:
-            try:
-                rows = _score_levels(
-                    *driver, eps_values, min_cluster_size, metric, features, id_col
-                )
-            except _DRIVER_FAILURES:
-                pass  # the distributed twin below scores every level
-        if rows is None:
-            n_total = points.count()  # read by _one_eps
-            rows = concurrent_map_ordered(_one_eps, sorted(eps_values))
+        if driver is None:
+            rows = twin()
+        else:
+            levels, reps_pdf = driver
+            # the driver's noise distance cells, Σ over levels of noise
+            # reps × centroids (no noise when unlabeled reps are clusters)
+            work = 0 if min_cluster_size <= 1 else sum(
+                (len(reps_pdf) - len(lab)) * lab["cluster_id"].nunique()
+                for lab in (levels[float(eps)] for eps in eps_values)
+            )
+            args = (*driver, eps_values, min_cluster_size, metric, features, id_col)
+            rows = _on_driver(work, lambda: _score_levels(*args), twin)
     finally:
         all_pairs.unpersist()
         reps.unpersist()

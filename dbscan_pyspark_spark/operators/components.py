@@ -19,8 +19,11 @@ from __future__ import annotations
 
 import threading
 
+from pyarrow import ArrowException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from dbscan_pyspark_spark.session import _local_frame
 
 # Refcounted guard for the session-global AQE-coalescing flip in the
 # star-contraction loop: concurrent CC runs (e.g. eps_sweep's thread
@@ -31,19 +34,37 @@ _COALESCE_KEY = "spark.sql.adaptive.coalescePartitions.enabled"
 _COALESCE_LOCK = threading.Lock()
 _COALESCE_STATE: dict[int, list] = {}  # id(session) -> [depth, prev]
 
-# The one driver-vs-distributed size gate of the DBSCAN path: up to this
-# many edges (pairs) connected_components solves on the driver by
-# union-find, dbscan's labeling core solves every ε level in one driver
-# Kruskal pass, and eps_sweep scores every level in numpy (there the
-# count is Σ noise reps × centroids). Four 8-byte columns per pair,
-# ~160 MB at the bound. Read as a module attribute at call time; 0
-# forces every distributed twin. k-member k-means applies the same bound
-# to points × clusters.
+# The one driver-vs-distributed size bound of the adaptive fast paths,
+# in cells of a site's driver work: edges for connected_components,
+# pairs for dbscan's labeling core, noise reps × centroids for
+# eps_sweep's scoring, points × clusters for k-member k-means,
+# vectors × (k + dim) for k-means. Four 8-byte columns per pair, ~160
+# MB at the bound. Read only by ``_on_driver``, at call time; 0 forces
+# every distributed twin.
 _DRIVER_PAIRS_THRESHOLD = 5_000_000
 
-# What a driver fast path may raise and still fall back to its
-# distributed twin: no numpy/pandas, driver memory, Arrow conversion.
-_DRIVER_FAILURES = (ImportError, MemoryError, ValueError, TypeError)
+
+class _Declined(Exception):
+    """Raised by a driver fast path for an input it leaves to its twin."""
+
+
+# What a driver fast path may raise and still fall back to its twin:
+# no numpy/pandas, driver memory, Arrow conversion, a declared decline.
+# Anything else is a bug of the fast path and propagates.
+_DRIVER_FAILURES = (ImportError, MemoryError, ArrowException, _Declined)
+
+
+def _on_driver(cells, driver, twin):
+    """The one driver-or-twin seam: ``driver()`` when ``cells`` fits
+    ``_DRIVER_PAIRS_THRESHOLD``, else ``twin()``, the pinned distributed
+    twin, which also runs when ``driver()`` raises one of
+    ``_DRIVER_FAILURES``."""
+    if 0 < _DRIVER_PAIRS_THRESHOLD and cells <= _DRIVER_PAIRS_THRESHOLD:
+        try:
+            return driver()
+        except _DRIVER_FAILURES:
+            pass
+    return twin()
 
 
 def _coalesce_flip_enter(spark) -> None:
@@ -154,7 +175,7 @@ def _union(parent, u, v):
         np.minimum.at(parent, hi, lo)
 
 
-def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
+def _driver_union_find(e: DataFrame, id_col: str):
     """Small-graph fast path: collect edges, solve components on the
     driver, return pandas (id, component). Chosen adaptively by observed edge
     count — the same strategy-by-size philosophy as AQE. A 100 TB run
@@ -179,78 +200,12 @@ def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
     return pd.DataFrame({id_col: ids, "component": ids[parent]})
 
 
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    id_col: str = "id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Labels every vertex with the minimum vertex id of its component.
-
-    ``edges``: DataFrame with ``src``/``dst`` (undirected; self-loops and
-    duplicates tolerated — a node appearing only in self-loops is still
-    labeled, with itself as component). ``vertices`` (optional):
-    DataFrame with ``id_col`` — isolated vertices get their own id as
-    component, and the output is restricted to this set.
-    Returns ``DataFrame(id, component)``.
-
-    Adaptive execution: if the raw edge list has <=
-    ``_DRIVER_PAIRS_THRESHOLD`` rows it is solved by driver union-find
-    (one job, O(E α)); larger graphs run distributed star-contraction
-    (O(log n) shuffling rounds), finished on the driver once a round
-    shrinks the edge set under the same bound. A driver union-find that
-    raises one of ``_DRIVER_FAILURES`` hands the graph to star
-    contraction, which then runs to its fixpoint.
-    Each round localCheckpoints the edge set — lineage truncation, the
-    discipline the reference needed ``setCheckpointDir`` for
-    (``DBSCAN.py:171``) and its k-means notebook lacked entirely
-    (unbounded ``.union().cache()`` chains, SURVEY.md §3.2).
-    """
-    # Materialize the raw (self-loop-free) edge list WITHOUT the
-    # canonical distinct: union-find tolerates duplicate/mirrored edges,
-    # so the driver path skips that whole extra shuffle (measured ~1-2 s
-    # of a 4 s CC step at 400k edges). The distributed path still
-    # canonicalizes — star-contraction rounds shrink with dedup.
-    # When the caller already persisted ``edges`` the checkpoint copy is
-    # skipped too: the projection below recomputes from cache for the
-    # price of a narrow scan, and the driver path collects immediately.
-    raw = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    )
-    lvl = edges.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        # One materialization serves BOTH jobs below (threshold count +
-        # solve/self-loop scan); without it, an unpersisted caller would
-        # recompute its full edge lineage for each.
-        raw = raw.localCheckpoint(eager=True)
-
-    driver_max = _DRIVER_PAIRS_THRESHOLD
-    n_edges = raw.count()
-    labels_pdf = None
-    if driver_max > 0 and n_edges <= driver_max:
-        # Union-find tolerates self-loops (a hook where u == v is a
-        # no-op), and a node whose only edges are self-loops appears in
-        # the pulled id set and comes out labeled with itself — so the
-        # driver path needs ONE Arrow pull over the raw edge list, no
-        # self-loop distinct, no anti-join.
-        try:
-            labels_pdf = _driver_union_find(raw, id_col)
-        except _DRIVER_FAILURES:
-            driver_max = 0  # star contraction below, to the fixpoint
-    if labels_pdf is not None:
-        labels = edges.sparkSession.createDataFrame(
-            labels_pdf, f"{id_col} long, component long"
-        )
-        if vertices is not None:
-            vs = vertices.select(F.col(id_col).cast("long").alias(id_col)).distinct()
-            labels = vs.join(labels, id_col, "left").select(
-                F.col(id_col),
-                F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            )
-        return labels
-
+def _star_contraction(raw, n_edges, id_col, max_iter, finish):
+    """``connected_components``' distributed twin over the raw edge list
+    ``raw`` (``n_edges`` rows of (u, v)): star-contraction rounds to the
+    fixpoint, or until ``finish(edges, n)`` returns the labels of a
+    round's n-edge remnant. Returns DataFrame(id, component) of every
+    edge participant."""
     e = raw.where(F.col("u") != F.col("v"))
     # A node whose only edges are self-loops IS a participant (it must
     # come out labeled with its own id); collect that small set once so
@@ -269,7 +224,7 @@ def connected_components(
     # graph, ~10 s/round at 1-way parallelism). Pin coalescing off for
     # the loop so each round keeps the configured shuffle parallelism;
     # restore the caller's setting after.
-    spark = edges.sparkSession
+    spark = raw.sparkSession
 
     # Known cliff (measured round 2): in LOCAL mode the star-contraction
     # loop's localCheckpoint copies live in the single driver JVM, and a
@@ -295,9 +250,9 @@ def connected_components(
                 f"star-contraction checkpoints but only "
                 f"{heap / 2**30:.1f} GiB is configured — set "
                 f"spark.driver.memory to at least "
-                f"{max(1, int(needed / 2**30) + 1)}g (graphs of at "
-                f"most {_DRIVER_PAIRS_THRESHOLD:,} edges take the driver union-find "
-                f"path, which needs only ~16 B/edge)"
+                f"{max(1, int(needed / 2**30) + 1)}g (smaller graphs "
+                f"take the driver union-find path, which needs only "
+                f"~16 B/edge)"
             )
 
     # NOTE: SQL confs are session-global — flipping coalescing off for
@@ -326,23 +281,8 @@ def connected_components(
             if sig == prev_sig:
                 break
             prev_sig = sig
-            if driver_max > 0 and sig[0] <= driver_max:
-                # Hybrid finish: rounds preserve connectivity and never
-                # drop a node (every node re-emits as a relink target or
-                # self-link until fixpoint), and a component's minimum
-                # id always survives as a link target — so once
-                # contraction shrinks the relation under the driver
-                # bound, union-find on the remnant yields the same
-                # min-id labels as iterating to fixpoint, minus the
-                # remaining O(log n) rounds.
-                try:
-                    labels_pdf = _driver_union_find(e, id_col)
-                except _DRIVER_FAILURES:
-                    driver_max = 0  # keep contracting to the fixpoint
-                    continue
-                labels = spark.createDataFrame(
-                    labels_pdf, f"{id_col} long, component long"
-                )
+            labels = finish(e, sig[0])
+            if labels is not None:
                 break
         else:
             raise RuntimeError(
@@ -365,11 +305,89 @@ def connected_components(
         labels = labels.unionByName(
             centers.join(labels.select(id_col), id_col, "left_anti")
         )
-    labels = labels.unionByName(
+    return labels.unionByName(
         selfloop_only.join(labels.select(id_col), id_col, "left_anti")
         .withColumn("component", F.col(id_col))
     )
 
+
+def connected_components(
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    src: str = "src",
+    dst: str = "dst",
+    id_col: str = "id",
+    max_iter: int = 50,
+) -> DataFrame:
+    """Labels every vertex with the minimum vertex id of its component.
+
+    ``edges``: DataFrame with ``src``/``dst`` (undirected; self-loops and
+    duplicates tolerated — a node appearing only in self-loops is still
+    labeled, with itself as component; an edge with a NULL endpoint is
+    dropped). ``vertices`` (optional): DataFrame with ``id_col`` —
+    isolated vertices get their own id as component, and the output is
+    restricted to this set. Returns ``DataFrame(id, component)``.
+
+    Adaptive execution (``_on_driver``, by raw edge count): a small
+    graph is solved by driver union-find (one job, O(E α)); larger
+    graphs run distributed star-contraction (O(log n) shuffling rounds),
+    finished on the driver once a round shrinks the edge set under the
+    same bound. A driver union-find that falls back is not retried:
+    star contraction then runs to its fixpoint.
+    Each round localCheckpoints the edge set — lineage truncation, the
+    discipline the reference needed ``setCheckpointDir`` for
+    (``DBSCAN.py:171``) and its k-means notebook lacked entirely
+    (unbounded ``.union().cache()`` chains, SURVEY.md §3.2).
+    """
+    # Materialize the raw (self-loop-free) edge list WITHOUT the
+    # canonical distinct: union-find tolerates duplicate/mirrored edges,
+    # so the driver path skips that whole extra shuffle (measured ~1-2 s
+    # of a 4 s CC step at 400k edges). The distributed path still
+    # canonicalizes — star-contraction rounds shrink with dedup.
+    # When the caller already persisted ``edges`` the checkpoint copy is
+    # skipped too: the projection below recomputes from cache for the
+    # price of a narrow scan, and the driver path collects immediately.
+    # NULL-endpoint rows go before either path reads the edge list.
+    raw = edges.select(
+        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+    ).where(F.col("u").isNotNull() & F.col("v").isNotNull())
+    lvl = edges.storageLevel
+    if not (lvl.useMemory or lvl.useDisk):
+        # One materialization serves BOTH jobs below (threshold count +
+        # solve/self-loop scan); without it, an unpersisted caller would
+        # recompute its full edge lineage for each.
+        raw = raw.localCheckpoint(eager=True)
+
+    spark = edges.sparkSession
+    tried = []  # driver union-finds run; after one falls back, none is retried
+
+    def union_find(e):
+        tried.append(True)
+        return _local_frame(
+            spark, _driver_union_find(e, id_col), f"{id_col} long, component long"
+        )
+
+    def finish(e, n):
+        # Hybrid finish: rounds preserve connectivity and never drop a
+        # node (every node re-emits as a relink target or self-link
+        # until fixpoint), and a component's minimum id always survives
+        # as a link target — so once contraction shrinks the relation
+        # under the driver bound, union-find on the remnant yields the
+        # same min-id labels as iterating to fixpoint, minus the
+        # remaining O(log n) rounds.
+        return None if tried else _on_driver(n, lambda: union_find(e), lambda: None)
+
+    # Union-find tolerates self-loops (a hook where u == v is a no-op),
+    # and a node whose only edges are self-loops appears in the pulled
+    # id set and comes out labeled with itself — so the driver path
+    # needs ONE Arrow pull over the raw edge list, no self-loop
+    # distinct, no anti-join.
+    n_edges = raw.count()
+    labels = _on_driver(
+        n_edges,
+        lambda: union_find(raw),
+        lambda: _star_contraction(raw, n_edges, id_col, max_iter, finish),
+    )
     if vertices is not None:
         vs = vertices.select(F.col(id_col).cast("long").alias(id_col)).distinct()
         labels = vs.join(labels, id_col, "left").select(

@@ -38,13 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators import components as _components
 from dbscan_pyspark_spark.operators.components import (
-    _DRIVER_FAILURES,
+    _on_driver,
     _union,
     connected_components,
 )
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, eps_join
+from dbscan_pyspark_spark.session import _local_frame
 
 # Below this rep count the label map (rep features + cluster id) is
 # broadcast for the final expansion join, so the original points are
@@ -178,39 +178,40 @@ def _rep_labels(reps, pairs, eps_values, min_pts, min_cluster_size, variant, id_
     except that with ``min_cluster_size <= 1`` an edgeless rep stands for
     one singleton cluster per original row.
 
-    This is the one driver-vs-distributed labeling decision. Up to
-    ``components._DRIVER_PAIRS_THRESHOLD`` pairs (the bound the chain's
-    connected_components applies to its edges) every level is solved at
-    once by ``_kruskal`` on the driver, and ``driver`` is ``({ε: pandas
+    This is the one driver-vs-distributed labeling decision, taken by
+    ``components._on_driver`` on the pair count (the unit the chain's
+    connected_components gates its edges in). On the driver every level
+    is solved at once by ``_kruskal``, and ``driver`` is ``({ε: pandas
     DataFrame(id, cluster_id)}, reps as pandas)``: the per-level label
     frames plus the one collect of the reps (features, id, ``_mult``),
-    which ``eps_sweep`` scores on the driver and ``dbscan`` ignores.
-    Above the bound, or when the driver pass fails (no numpy/pandas,
-    driver memory, Arrow conversion), ``driver`` is None and each
-    ``labels_at`` call runs the distributed ``_chain_labels``. Both give
-    every component its minimum rep id."""
+    which ``eps_sweep`` scores on the driver and ``dbscan`` ignores. On
+    the distributed twin ``driver`` is None and each ``labels_at`` call
+    runs ``_chain_labels``. Both give every component its minimum rep
+    id."""
     spark = reps.sparkSession
-    if pairs.count() <= _components._DRIVER_PAIRS_THRESHOLD:
-        try:
-            reps_pdf = reps.toPandas()
-            pdfs = _kruskal(
-                pairs.select("a_id", "b_id", "distance", "b__mult").toPandas(),
-                reps_pdf, eps_values, min_pts, min_cluster_size, variant, id_col,
-            )
-            return (
-                lambda eps: spark.createDataFrame(
-                    pdfs[float(eps)], f"{id_col} long, cluster_id long"
-                ),
-                (pdfs, reps_pdf),
-            )
-        except _DRIVER_FAILURES:
-            pass  # fall through to the distributed twin
-    return (
-        lambda eps: _chain_labels(
-            reps, pairs, eps, min_pts, min_cluster_size, variant, id_col
-        ),
-        None,
-    )
+
+    def driver():
+        reps_pdf = reps.toPandas()
+        pdfs = _kruskal(
+            pairs.select("a_id", "b_id", "distance", "b__mult").toPandas(),
+            reps_pdf, eps_values, min_pts, min_cluster_size, variant, id_col,
+        )
+        return (
+            lambda eps: _local_frame(
+                spark, pdfs[float(eps)], f"{id_col} long, cluster_id long"
+            ),
+            (pdfs, reps_pdf),
+        )
+
+    def twin():
+        return (
+            lambda eps: _chain_labels(
+                reps, pairs, eps, min_pts, min_cluster_size, variant, id_col
+            ),
+            None,
+        )
+
+    return _on_driver(pairs.count(), driver, twin)
 
 
 def dbscan(

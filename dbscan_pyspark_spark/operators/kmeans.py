@@ -4,18 +4,16 @@ Reference parity: the reference's ``k-means.ipynb`` runs Lloyd's over
 RDD tuples with random restarts and a driver loop per iteration
 (``k-means.ipynb cell0:L12-15,75-86``). This module keeps the
 algorithmic shape (assign → recompute means → repeat). Where
-:func:`kmeans_fit` runs is decided once, by size:
+:func:`kmeans_fit` runs is decided once, by ``components._on_driver``
+on vectors × (k + dim), the cells of one iteration's distance matrix
+plus the pulled vectors:
 
-- **on the driver** when vectors × (k + dim) is at most
-  ``components._DRIVER_PAIRS_THRESHOLD`` (the DBSCAN path's pair bound;
-  here the cells of one iteration's distance matrix plus the pulled
-  vectors). One Arrow pull of (id, vector), then every iteration in
-  numpy (:func:`_lloyd`, the package's one numpy Lloyd's, which the
-  two-level IVF fitter runs per coarse cell too), and the assignment
-  ships back as one Arrow-built frame.
-- **in Spark** above the bound, or when the driver path raises one of
-  ``components._DRIVER_FAILURES``: the distributed twin, each iteration
-  TWO dataframe operations:
+- **on the driver**: one Arrow pull of (id, vector), then every
+  iteration in numpy (:func:`_lloyd`, the package's one numpy Lloyd's,
+  which the two-level IVF fitter runs per coarse cell too), and the
+  assignment ships back as one Arrow-built frame.
+- **in Spark**: the distributed twin, each iteration TWO dataframe
+  operations:
 
   - **assignment is map-side only.** The k centroids ship as ONE
     broadcast row (``_centroid_table``: ``_c array<struct<cid, c>>``)
@@ -47,8 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators import components as _components
-from dbscan_pyspark_spark.operators.components import _DRIVER_FAILURES
+from dbscan_pyspark_spark.operators.components import _Declined, _on_driver
 from dbscan_pyspark_spark.session import _local_frame
 
 
@@ -177,27 +174,28 @@ def _fit_driver(
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """:func:`kmeans_fit` on the driver: one Arrow pull of ``q`` (id,
     ``_v``), :func:`_lloyd`, and the assignment as one Arrow-built
-    frame. Raises ValueError, so that the twin runs, where the twin's
-    behaviour is not a plain Lloyd's: vectors that do not stack into one
-    integer matrix (ragged, or holding NULLs), NULL or duplicate ids
-    (the twin's lowest-id init is then not one fixed set), and
-    coordinates large enough for the int64 arithmetic to overflow
-    (where the twin raises under ANSI)."""
+    frame. Raises ``_Declined``, so that the twin runs, where the twin's
+    behaviour is not a plain Lloyd's: ragged vectors or vectors holding
+    NULLs, NULL or duplicate ids (the twin's lowest-id init is then not
+    one fixed set), and coordinates large enough for the int64
+    arithmetic to overflow (where the twin raises under ANSI)."""
     import numpy as np
     import pandas as pd
 
     pdf = q.toPandas()
     ids = pdf[id_col].to_numpy()
     if pd.isna(ids).any() or len(pd.unique(ids)) < len(ids):
-        raise ValueError("kmeans driver path: NULL or duplicate ids")
-    vs = np.stack(pdf["_v"].to_numpy())  # ValueError when ragged
+        raise _Declined("kmeans driver path: NULL or duplicate ids")
+    if pdf["_v"].map(len).nunique() > 1:
+        raise _Declined("kmeans driver path: ragged vectors")
+    vs = np.stack(pdf["_v"].to_numpy())
     if vs.dtype.kind != "i":
-        raise ValueError("kmeans driver path: NULL coordinates")
+        raise _Declined("kmeans driver path: NULL coordinates")
     order = np.argsort(ids, kind="stable")
     ids, vs = ids[order], vs[order]
     m = max(int(vs.max()), -int(vs.min()))
     if vs.shape[1] * (2 * m) ** 2 >= 2**63 or len(vs) * m >= 2**63:
-        raise ValueError("kmeans driver path: int64 overflow")
+        raise _Declined("kmeans driver path: int64 overflow")
     cid, cents, label = _lloyd(vs, k, n_iter)
     id_type = q.schema[id_col].dataType.simpleString()
     out = _local_frame(
@@ -244,28 +242,28 @@ def kmeans_fit(
     for :func:`assign_with_model` or streaming inference. ``n_iter=0``
     assigns to the initial centroids.
 
-    One aggregate counts the vectors and reads their dimension. When
-    vectors × (k + dim) is at most ``components._DRIVER_PAIRS_THRESHOLD``
-    the fit runs on the driver (``_fit_driver``: one Arrow pull, numpy
-    iterations, an Arrow-built assignment, and no Spark job after the
-    pull). Above the bound, or when the driver path raises one of
-    ``components._DRIVER_FAILURES``, the Spark loop below runs: the
-    distributed twin, whose driver state per iteration is the k×dim
-    centroid table only (the bounded-collect discipline of SURVEY §2
-    A7), the quantized point set scanned ``n_iter + 2`` times after the
-    gate's scan, and shuffled never.
-    Both give the same assignment and centroid list."""
+    One aggregate counts the vectors and reads their dimension, and
+    ``components._on_driver`` picks the fit on vectors × (k + dim): on
+    the driver (``_fit_driver``: one Arrow pull, numpy iterations, an
+    Arrow-built assignment, and no Spark job after the pull), or the
+    Spark loop (``_fit_twin``), the distributed twin. Both give the same
+    assignment and centroid list."""
     if n_iter < 0:
         raise ValueError(f"kmeans_fit: n_iter must be >= 0, got {n_iter}")
     q = _quantized_rows(vectors, vec_col, scale).select(id_col, "_v")
     n, dim = q.agg(F.count(F.lit(1)), F.max(F.size("_v"))).first()
     # empty input and k < 1 keep the twin's empty-init branch
-    if min(n, k) > 0 and n * (k + dim) <= _components._DRIVER_PAIRS_THRESHOLD:
-        try:
-            return _fit_driver(q, k, n_iter, id_col)
-        except _DRIVER_FAILURES:
-            pass  # the Spark loop below is the distributed twin
+    cells = n * (k + dim) if min(n, k) > 0 else float("inf")
+    args = (q, k, n_iter, id_col)
+    return _on_driver(cells, lambda: _fit_driver(*args), lambda: _fit_twin(*args))
 
+
+def _fit_twin(q, k, n_iter, id_col):
+    """:func:`kmeans_fit`'s Spark loop over the quantized rows ``q``
+    (id, ``_v``), the distributed twin of ``_fit_driver``: its driver
+    state per iteration is the k×dim centroid table only (the
+    bounded-collect discipline of SURVEY §2 A7), and it scans ``q``
+    ``n_iter + 2`` times and shuffles it never."""
     # the loop scans q n_iter+2 times: materialize the quantized
     # projection once instead of re-deriving it from the source each
     # pass (at 2M x 64-d this halves the run; with a real file source

@@ -7,16 +7,13 @@ loop of RDD jobs — 30 restarts x 20 iterations x a multi-job while-loop
 (SURVEY.md §3.2: thousands of jobs for 10k rows, with an unbounded
 ``.union().cache()`` lineage chain).
 
-Where :func:`kmember_kmeans` runs is decided once, by size. When points
-× clusters is at most ``components._DRIVER_PAIRS_THRESHOLD`` (the pair
-bound of the DBSCAN path; one iteration's distance matrix), the whole
-algorithm runs on the driver in numpy after one Arrow pull
-(``_kmember_driver``). Above it, or when the driver solve raises one of
-``components._DRIVER_FAILURES``, the Spark loop runs: its distributed
-twin, which gives the same result. There each Lloyd iteration is one
-DataFrame pass (broadcast argmin assign) and the constraint repair is a
-bounded loop of window-ranked moves; the driver solver takes the same
-steps with the same tie-breaks:
+Where :func:`kmember_kmeans` runs is decided once, by
+``components._on_driver`` on points × clusters: the whole algorithm in
+numpy after one Arrow pull (``_kmember_driver``), or the Spark loop
+(``_kmember_twin``), its distributed twin, which gives the same result.
+There each Lloyd iteration is one DataFrame pass (broadcast argmin
+assign) and the constraint repair is a bounded loop of window-ranked
+moves; the driver solver takes the same steps with the same tie-breaks:
 
   release:   clusters > k give up their farthest-beyond-k members (W2);
   claim:     each released point goes to its nearest *deficient*
@@ -46,13 +43,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators import components as _components
 from dbscan_pyspark_spark.operators.anonymize import (
     _driver_dist,
     assign_nearest,
     cluster_centroids,
 )
-from dbscan_pyspark_spark.operators.components import _DRIVER_FAILURES
+from dbscan_pyspark_spark.operators.components import _Declined, _on_driver
 from dbscan_pyspark_spark.operators.eps_join import _dim_of, _metric_fn
 from dbscan_pyspark_spark.operators.kmeans import (
     _centroid_table,
@@ -207,6 +203,8 @@ def _kmember_driver(
     pdf = points.select(
         id_col, features, F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h")
     ).toPandas()
+    if pdf[features].isna().any():
+        raise _Declined("k-member driver path: NULL feature arrays")
     ids = pdf[id_col].to_numpy()
     x = np.stack(pdf[features].to_numpy()).astype("float64")
     cid = np.arange(n_clusters)  # live cluster ids, ascending
@@ -284,34 +282,42 @@ def kmember_kmeans(
     ``n // k`` (``cell0:L12-13``, py2 floor division). Init = seeded
     random sample, as ``takeSample(False, want_cluster)`` (W4).
 
-    Where it runs: when n × n_clusters is at most
-    ``components._DRIVER_PAIRS_THRESHOLD`` (the DBSCAN path's pair
-    bound, here the cells of one iteration's distance matrix), the whole
-    loop runs on the driver (``_kmember_driver``): one Arrow pull, numpy
-    iterations, two Arrow-built result frames, and no Spark job after
-    the pull. Above the bound, or when the driver solve raises one of
-    ``components._DRIVER_FAILURES``, the Spark loop below runs: the
-    distributed twin, with one broadcast argmin, the ``_repair`` rounds
-    and a centroid aggregate per iteration. Both give the same clusters,
-    centroids, cost and ``n_iter``.
+    Where it runs (``components._on_driver``, on n × n_clusters, the
+    cells of one iteration's distance matrix): on the driver
+    (``_kmember_driver``: one Arrow pull, numpy iterations, two
+    Arrow-built result frames, and no Spark job after the pull), or in
+    the Spark loop (``_kmember_twin``), the distributed twin. Both give
+    the same clusters, centroids, cost and ``n_iter``. Non-NULL feature
+    arrays of different lengths raise ValueError on both.
     """
     if max_iter < 1:
         raise ValueError(f"kmember_kmeans: max_iter must be >= 1, got {max_iter}")
-    n = points.count()
+    size = F.when(F.col(features).isNotNull(), F.size(features))
+    n, lo, hi = points.agg(F.count(F.lit(1)), F.min(size), F.max(size)).first()
+    if lo != hi:
+        raise ValueError(
+            f"kmember_kmeans: feature arrays differ in length ({lo} to {hi})"
+        )
     if n_clusters is None:
         n_clusters = max(n // k, 1)
     if n < k * n_clusters:
         raise ValueError(
             f"infeasible: n={n} < k*n_clusters={k * n_clusters}"
         )
-    if n * n_clusters <= _components._DRIVER_PAIRS_THRESHOLD:
-        try:
-            return _kmember_driver(
-                points, k, n_clusters, max_iter, tol, seed, metric, features, id_col
-            )
-        except _DRIVER_FAILURES:
-            pass  # the Spark loop below is the distributed twin
+    args = (points, k, n_clusters, max_iter, tol, seed, metric, features, id_col)
+    return _on_driver(
+        n * n_clusters,
+        lambda: _kmember_driver(*args),
+        lambda: _kmember_twin(*args, dim),
+    )
 
+
+def _kmember_twin(
+    points, k, n_clusters, max_iter, tol, seed, metric, features, id_col, dim
+) -> KMemberResult:
+    """:func:`kmember_kmeans`' Spark loop, the distributed twin of
+    ``_kmember_driver``: per iteration one broadcast argmin, the
+    ``_repair`` rounds and a centroid aggregate."""
     if dim is None:
         dim = _dim_of(points, features)
     spark = points.sparkSession

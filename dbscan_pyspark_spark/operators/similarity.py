@@ -1234,8 +1234,8 @@ def ivf_quantized_topk(
     The coarse quantizer is grid-quantized Lloyd's
     (:func:`~dbscan_pyspark_spark.operators.kmeans.kmeans_fit` — integer
     centroids, bit-reproducible; fit on the driver in numpy while
-    vectors × (n_cells + dim) fits ``components._DRIVER_PAIRS_THRESHOLD``,
-    by its Spark loop above that), cell probing is a map-side
+    vectors × (n_cells + dim) fits the bound of ``components._on_driver``,
+    by its Spark loop above it), cell probing is a map-side
     sort-and-slice against one broadcast centroid row (no shuffle of the
     queries), and scoring is
     integer dot products on the quantized vectors with round-6 cosine —

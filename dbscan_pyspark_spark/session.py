@@ -96,23 +96,25 @@ def get_session(
     return spark
 
 
-def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """DataFrame of driver-side ``rows`` under the DDL schema ``ddl``.
+def _local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """DataFrame of driver-side ``rows`` (a list of tuples, or a pandas
+    frame whose columns carry the schema's names) under the DDL schema
+    ``ddl``.
 
-    Built as a pandas frame and shipped as one Arrow table typed by
-    ``ddl`` (struct values as dicts), so Spark scans it in the JVM. A
-    list of tuples would go through ``parallelize`` instead, and every
-    scan of it (each broadcast included) would run Python tasks; so
-    would an empty pandas frame, which ``createDataFrame`` converts
-    without Arrow. Empty ``rows`` give an empty frame of the same
-    schema."""
+    Shipped as one Arrow table typed by ``ddl`` (struct values as
+    dicts), so Spark scans it in the JVM. A list of tuples would go
+    through ``parallelize`` instead, and every scan of it (each
+    broadcast included) would run Python tasks; so would an empty
+    pandas frame, which ``createDataFrame`` converts without Arrow.
+    Empty ``rows`` give an empty frame of the same schema."""
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = DataType.fromDDL(ddl)
-    pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
+    if not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
     table = pa.Table.from_pandas(
-        pdf, schema=to_arrow_schema(schema), preserve_index=False
+        rows, schema=to_arrow_schema(schema), preserve_index=False
     )
     return spark.createDataFrame(table, schema)

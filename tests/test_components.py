@@ -1,8 +1,13 @@
 """Connected components vs a driver-side union-find oracle."""
 
+import importlib
 import random
 
+import pyarrow as pa
+import pytest
+
 from dbscan_pyspark_spark.operators import components, connected_components
+from dbscan_pyspark_spark.session import _local_frame
 
 
 def _uf_components(n_vertices, edges):
@@ -476,3 +481,139 @@ def test_driver_union_find_failure_falls_back(spark, monkeypatch):
     got = {r["id"]: r["component"] for r in connected_components(edges, vertices=verts).collect()}
     assert calls == [1]  # tried once; no hybrid finish retries it
     assert got == want == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4}
+
+
+def test_null_endpoints_dropped_on_both_paths(spark, monkeypatch):
+    """An edge with a NULL endpoint is dropped before the size gate, so
+    the driver union-find and star contraction (forced by a zero bound)
+    read the same edge set."""
+    edges = spark.createDataFrame([(0, 1), (1, None), (2, 3)], "src long, dst long")
+    driver = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+    twin = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    assert driver == twin == {0: 0, 1: 0, 2: 2, 3: 2}
+
+
+def test_on_driver_gate(monkeypatch):
+    """The seam alone: the driver path up to the bound, the twin above it
+    and on a declared failure, any other exception propagates, and a
+    zero bound forces the twin even for empty input."""
+
+    def run(cells, exc=None):
+        def driver():
+            if exc is not None:
+                raise exc
+            return "driver"
+
+        return components._on_driver(cells, driver, lambda: "twin")
+
+    bound = components._DRIVER_PAIRS_THRESHOLD
+    assert (run(0), run(bound), run(bound + 1)) == ("driver", "driver", "twin")
+    declared = (components._Declined(), MemoryError(), ImportError(), pa.ArrowInvalid())
+    for exc in declared:
+        assert run(1, exc) == "twin", exc
+    for exc in (ValueError("bug"), TypeError("bug")):
+        with pytest.raises(type(exc), match="bug"):
+            run(1, exc)
+    monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+    assert run(0) == "twin"
+
+
+# -- fault injection at every driver-or-twin site ------------------------------
+# Each site: (pair bound or None for the default, module and kernel of its
+# driver path, a run on the smallest input that reaches the twin). The
+# runs return value lists, compared with pytest.approx.
+
+
+def _cc_run(spark):
+    # a duplicate, a cycle and a self-loop: 5 raw edges, 3 canonical
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 0), (1, 2), (2, 0), (3, 3)], "src long, dst long"
+    )
+    return sorted(map(tuple, connected_components(edges).collect()))
+
+
+def _points(spark):
+    # two 4-point plus shapes and one far point
+    plus = [(0.0, 0.0), (1.0, 0.0), (-1.0, 0.0), (0.0, 1.0)]
+    pts = [(i, [x, y]) for i, (x, y) in enumerate(plus)]
+    pts += [(10 + i, [x + 10.0, y]) for i, (x, y) in enumerate(plus)]
+    pts.append((99, [5.0, 5.0]))
+    return _local_frame(spark, pts, "id long, features array<double>")
+
+
+def _dbscan_run(spark):
+    from dbscan_pyspark_spark.operators.dbscan import dbscan
+
+    return sorted(map(tuple, dbscan(_points(spark), 1.5, 3).collect()))
+
+
+def _eps_sweep_run(spark):
+    from dbscan_pyspark_spark.operators.anonymize import eps_sweep
+
+    metrics, best = eps_sweep(_points(spark), [1.5, 2.0], 3)
+    return [best] + [v for r in sorted(map(tuple, metrics.collect())) for v in r]
+
+
+def _kmember_run(spark):
+    from dbscan_pyspark_spark.operators.kmember import kmember_kmeans
+
+    res = kmember_kmeans(_points(spark), k=3, n_clusters=2, max_iter=1)
+    rows = sorted(map(tuple, res.assignments.collect()))
+    rows += sorted((c, tuple(v), n) for c, v, n in res.centroids.collect())
+    return rows + [res.cost, res.n_iter]
+
+
+def _kmeans_run(spark):
+    from dbscan_pyspark_spark.operators.kmeans import kmeans_fit
+
+    assign, cents = kmeans_fit(
+        _points(spark), k=2, n_iter=1, vec_col="features", id_col="id"
+    )
+    return sorted(map(tuple, assign.collect())) + cents
+
+
+_SITES = {
+    "cc_start": (None, "components", "_union", _cc_run),
+    # 5 raw edges over a bound of 4: a star round, then the driver finish
+    "cc_finish": (4, "components", "_union", _cc_run),
+    "dbscan_rep_labels": (None, "dbscan", "_kruskal", _dbscan_run),
+    "eps_sweep_score_levels": (None, "anonymize", "_driver_dist", _eps_sweep_run),
+    "kmember_kmeans": (None, "kmember", "_driver_dist", _kmember_run),
+    "kmeans_fit": (None, "kmeans", "_lloyd", _kmeans_run),
+}
+
+
+@pytest.mark.parametrize("site", list(_SITES))
+def test_driver_faults_fall_back_or_propagate(spark, monkeypatch, site):
+    """``_Declined`` and MemoryError raised inside a site's driver kernel
+    fall back to its twin with the driver path's result, tried once;
+    a plain ValueError (a bug of the kernel) propagates."""
+    bound, modname, kernel, run = _SITES[site]
+    if bound is not None:
+        monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", bound)
+    mod = importlib.import_module(f"dbscan_pyspark_spark.operators.{modname}")
+    real = getattr(mod, kernel)
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, kernel, spy)
+    want = run(spark)
+    assert calls, "the driver path did not run"
+    for exc in (components._Declined("no"), MemoryError("oom"), ValueError("bug")):
+        calls.clear()
+
+        def fail(*args, exc=exc, **kwargs):
+            calls.append(1)
+            raise exc
+
+        monkeypatch.setattr(mod, kernel, fail)
+        if isinstance(exc, ValueError):
+            with pytest.raises(ValueError, match="bug"):
+                run(spark)
+        else:
+            assert run(spark) == pytest.approx(want), exc
+        assert calls == [1], exc  # tried once, never retried

@@ -64,6 +64,31 @@ def test_kmember_rejects_max_iter_below_one(spark, monkeypatch, bound):
         kmember_kmeans(_grid(spark), k=10, n_clusters=3, max_iter=0)
 
 
+@pytest.mark.parametrize("bound", [None, 0])  # driver solver, Spark loop
+def test_kmember_rejects_ragged_features(spark, monkeypatch, bound):
+    if bound is not None:
+        monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", bound)
+    df = _local_frame(
+        spark,
+        [(i, [float(i % 7), float(i // 7)] + [1.0] * (i == 5)) for i in range(30)],
+        "id long, features array<double>",
+    )
+    with pytest.raises(ValueError, match="feature arrays differ in length"):
+        kmember_kmeans(df, k=10, n_clusters=3)
+
+
+def test_kmember_null_features_take_the_spark_loop(spark, monkeypatch):
+    """The driver solver declines a NULL feature array; the Spark loop
+    then gives what it gives when forced."""
+    df = _local_frame(
+        spark,
+        [(i, [float(i % 3), float(i // 3)]) for i in range(8)] + [(8, None)],
+        "id long, features array<double>",
+    )
+    kw = dict(k=3, n_clusters=2, max_iter=1)
+    _assert_same_result(kmember_kmeans(df, **kw), _twin_run(monkeypatch, df, **kw))
+
+
 def test_kmember_anonymize_shape(spark, blob_points):
     res = kmember_kmeans(blob_points, k=12, n_clusters=4, max_iter=5)
     out = kmember_anonymize(blob_points, res)
