@@ -163,7 +163,8 @@ def concurrent_map_ordered(fn, items, max_workers: int = 3):
 
     Each item's computation is unchanged — only job SUBMISSION
     overlaps — so results are bit-identical to the sequential loop.
-    Used by the sweep-family operators (eps_sweep, kmember_search),
+    Used by the sweep-family operators (eps_sweep,
+    kmember_search_quantized),
     whose per-configuration bodies are many small dependent jobs:
     overlapping two or three configurations hides the per-job driver
     and stage-scheduling latency that dominates them at any scale.

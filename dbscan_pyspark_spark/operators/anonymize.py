@@ -6,10 +6,12 @@ Rebuilds the reference's anonymization stage declaratively:
   ``DBSCAN.py:86-117``) — a single groupBy with one ``avg`` per dimension
   (map-side partial agg; no ``collect_list`` of whole clusters, so no
   group can exceed executor memory);
-- noise points take their *nearest* centroid via a broadcast
-  nested-loop argmin join (``assign_nearest`` over a broadcast list,
-  ``DBSCAN.py:126-133,187-192``) — here ``crossJoin(broadcast(centroids))``
-  + ``min_by``; tie-break = lowest cluster id (the reference's strict
+- noise points take their *nearest* centroid (``assign_nearest`` over a
+  broadcast list, ``DBSCAN.py:126-133,187-192``) — here the centroids
+  are one broadcast row (``kmeans._centroid_row``) and each point is
+  ranked against it in its own partition by ``kmeans._assign``, the
+  package's one nearest-centroid argmin, so the points are never
+  shuffled for it; tie-break = lowest cluster id (the reference's strict
   ``<`` keeps the first-seen centroid, which is list order — a total
   order makes it deterministic);
 - information-loss metrics per ε (``eps_records``, ``DBSCAN.py:135-152``).
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from dbscan_pyspark_spark.operators.components import _on_driver
 from dbscan_pyspark_spark.operators.dbscan import _rep_labels
 from dbscan_pyspark_spark.operators.eps_join import _contract, _dim_of, _metric_fn, eps_join
+from dbscan_pyspark_spark.operators.kmeans import _assign, _centroid_row
 from dbscan_pyspark_spark.session import _local_frame
 
 
@@ -58,10 +61,16 @@ def cluster_centroids(
         labels.where(F.col(cluster_col).isNotNull()).select(id_col, cluster_col),
         id_col,
     )
+    return _means(joined, features, cluster_col, dim)
+
+
+def _means(df: DataFrame, features: str, cluster_col: str, dim: int) -> DataFrame:
+    """DataFrame(cluster_col, centroid array<double>, n_members): the
+    per-dimension mean of ``features`` over each ``cluster_col`` group."""
     aggs = [F.avg(F.col(features)[i]).alias(f"_c{i}") for i in range(dim)] + [
         F.count(F.lit(1)).alias("n_members")
     ]
-    g = joined.groupBy(cluster_col).agg(*aggs)
+    g = df.groupBy(cluster_col).agg(*aggs)
     return g.select(
         cluster_col,
         F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
@@ -82,12 +91,14 @@ def assign_nearest(
     """Broadcast nearest-centroid join (SURVEY.md §2.3 J2/J3).
 
     DataFrame(id, cluster_id, distance): each point mapped to its
-    closest centroid. Centroid sets are small by construction (bounded
-    by n/k clusters), so the build side is an explicit ``broadcast`` —
-    no shuffle of the points side at any scale. The distance expression
-    is evaluated |points| x |centroids| times, so the unrolled
-    fixed-dimension form matters here: the dimension is inferred from
-    the (small) centroid side when not given.
+    closest centroid, ties to the lower cluster id; an empty centroid
+    set assigns nothing. The centroids ship as one broadcast row
+    (``kmeans._centroid_row``, the cluster id keeping its type) and
+    ``kmeans._assign`` ranks each point against it in the point's own
+    partition, so the points side is never shuffled. The distance
+    expression is evaluated |points| x |centroids| times, so the
+    unrolled fixed-dimension form matters here: the dimension is
+    inferred from the (small) centroid side when not given.
     """
     if dim is None:
         # the centroid side is the cheap probe, but it can be legitimately
@@ -97,22 +108,14 @@ def assign_nearest(
             dim = _dim_of(centroids, centroid_col)
         except ValueError:
             dim = _dim_of(points, features)
-    dist = _metric_fn(metric, dim)
-    c = F.broadcast(
-        centroids.select(
-            F.col(cluster_col).alias("_cid"), F.col(centroid_col).alias("_centroid")
-        )
-    )
-    paired = points.crossJoin(c).select(
-        F.col(id_col),
-        F.col("_cid"),
-        dist(features, "_centroid").alias("_d"),
-    )
-    # argmin with deterministic tie-break on cluster id
-    return paired.groupBy(id_col).agg(
-        F.min_by("_cid", F.struct("_d", "_cid")).alias(cluster_col),
-        F.min("_d").alias("distance"),
-    )
+    return _assign(
+        points.select(id_col, features),
+        _centroid_row(centroids, cluster_col, centroid_col),
+        v_col=features,
+        out_col=cluster_col,
+        dist=_metric_fn(metric, dim),
+        dist_col="distance",
+    ).select(id_col, cluster_col, "distance")
 
 
 def anonymize(
@@ -141,13 +144,15 @@ def anonymize(
         pts.where(~F.col("is_noise"))
         .join(cents.select("cluster_id", "centroid"), "cluster_id")
     )
-    noise = pts.where(F.col("is_noise")).drop("cluster_id")
-    noise_assigned = noise.join(
-        assign_nearest(
-            noise, cents, metric=metric, features=features, id_col=id_col, dim=dim
-        ).select(id_col, "cluster_id"),
-        id_col,
-    ).join(cents.select("cluster_id", "centroid"), "cluster_id")
+    # left: an inner join would infer isnotnull(cluster_id) and push the
+    # argmin into the cross join's condition, running it twice
+    noise_assigned = _assign(
+        pts.where(F.col("is_noise")).drop("cluster_id"),
+        _centroid_row(cents, "cluster_id", "centroid"),
+        v_col=features,
+        out_col="cluster_id",
+        dist=_metric_fn(metric, dim),
+    ).join(F.broadcast(cents.select("cluster_id", "centroid")), "cluster_id", "left")
 
     out_cols = [
         F.col(id_col),
@@ -371,13 +376,14 @@ def eps_sweep(
             ).alias("n_clusters"),
             F.sum(F.col("_mult") * dist(features, "centroid")).alias("err"),
         )
-        noise = rep_labels.where(F.col("cluster_id").isNull())
         noise_agg = (
-            assign_nearest(
-                noise, cents, metric=metric, features=features,
-                id_col=id_col, dim=dim,
+            _assign(
+                rep_labels.where(F.col("cluster_id").isNull()).select(features, "_mult"),
+                _centroid_row(cents, "cluster_id", "centroid"),
+                v_col=features,
+                dist=dist,
+                dist_col="distance",
             )
-            .join(noise.select(id_col, "_mult"), id_col)
             .agg(
                 F.coalesce(F.sum("_mult"), F.lit(0)).alias("n_noise"),
                 F.coalesce(F.sum(F.col("_mult") * F.col("distance")), F.lit(0.0)).alias("nerr"),

@@ -20,9 +20,13 @@ plus the pulled vectors:
     cross-joined onto the points, and the nearest-centroid argmin is a
     single ``array_min(transform(_c, ...))`` expression (``_nearest``)
     — no shuffle of the points, and the plan's size does not grow with
-    k×dim. Every iteration is one scan. k-member, the IVF probes and
-    streaming inference rank against the same row with the same
-    expression.
+    k×dim. Every iteration is one scan. ``_assign`` is the package's
+    one nearest-centroid argmin: k-member (both contracts and their
+    repair claims), ``anonymize.assign_nearest`` and the ε-sweep noise
+    (float metrics, against a row built from a centroid DataFrame by
+    ``_centroid_row``), the float IVF cells and streaming inference
+    all call it; the IVF probes rank their top cells against the same
+    row with the same expression.
   - **the centroid update is one k×dim-row shuffle.** Per-dimension
     sums are expressed as ``dim`` independent ``sum(v[i])`` aggregates,
     all partially aggregated map-side, so the exchange carries k rows
@@ -96,10 +100,10 @@ def _centroid_table(
     spark: SparkSession, centroids: list[tuple[int, list[int]]]
 ) -> DataFrame:
     """The centroid table as one broadcast row
-    ``_c array<struct<cid int, c array<bigint>>>``: crossJoin it and
-    rank against ``_c`` with :func:`_nearest`. The k×dim integers ship
-    to the workers once, so the plan stays the same size whatever
-    k×dim is."""
+    ``_c array<struct<cid int, c array<bigint>>>``: :func:`_assign`
+    crossJoins it and ranks against ``_c`` with :func:`_nearest`. The
+    k×dim integers ship to the workers once, so the plan stays the same
+    size whatever k×dim is."""
     row = [{"cid": int(cid), "c": [int(x) for x in vec]} for cid, vec in centroids]
     return F.broadcast(
         _local_frame(spark, [(row,)], "_c array<struct<cid: int, c: array<bigint>>>")
@@ -123,19 +127,47 @@ def _nearest(
     return F.array_min(ranked) if n is None else F.slice(F.array_sort(ranked), 1, n)
 
 
+def _centroid_row(centroids: DataFrame, cid_col: str, vec_col: str) -> DataFrame:
+    """:func:`_centroid_table` built from a centroid DataFrame by one
+    ``collect_list`` aggregate, the cid keeping its own type; an empty
+    centroid set gives no row, so nothing is assigned against it."""
+    return centroids.agg(
+        F.collect_list(
+            F.struct(F.col(cid_col).alias("cid"), F.col(vec_col).alias("c"))
+        ).alias("_c")
+    ).where(F.size("_c") > 0)
+
+
 def _assign(
     df: DataFrame,
-    centroids: list[tuple[int, list[int]]],
+    centroids,
     v_col: str = "_v",
     out_col: str = "cluster",
+    dist=_sq_l2,
+    dist_col: str | None = None,
 ) -> DataFrame:
-    """``df`` plus ``out_col``: the cid of the centroid nearest to
-    ``v_col`` under exact squared L2."""
-    return (
-        df.crossJoin(_centroid_table(df.sparkSession, centroids))
-        .withColumn(out_col, _nearest(F.col("_c"), F.col(v_col)).getField("cid"))
+    """``df`` plus ``out_col``, the cid of the centroid nearest to
+    ``v_col`` under ``dist`` (ties to the lower cid), and ``dist_col``,
+    that distance, when given: the package's one nearest-centroid
+    argmin. ``centroids`` is a (cid, vector) list or a one-row ``_c``
+    table (:func:`_centroid_table`, :func:`_centroid_row`); each row is
+    answered in its own partition, so ``df`` is never shuffled.
+
+    ``out_col`` is nullable, so an inner equi-join on it makes Catalyst
+    infer ``isnotnull`` and push the argmin into the cross join's
+    condition, where it runs a second time: callers left-join it."""
+    if not isinstance(centroids, DataFrame):
+        centroids = _centroid_table(df.sparkSession, centroids)
+    nearest = (
+        df.crossJoin(F.broadcast(centroids.select("_c")))
+        .withColumn("_a", _nearest(F.col("_c"), F.col(v_col), dist=dist))
         .drop("_c")
     )
+    # fields read from a projection below, so the argmin runs once per row
+    out = {out_col: F.col("_a.cid")}
+    if dist_col is not None:
+        out[dist_col] = F.col("_a.d")
+    return nearest.withColumns(out).drop("_a")
 
 
 def _lloyd(vs, k: int, n_iter: int):

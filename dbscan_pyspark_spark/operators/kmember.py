@@ -11,20 +11,26 @@ Where :func:`kmember_kmeans` runs is decided once, by
 ``components._on_driver`` on points × clusters: the whole algorithm in
 numpy after one Arrow pull (``_kmember_driver``), or the Spark loop
 (``_kmember_twin``), its distributed twin, which gives the same result.
-There each Lloyd iteration is one DataFrame pass (broadcast argmin
-assign) and the constraint repair is a bounded loop of window-ranked
-moves; the driver solver takes the same steps with the same tie-breaks:
+There each Lloyd iteration is one DataFrame pass (``kmeans._assign``,
+the package's one nearest-centroid argmin, against one broadcast
+centroid row) and the constraint repair is a bounded loop of
+window-ranked moves; the driver solver takes the same steps with the
+same tie-breaks:
 
   release:   clusters > k give up their farthest-beyond-k members (W2);
   claim:     each released point goes to its nearest *deficient*
-             centroid (broadcast argmin);
+             centroid (the same broadcast argmin);
   cap:       each deficient cluster accepts only the (k - count)
              nearest claimants (W1), so no cluster overshoots back
              below feasibility.
 
-Feasible inputs (n >= k * n_clusters) terminate: every round either
-fills a deficient cluster or strictly shrinks the deficiency total.
-In the Spark loop, lineage is truncated per round (localCheckpoint) —
+One Spark function, ``_repair``, runs those rounds for both the twin
+(float distances, until the fixpoint) and the exactly-oracled
+:func:`kmember_quantized` (integer L1, a fixed number of rounds). Its
+assignment carries each point's vector, so a claim never joins back to
+the points. Feasible inputs (n >= k * n_clusters) terminate: every
+round either fills a deficient cluster or strictly shrinks the
+deficiency total. Lineage is truncated per round (localCheckpoint) —
 the discipline the notebook lacked.
 
 Deviations from the reference, on purpose (SURVEY.md §7 flag list):
@@ -32,8 +38,8 @@ Deviations from the reference, on purpose (SURVEY.md §7 flag list):
   diffs and can "converge" on cancellation — F6 bug, cell0:L58-67);
 - the repair-exit test is ``deficient > 0`` not the notebook's ``> 1``
   (cell0:L107 leaves one cluster under-filled);
-- restarts/cluster-count search is an explicit helper
-  (:func:`kmember_search`), not 600 hardcoded driver jobs.
+- the restarts/cluster-count search is an explicit helper
+  (:func:`kmember_search_quantized`), not 600 hardcoded driver jobs.
 """
 
 from __future__ import annotations
@@ -43,17 +49,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.anonymize import (
-    _driver_dist,
-    assign_nearest,
-    cluster_centroids,
-)
-from dbscan_pyspark_spark.operators.components import _Declined, _on_driver
+from dbscan_pyspark_spark.operators.anonymize import _driver_dist, _means
+from dbscan_pyspark_spark.operators.components import _on_driver
 from dbscan_pyspark_spark.operators.eps_join import _dim_of, _metric_fn
 from dbscan_pyspark_spark.operators.kmeans import (
+    _assign,
+    _centroid_row,
     _centroid_table,
     _l1_int,
-    _nearest,
     _quantized_rows,
 )
 from dbscan_pyspark_spark.session import _local_frame
@@ -68,94 +71,82 @@ class KMemberResult:
 
 
 def _repair(
-    points: DataFrame,
     assign: DataFrame,
-    centroids: DataFrame,
+    table: DataFrame,
     k: int,
-    metric: str,
+    dist,
     id_col: str,
-    features: str,
-    max_rounds: int,
-) -> DataFrame:
-    """Enforce 'every cluster >= k members' by ranked moves.
+    rounds: int,
+) -> tuple[DataFrame, bool]:
+    """Enforce 'every cluster >= k members' by ranked moves, at most
+    ``rounds`` rounds of: release the beyond-k farthest members of
+    surplus clusters, claim each to its nearest *deficient* centroid of
+    ``table`` (the iteration's one-row ``_c`` centroid table) under
+    ``dist``, cap each deficient cluster at its need. Members are ranked
+    by (distance, id). ``assign`` carries (id, ``_v``, cluster, dist).
 
-    ONE job per round (guide §5; the CC loop's signature-agg pattern):
-    each round's moved assignment is localCheckpointed NON-eagerly and
-    the next round's cluster-count collect is the single action that
-    both materializes it and decides the exit — replacing the previous
-    isEmpty + eager-checkpoint pair. The count table (n_clusters rows)
-    lives on the driver, so surplus / deficient / need become broadcast
-    literals instead of re-aggregating the assignment inside every
-    subtree of the round job."""
+    Returns ``(assign, fixpoint)``: ``fixpoint`` is True when a round
+    found no deficient cluster, False when no surplus cluster was left
+    to release from or the rounds ran out. A round at the fixpoint is
+    the identity, so a fixed unroll equals the early-stopping loop — the
+    quantized contract's DuckDB oracle replays it CTE-for-CTE. Clusters
+    with ZERO members never appear in the count table and are never
+    repaired (mirrored by the oracle and the driver solver): an empty
+    cluster has no rows to de-anonymize.
+
+    One job per round: the count table (one row per cluster) is the
+    only driver state, each round's assignment is localCheckpointed
+    non-eagerly and the next count collect (or the caller's next
+    action) materializes it; the incoming argmin assignment is
+    checkpointed up front, so a round reads it instead of re-ranking
+    every point in each subtree."""
     spark = assign.sparkSession
-    # materialize the incoming argmin assignment once: the first count
-    # collect is its action, and the round job then reads the
-    # checkpoint instead of recomputing the crossJoin-argmin lineage
-    # per subtree
+    cluster_type = assign.schema["cluster"].dataType.simpleString()
+    ranked = Window.partitionBy("cluster").orderBy(
+        F.col("dist").asc(), F.col(id_col).asc()
+    )
     assign = assign.localCheckpoint(eager=False)
-    for _ in range(max_rounds):
-        counts = {
-            int(r["cluster_id"]): int(r["_cnt"])
-            for r in assign.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .collect()
-        }
-        deficient = {c: k - cnt for c, cnt in counts.items() if cnt < k}
+    for _ in range(rounds):
+        counts = dict(
+            assign.groupBy("cluster").agg(F.count(F.lit(1))).collect()
+        )
+        deficient = {c: k - n for c, n in counts.items() if n < k}
         if not deficient:
-            return assign
-
-        # farthest-beyond-k members of surplus clusters are up for grabs
-        surplus_ids = F.broadcast(
+            return assign, True
+        surplus = [c for c, n in counts.items() if n > k]
+        if not surplus:
+            return assign, False
+        released = (
+            assign.where(F.col("cluster").isin(*surplus))
+            .withColumn("_rn", F.row_number().over(ranked))
+            .where(F.col("_rn") > k)
+            .select(id_col, "_v")
+        )
+        deficient_row = table.select(
+            F.filter("_c", lambda c: c["cid"].isin(*deficient)).alias("_c")
+        )
+        claims = _assign(released, deficient_row, dist=dist, dist_col="dist")
+        need = F.broadcast(
             _local_frame(
-                spark,
-                [(c,) for c, cnt in counts.items() if cnt > k],
-                "cluster_id long",
+                spark, list(deficient.items()), f"cluster {cluster_type}, _need int"
             )
         )
-        surplus_members = assign.join(surplus_ids, "cluster_id", "left_semi")
-        w = Window.partitionBy("cluster_id").orderBy(
-            F.col("distance").asc(), F.col(id_col).asc()
-        )
-        released = (
-            surplus_members.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") > k)
-            .select(id_col)
-        )
-
-        # claim: nearest deficient centroid per released point
-        deficient_df = F.broadcast(
-            _local_frame(spark, [(c,) for c in deficient], "cluster_id long")
-        )
-        deficient_cents = centroids.join(deficient_df, "cluster_id", "left_semi")
-        claims = assign_nearest(
-            points.join(released, id_col, "left_semi"),
-            deficient_cents,
-            metric=metric,
-            features=features,
-            id_col=id_col,
-        )  # (id, cluster_id, distance) vs deficient centroids
-
-        # cap: each deficient cluster takes only its (k - cnt) nearest claimants
-        need = F.broadcast(
-            _local_frame(spark, list(deficient.items()), "cluster_id long, _need int")
-        )
-        wc = Window.partitionBy("cluster_id").orderBy(
-            F.col("distance").asc(), F.col(id_col).asc()
-        )
         accepted = (
-            claims.join(need, "cluster_id")
-            .withColumn("_rn", F.row_number().over(wc))
+            # left: an inner join would infer isnotnull(cluster) and push
+            # the argmin into the cross join's condition, running it twice
+            claims.join(need, "cluster", "left")
+            .withColumn("_rn", F.row_number().over(ranked))
             .where(F.col("_rn") <= F.col("_need"))
-            .select(id_col, "cluster_id", "distance")
+            .select(id_col, "_v", "cluster", "dist")
         )
-
-        moved = accepted.select(id_col)
         assign = (
-            assign.join(moved, id_col, "left_anti")
+            # the moved ids are at most the deficit total: broadcast them,
+            # so the assignment is not shuffled by id in every round
+            assign.join(F.broadcast(accepted.select(id_col)), id_col, "left_anti")
             .unionByName(accepted)
-            .localCheckpoint(eager=False)  # next count collect is the action
+            .localCheckpoint(eager=False)
         )
-    raise RuntimeError(f"k-member repair did not converge in {max_rounds} rounds")
+    return assign, False
 
 
 def _ranks(groups, *keys):
@@ -187,7 +178,7 @@ def _kmember_driver(
     centroid means and |drift| stop, step for step.
 
     - argmin ties go to the lower cluster id, and release and cap rank
-      members by (distance, id), as ``assign_nearest`` and ``_repair``
+      members by (distance, id), as ``kmeans._assign`` and ``_repair``
       do;
     - a cluster that loses every member leaves the centroid set, and
       only clusters with members are counted, so an empty one is never
@@ -203,8 +194,6 @@ def _kmember_driver(
     pdf = points.select(
         id_col, features, F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h")
     ).toPandas()
-    if pdf[features].isna().any():
-        raise _Declined("k-member driver path: NULL feature arrays")
     ids = pdf[id_col].to_numpy()
     x = np.stack(pdf[features].to_numpy()).astype("float64")
     cid = np.arange(n_clusters)  # live cluster ids, ascending
@@ -287,13 +276,17 @@ def kmember_kmeans(
     (``_kmember_driver``: one Arrow pull, numpy iterations, two
     Arrow-built result frames, and no Spark job after the pull), or in
     the Spark loop (``_kmember_twin``), the distributed twin. Both give
-    the same clusters, centroids, cost and ``n_iter``. Non-NULL feature
-    arrays of different lengths raise ValueError on both.
+    the same clusters, centroids, cost and ``n_iter``. NULL feature
+    arrays, and arrays of different lengths, raise ValueError on both.
     """
     if max_iter < 1:
         raise ValueError(f"kmember_kmeans: max_iter must be >= 1, got {max_iter}")
-    size = F.when(F.col(features).isNotNull(), F.size(features))
-    n, lo, hi = points.agg(F.count(F.lit(1)), F.min(size), F.max(size)).first()
+    size = F.size(features)
+    n, n_feat, lo, hi = points.agg(
+        F.count(F.lit(1)), F.count(features), F.min(size), F.max(size)
+    ).first()
+    if n_feat < n:
+        raise ValueError(f"kmember_kmeans: {n - n_feat} NULL feature arrays")
     if lo != hi:
         raise ValueError(
             f"kmember_kmeans: feature arrays differ in length ({lo} to {hi})"
@@ -317,10 +310,11 @@ def _kmember_twin(
 ) -> KMemberResult:
     """:func:`kmember_kmeans`' Spark loop, the distributed twin of
     ``_kmember_driver``: per iteration one broadcast argmin, the
-    ``_repair`` rounds and a centroid aggregate."""
+    ``_repair`` rounds and a centroid aggregate, all over one
+    assignment that carries each point's vector."""
     if dim is None:
         dim = _dim_of(points, features)
-    spark = points.sparkSession
+    dist = _metric_fn(metric, dim)
     init_rows = (
         points.select(id_col, features)
         .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
@@ -328,22 +322,28 @@ def _kmember_twin(
         .collect()
     )
     centroids = _local_frame(
-        spark,
+        points.sparkSession,
         [(i, [float(x) for x in r[features]], 0) for i, r in enumerate(init_rows)],
         "cluster_id int, centroid array<double>, n_members long",
     )
+    pts = points.select(id_col, F.col(features).alias("_v"))
+    max_rounds = 2 * n_clusters + 8
 
     for n_iter in range(1, max_iter + 1):
-        assign = assign_nearest(
-            points, centroids, metric=metric, features=features, id_col=id_col
+        table = _centroid_row(centroids, "cluster_id", "centroid")
+        assign, fixpoint = _repair(
+            _assign(pts, table, dist=dist, dist_col="dist"),
+            table, k, dist, id_col, rounds=max_rounds,
         )
-        assign = _repair(
-            points, assign, centroids, k, metric, id_col, features,
-            max_rounds=2 * n_clusters + 8,
+        if not fixpoint:
+            raise RuntimeError(
+                f"k-member repair did not converge in {max_rounds} rounds"
+            )
+        new_centroids = (
+            _means(assign, "_v", "cluster", dim)
+            .withColumnRenamed("cluster", "cluster_id")
+            .localCheckpoint(eager=False)  # the drift .first() is the action
         )
-        new_centroids = cluster_centroids(
-            points, assign, features=features, id_col=id_col, dim=dim
-        ).localCheckpoint(eager=False)  # the drift .first() is the action
 
         # |drift|: max L1 movement of any centroid (abs version of F6)
         drift_row = (
@@ -365,14 +365,17 @@ def _kmember_twin(
 
     # final distances against the final centroids
     final_assign = (
-        assign.select(id_col, "cluster_id")
-        .join(points.select(id_col, features), id_col)
-        .join(F.broadcast(centroids.select("cluster_id", "centroid")), "cluster_id")
+        assign.join(
+            F.broadcast(centroids.withColumnRenamed("cluster_id", "cluster")),
+            "cluster",
+        )
+        .select(
+            id_col,
+            F.col("cluster").alias("cluster_id"),
+            dist("_v", "centroid").alias("distance"),
+        )
+        .localCheckpoint(eager=False)  # the cost agg materializes it
     )
-    dist = _metric_fn(metric, dim)
-    final_assign = final_assign.select(
-        id_col, "cluster_id", dist(features, "centroid").alias("distance")
-    ).localCheckpoint(eager=False)  # the cost agg materializes it
     cost = final_assign.agg(F.sum("distance").alias("c")).first()["c"]
     return KMemberResult(
         assignments=final_assign,
@@ -398,166 +401,6 @@ def kmember_anonymize(
     )
 
 
-def kmember_search(
-    points: DataFrame,
-    k: int,
-    candidates: list[int] | None = None,
-    restarts: int = 2,
-    max_iter: int = 10,
-    metric: str = "l1",
-    features: str = "features",
-    id_col: str = "id",
-) -> tuple[DataFrame, KMemberResult]:
-    """Cluster-count / restart search (the reference's outer loops,
-    ``cell0:L12-15,75-77``: want_cluster in [3n/4k .. n/k], 30
-    restarts) reduced to an explicit candidate sweep. Returns
-    ``(metrics, best)``: one metrics row per (n_clusters, restart) —
-    cost, n_iter, accepted flag — plus the min-cost
-    :class:`KMemberResult` (strict ``<`` best-so-far update, so ties
-    keep the earlier run, like the reference's ``cell0:L129-133``).
-    The float-cost randomized production path; its exactly-oracle-able
-    twin is :func:`kmember_search_quantized`."""
-    n = points.count()
-    if candidates is None:
-        lo, hi = (3 * n) // (4 * k), n // k
-        candidates = sorted({max(c, 1) for c in (lo, (lo + hi) // 2, hi)})
-    def _one_run(cr):
-        # one (n_clusters, restart) configuration — unchanged math;
-        # configurations overlap from a small thread pool (guide §2.6)
-        c, r = cr
-        return c, r, kmember_kmeans(
-            points, k, n_clusters=c, max_iter=max_iter, seed=42 + r,
-            metric=metric, features=features, id_col=id_col,
-        )
-
-    from dbscan_pyspark_spark.compat import concurrent_map_ordered
-
-    results = concurrent_map_ordered(
-        _one_run,
-        [(c, r) for c in sorted(set(candidates)) for r in range(restarts)],
-    )
-    # best-so-far selection replayed in submission order: the strict <
-    # keeps the earlier run on ties, exactly as the sequential loop did
-    best: KMemberResult | None = None
-    rows: list[tuple[int, int, float, int]] = []
-    best_idx = -1
-    for c, r, res in results:
-        rows.append((c, r, res.cost, res.n_iter))
-        if best is None or res.cost < best.cost:
-            best = res
-            best_idx = len(rows) - 1
-    assert best is not None
-    metrics = _local_frame(
-        points.sparkSession,
-        [
-            (c, r, cost, n_it, 1 if i == best_idx else 0)
-            for i, (c, r, cost, n_it) in enumerate(rows)
-        ],
-        "n_clusters int, restart int, cost double, n_iter int, accepted int",
-    )
-    return metrics, best
-
-
-def _nearest_l1(
-    df: DataFrame, centroids: list[tuple[int, list[int]]], id_col: str
-) -> DataFrame:
-    """(id, _v, cluster, dist): each ``_v`` row's nearest centroid under
-    integer L1, ties toward the lower cid."""
-    return (
-        df.crossJoin(_centroid_table(df.sparkSession, centroids))
-        .select(
-            id_col,
-            "_v",
-            _nearest(F.col("_c"), F.col("_v"), dist=_l1_int).alias("_a"),
-        )
-        .select(
-            id_col,
-            "_v",
-            F.col("_a.cid").alias("cluster"),
-            F.col("_a.d").alias("dist"),
-        )
-    )
-
-
-def _repair_quantized(
-    assign: DataFrame,
-    centroids: list[tuple[int, list[int]]],
-    k: int,
-    repair_rounds: int,
-    id_col: str,
-) -> DataFrame:
-    """Fixed-round deterministic repair on integer distances: release
-    the beyond-k farthest members of surplus clusters, claim each to
-    its nearest DEFICIENT centroid, cap each deficient cluster at its
-    need. A round at the fixpoint (no deficient cluster) is the
-    identity, so a fixed unroll equals the early-stopping loop exactly
-    (the k-core-peel argument) — which is what lets the DuckDB oracle
-    replay it CTE-for-CTE. ``assign`` carries (id, _v, cluster, dist);
-    all per-round driver state is the cluster-count table
-    (n_clusters rows, the bounded-collect discipline of SURVEY §2 A7).
-    Clusters with ZERO members never appear in the count table and are
-    therefore never repaired — mirrored deliberately by the oracle
-    (and by :func:`_repair`); an empty cluster has no rows to
-    de-anonymize, so the k-anonymity contract is vacuous for it.
-
-    One job per round: the non-eager round checkpoint is materialized
-    by the next count collect (or the caller's next action) — and the
-    incoming argmin assignment is checkpointed up front so the
-    round job reads it instead of re-evaluating the per-row centroid
-    scan in every subtree."""
-    assign = assign.localCheckpoint(eager=False)
-    for _ in range(repair_rounds):
-        counts = [
-            (int(r["cluster"]), int(r["_cnt"]))
-            for r in assign.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .collect()
-        ]
-        deficient = {cid: k - cnt for cid, cnt in counts if cnt < k}
-        if not deficient:
-            break
-        surplus = {cid for cid, cnt in counts if cnt > k}
-        if not surplus:
-            break
-        w = Window.partitionBy("cluster").orderBy(
-            F.col("dist").asc(), F.col(id_col).asc()
-        )
-        released = (
-            assign.where(F.col("cluster").isin(*surplus))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") > k)
-            .select(id_col, "_v")
-        )
-        deficient_cents = [
-            (cid, vec) for cid, vec in centroids if cid in deficient
-        ]
-        need_df = F.broadcast(
-            _local_frame(
-                assign.sparkSession,
-                [(cid, n) for cid, n in deficient.items()],
-                "cluster int, _need int",
-            )
-        )
-        claims = _nearest_l1(released, deficient_cents, id_col)
-        wc = Window.partitionBy("cluster").orderBy(
-            F.col("dist").asc(), F.col(id_col).asc()
-        )
-        accepted = (
-            claims.join(need_df, "cluster")
-            .withColumn("_rn", F.row_number().over(wc))
-            .where(F.col("_rn") <= F.col("_need"))
-            .select(id_col, "_v", "cluster", "dist")
-        )
-        assign = (
-            assign.join(accepted.select(id_col), id_col, "left_anti")
-            .unionByName(accepted)
-            # non-eager: the next round's count collect (or the caller's
-            # next action) materializes it — one job per round
-            .localCheckpoint(eager=False)
-        )
-    return assign
-
-
 def kmember_quantized(
     points: DataFrame,
     k: int,
@@ -573,7 +416,7 @@ def kmember_quantized(
     the constrained pipeline (reference ``k-means.ipynb cell0``):
     integer grid quantization (``round(x * scale)``), lowest-id init,
     integer-L1 assignment with (distance, cid) tie-break, a FIXED
-    number of :func:`_repair_quantized` rounds per iteration, and
+    number of ``_repair`` rounds per iteration, and
     ``floor(sum / count)`` centroid snap — exact integer arithmetic
     end to end, so every step replays bit-for-bit in any engine (the
     DuckDB oracle unrolls it as chained CTEs,
@@ -589,14 +432,14 @@ def kmember_quantized(
     Scale shape: assignment is map-side only (one broadcast centroid
     row, ranked per point — one scan, no shuffle); each centroid update
     shuffles n_clusters rows of dim partial sums; each repair round is two
-    ranked windows over the (small) surplus/claim relations plus one
-    id-keyed anti-join. Driver state is the n_clusters-row count/
-    centroid tables only.
+    ranked windows over the surplus/claim relations plus one anti-join
+    against the broadcast moved ids. Driver state is the n_clusters-row
+    count/centroid tables only.
     """
     if k < 1 or n_clusters < 1:
         raise ValueError("kmember_quantized: k and n_clusters must be >= 1")
     # try/finally so a job failure mid-iteration (or an exception in
-    # _repair_quantized) cannot leak the persisted relation for the
+    # _repair) cannot leak the persisted relation for the
     # session — the unpersist runs on EVERY exit path
     q = _quantized_rows(points, features, scale).select(id_col, "_v").persist()
     try:
@@ -643,9 +486,12 @@ def _kmember_quantized_core(
 
     assign = None
     for it in range(n_iter + 1):
-        assign = _nearest_l1(q, centroids, id_col)
-        assign = _repair_quantized(
-            assign, centroids, k, repair_rounds, id_col
+        table = _centroid_table(q.sparkSession, centroids)
+        # the fixed unroll the oracle replays: whether the rounds
+        # reached the fixpoint does not change what is returned
+        assign, _ = _repair(
+            _assign(q, table, dist=_l1_int, dist_col="dist"),
+            table, k, _l1_int, id_col, repair_rounds,
         )
         if it == n_iter:
             break

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.functions.distance import dot, l2_distance_sq, norm2
 from dbscan_pyspark_spark.functions.text import normalized
+from dbscan_pyspark_spark.operators.kmeans import _assign, _centroid_row
 
 # Above this many vectors the exact all-pairs near-dup path refuses to
 # run (see cosine_near_dup_pairs): at 100k vectors the upper triangle is
@@ -542,10 +543,15 @@ def train_ivf_centroids(
         "cell int, centroid array<double>",
     )
     for _ in range(max_iter):
-        assigned = _assign_cells(src, cents, id_col, vec_col)
         aggs = [F.avg(F.col(vec_col)[i]).alias(f"_c{i}") for i in range(dim)]
         cents = (
-            src.join(assigned, id_col)
+            _assign(
+                src,
+                _centroid_row(cents, "cell", "centroid"),
+                v_col=vec_col,
+                out_col="cell",
+                dist=l2_distance_sq,
+            )
             .groupBy("cell")
             .agg(*aggs)
             .select(
@@ -555,22 +561,6 @@ def train_ivf_centroids(
         )
         cents = cents.localCheckpoint(eager=True)
     return cents
-
-
-def _assign_cells(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    c = F.broadcast(centroids.select("cell", F.col("centroid").alias("_cvec")))
-    return (
-        vectors.crossJoin(c)
-        .select(
-            id_col,
-            "cell",
-            l2_distance_sq(vec_col, "_cvec").alias("_d"),
-        )
-        .groupBy(id_col)
-        .agg(F.min_by("cell", F.struct("_d", "cell")).alias("cell"))
-    )
 
 
 def ivf_cosine_topk(
@@ -600,8 +590,20 @@ def ivf_cosine_topk(
             id_col,
             vec_col,
         )
-    cells = _assign_cells(vectors, centroids, id_col, vec_col)
-    indexed = vectors.join(cells, id_col).withColumn("_vn", norm2(vec_col))
+    indexed = _assign(
+        vectors,
+        _centroid_row(centroids, "cell", "centroid"),
+        v_col=vec_col,
+        out_col="cell",
+        dist=l2_distance_sq,
+    ).select(
+        # a non-nullable cell: the inner join below then infers no
+        # isnotnull(cell), which would push the argmin into the cross
+        # join's condition and run it twice
+        *vectors.columns,
+        F.coalesce("cell", F.lit(-1)).alias("cell"),
+        norm2(vec_col).alias("_vn"),
+    )
 
     c = F.broadcast(centroids.select("cell", F.col("centroid").alias("_cvec")))
     qcells = (
@@ -1137,7 +1139,9 @@ def ivf_fit_two_level(
 
     nearest_sub = _nearest(F.col("subcents"), F.col("_v")).getField("cid")
     assign = (
-        routed.join(F.broadcast(l2_cells), "_l1")
+        # left (every coarse cell has sub-centroids): an inner join would
+        # push the coarse argmin into the cross join's condition
+        routed.join(F.broadcast(l2_cells), "_l1", "left")
         .select(F.col("_tid").alias(id_col), nearest_sub.alias("cluster"))
         # materialize once (kmeans_fit's discipline): every probe's
         # candidate join reads the assignment, and without this each

@@ -59,9 +59,11 @@ def broadcast_join_count(df: DataFrame) -> int:
 
 
 def shuffle_count(df: DataFrame) -> int:
-    return _executed_plan_str(df).count("Exchange hashpartitioning") + _executed_plan_str(
-        df
-    ).count("Exchange rangepartitioning")
+    """Shuffle Exchange nodes (hash, range, round-robin and
+    single-partition) in the AQE-final plan of ``df`` once it has run,
+    else in its initial plan; broadcasts, reused exchanges and the plans
+    of cached relations are not counted. Classic sessions only."""
+    return sum(p.nodeName() == "Exchange" for p in _plan_nodes(df))
 
 
 def wholestage_codegen_spans(df: DataFrame, execute: bool = True) -> int:
@@ -87,13 +89,10 @@ def assert_no_cartesian(df: DataFrame, allow_broadcast_nl: bool = True) -> None:
         raise AssertionError("plan contains BroadcastNestedLoopJoin:\n" + plan)
 
 
-def node_metrics(df: DataFrame, node: str, metric: str = "numOutputRows") -> list[int]:
-    """Values of one SQL metric (e.g. ``numOutputRows``, shown as "number
-    of output rows" in the Spark UI) on every physical node named
-    ``node`` (e.g. ``Generate``) in the plan ``df`` last executed, so run
-    ``df.collect()`` first. Walks the AQE-final plan through its query
-    stages. Classic sessions only: it reads the JVM plan."""
-    out = []
+def _plan_nodes(df: DataFrame):
+    """Every node of the physical plan ``df`` last executed (its initial
+    plan when it has not run), walking the AQE-final plan through its
+    query stages. It reads the JVM plan, so classic sessions only."""
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         p = stack.pop()
@@ -103,10 +102,21 @@ def node_metrics(df: DataFrame, node: str, metric: str = "numOutputRows") -> lis
             continue
         if name.endswith("QueryStage"):
             stack.append(p.plan())
-        elif name == node:
+        else:
+            yield p
+        children = p.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
+def node_metrics(df: DataFrame, node: str, metric: str = "numOutputRows") -> list[int]:
+    """Values of one SQL metric (e.g. ``numOutputRows``, shown as "number
+    of output rows" in the Spark UI) on every physical node named
+    ``node`` (e.g. ``Generate``) in the plan ``df`` last executed, so run
+    ``df.collect()`` first (``_plan_nodes``' walk)."""
+    out = []
+    for p in _plan_nodes(df):
+        if p.nodeName() == node:
             m = p.metrics().get(metric)
             if m.isDefined():
                 out.append(int(m.get().value()))
-        children = p.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
     return out

@@ -3,6 +3,7 @@ member's an_features equals its cluster mean, noise takes nearest centroid."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators import dbscan
@@ -58,14 +59,58 @@ def test_anonymize_invariants(spark):
     assert noise["cluster_id"] == min(dists, key=lambda c: (dists[c], c))
 
 
-def test_assign_nearest_tiebreak(spark):
-    pts = spark.createDataFrame([(1, [5.0, 5.0])], ["id", "features"])
-    cents = spark.createDataFrame(
-        [(10, [0.0, 0.0]), (2, [10.0, 10.0])], ["cluster_id", "centroid"]
-    )
-    # both centroids at L1 distance 10 -> tie broken to lower cluster id
-    r = assign_nearest(pts, cents).first()
-    assert r["cluster_id"] == 2 and r["distance"] == 10.0
+def _nearest_rows(points, cents, metric):
+    """(id, cluster_id, distance) by brute force: the (distance, cluster
+    id)-least centroid; a NULL vector takes the lowest id at NULL."""
+    import math
+
+    def dist(v, c):
+        if metric == "l1":
+            return float(sum(abs(a - b) for a, b in zip(v, c)))
+        return math.sqrt(sum((a - b) * (a - b) for a, b in zip(v, c)))
+
+    rows = []
+    for i, v in points:
+        if not cents:
+            continue
+        if v is None:
+            rows.append((i, min(cid for cid, _ in cents), None))
+            continue
+        d, cid = min((dist(v, c), cid) for cid, c in cents)
+        rows.append((i, cid, d))
+    return sorted(rows)
+
+
+_LATTICE = [(i, [float(i % 60), float(i // 60)]) for i in range(3000)]
+# cluster ids out of position order, so ties must break on the id
+_LATTICE_CENTS = [(7, [10.0, 10.0]), (3, [30.0, 10.0]), (5, [20.0, 40.0]), (1, [50.0, 30.0])]
+
+
+@pytest.mark.parametrize(
+    "points, cents, metric, id_type",
+    [
+        # both centroids at distance 10 (l1) / sqrt(50) (l2): the lower id wins
+        ([(1, [5.0, 5.0])], [(10, [0.0, 0.0]), (2, [10.0, 10.0])], "l1", "int"),
+        ([(1, [5.0, 5.0])], [(10, [0.0, 0.0]), (2, [10.0, 10.0])], "l2", "int"),
+        (_LATTICE, _LATTICE_CENTS, "l1", "int"),
+        (_LATTICE, _LATTICE_CENTS, "l2", "int"),
+        ([(1, [5.0, 5.0]), (2, None)], [(10, [0.0, 0.0]), (2, [10.0, 10.0])], "l1", "int"),
+        ([(1, [5.0, 5.0]), (2, [1.0, 2.0])], [], "l1", "int"),
+        (
+            [(2**40, [5.0, 5.0]), (2**40 + 1, [9.0, 9.0])],
+            [(2**35, [0.0, 0.0]), (2**33, [10.0, 10.0])],
+            "l1",
+            "bigint",
+        ),
+    ],
+    ids=["l1-tie", "l2-tie", "l1-lattice", "l2-lattice", "null-features", "no-centroids", "wide-ids"],
+)
+def test_assign_nearest_tiebreak(spark, points, cents, metric, id_type):
+    pts = spark.createDataFrame(points, f"id {id_type}, features array<double>")
+    cdf = spark.createDataFrame(cents, f"cluster_id {id_type}, centroid array<double>")
+    got = assign_nearest(pts, cdf, metric=metric)
+    assert got.dtypes == [("id", id_type), ("cluster_id", id_type), ("distance", "double")]
+    assert sorted(map(tuple, got.collect())) == _nearest_rows(points, cents, metric)
 
 
 def test_information_loss_and_sweep(spark):
@@ -133,7 +178,7 @@ def _anonymize_module():
 
 
 def _no_assign(*args, **kwargs):
-    raise AssertionError("assign_nearest called")
+    raise AssertionError("_assign called")
 
 
 def _tie_frame(spark):
@@ -169,8 +214,8 @@ def test_eps_sweep_kruskal_matches_per_eps_chain(spark, monkeypatch):
     ]:
         with monkeypatch.context() as m:
             # the driver path scores every level without the twin's
-            # noise join, so a silent fallback cannot pass for it
-            m.setattr(_anonymize_module(), "assign_nearest", _no_assign)
+            # noise argmin, so a silent fallback cannot pass for it
+            m.setattr(_anonymize_module(), "_assign", _no_assign)
             m_new, b_new = eps_sweep(
                 frame, eps_values, min_pts, min_cluster_size=mcs, metric=metric
             )
@@ -267,7 +312,7 @@ def test_driver_pass_failure_falls_back(spark, monkeypatch):
 
 def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
     """Under the default pair bound the sweep scores on the driver
-    (``assign_nearest``, the twin's noise join, is never reached), and
+    (``_assign``, the twin's noise argmin, is never reached), and
     every driver-built frame is Arrow-backed (no list goes through
     ``createDataFrame``): eps_sweep, the zero-cluster information_loss
     row and a k-member run with a repair round all still succeed. The
@@ -300,7 +345,7 @@ def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
         built.append(ddl)
         return local_frame(spark_, rows, ddl)
 
-    monkeypatch.setattr(_anonymize_module(), "assign_nearest", _no_assign)
+    monkeypatch.setattr(_anonymize_module(), "_assign", _no_assign)
     monkeypatch.setattr(SparkSession, "createDataFrame", _no_lists)
     monkeypatch.setattr(kmember, "_local_frame", _spy)
 
@@ -311,6 +356,6 @@ def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
     with monkeypatch.context() as m:
         m.setattr(_components_module(), "_DRIVER_PAIRS_THRESHOLD", 0)
         res = kmember.kmember_kmeans(grid, k=10, n_clusters=3, max_iter=3)
-    assert "cluster_id long, _need int" in built  # a repair round ran
+    assert "cluster int, _need int" in built  # a repair round ran
     sizes = [r["count"] for r in res.assignments.groupBy("cluster_id").count().collect()]
     assert sorted(sizes) == [10, 10, 10]

@@ -8,11 +8,7 @@ from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators import components
 from dbscan_pyspark_spark.operators import kmember as kmember_module
-from dbscan_pyspark_spark.operators.kmember import (
-    kmember_anonymize,
-    kmember_kmeans,
-    kmember_search,
-)
+from dbscan_pyspark_spark.operators.kmember import kmember_anonymize, kmember_kmeans
 from dbscan_pyspark_spark.session import _local_frame
 
 
@@ -77,16 +73,17 @@ def test_kmember_rejects_ragged_features(spark, monkeypatch, bound):
         kmember_kmeans(df, k=10, n_clusters=3)
 
 
-def test_kmember_null_features_take_the_spark_loop(spark, monkeypatch):
-    """The driver solver declines a NULL feature array; the Spark loop
-    then gives what it gives when forced."""
+@pytest.mark.parametrize("bound", [None, 0])  # driver solver, Spark loop
+def test_kmember_rejects_null_features(spark, monkeypatch, bound):
+    if bound is not None:
+        monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", bound)
     df = _local_frame(
         spark,
         [(i, [float(i % 3), float(i // 3)]) for i in range(8)] + [(8, None)],
         "id long, features array<double>",
     )
-    kw = dict(k=3, n_clusters=2, max_iter=1)
-    _assert_same_result(kmember_kmeans(df, **kw), _twin_run(monkeypatch, df, **kw))
+    with pytest.raises(ValueError, match="1 NULL feature arrays"):
+        kmember_kmeans(df, k=3, n_clusters=2, max_iter=1)
 
 
 def test_kmember_anonymize_shape(spark, blob_points):
@@ -97,25 +94,6 @@ def test_kmember_anonymize_shape(spark, blob_points):
     cents = {r["cluster_id"]: r["centroid"] for r in res.centroids.collect()}
     for r in out.collect():
         assert r["an_features"] == cents[r["cluster_id"]]
-
-
-@pytest.mark.slow
-def test_kmember_search_picks_feasible_best(spark, blob_points):
-    metrics, res = kmember_search(
-        blob_points, k=15, candidates=[3, 6], restarts=2, max_iter=4
-    )
-    sizes = [r["count"] for r in res.assignments.groupBy("cluster_id").count().collect()]
-    assert all(s >= 15 for s in sizes)
-    # metrics: one row per (candidate, restart); exactly one accepted,
-    # and it carries the (strictly-first) minimum cost
-    rows = sorted(
-        map(tuple, metrics.collect())
-    )  # (n_clusters, restart, cost, n_iter, accepted)
-    assert [(r[0], r[1]) for r in rows] == [(3, 0), (3, 1), (6, 0), (6, 1)]
-    accepted = [r for r in rows if r[4] == 1]
-    assert len(accepted) == 1
-    assert accepted[0][2] == min(r[2] for r in rows)
-    assert abs(accepted[0][2] - res.cost) < 1e-9
 
 
 def test_kmember_search_quantized_sweep_is_exact(spark):
@@ -212,12 +190,21 @@ def test_kmember_quantized_contracts(spark):
     assert out.count() == 12
 
 
-def test_repair_keeps_cluster_ids_beyond_int_range(spark):
-    # the repair's driver-built surplus/deficient/need frames carry the
-    # cluster ids as bigint: ids past 2^31 move members, not overflow
-    from dbscan_pyspark_spark.operators.anonymize import assign_nearest
-    from dbscan_pyspark_spark.operators.kmember import _repair
+def _repair_input(points, cents, metric="l1"):
+    """The Spark loop's first assignment of ``points`` against the
+    centroid frame ``cents``, and the centroid table it ranks against."""
+    from dbscan_pyspark_spark.operators.eps_join import _metric_fn
+    from dbscan_pyspark_spark.operators.kmeans import _assign, _centroid_row
 
+    dist = _metric_fn(metric, len(cents.first()["centroid"]))
+    table = _centroid_row(cents, "cluster_id", "centroid")
+    pts = points.select("id", F.col("features").alias("_v"))
+    return _assign(pts, table, dist=dist, dist_col="dist"), table, dist
+
+
+def test_repair_keeps_cluster_ids_beyond_int_range(spark):
+    # the repair's driver-built need frame carries the cluster ids in
+    # their own type: ids past 2^31 move members, not overflow
     big = 2**33
     points = spark.createDataFrame(
         [(1, [0.0]), (2, [1.0]), (3, [2.0]), (4, [10.0])], "id long, features array<double>"
@@ -225,10 +212,39 @@ def test_repair_keeps_cluster_ids_beyond_int_range(spark):
     cents = spark.createDataFrame(
         [(big, [0.5]), (big + 1, [10.0])], "cluster_id long, centroid array<double>"
     )
-    assign = assign_nearest(points, cents)
-    out = _repair(points, assign, cents, 2, "l1", "id", "features", max_rounds=4)
-    got = {r["id"]: r["cluster_id"] for r in out.collect()}
+    assign, table, dist = _repair_input(points, cents)
+    out, fixpoint = kmember_module._repair(assign, table, 2, dist, "id", rounds=4)
+    got = {r["id"]: r["cluster"] for r in out.collect()}
+    assert fixpoint
     assert got == {1: big, 2: big, 3: big + 1, 4: big + 1}
+
+
+def test_repair_reports_no_fixpoint_when_rounds_run_out(spark, monkeypatch):
+    """The grid's first argmin leaves clusters short. One round moves
+    members but cannot show the fixpoint, so the repair reports none and
+    the Spark loop raises; enough rounds reach it."""
+    df = _grid(spark)
+    cents = _local_frame(
+        spark,
+        [(0, [0.0, 0.0]), (1, [6.0, 0.0]), (2, [3.0, 4.0])],
+        "cluster_id int, centroid array<double>",
+    )
+    assign, table, dist = _repair_input(df, cents)
+    repair = kmember_module._repair
+    _, fixpoint = repair(assign, table, 10, dist, "id", rounds=1)
+    assert not fixpoint
+    out, fixpoint = repair(assign, table, 10, dist, "id", rounds=14)
+    assert fixpoint
+    sizes = [r["count"] for r in out.groupBy("cluster").count().collect()]
+    assert sorted(sizes) == [10, 10, 10]
+
+    def one_round(*args, **kwargs):
+        return repair(*args, **{**kwargs, "rounds": 1})
+
+    monkeypatch.setattr(components, "_DRIVER_PAIRS_THRESHOLD", 0)
+    monkeypatch.setattr(kmember_module, "_repair", one_round)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        kmember_kmeans(df, k=10, n_clusters=3, max_iter=2)
 
 
 def _fail(name):
@@ -239,11 +255,12 @@ def _fail(name):
 
 
 def _driver_run(monkeypatch, df, **kw):
-    # the driver solver: the Spark loop's argmin and repair never run
+    # the driver solver: the Spark loop's argmin, repair and centroid
+    # update never run
     with monkeypatch.context() as m:
-        m.setattr(kmember_module, "assign_nearest", _fail("assign_nearest"))
+        m.setattr(kmember_module, "_assign", _fail("_assign"))
         m.setattr(kmember_module, "_repair", _fail("_repair"))
-        m.setattr(kmember_module, "cluster_centroids", _fail("cluster_centroids"))
+        m.setattr(kmember_module, "_means", _fail("_means"))
         return kmember_kmeans(df, **kw)
 
 

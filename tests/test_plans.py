@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from dbscan_pyspark_spark.operators.anonymize import assign_nearest
 from dbscan_pyspark_spark.operators.eps_join import core_points, eps_self_join
 from dbscan_pyspark_spark.plans.inspect import (
+    _plan_nodes,
     assert_no_cartesian,
     broadcast_join_count,
     pushed_filters,
@@ -75,8 +76,17 @@ def test_assign_nearest_broadcasts_centroids(spark):
         [(0, [0.0, 5.0]), (1, [25.0, 12.0])], "cluster_id int, centroid array<double>"
     )
     an = assign_nearest(pts, cents)
+    an.collect()
     assert broadcast_join_count(an) >= 1
     assert_no_cartesian(an)
+    # each point is answered in its own partition: no hash-partitioned
+    # Exchange (the one place the points side could be shuffled)
+    exchanges = [
+        p.outputPartitioning().toString()
+        for p in _plan_nodes(an)
+        if p.nodeName() == "Exchange"
+    ]
+    assert not [e for e in exchanges if e.startswith("hashpartitioning")], exchanges
 
 
 def test_codegen_active_on_agg_path(spark):
