@@ -13,9 +13,15 @@ Four tiers, all shuffle-conscious:
 - **SimHash**: 64-bit token-hash aggregate; near-dups share the simhash
   (or a band of it).
 
+A document's shingle set has one representation, the per-doc array of
+``_shingle_sets``. The MinHash and prefix-filter paths verify a
+candidate pair on its own row: two id joins bring both docs' arrays to
+the pair, and ``size(array_intersect)`` counts the overlap
+(``_overlap``). Only the callers that join on shingles explode it.
+
 At 100 TB the only wide exchanges are equi-joins/groupBys on digests,
-shingles, or (band_id, band_hash) buckets — all fine-grained keys that
-hash-partition evenly; no cross join appears anywhere.
+shingles, doc ids, or (band_id, band_hash) buckets — all fine-grained
+keys that hash-partition evenly; no cross join appears anywhere.
 """
 
 from __future__ import annotations
@@ -46,7 +52,13 @@ def exact_dedup(
     )
 
 
-def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """One row per document: (id, ``_sh``), the distinct n-word shingles
+    of its normalized text as an array. NULL and short (< n tokens)
+    texts get an empty array. The one representation of a shingle set:
+    Jaccard verification reads it per candidate pair, and
+    :func:`_doc_shingles` explodes it for the callers that join on
+    shingle rows."""
     # A small-file scan can arrive as one partition; the shingle explode
     # multiplies rows ~100x, so spread the input first (cheap relative
     # to the explode; on a real cluster the scan is already wide).
@@ -69,8 +81,23 @@ def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
         # optimizer from inlining the expression into its consumers)
         toks = toks.repartition(target, id_col)
     return toks.select(
-        F.col(id_col),
-        F.explode(shingles_from_tokens("_toks", n)).alias("shingle"),
+        F.col(id_col), shingles_from_tokens("_toks", n).alias("_sh")
+    )
+
+
+def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, shingle) rows: :func:`_shingle_sets` exploded."""
+    return _shingle_sets(df, text_col, id_col, n).select(
+        id_col, F.explode("_sh").alias("shingle")
+    )
+
+
+def _sized_shingles(sets: DataFrame, id_col: str) -> DataFrame:
+    """(id, n_sh, shingle) rows of a :func:`_shingle_sets` relation:
+    each row carries its doc's set size |A|, so a pair join reads both
+    sizes off its own rows instead of joining a size relation back."""
+    return sets.select(
+        id_col, F.size("_sh").alias("n_sh"), F.explode("_sh").alias("shingle")
     )
 
 
@@ -86,23 +113,18 @@ def ngram_jaccard_pairs(
     DataFrame(a_id, b_id, jaccard) with a_id < b_id. Exact (not
     approximate): |A ∩ B| via shingle equi-join, |A ∪ B| = |A|+|B|-∩.
     """
-    sh = _doc_shingles(df, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-
+    sh = _sized_shingles(_shingle_sets(df, text_col, id_col, n), id_col)
     a, b = sh.alias("a"), sh.alias("b")
-    common = (
+    return (
         a.join(b, F.col("a.shingle") == F.col("b.shingle"))
         .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .groupBy(
-            F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id")
+            F.col(f"a.{id_col}").alias("a_id"),
+            F.col(f"b.{id_col}").alias("b_id"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("b.n_sh").alias("n_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a_id"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("b_id"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "a_id")
-        .join(sb, "b_id")
         .select(
             "a_id",
             "b_id",
@@ -154,7 +176,6 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingles: DataFrame | None = None,
-    with_size: bool = False,
 ) -> DataFrame:
     """Portable MinHash: hash_i(doc) = min over shingles of
     (A_i * base(shingle) + B_i) mod P, with base() one md5-derived
@@ -166,23 +187,23 @@ def minhash_signatures(
     mins are partial-aggregated in ONE groupBy over the shingle rows;
     the k-fold row explode a long layout needs (k x shuffle volume)
     never happens. Returns DataFrame(doc_id, m0, ..., m{k-1}) with
-    ``long`` minhashes.
+    ``long`` minhashes; docs without shingles get no row.
 
-    ``shingles``: pass a ``_doc_shingles`` output to reuse its lineage.
-    ``with_size``: also emit ``n_sh`` (shingle count per doc) — it rides
-    the same groupBy for free, saving the separate shingle pass a
-    Jaccard denominator would otherwise need."""
-    sh = shingles if shingles is not None else _doc_shingles(df, text_col, id_col, n)
+    ``shingles``: pass a :func:`_shingle_sets` output to reuse its
+    lineage (it is exploded here)."""
+    sets = (
+        shingles if shingles is not None else _shingle_sets(df, text_col, id_col, n)
+    )
     # base hash lands in a bound column so the md5 runs once per row,
     # not once per aggregate (no CSE across aggregate expressions).
-    based = sh.select(id_col, shingle_base_hash("shingle").alias("_x"))
+    based = sets.select(id_col, F.explode("_sh").alias("_s")).select(
+        id_col, shingle_base_hash("_s").alias("_x")
+    )
     params = minhash_params(num_hashes)
     aggs = [
         F.min((F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"m{h}")
         for h, (a, b) in enumerate(params)
     ]
-    if with_size:
-        aggs.append(F.count(F.lit(1)).alias("n_sh"))
     return based.groupBy(id_col).agg(*aggs)
 
 
@@ -215,47 +236,65 @@ def minhash_bands(
     ).withColumn("band", F.col("band").cast("long"))
 
 
-def _verify_exact_jaccard(
-    sh: DataFrame,
-    sizes: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    threshold: float,
-) -> DataFrame:
-    """Exact-Jaccard verification of a candidate pair set: semi-join
-    prune the shingle relation to candidate docs, count intersections,
-    join sizes, filter round(jaccard, 6) >= threshold. Shared by the
-    MinHash-banded and prefix-filtered candidate generators so the
-    verification semantics can never drift between them."""
-    sa = sh.select(F.col(id_col).alias("a_id"), "shingle").join(
-        cand.select("a_id").distinct(), "a_id", "left_semi"
-    )
-    sb = sh.select(F.col(id_col).alias("b_id"), "shingle").join(
-        cand.select("b_id").distinct(), "b_id", "left_semi"
-    )
-    common = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+def _band_candidates(bands: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (a_id, b_id), a_id < b_id, of docs sharing at least one
+    (band, band_hash) bucket: the LSH band self-join."""
+    a, b = bands.alias("a"), bands.alias("b")
     return (
-        common.join(
-            sizes.select(F.col(id_col).alias("a_id"), F.col("n_sh").alias("n_a")),
-            "a_id",
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        .join(
-            sizes.select(F.col(id_col).alias("b_id"), F.col("n_sh").alias("n_b")),
+        .select(
+            F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id")
+        )
+        .distinct()
+    )
+
+
+def _overlap(sets: DataFrame, cand: DataFrame, id_col: str) -> DataFrame:
+    """Exact shingle overlap of each candidate pair, read on the pair's
+    row: (a_id, b_id, n_common, n_union) from both docs' arrays in a
+    :func:`_shingle_sets` relation, by two id joins of the candidates
+    onto the one-row-per-doc sets."""
+    sa = sets.select(F.col(id_col).alias("a_id"), F.col("_sh").alias("_sa"))
+    sb = sets.select(F.col(id_col).alias("b_id"), F.col("_sh").alias("_sb"))
+    return (
+        cand.join(sa, "a_id")
+        .join(sb, "b_id")
+        .select(
+            "a_id",
             "b_id",
+            "_sa",
+            "_sb",
+            F.size(F.array_intersect("_sa", "_sb")).alias("n_common"),
         )
         .select(
             "a_id",
             "b_id",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
+            "n_common",
+            (F.size("_sa") + F.size("_sb") - F.col("n_common")).alias("n_union"),
+        )
+    )
+
+
+def _verify_exact_jaccard(
+    sets: DataFrame, cand: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verification of a candidate pair set: pairs that
+    share at least one shingle with round(jaccard, 6) >= threshold, as
+    DataFrame(a_id, b_id, jaccard). Shared by the MinHash-banded and
+    prefix-filtered candidate generators so the verification semantics
+    can never drift between them."""
+    return (
+        _overlap(sets, cand, id_col)
+        .where(F.col("n_common") > 0)
+        .select(
+            "a_id",
+            "b_id",
+            F.round(F.col("n_common") / F.col("n_union"), 6).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -286,10 +325,11 @@ def near_dup_vs_reference(
 
     Scale: signatures are one narrow row per doc; the band join is an
     equi-join on (band, band_hash) — reference lookups cost
-    collisions, not corpus size. Re-signing the reference every run is
-    the local-test path; at scale persist ``minhash_signatures(ref)``
-    once and pass a loaded signature frame via ``ref_sig``-style reuse
-    (the streaming filter's store does exactly this).
+    collisions, not corpus size. This function re-signs the reference
+    on every call, the local-test path; at scale persist
+    ``minhash_signatures(ref)`` once and match each batch's signatures
+    against it with ``signature_match`` directly (the streaming
+    filter's store does exactly this).
     """
     from dbscan_pyspark_spark.streaming.dedup import signature_match
 
@@ -315,6 +355,11 @@ def near_dup_vs_reference(
     )
 
 
+# Largest identical-signature group at which minhash_near_dup_pairs
+# contracts identical content before banding (see its docstring).
+_CONTRACT_MIN_CLIQUE = 256
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -323,17 +368,17 @@ def minhash_near_dup_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    contract_min_clique: int = 256,
 ) -> DataFrame:
     """MinHash-LSH near-dup: candidates share >= 1 band bucket, then the
     *exact* shingle Jaccard verifies. DataFrame(a_id, b_id, jaccard).
 
     The band equi-join is the only wide exchange over candidates —
     at scale this is the standard shingle->minhash->band->bucket-join
-    pipeline; the verification join touches only candidate pairs.
+    pipeline; the verification joins each candidate pair to its two
+    docs' shingle arrays by id and touches no other doc.
 
     Degenerate-bucket guard: identical normalized texts are contracted
-    to ONE representative (md5 content key) BEFORE shingling, so a
+    to ONE representative (md5 content key) BEFORE banding, so a
     planted 50k-copy cluster contributes one signature to the band
     join instead of a 50k-wide bucket whose self-join alone is
     C(50k,2) x n_bands candidate rows (the dbscan.py duplicate-
@@ -350,27 +395,27 @@ def minhash_near_dup_pairs(
     content implies an identical signature, so the largest
     identical-SIGNATURE group — one agg over the signature relation
     the pipeline computes anyway — upper-triggers the contraction at
-    ``contract_min_clique`` (a size-g clique costs ~C(g,2) x n_bands
+    ``_CONTRACT_MIN_CLIQUE`` (a size-g clique costs ~C(g,2) x n_bands
     uncontracted candidate rows — trivial at g=256, ruinous at g=50k).
     Below it the uncontracted pipeline runs as-is; identical output by
     construction. (A full-signature hash collision between distinct
     contents can only FALSE-trigger — the contraction itself keys on
     the md5 content, so output is never affected.)
     """
-    # One shingle relation serves both the signature groupBy and the
-    # exact-Jaccard verification joins — normalize/split/explode over
-    # the corpus runs once, not twice. Docs with NULL text vanish in
-    # the token explode; short texts (< n tokens) get no shingles, so
-    # they never reach the band join in either branch. The signature
+    # One shingle-set relation (one array row per doc) serves both the
+    # signature groupBy and the exact-Jaccard verification — normalize/
+    # split/shingle over the corpus runs once, not twice. Docs with NULL
+    # text or fewer than n tokens get an empty set, hence no signature,
+    # so they never reach the band join in either branch. The signature
     # relation (1 slim row/doc) is persisted: it feeds the adaptive
-    # gate, the band projection, and the Jaccard denominators.
-    sh = _doc_shingles(df, text_col, id_col, n).persist()
+    # gate and the band projection.
+    sets = _shingle_sets(df, text_col, id_col, n).persist()
     sig = minhash_signatures(
-        df, num_hashes, n, text_col, id_col, shingles=sh, with_size=True
+        df, num_hashes, n, text_col, id_col, shingles=sets
     ).persist()
     # Adaptive gate (round-9 watch item, round-10 made scan-free): the
-    # contraction machinery — content-key groupBy, two semi-join
-    # restrictions, two expansion joins — exists to bound the
+    # contraction machinery — content-key groupBy, one semi-join
+    # restriction, two expansion joins — exists to bound the
     # C(g,2) x n_bands band-join blowup of LARGE identical-content
     # cliques (the planted 50k-copy stress). Small dup groups are
     # handled correctly AND cheaply uncontracted: identical texts
@@ -387,14 +432,15 @@ def minhash_near_dup_pairs(
         .first()["_m"]
         or 0
     )
-    contract = _max_g >= contract_min_clique
+    contract = _max_g >= _CONTRACT_MIN_CLIQUE
     if contract:
         # Contract identical content: a NARROW (key, id) groupBy picks
-        # min-id reps; the already-computed shingle/signature relations
-        # are RESTRICTED to rep ids by semi-join (no re-shingling —
-        # dup members' rows are identical to their rep's by
-        # construction). The intra expansion below requires the rep to
-        # HAVE a signature, matching the uncontracted pipeline where
+        # min-id reps; the already-computed signature relation is
+        # RESTRICTED to rep ids by semi-join (no re-shingling — dup
+        # members' rows are identical to their rep's by construction),
+        # and the verification's id joins then read reps' sets only.
+        # The intra expansion below requires the rep to HAVE a
+        # signature, matching the uncontracted pipeline where
         # shingle-less docs never reach the band join.
         keyed = df.select(
             F.col(id_col), F.md5(normalized(text_col)).alias("_k")
@@ -402,43 +448,19 @@ def minhash_near_dup_pairs(
         reps = keyed.groupBy("_k").agg(
             F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_gsize")
         ).persist()
-        rep_ids = reps.select(id_col)
-        sh_v = sh.join(rep_ids, id_col, "left_semi")
-        sig_v = sig.join(rep_ids, id_col, "left_semi")
+        sig_v = sig.join(reps.select(id_col), id_col, "left_semi")
     else:
-        sh_v, sig_v = sh, sig
-    # The candidate set is referenced three times below (pairs + two
-    # semi-join prunes); without materialization Catalyst would run the
-    # whole signature->band->self-join subtree three times (measured 3x
-    # wall at sf0.1). It is tiny (pairs of near-dups), so an eager
-    # localCheckpoint both materializes it once and truncates lineage.
-    bands = minhash_bands(sig_v, rows_per_band, id_col)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id")
-        )
-        .distinct()
-        .localCheckpoint()
+        sig_v = sig
+    cand = _band_candidates(minhash_bands(sig_v, rows_per_band, id_col), id_col)
+    rep_pairs = _verify_exact_jaccard(sets, cand, id_col, threshold).localCheckpoint(
+        eager=True
     )
-
-    sizes = sig_v.select(id_col, "n_sh")
-    # verification touches only candidate rep docs: semi-join prune
-    rep_pairs = _verify_exact_jaccard(
-        sh_v, sizes, cand, id_col, threshold
-    ).localCheckpoint(eager=True)
 
     if not contract:
         # uncontracted pipeline: every doc carried its own signature,
         # so verified pairs ARE the member pairs
         sig.unpersist()
-        sh.unpersist()
+        sets.unpersist()
         return rep_pairs
 
     # Expand rep pairs back to member pairs. Cross-group: every
@@ -484,7 +506,7 @@ def minhash_near_dup_pairs(
         keys_needed, "_k"
     ).localCheckpoint(eager=False)
     sig.unpersist()
-    sh.unpersist()
+    sets.unpersist()
     reps.unpersist()
     m_a = members_needed.select(
         F.col("_rep").alias("a_id"), F.col(id_col).alias("_ma")
@@ -1252,44 +1274,27 @@ def minhash_estimate_errors(
     Fully deterministic: signatures are the portable fixed-seed
     universal hashes, the estimate is k/num_hashes (exactly
     representable when num_hashes is a power of two), and the exact
-    side reuses the verification join of
-    :func:`minhash_near_dup_pairs`. Candidate pairs that share a band
-    bucket but no shingle (possible only via mod-P hash collision)
-    keep exact_jaccard = 0 via the left join.
+    side is the unrounded n_common / n_union of :func:`_overlap`, the
+    overlap :func:`minhash_near_dup_pairs` verifies with. Candidate
+    pairs that share a band bucket but no shingle (possible only via
+    mod-P hash collision) keep their row with exact_jaccard = 0.
 
     Scale shape: identical to minhash_near_dup_pairs — band equi-join
-    candidates, semi-join-pruned verification; the extra signature
+    candidates, verification on the candidate row; the extra signature
     joins are per-candidate, not per-corpus.
     """
-    sh = _doc_shingles(df, text_col, id_col, n).persist()
+    sets = _shingle_sets(df, text_col, id_col, n).persist()
     sig = minhash_signatures(
-        df, num_hashes, n, text_col, id_col, shingles=sh, with_size=True
+        df, num_hashes, n, text_col, id_col, shingles=sets
     ).persist()
-    bands = minhash_bands(sig, rows_per_band, id_col)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    cand = _band_candidates(minhash_bands(sig, rows_per_band, id_col), id_col)
 
     sig_a = sig.select(
         F.col(id_col).alias("a_id"),
-        F.col("n_sh").alias("n_a"),
         *[F.col(f"m{i}").alias(f"_ma{i}") for i in range(num_hashes)],
     )
     sig_b = sig.select(
         F.col(id_col).alias("b_id"),
-        F.col("n_sh").alias("n_b"),
         *[F.col(f"m{i}").alias(f"_mb{i}") for i in range(num_hashes)],
     )
     matches = None
@@ -1297,39 +1302,20 @@ def minhash_estimate_errors(
         t = (F.col(f"_ma{i}") == F.col(f"_mb{i}")).cast("int")
         matches = t if matches is None else matches + t
 
-    sa = sh.select(F.col(id_col).alias("a_id"), "shingle").join(
-        cand.select("a_id").distinct(), "a_id", "left_semi"
-    )
-    sb = sh.select(F.col(id_col).alias("b_id"), "shingle").join(
-        cand.select("b_id").distinct(), "b_id", "left_semi"
-    )
-    common = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     out = (
-        cand.join(sig_a, "a_id")
+        _overlap(sets, cand, id_col)
+        .join(sig_a, "a_id")
         .join(sig_b, "b_id")
-        .join(common, ["a_id", "b_id"], "left")
         .select(
             "a_id",
             "b_id",
             (matches / F.lit(float(num_hashes))).alias("est_jaccard"),
-            (
-                F.coalesce(F.col("n_common"), F.lit(0))
-                / (
-                    F.col("n_a")
-                    + F.col("n_b")
-                    - F.coalesce(F.col("n_common"), F.lit(0))
-                )
-            ).alias("exact_jaccard"),
+            (F.col("n_common") / F.col("n_union")).alias("exact_jaccard"),
         )
     )
     out = out.localCheckpoint(eager=True)
     sig.unpersist()
-    sh.unpersist()
+    sets.unpersist()
     return out
 
 
@@ -1351,8 +1337,8 @@ def jaccard_prefix_filter_pairs(
     prefix positions — the candidate equi-join touches only those
     prefix rows (the rare end of the df distribution), instead of the
     full inverted index whose cost is Σ df² over ALL shingles. The
-    survivors are then exactly verified with the semi-join-pruned
-    intersection join. At 100 TB this is the exact-dedup twin of the
+    survivors are then exactly verified on the candidate row
+    (:func:`_verify_exact_jaccard`). At 100 TB this is the exact-dedup twin of the
     MinHash path: no probabilistic recall loss, candidate volume
     controlled by the frequency-ordered prefix instead of bands.
 
@@ -1364,15 +1350,11 @@ def jaccard_prefix_filter_pairs(
     """
     from pyspark.sql import Window
 
-    sh = _doc_shingles(df, text_col, id_col, n).persist()
+    sets = _shingle_sets(df, text_col, id_col, n).persist()
+    sh = _sized_shingles(sets, id_col)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     w = Window.partitionBy(id_col).orderBy("_df", "shingle")
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .withColumn("_pos", F.row_number().over(w))
-        .join(sizes, id_col)
-    )
+    ranked = sh.join(dfreq, "shingle").withColumn("_pos", F.row_number().over(w))
     # required overlap computed in EXACT RATIONAL arithmetic, from the
     # rounded acceptance condition: the output keeps round(J, 6) >= t,
     # so a pair with true J as low as t - 5e-7 can be accepted — the
@@ -1402,11 +1384,11 @@ def jaccard_prefix_filter_pairs(
             F.col(f"b.{id_col}").alias("b_id"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    out = _verify_exact_jaccard(sh, sizes, cand, id_col, threshold)
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
+    out = _verify_exact_jaccard(sets, cand, id_col, threshold).localCheckpoint(
+        eager=True
+    )
+    sets.unpersist()
     return out
 
 

@@ -11,12 +11,15 @@ frames each side produces and assert it reproduces both behaviors.
 from __future__ import annotations
 
 import datetime
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from check_oracle import frame_sig, to_pandas_frame  # noqa: E402
 

@@ -636,7 +636,7 @@ def test_sorted_neighborhood_custom_key_and_validation(spark):
         sorted_neighborhood_pairs(docs, window=0)
 
 
-def test_minhash_adaptive_guard_branch_equivalence(spark):
+def test_minhash_adaptive_guard_branch_equivalence(spark, monkeypatch):
     # The degenerate-bucket guard is adaptive: a clique-free corpus
     # (reps == docs) takes the fast path that skips the restore
     # semi-join and expansion joins. Both branches must emit the SAME
@@ -658,18 +658,19 @@ def test_minhash_adaptive_guard_branch_equivalence(spark):
     assert (1, 3) in free and free[(1, 3)] < 1.0
 
     # add exact copies of docs 1 and 3, and run BOTH branches on the
-    # same corpus: contract_min_clique=2 forces the contraction,
-    # the default (256) keeps the uncontracted shape
+    # same corpus: a gate of 2 forces the contraction, the default
+    # (256) keeps the uncontracted shape
+    from dbscan_pyspark_spark.operators import dedup as dedup_mod
+
     df_cliq = spark.createDataFrame(
         base + [(2, base[0][1]), (4, base[1][1])], ["doc_id", "text"]
     )
     results = {}
     for mode, min_clique in (("contracted", 2), ("uncontracted", 256)):
+        monkeypatch.setattr(dedup_mod, "_CONTRACT_MIN_CLIQUE", min_clique)
         results[mode] = {
             (r["a_id"], r["b_id"]): r["jaccard"]
-            for r in minhash_near_dup_pairs(
-                df_cliq, threshold=0.2, contract_min_clique=min_clique
-            ).collect()
+            for r in minhash_near_dup_pairs(df_cliq, threshold=0.2).collect()
         }
     # the two branches are output-identical by construction
     assert results["contracted"] == results["uncontracted"]
@@ -681,3 +682,135 @@ def test_minhash_adaptive_guard_branch_equivalence(spark):
     for pair, j in free.items():
         assert cliq[pair] == j
     assert cliq[(2, 4)] == cliq[(1, 3)] == free[(1, 3)]
+
+
+# Brute-force twins of the MinHash family, in plain Python: word
+# 3-shingle sets of the normalized text, the portable signatures, and
+# the LSH band buckets, so every Spark output row can be recomputed.
+BRUTE_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (2, "The quick brown fox jumps over the lazy dog near the river bank!"),
+    (3, "the quick brown fox jumps over the lazy dog near the river delta"),
+    (4, "the quick brown fox leaps over the lazy dog near the old river bank"),
+    (5, None),
+    (6, "hello there"),
+    (7, "the cat sat the cat sat the cat sat on the mat"),
+    (8, "the cat sat the cat sat on the mat"),
+    (9, "completely different words about spark dataframes and shuffles"),
+    (10, "the quick brown fox"),
+    (11, ""),
+]
+
+
+def _brute_shingles(text, n=3):
+    import re
+
+    if text is None:
+        return set()
+    toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _round6(x):
+    # Spark's round(): HALF_UP on the double's shortest decimal form
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _brute_candidates(sets, num_hashes=16, rows_per_band=4):
+    """{(a, b): est_jaccard} over docs sharing a band bucket."""
+    import hashlib
+    from itertools import combinations
+
+    from dbscan_pyspark_spark.operators.dedup import MINHASH_P, minhash_params
+
+    params = minhash_params(num_hashes)
+    sig = {}
+    for d, s in sets.items():
+        if s:
+            xs = [int(hashlib.md5(x.encode()).hexdigest()[:15], 16) % MINHASH_P for x in s]
+            sig[d] = [min((a * x + b) % MINHASH_P for x in xs) for a, b in params]
+
+    def bands(m):
+        return {
+            (i, hashlib.md5("|".join(map(str, m[i * rows_per_band : (i + 1) * rows_per_band])).encode()).hexdigest())
+            for i in range(num_hashes // rows_per_band)
+        }
+
+    return {
+        (a, b): sum(x == y for x, y in zip(sig[a], sig[b])) / num_hashes
+        for a, b in combinations(sorted(sig), 2)
+        if bands(sig[a]) & bands(sig[b])
+    }
+
+
+def _brute_jaccard(sets, a, b):
+    return len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+
+
+def test_minhash_family_matches_brute_force(spark):
+    from itertools import combinations
+
+    from dbscan_pyspark_spark.operators.dedup import (
+        jaccard_prefix_filter_pairs,
+        minhash_estimate_errors,
+    )
+
+    df = spark.createDataFrame(BRUTE_DOCS, "doc_id long, text string")
+    sets = {d: _brute_shingles(t) for d, t in BRUTE_DOCS}
+    cand = _brute_candidates(sets)
+    # the corpus reaches every edge the verifiers must handle
+    assert sets[5] == sets[6] == sets[11] == set()
+    assert len(sets[7]) == 6 and (7, 8) in cand and (1, 2) in cand
+
+    est = {
+        (r.a_id, r.b_id): (r.est_jaccard, r.exact_jaccard)
+        for r in minhash_estimate_errors(df, num_hashes=16).collect()
+    }
+    assert est == {p: (e, _brute_jaccard(sets, *p)) for p, e in cand.items()}
+
+    for t in (0.0, 0.3, 0.7):
+        shared = {
+            p: _round6(_brute_jaccard(sets, *p))
+            for p in combinations(sorted(d for d, s in sets.items() if s), 2)
+            if sets[p[0]] & sets[p[1]]
+        }
+        want = {p: j for p, j in shared.items() if j >= t}
+        got = {
+            (r.a_id, r.b_id): r.jaccard
+            for r in jaccard_prefix_filter_pairs(df, threshold=t).collect()
+        }
+        assert got == want, t
+        got = {
+            (r.a_id, r.b_id): r.jaccard
+            for r in minhash_near_dup_pairs(df, threshold=t).collect()
+        }
+        assert got == {p: j for p, j in want.items() if p in cand}, t
+
+
+def test_verify_drops_disjoint_candidate_pair(spark):
+    # the band join can pair docs that share no shingle (a mod-P
+    # signature collision); the verifier must drop such a pair even at
+    # threshold 0, while the overlap still reports it with n_common 0
+    from dbscan_pyspark_spark.operators.dedup import (
+        _overlap,
+        _shingle_sets,
+        _verify_exact_jaccard,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "w x y z"), (3, "a b c e")], "doc_id long, text string"
+    )
+    sets = _shingle_sets(df, "text", "doc_id", 3)
+    cand = spark.createDataFrame([(1, 2), (1, 3)], "a_id long, b_id long")
+    ov = {
+        (r.a_id, r.b_id): (r.n_common, r.n_union)
+        for r in _overlap(sets, cand, "doc_id").collect()
+    }
+    assert ov == {(1, 2): (0, 4), (1, 3): (1, 3)}
+    got = {
+        (r.a_id, r.b_id): r.jaccard
+        for r in _verify_exact_jaccard(sets, cand, "doc_id", 0.0).collect()
+    }
+    assert got == {(1, 3): round(1 / 3, 6)}

@@ -6,10 +6,11 @@ times only the spans job. Usage: python tools/ab_dup_spans.py [n_docs].
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -17,10 +17,12 @@ registry outgrows the 50-query/round driver check (SURVEY §12).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def freshness(window_size: int = 50) -> None:
@@ -32,7 +34,7 @@ def freshness(window_size: int = 50) -> None:
 
     history: dict[str, dict[int, dict]] = {}
     rounds = []
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         rounds.append(rnd)
         for name, rec in json.load(open(path)).items():
@@ -93,7 +95,7 @@ def freshness(window_size: int = 50) -> None:
         ),
     )
     window = [r["query"] for r in order[:window_size]]
-    with open("/root/repo/tools/window_order.txt", "w") as f:
+    with open(os.path.join(ROOT, "tools", "window_order.txt"), "w") as f:
         f.write("\n".join(window) + "\n")
     n_never = sum(1 for r in rows if r["last_checked"] is None)
     print(

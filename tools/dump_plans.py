@@ -12,9 +12,11 @@ details; codegen ids elided).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 MAX_LINES = 90
@@ -150,7 +152,7 @@ def main() -> None:
         out += [f"## {name}", ""]
         out += metrics
         out += ["", "```", *lines, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
     spark.stop()

@@ -29,10 +29,11 @@ Prints one JSON line per stage with wall seconds and result stats.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_POINTS = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
 N_VECS = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
