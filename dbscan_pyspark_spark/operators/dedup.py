@@ -13,6 +13,14 @@ Four tiers, all shuffle-conscious:
 - **SimHash**: 64-bit token-hash aggregate; near-dups share the simhash
   (or a band of it).
 
+The near-dup paths share one candidate core: bucket self-join, verify,
+expand representatives. ``_bucket_pairs`` is the one bucket self-join
+(MinHash bands, SimHash blocks, prefix-filter shingles and, from
+``similarity.py``, RP-LSH bands). ``_expand_groups`` is the one
+expansion of verified representative pairs back to member pairs, for
+the paths that contract identical content (MinHash) or identical
+fingerprints (SimHash) before the join.
+
 A document's shingle set has one representation, the per-doc array of
 ``_shingle_sets``. The MinHash and prefix-filter paths verify a
 candidate pair on its own row: two id joins bring both docs' arrays to
@@ -236,17 +244,15 @@ def minhash_bands(
     ).withColumn("band", F.col("band").cast("long"))
 
 
-def _band_candidates(bands: DataFrame, id_col: str) -> DataFrame:
-    """Distinct (a_id, b_id), a_id < b_id, of docs sharing at least one
-    (band, band_hash) bucket: the LSH band self-join."""
-    a, b = bands.alias("a"), bands.alias("b")
+def _bucket_pairs(rows: DataFrame, id_col: str, *keys: str) -> DataFrame:
+    """Distinct (a_id, b_id), a_id < b_id, of rows that agree on every
+    key column: the bucket self-join of every candidate generator (LSH
+    bands, SimHash blocks, prefix shingles). A pair sharing several
+    buckets is emitted once. The equi-keys join in the order given."""
+    a, b = rows.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        a.join(b, on + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
         .select(
             F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id")
         )
@@ -300,6 +306,111 @@ def _verify_exact_jaccard(
     )
 
 
+def _expand_groups(
+    rep_pairs: DataFrame,
+    groups: DataFrame,
+    members: DataFrame,
+    key: str,
+    id_col: str,
+    value_col: str,
+    same: float,
+) -> DataFrame:
+    """Expand verified rep pairs back to member pairs, for the paths
+    that contract each group of identical keys (MinHash: the content
+    md5; SimHash: the fingerprint) to its min-id rep before the bucket
+    join. Exact: the verified value is a function of the key alone.
+
+    ``rep_pairs`` (a_id, b_id, value_col) over reps; ``groups`` (key,
+    id_col = the rep, _gsize), one row per group that may emit pairs;
+    ``members`` (id_col, key), one row per member. Returns (a_id, b_id,
+    value_col), a_id < b_id: each member pair across a rep pair carries
+    the reps' value (least/greatest, as the groups' id ranges
+    interleave), each i < j pair inside a group carries ``same``.
+
+    The member rows of the participating groups are materialized
+    eagerly, so the caller can release its caches; the pairs, quadratic
+    in group sizes, stay lazy. The intra self-join is no
+    :func:`_bucket_pairs` call: its distinct would aggregate that
+    quadratic output, and ids unique per group keep the pairs distinct."""
+    pair_reps = rep_pairs.select(F.col("a_id").alias(id_col)).unionByName(
+        rep_pairs.select(F.col("b_id").alias(id_col))
+    )
+    # one row per participating group; AQE picks the join strategy, as
+    # the set is unbounded on duplicate-heavy corpora
+    keys_needed = (
+        groups.join(pair_reps, id_col, "left_semi")
+        .unionByName(groups.where(F.col("_gsize") >= 2))
+        .select(key, F.col(id_col).alias("_rep"))
+        .distinct()
+    )
+    members_needed = (
+        members.select(id_col, key).join(keys_needed, key).localCheckpoint(eager=True)
+    )
+    m_a = members_needed.select(F.col("_rep").alias("a_id"), F.col(id_col).alias("_ma"))
+    m_b = members_needed.select(F.col("_rep").alias("b_id"), F.col(id_col).alias("_mb"))
+    inter = (
+        rep_pairs.join(m_a, "a_id")
+        .join(m_b, "b_id")
+        .select(
+            F.least("_ma", "_mb").alias("a_id"),
+            F.greatest("_ma", "_mb").alias("b_id"),
+            value_col,
+        )
+    )
+    x, y = members_needed.alias("x"), members_needed.alias("y")
+    intra = x.join(
+        y,
+        (F.col(f"x.{key}") == F.col(f"y.{key}"))
+        & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+    ).select(
+        F.col(f"x.{id_col}").alias("a_id"),
+        F.col(f"y.{id_col}").alias("b_id"),
+        F.lit(same).alias(value_col),
+    )
+    return inter.unionByName(intra)
+
+
+def signature_match(
+    left_sig: DataFrame,
+    right_sig: DataFrame,
+    num_hashes: int,
+    threshold: float,
+    rows_per_band: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Ids from ``left_sig`` whose estimated Jaccard (fraction of equal
+    minhash positions) with ANY ``right_sig`` row reaches ``threshold``.
+    Candidates are pruned by LSH band collision first, so the quadratic
+    estimate runs only on bucket collisions."""
+    lb = minhash_bands(left_sig, rows_per_band, id_col)
+    rb = minhash_bands(right_sig, rows_per_band, id_col).select(
+        F.col(id_col).alias("_rid"), "band", "band_hash"
+    )
+    cand = (
+        lb.join(rb, ["band", "band_hash"])
+        .select(id_col, "_rid")
+        .distinct()
+    )
+    l = left_sig.select(
+        id_col, *[F.col(f"m{i}").alias(f"_la{i}") for i in range(num_hashes)]
+    )
+    r = right_sig.select(
+        F.col(id_col).alias("_rid"),
+        *[F.col(f"m{i}").alias(f"_ra{i}") for i in range(num_hashes)],
+    )
+    est = sum(
+        F.when(F.col(f"_la{i}") == F.col(f"_ra{i}"), 1).otherwise(0)
+        for i in range(num_hashes)
+    ) / F.lit(float(num_hashes))
+    return (
+        cand.join(l, id_col)
+        .join(r, "_rid")
+        .where(est >= F.lit(threshold))
+        .select(id_col)
+        .distinct()
+    )
+
+
 def near_dup_vs_reference(
     new_docs: DataFrame,
     ref_docs: DataFrame,
@@ -315,7 +426,7 @@ def near_dup_vs_reference(
     already deduped, only the fresh batch needs checking, and the
     reference side is touched as signatures only (k longs per doc),
     never as text. The batch twin of the streaming near-dup filter's
-    store match (``streaming/dedup.py::signature_match``, reused here).
+    store match: both call :func:`signature_match`.
 
     Returns DataFrame(id_col, is_dup_of_ref boolean) — one row per new
     doc. Matching is the MinHash position-agreement estimate
@@ -331,8 +442,6 @@ def near_dup_vs_reference(
     against it with ``signature_match`` directly (the streaming
     filter's store does exactly this).
     """
-    from dbscan_pyspark_spark.streaming.dedup import signature_match
-
     # signature_match references each signature relation twice (band
     # build + estimate join) — truncate so the shingle+min-hash subtree
     # computes once per side, not twice (4 text scans -> 2)
@@ -372,10 +481,11 @@ def minhash_near_dup_pairs(
     """MinHash-LSH near-dup: candidates share >= 1 band bucket, then the
     *exact* shingle Jaccard verifies. DataFrame(a_id, b_id, jaccard).
 
-    The band equi-join is the only wide exchange over candidates —
-    at scale this is the standard shingle->minhash->band->bucket-join
-    pipeline; the verification joins each candidate pair to its two
-    docs' shingle arrays by id and touches no other doc.
+    The band equi-join (:func:`_bucket_pairs` on (band, band_hash)) is
+    the only wide exchange over candidates — at scale this is the
+    standard shingle->minhash->band->bucket-join pipeline; the
+    verification joins each candidate pair to its two docs' shingle
+    arrays by id and touches no other doc.
 
     Degenerate-bucket guard: identical normalized texts are contracted
     to ONE representative (md5 content key) BEFORE banding, so a
@@ -387,9 +497,10 @@ def minhash_near_dup_pairs(
     pairs inherit their representatives' verified Jaccard (Jaccard is
     a function of the shingle SETS, which the content key determines),
     so the expansion after verification is exact, not approximate.
-    The expanded pair list is still quadratic in clique size — that is
-    the output's own semantics — but it is produced by one equi-join,
-    never shuffled through banding or verification.
+    The expanded pair list (:func:`_expand_groups`, shared with
+    SimHash) is still quadratic in clique size — that is the output's
+    own semantics — but it comes from equi-joins on the member rows,
+    never through banding or verification.
 
     The guard is ADAPTIVE and costs no extra corpus scan: identical
     content implies an identical signature, so the largest
@@ -439,9 +550,6 @@ def minhash_near_dup_pairs(
         # RESTRICTED to rep ids by semi-join (no re-shingling — dup
         # members' rows are identical to their rep's by construction),
         # and the verification's id joins then read reps' sets only.
-        # The intra expansion below requires the rep to HAVE a
-        # signature, matching the uncontracted pipeline where
-        # shingle-less docs never reach the band join.
         keyed = df.select(
             F.col(id_col), F.md5(normalized(text_col)).alias("_k")
         ).where(F.col("_k").isNotNull())
@@ -451,96 +559,32 @@ def minhash_near_dup_pairs(
         sig_v = sig.join(reps.select(id_col), id_col, "left_semi")
     else:
         sig_v = sig
-    cand = _band_candidates(minhash_bands(sig_v, rows_per_band, id_col), id_col)
-    rep_pairs = _verify_exact_jaccard(sets, cand, id_col, threshold).localCheckpoint(
+    cand = _bucket_pairs(
+        minhash_bands(sig_v, rows_per_band, id_col), id_col, "band", "band_hash"
+    )
+    pairs = _verify_exact_jaccard(sets, cand, id_col, threshold).localCheckpoint(
         eager=True
     )
-
-    if not contract:
-        # uncontracted pipeline: every doc carried its own signature,
-        # so verified pairs ARE the member pairs
-        sig.unpersist()
-        sets.unpersist()
-        return rep_pairs
-
-    # Expand rep pairs back to member pairs. Cross-group: every
-    # (member of a's group, member of b's group) pair carries the
-    # reps' exact Jaccard; least/greatest restores a_id < b_id (group
-    # id ranges interleave). Intra-group: all i < j pairs within a
-    # group whose rep has a signature, Jaccard exactly 1.
-    #
-    # The expanded output can be QUADRATIC in clique sizes (its own
-    # semantics), so it is returned LAZY — never checkpointed. What IS
-    # eagerly materialized, so every cache can be released before
-    # returning (a streaming caller invokes this per micro-batch), is
-    # the bounded input to the expansion: the groups that participate
-    # in any output pair, and their member rows.
-    rep_map = reps.select("_k", F.col(id_col).alias("_rep"))
-    pair_rep_ids = (
-        rep_pairs.select(F.col("a_id").alias("_rep"))
-        .unionByName(rep_pairs.select(F.col("b_id").alias("_rep")))
-        .distinct()
-    )
-    intra_keys = (
-        reps.where(F.col("_gsize") >= 2)
-        .join(sig_v.select(id_col), id_col, "left_semi")
-        .select("_k")
-    )
-    # keys_needed touches sig/reps, so it must materialize BEFORE the
-    # caches release; members_needed's remaining lineage is only the
-    # cheap md5 projection over docs joined against this checkpointed
-    # key set (AQE broadcasts it when small), so IT can stay a lazy
-    # checkpoint — the caller's first action materializes it once,
-    # every later consumer reads the cached blocks.
-    keys_needed = (
-        rep_map.join(pair_rep_ids, "_rep", "left_semi")
-        .unionByName(rep_map.join(intra_keys, "_k", "left_semi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # keys_needed is one row per participating dup group — usually tiny
-    # but unbounded on duplicate-heavy corpora, so the join strategy is
-    # left to AQE (broadcast when small, shuffle when not) rather than
-    # a forced broadcast that could OOM (ADVICE r9)
-    members_needed = keyed.select(id_col, "_k").join(
-        keys_needed, "_k"
-    ).localCheckpoint(eager=False)
+    if contract:
+        # Uncontracted, every doc carries its own signature, so the
+        # verified pairs ARE the member pairs. Contracted, they are rep
+        # pairs: expand them. Only groups whose rep HAS a signature
+        # expand, as shingle-less docs never reach the band join
+        # uncontracted; their intra pairs sit at Jaccard exactly 1, so
+        # a threshold above 1 must still drop them.
+        pairs = _expand_groups(
+            pairs,
+            reps.join(sig.select(id_col), id_col, "left_semi"),
+            keyed,
+            "_k",
+            id_col,
+            "jaccard",
+            1.0,
+        ).where(F.col("jaccard") >= threshold)
+        reps.unpersist()
     sig.unpersist()
     sets.unpersist()
-    reps.unpersist()
-    m_a = members_needed.select(
-        F.col("_rep").alias("a_id"), F.col(id_col).alias("_ma")
-    )
-    m_b = members_needed.select(
-        F.col("_rep").alias("b_id"), F.col(id_col).alias("_mb")
-    )
-    inter = (
-        rep_pairs.join(m_a, "a_id")
-        .join(m_b, "b_id")
-        .select(
-            F.least("_ma", "_mb").alias("a_id"),
-            F.greatest("_ma", "_mb").alias("b_id"),
-            "jaccard",
-        )
-    )
-    # members_needed also carries singleton groups from pair_reps —
-    # the i < j self-join emits nothing for those, and every >= 2
-    # group present is by construction signature-bearing
-    x, y = members_needed.alias("x"), members_needed.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x._k") == F.col("y._k"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("a_id"),
-            F.col(f"y.{id_col}").alias("b_id"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .where(F.lit(1.0) >= F.lit(threshold))
-    )
-    return inter.unionByName(intra)
+    return pairs
 
 
 def winnow_fingerprints(
@@ -693,10 +737,12 @@ def simhash_near_dups(
     representative before the block join — an exact-duplicate clique
     (which shares every block at any d) contributes ONE row per block
     instead of a clique-wide bucket whose self-join is C(clique, 2) x
-    n_blocks candidate rows. Intra-group pairs are emitted directly at
-    Hamming 0; cross-group pairs inherit their representatives'
-    verified distance. Exact, not approximate — the contraction key IS
-    the quantity the verify computes over."""
+    n_blocks candidate rows. The candidates are one
+    :func:`_bucket_pairs` call on (blk, bits), and
+    :func:`_expand_groups` turns the verified rep pairs back into
+    member pairs: intra-group at Hamming 0, cross-group at the reps'
+    distance. Exact, not approximate — the contraction key IS the
+    quantity the verify computes over."""
     if not 0 <= max_hamming < 64:
         raise ValueError(
             f"simhash_near_dups: max_hamming must be in [0, 64), "
@@ -722,20 +768,7 @@ def simhash_near_dups(
     banded = sig.select(
         F.col(id_col), F.posexplode(blocks).alias("blk", "bits")
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(banded, id_col, "blk", "bits")
     # verify via XOR + bit_count over four fixed 16-bit chunk ints —
     # whole-stage codegen, ~4 integer ops per candidate. The
     # per-position string-compare lambda it replaces ran interpreted
@@ -766,58 +799,12 @@ def simhash_near_dups(
         .where(F.col("hamming") <= max_hamming)
         .localCheckpoint(eager=True)
     )
-    # Expand: cross-group members inherit the reps' distance (least/
-    # greatest restores a_id < b_id); intra-group pairs are Hamming 0.
-    # The expansion is quadratic in clique sizes (the output's own
-    # semantics) so it stays LAZY; only its bounded input — the
-    # participating fingerprints and their member rows — is eagerly
-    # materialized, letting the caches release before returning.
-    sig_map = groups.select("simhash", F.col(id_col).alias("_rep"))
-    pair_rep_ids = (
-        rep_pairs.select(F.col("a_id").alias("_rep"))
-        .unionByName(rep_pairs.select(F.col("b_id").alias("_rep")))
-        .distinct()
-    )
-    dup_sigs = groups.where(F.col("_gsize") >= 2).select("simhash")
-    keys_needed = (
-        sig_map.join(pair_rep_ids, "_rep", "left_semi")
-        .unionByName(sig_map.join(dup_sigs, "simhash", "left_semi"))
-        .distinct()
-    )
-    members_needed = full_sig.join(keys_needed, "simhash").localCheckpoint(
-        eager=True
+    pairs = _expand_groups(
+        rep_pairs, groups, full_sig, "simhash", id_col, "hamming", 0
     )
     groups.unpersist()
     full_sig.unpersist()
-    m_a = members_needed.select(
-        F.col("_rep").alias("a_id"), F.col(id_col).alias("_ma")
-    )
-    m_b = members_needed.select(
-        F.col("_rep").alias("b_id"), F.col(id_col).alias("_mb")
-    )
-    inter = (
-        rep_pairs.join(m_a, "a_id")
-        .join(m_b, "b_id")
-        .select(
-            F.least("_ma", "_mb").alias("a_id"),
-            F.greatest("_ma", "_mb").alias("b_id"),
-            "hamming",
-        )
-    )
-    x, y = members_needed.alias("x"), members_needed.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x.simhash") == F.col("y.simhash"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("a_id"),
-            F.col(f"y.{id_col}").alias("b_id"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return inter.unionByName(intra)
+    return pairs
 
 
 def cross_contamination(
@@ -1287,7 +1274,9 @@ def minhash_estimate_errors(
     sig = minhash_signatures(
         df, num_hashes, n, text_col, id_col, shingles=sets
     ).persist()
-    cand = _band_candidates(minhash_bands(sig, rows_per_band, id_col), id_col)
+    cand = _bucket_pairs(
+        minhash_bands(sig, rows_per_band, id_col), id_col, "band", "band_hash"
+    )
 
     sig_a = sig.select(
         F.col(id_col).alias("a_id"),
@@ -1372,19 +1361,7 @@ def jaccard_prefix_filter_pairs(
     prefix = ranked.where(
         F.col("_pos") <= F.col("n_sh") - alpha + 1
     ).select(id_col, "shingle")
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(prefix, id_col, "shingle")
     out = _verify_exact_jaccard(sets, cand, id_col, threshold).localCheckpoint(
         eager=True
     )

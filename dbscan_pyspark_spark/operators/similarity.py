@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.functions.distance import dot, l2_distance_sq, norm2
 from dbscan_pyspark_spark.functions.text import normalized
+from dbscan_pyspark_spark.operators.dedup import _bucket_pairs
 from dbscan_pyspark_spark.operators.kmeans import _assign, _centroid_row
 
 # Above this many vectors the exact all-pairs near-dup path refuses to
@@ -341,10 +342,13 @@ def rp_lsh_near_dup_pairs(
     are engine-reproducible and the pipeline carries an exact DuckDB
     oracle (`embedding_near_dups_lsh_exact`), which no float-projection
     LSH can.
+
+    NULL and empty vectors pair with nothing; vectors of different
+    lengths raise a ValueError.
     """
     if rows_per_band == "auto":
-        # one count job sizes the banding to the corpus (the 117×
-        # stress lesson); explicit ints skip the count entirely.
+        # the banding is sized to the corpus (the 117× stress lesson)
+        # from the count the length aggregate below reads anyway.
         # auto OWNS n_planes — silently overriding an explicit plane
         # count would hand back lower recall than the caller asked
         # for, so ANY explicit value (including 16, the pre-sentinel
@@ -355,7 +359,6 @@ def rp_lsh_near_dup_pairs(
                 "n_planes itself — pass n_planes=None (or set both "
                 "explicitly to tune recall)"
             )
-        n_planes, rows_per_band = auto_band_size(vectors.count())
     elif (
         not isinstance(rows_per_band, int)
         or isinstance(rows_per_band, bool)
@@ -369,12 +372,29 @@ def rp_lsh_near_dup_pairs(
             "rp_lsh_near_dup_pairs: rows_per_band must be a positive "
             f"int or the string 'auto', got {rows_per_band!r}"
         )
-    if n_planes is None:
+    # NULL and empty vectors project to NULL, i.e. all-zero bits in
+    # every band, one shared bucket: they are not banded. One aggregate
+    # reads the count ('auto') and the length range (a single dim).
+    vectors = vectors.where(F.size(vec_col) > 0)
+    st = vectors.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.size(vec_col)).alias("lo"),
+        F.max(F.size(vec_col)).alias("hi"),
+    ).first()
+    if not st["n"]:
+        raise ValueError(
+            "rp_lsh_near_dup_pairs: empty vectors (none non-NULL and non-empty)"
+        )
+    if st["lo"] != st["hi"]:
+        raise ValueError(
+            f"rp_lsh_near_dup_pairs: {vec_col} lengths range from {st['lo']} "
+            f"to {st['hi']}; every vector must have the same dim"
+        )
+    dim = int(st["hi"])
+    if rows_per_band == "auto":
+        n_planes, rows_per_band = auto_band_size(st["n"])
+    elif n_planes is None:
         n_planes = 16
-    dim_row = vectors.select(F.size(vec_col).alias("d")).first()
-    if dim_row is None:
-        raise ValueError("empty vectors")
-    dim = int(dim_row["d"])
     if n_planes % rows_per_band:
         raise ValueError(
             "rp_lsh_near_dup_pairs: n_planes must be a multiple of "
@@ -390,23 +410,11 @@ def rp_lsh_near_dup_pairs(
         seed=seed,
         plane_scale=plane_scale,
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    # id-only candidates: the band exchange and the distinct both run
-    # on ~20 B rows; vectors join back onto the DEDUPED candidate set
-    # (near-dup candidates << corpus), two id-keyed joins
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-        )
-        .distinct()
-    )
+    # id-only candidates (dedup._bucket_pairs): the band exchange and
+    # the distinct both run on ~20 B rows; vectors join back onto the
+    # DEDUPED candidate set (near-dup candidates << corpus), two
+    # id-keyed joins
+    cand = _bucket_pairs(banded, id_col, "band", "bits")
     va = vectors.select(
         F.col(id_col).alias("a_id"),
         F.col(vec_col).alias("_av"),

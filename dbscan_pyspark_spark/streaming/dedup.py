@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.operators.dedup import minhash_bands, minhash_signatures
+from dbscan_pyspark_spark.operators.dedup import minhash_signatures, signature_match
 from dbscan_pyspark_spark.operators.pipeline import near_dup_dedup
 
 
@@ -51,47 +51,6 @@ def _read_store(spark, store_dir: str, before_batch: int) -> DataFrame | None:
             return None
         raise
     return store.where(F.col("ingest_batch") < F.lit(before_batch))
-
-
-def signature_match(
-    left_sig: DataFrame,
-    right_sig: DataFrame,
-    num_hashes: int,
-    threshold: float,
-    rows_per_band: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Ids from ``left_sig`` whose estimated Jaccard (fraction of equal
-    minhash positions) with ANY ``right_sig`` row reaches ``threshold``.
-    Candidates are pruned by LSH band collision first, so the quadratic
-    estimate runs only on bucket collisions."""
-    lb = minhash_bands(left_sig, rows_per_band, id_col)
-    rb = minhash_bands(right_sig, rows_per_band, id_col).select(
-        F.col(id_col).alias("_rid"), "band", "band_hash"
-    )
-    cand = (
-        lb.join(rb, ["band", "band_hash"])
-        .select(id_col, "_rid")
-        .distinct()
-    )
-    l = left_sig.select(
-        id_col, *[F.col(f"m{i}").alias(f"_la{i}") for i in range(num_hashes)]
-    )
-    r = right_sig.select(
-        F.col(id_col).alias("_rid"),
-        *[F.col(f"m{i}").alias(f"_ra{i}") for i in range(num_hashes)],
-    )
-    est = sum(
-        F.when(F.col(f"_la{i}") == F.col(f"_ra{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    ) / F.lit(float(num_hashes))
-    return (
-        cand.join(l, id_col)
-        .join(r, "_rid")
-        .where(est >= F.lit(threshold))
-        .select(id_col)
-        .distinct()
-    )
 
 
 def process_near_dup_batch(

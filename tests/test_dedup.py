@@ -580,6 +580,56 @@ def test_simhash_near_dups_pigeonhole_exact(spark):
         simhash_near_dups(df, max_hamming=64)
 
 
+def _brute_simhash(text):
+    # plain-Python simhash64: +-1 per distinct normalized token on each
+    # md5 bit, bit set iff the sum is positive
+    import hashlib
+    import re
+
+    sums = [0] * 64
+    for tok in {t for t in re.split("[^a-z0-9]+", text.lower()) if t}:
+        h = hashlib.md5(tok.encode()).hexdigest()
+        for b in range(64):
+            sums[b] += 1 if int(h[b // 4], 16) & (8 >> (b % 4)) else -1
+    return "".join("1" if v > 0 else "0" for v in sums)
+
+
+def test_simhash_near_dups_matches_brute_force(spark):
+    # an identical-text group of 3 (ids 1, 4, 6: interleaved with the
+    # near copy 5, so cross-group pairs need least/greatest), a near
+    # copy at Hamming 5, a NULL text (no fingerprint, no pair) and two
+    # unrelated docs. Covers the contraction's intra- and cross-group
+    # expansion against all-pairs Hamming.
+    from itertools import combinations
+
+    from dbscan_pyspark_spark.operators.dedup import simhash64, simhash_near_dups
+
+    base = " ".join(f"tok{i}" for i in range(60))
+    docs = [
+        (1, base),
+        (2, " ".join(f"other{i}" for i in range(60))),
+        (3, None),
+        (4, base),
+        (5, base + " extra1"),
+        (6, base.upper() + "!"),
+        (7, "a short unrelated note about parquet files"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    sig = {d: _brute_simhash(t) for d, t in docs if t is not None}
+    assert {r.doc_id: r.simhash for r in simhash64(df).collect()} == sig
+    ham = {
+        (a, b): sum(x != y for x, y in zip(sig[a], sig[b]))
+        for a, b in combinations(sorted(sig), 2)
+    }
+    assert ham[(1, 5)] == ham[(5, 6)] == 5
+    for d in (0, 7):
+        got = {
+            (r.a_id, r.b_id): r.hamming
+            for r in simhash_near_dups(df, max_hamming=d).collect()
+        }
+        assert got == {p: h for p, h in ham.items() if h <= d}, d
+
+
 # ---------------------------------------------------------------------------
 # sorted-neighborhood candidate pairs
 
@@ -662,8 +712,11 @@ def test_minhash_adaptive_guard_branch_equivalence(spark, monkeypatch):
     # (256) keeps the uncontracted shape
     from dbscan_pyspark_spark.operators import dedup as dedup_mod
 
+    # plus a pair of identical texts shorter than n=3 tokens: no
+    # shingles, so neither branch may pair them
     df_cliq = spark.createDataFrame(
-        base + [(2, base[0][1]), (4, base[1][1])], ["doc_id", "text"]
+        base + [(2, base[0][1]), (4, base[1][1]), (8, "hi there"), (9, "hi there")],
+        ["doc_id", "text"],
     )
     results = {}
     for mode, min_clique in (("contracted", 2), ("uncontracted", 256)):
@@ -679,6 +732,7 @@ def test_minhash_adaptive_guard_branch_equivalence(spark, monkeypatch):
     # reps' verified jaccard, and the original clique-free pairs are
     # reproduced bit-identically
     assert cliq[(1, 2)] == 1.0 and cliq[(3, 4)] == 1.0
+    assert not {8, 9} & {d for pair in cliq for d in pair}
     for pair, j in free.items():
         assert cliq[pair] == j
     assert cliq[(2, 4)] == cliq[(1, 3)] == free[(1, 3)]

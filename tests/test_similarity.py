@@ -319,6 +319,40 @@ def test_rp_lsh_integer_planes_subset_of_exact(spark):
     assert got == again
 
 
+def test_rp_lsh_skips_null_embeddings_and_rejects_ragged(spark):
+    # NULL and empty embeddings project to NULL, which used to give them
+    # all-zero bits in every band: one shared bucket per band, whose
+    # self-join the verify then emptied. They are no longer banded, pair
+    # with nothing, and semantic_dedup keeps each as a singleton
+    # survivor. A vector of another length raises instead of silently
+    # missing every pair.
+    import numpy as np
+
+    from dbscan_pyspark_spark.operators.similarity import (
+        rp_lsh_near_dup_pairs,
+        semantic_dedup,
+    )
+
+    X = np.random.default_rng(7).normal(size=(12, 8))
+    rows = [(i, [int(round(x * 1000)) for x in v]) for i, v in enumerate(X)]
+    rows += [(12, rows[0][1])]  # exact duplicate of 0
+    rows += [(100 + i, None) for i in range(5)] + [(200, [])]
+    df = spark.createDataFrame(rows, "vec_id long, qemb array<long>")
+    kw = dict(threshold=0.99, vec_col="qemb", plane_scale=1000)
+    got = {(r.a_id, r.b_id) for r in rp_lsh_near_dup_pairs(df, **kw).collect()}
+    assert got == {(0, 12)}
+    surv = sorted(r.vec_id for r in semantic_dedup(df, **kw).collect())
+    assert surv == list(range(12)) + [100, 101, 102, 103, 104, 200]
+
+    ragged = df.unionByName(
+        spark.createDataFrame([(300, [1, 2, 3])], "vec_id long, qemb array<long>")
+    )
+    with pytest.raises(ValueError, match="from 3 to 8"):
+        rp_lsh_near_dup_pairs(ragged, **kw)
+    with pytest.raises(ValueError, match="empty vectors"):
+        rp_lsh_near_dup_pairs(df.where("vec_id >= 100"), **kw)
+
+
 def test_semantic_dedup_transitive_groups_and_representative(spark):
     """A~B and B~C land in ONE dup group even when A!~C (transitive
     closure, not pairwise greedy); default representative is the min
