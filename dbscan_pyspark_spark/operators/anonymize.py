@@ -3,9 +3,10 @@
 Rebuilds the reference's anonymization stage declaratively:
 
 - per-cluster centroid  = per-dimension mean (``calc_error``/``anonymize``,
-  ``DBSCAN.py:86-117``) — a single groupBy with one ``avg`` per dimension
-  (map-side partial agg; no ``collect_list`` of whole clusters, so no
-  group can exceed executor memory);
+  ``DBSCAN.py:86-117``) — ``_means``, a single groupBy with one
+  (weighted) mean per dimension (map-side partial agg; no
+  ``collect_list`` of whole clusters, so no group can exceed executor
+  memory);
 - noise points take their *nearest* centroid (``assign_nearest`` over a
   broadcast list, ``DBSCAN.py:126-133,187-192``) — here the centroids
   are one broadcast row (``kmeans._centroid_row``) and each point is
@@ -16,19 +17,24 @@ Rebuilds the reference's anonymization stage declaratively:
   order makes it deterministic);
 - information-loss metrics per ε (``eps_records``, ``DBSCAN.py:135-152``).
 
+One generalization (``_generalize``: own centroid, else the nearest)
+and one loss aggregate over it (``_loss``) serve ``anonymize``,
+``information_loss`` and the ε-sweep's Spark scorer; the sweep weighs
+each contracted rep by its multiplicity ``_mult``.
+
 The ε-sweep computes the pair set ONCE at max ε and filters per ε
 (neighbors at ε ⊆ neighbors at ε' > ε) — turning the reference's
 Σ O(n²) sweep into one grid join (SURVEY.md §4 'iterative compute').
 Where each level is scored follows where it was labeled: when
 ``dbscan._rep_labels`` solved the sweep on the driver, every level's
 metrics are weighted numpy sums over the labels and reps it already
-holds (``_score_levels``); otherwise the concurrent per-ε Spark bodies
-score them — the distributed twin. ``components._on_driver`` makes both
-choices.
+holds (``_score_levels``); otherwise each level is one ``_loss`` action
+over its reps, several levels in flight — the distributed twin.
+``components._on_driver`` makes both choices.
 
-Small driver-built frames (metric rows, centroid and repair tables)
-go through ``_local_frame``: Arrow ships them to the JVM, so scanning
-or broadcasting them never starts a Python task.
+The sweep's metric rows are built on the driver and go through
+``_local_frame``: Arrow ships them to the JVM, so scanning them never
+starts a Python task.
 """
 
 from __future__ import annotations
@@ -64,18 +70,21 @@ def cluster_centroids(
     return _means(joined, features, cluster_col, dim)
 
 
-def _means(df: DataFrame, features: str, cluster_col: str, dim: int) -> DataFrame:
-    """DataFrame(cluster_col, centroid array<double>, n_members): the
-    per-dimension mean of ``features`` over each ``cluster_col`` group."""
-    aggs = [F.avg(F.col(features)[i]).alias(f"_c{i}") for i in range(dim)] + [
-        F.count(F.lit(1)).alias("n_members")
-    ]
-    g = df.groupBy(cluster_col).agg(*aggs)
-    return g.select(
-        cluster_col,
-        F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
-        "n_members",
-    )
+def _means(
+    df: DataFrame, features: str, cluster_col: str, dim: int, w: str | None = None
+) -> DataFrame:
+    """DataFrame(cluster_col, centroid array<double>, n_members): per
+    ``cluster_col`` group, the ``w``-weighted mean of ``features`` in
+    each dimension, Σx·w / Σw, and n_members = Σw — the package's one
+    centroid formula. With ``w`` None every weight is 1 and the mean is
+    Spark's ``avg``, which skips a NULL element; spelled as weighted
+    sums it made ``anonymize`` slower to plan and run."""
+    xs = [F.col(features)[i] for i in range(dim)]
+    if w is None:
+        means, n = [F.avg(x) for x in xs], F.count(F.lit(1))
+    else:
+        means, n = [F.sum(x * F.col(w)) / F.sum(w) for x in xs], F.sum(w)
+    return df.groupBy(cluster_col).agg(F.array(*means).alias("centroid"), n.alias("n_members"))
 
 
 def assign_nearest(
@@ -118,6 +127,71 @@ def assign_nearest(
     ).select(id_col, cluster_col, "distance")
 
 
+def _generalize(
+    rows: DataFrame, features: str, dist, dim: int, w: str | None = None
+) -> DataFrame:
+    """``rows`` plus ``centroid``, the generalized features, ``_d``, the
+    distance to it, and ``_noise``. ``rows`` carries ``features`` and
+    ``cluster_id``, NULL for noise. A clustered row takes its own
+    cluster's ``w``-weighted centroid (``_means``). A noise row takes the
+    nearest centroid and its cluster id (``kmeans._assign`` against
+    ``_centroid_row``, ties to the lower id); with no cluster at all it
+    has none to take and is dropped."""
+    own = rows.where(F.col("cluster_id").isNotNull())
+    cents = _means(own, features, "cluster_id", dim, w).select("cluster_id", "centroid")
+    clustered = own.join(cents, "cluster_id").select(
+        "*", dist(features, "centroid").alias("_d"), F.lit(False).alias("_noise")
+    )
+    # left: an inner join would infer isnotnull(cluster_id) and push the
+    # argmin into the cross join's condition, running it twice
+    noise = _assign(
+        rows.where(F.col("cluster_id").isNull()).drop("cluster_id"),
+        _centroid_row(cents, "cluster_id", "centroid"),
+        v_col=features,
+        out_col="cluster_id",
+        dist=dist,
+        dist_col="_d",
+    ).join(F.broadcast(cents), "cluster_id", "left")
+    return clustered.unionByName(noise.withColumn("_noise", F.lit(True)))
+
+
+def _loss(
+    rows: DataFrame, gen: DataFrame, w: str | None = None, solo: str | None = None
+) -> DataFrame:
+    """The one-row metrics frame (n_clusters, n_noise, cluster_error,
+    noise_error, total_error) of the reference's eps_records
+    (``DBSCAN.py:135-152``) for ``rows`` and their generalization
+    ``gen = _generalize(rows, ...)``, each row standing for ``w`` points
+    (1 when None). A row flagged by the ``solo`` column is ``w``
+    singleton clusters. With no cluster at all the row is the
+    reference's ``(0, n, 0, inf, inf)`` (``DBSCAN.py:163-168``)."""
+    one = F.lit(1) if w is None else F.col(w)
+    single = F.lit(False) if solo is None else F.col(solo)
+    cid = F.col("cluster_id")
+    counts = rows.agg(
+        (
+            F.count_distinct(F.when(~single, cid))
+            + F.coalesce(F.sum(F.when(single, one)), F.lit(0))
+        ).alias("n_clusters"),
+        F.coalesce(F.sum(F.when(cid.isNull(), one)), F.lit(0)).alias("n_noise"),
+    )
+
+    def err(noise):
+        return F.coalesce(
+            F.sum(F.when(F.col("_noise") == noise, one * F.col("_d"))), F.lit(0.0)
+        )
+
+    errors = gen.agg(err(False).alias("cluster_error"), err(True).alias("_ne"))
+    noise_error = F.when(F.col("n_clusters") == 0, float("inf")).otherwise(F.col("_ne"))
+    return counts.crossJoin(errors).select(
+        "n_clusters",
+        "n_noise",
+        "cluster_error",
+        noise_error.alias("noise_error"),
+        (F.col("cluster_error") + noise_error).alias("total_error"),
+    )
+
+
 def anonymize(
     points: DataFrame,
     labels: DataFrame,
@@ -129,40 +203,24 @@ def anonymize(
 ) -> DataFrame:
     """Replace each point's quasi-identifiers by its cluster centroid.
 
-    Clustered points take their own cluster's centroid; noise points the
-    nearest cluster centroid (``DBSCAN.py:200-205`` union). Output:
-    DataFrame(id, features, an_features, sensitive, cluster_id, is_noise)
-    — the sensitive attribute rides through untouched (``DBSCAN.py:84``).
+    Clustered points take their own cluster's centroid; noise points
+    (NULL ``cluster_id``, where ``dbscan`` sets ``is_noise``) the
+    nearest cluster centroid and its id (``DBSCAN.py:200-205`` union).
+    Output: DataFrame(id, features, an_features, sensitive, cluster_id,
+    is_noise) — the sensitive attribute rides through untouched
+    (``DBSCAN.py:84``).
     """
     if dim is None:
         dim = _dim_of(points, features)
-    cents = cluster_centroids(points, labels, features=features, id_col=id_col, dim=dim)
-    lab = labels.select(id_col, "cluster_id", "is_noise")
-    pts = points.join(lab, id_col)
-
-    clustered = (
-        pts.where(~F.col("is_noise"))
-        .join(cents.select("cluster_id", "centroid"), "cluster_id")
-    )
-    # left: an inner join would infer isnotnull(cluster_id) and push the
-    # argmin into the cross join's condition, running it twice
-    noise_assigned = _assign(
-        pts.where(F.col("is_noise")).drop("cluster_id"),
-        _centroid_row(cents, "cluster_id", "centroid"),
-        v_col=features,
-        out_col="cluster_id",
-        dist=_metric_fn(metric, dim),
-    ).join(F.broadcast(cents.select("cluster_id", "centroid")), "cluster_id", "left")
-
-    out_cols = [
-        F.col(id_col),
-        F.col(features),
+    rows = points.join(labels.select(id_col, "cluster_id", "is_noise"), id_col)
+    return _generalize(rows, features, _metric_fn(metric, dim), dim).select(
+        id_col,
+        features,
         F.col("centroid").alias("an_features"),
-        F.col(sensitive_col),
-        F.col("cluster_id"),
-        F.col("is_noise"),
-    ]
-    return clustered.select(*out_cols).unionByName(noise_assigned.select(*out_cols))
+        sensitive_col,
+        "cluster_id",
+        "is_noise",
+    )
 
 
 def information_loss(
@@ -182,36 +240,8 @@ def information_loss(
     ``[eps, 0, n, 0, inf, inf]`` row (``DBSCAN.py:163-168``)."""
     if dim is None:
         dim = _dim_of(points, features)
-    dist = _metric_fn(metric, dim)
-    spark = points.sparkSession
-    if labels.where(F.col("cluster_id").isNotNull()).isEmpty():
-        n = points.count()
-        inf = float("inf")
-        return _local_frame(
-            spark,
-            [(0, n, 0.0, inf, inf)],
-            "n_clusters long, n_noise long, cluster_error double, "
-            "noise_error double, total_error double",
-        )
-    an = anonymize(points, labels, metric=metric, features=features, id_col=id_col, dim=dim)
-    return an.agg(
-        F.count_distinct(F.when(~F.col("is_noise"), F.col("cluster_id"))).alias(
-            "n_clusters"
-        ),
-        F.sum(F.when(F.col("is_noise"), 1).otherwise(0)).alias("n_noise"),
-        F.coalesce(
-            F.sum(F.when(~F.col("is_noise"), dist(features, "an_features"))), F.lit(0.0)
-        ).alias("cluster_error"),
-        F.coalesce(
-            F.sum(F.when(F.col("is_noise"), dist(features, "an_features"))), F.lit(0.0)
-        ).alias("noise_error"),
-    ).select(
-        "n_clusters",
-        "n_noise",
-        "cluster_error",
-        "noise_error",
-        (F.col("cluster_error") + F.col("noise_error")).alias("total_error"),
-    )
+    rows = points.select(id_col, features).join(labels.select(id_col, "cluster_id"), id_col)
+    return _loss(rows, _generalize(rows, features, _metric_fn(metric, dim), dim))
 
 
 def _driver_dist(a, b, metric: str):
@@ -233,8 +263,8 @@ def _driver_dist(a, b, metric: str):
 def _score_levels(levels, reps_pdf, eps_values, min_cluster_size, metric, features, id_col):
     """Every ε level's metrics row, computed on the driver from
     ``_rep_labels``' per-level label frames ``levels`` and its collect of
-    the reps — ``eps_sweep``'s per-ε Spark body, term for term, in
-    numpy:
+    the reps — ``_loss`` over ``_generalize`` with ``w = _mult``, the
+    sweep's Spark scorer, term for term, in numpy:
 
     - with ``min_cluster_size <= 1`` an unlabeled rep is a singleton
       cluster: its centroid is its own point and it adds ``_mult``
@@ -304,10 +334,11 @@ def eps_sweep(
     solved them in one driver pass, every level is scored on the driver
     too (``_score_levels``: weighted numpy sums over the labels and reps
     that pass already holds, no Spark job) unless ``_on_driver`` sends
-    its noise × centroid work to the distributed twin, the concurrent
-    per-ε Spark bodies below. Per-point metrics are exact because duplicates share
-    features: Σ_points dist = Σ_reps mult·dist, and centroids are
-    multiplicity-weighted means.
+    its noise × centroid work to the distributed twin: per ε, one
+    ``_loss(...).first()`` over the reps left-joined to that level's
+    labels, ``_mult`` the weight, up to three levels in flight. Per-point
+    metrics are exact because duplicates share features: Σ_points dist =
+    Σ_reps mult·dist, and centroids are multiplicity-weighted means.
 
     Returns (metrics DataFrame with one row per ε, best_eps) where best
     minimizes total_error — ties to the smaller ε, matching the
@@ -325,8 +356,6 @@ def eps_sweep(
         reps, reps, max(eps_values), metric=metric, features=features,
         id_col=id_col, dim=dim, payload_b=["_mult"],
     ).persist()
-    inf = float("inf")
-    n_total = None  # the twin counts it
 
     def _one_eps(eps):
         # one ε's labels + weighted metrics; bodies for different ε
@@ -336,7 +365,7 @@ def eps_sweep(
         # min_cluster_size <= 1 is edgeless: each of its rows is a
         # singleton cluster at the rep's point.
         solo = F.col("cluster_id").isNull() & F.lit(min_cluster_size <= 1)
-        rep_labels = (
+        rows = (
             reps.join(labels_at(eps), id_col, "left")
             .select(
                 id_col,
@@ -349,71 +378,19 @@ def eps_sweep(
             )
             .persist()
         )
-
-        clustered = rep_labels.where(F.col("cluster_id").isNotNull())
-
-        # weighted centroids
-        cents = (
-            clustered.groupBy("cluster_id")
-            .agg(
-                *[
-                    (
-                        F.sum(F.col(features)[i] * F.col("_mult"))
-                        / F.sum("_mult")
-                    ).alias(f"_c{i}")
-                    for i in range(dim)
-                ]
-            )
-            .select(
-                "cluster_id",
-                F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("centroid"),
-            )
-        )
-        cluster_agg = clustered.join(cents, "cluster_id").agg(
-            (
-                F.count_distinct(F.when(~F.col("_solo"), F.col("cluster_id")))
-                + F.coalesce(F.sum(F.when(F.col("_solo"), F.col("_mult"))), F.lit(0))
-            ).alias("n_clusters"),
-            F.sum(F.col("_mult") * dist(features, "centroid")).alias("err"),
-        )
-        noise_agg = (
-            _assign(
-                rep_labels.where(F.col("cluster_id").isNull()).select(features, "_mult"),
-                _centroid_row(cents, "cluster_id", "centroid"),
-                v_col=features,
-                dist=dist,
-                dist_col="distance",
-            )
-            .agg(
-                F.coalesce(F.sum("_mult"), F.lit(0)).alias("n_noise"),
-                F.coalesce(F.sum(F.col("_mult") * F.col("distance")), F.lit(0.0)).alias("nerr"),
-            )
-        )
-        # ONE action per ε: both 1-row aggregates ride a single
-        # crossJoin job (replacing isEmpty + two .first()s — the
-        # per-ε cost is job-scheduling latency, not data)
-        stats = cluster_agg.crossJoin(noise_agg).first()
-        rep_labels.unpersist()
-        if not stats["n_clusters"]:
-            # zero clusters at this ε: every original row is noise
-            # and there is no centroid to measure error against
-            return (float(eps), 0, n_total, 0.0, inf, inf)
-        ce = float(stats["err"] or 0.0)
-        ne = float(stats["nerr"] or 0.0)
-        return (
-            float(eps),
-            int(stats["n_clusters"]),
-            int(stats["n_noise"]),
-            ce,
-            ne,
-            ce + ne,
-        )
+        try:
+            # built here, once: left lazy, each of the five reads of rows
+            # in the metrics action runs its own job to build the cache,
+            # and the error sums then differed in the last bit between runs
+            rows.count()
+            gen = _generalize(rows, features, dist, dim, "_mult")
+            return (float(eps), *_loss(rows, gen, "_mult", "_solo").first())
+        finally:
+            rows.unpersist()
 
     def twin():
         from dbscan_pyspark_spark.compat import concurrent_map_ordered
 
-        nonlocal n_total
-        n_total = points.count()  # read by _one_eps
         return concurrent_map_ordered(_one_eps, sorted(eps_values))
 
     try:

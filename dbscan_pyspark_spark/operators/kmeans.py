@@ -64,14 +64,16 @@ def _quantized_rows(
 ) -> DataFrame:
     """``df`` plus ``out_col``: ``vec_col`` on the integer grid (cast to
     ``array<bigint>`` when ``scale`` is None), NULL and empty vectors
-    dropped — the one row filter training and inference share."""
+    dropped — the one row filter training and inference share. It
+    filters the source column: a filter on ``out_col`` is pushed below
+    the projection and would evaluate the quantizing lambda again."""
     q = (
         _quantized(vec_col, scale)
         if scale is not None
         else F.col(vec_col).cast("array<bigint>")
     )
-    return df.withColumn(out_col, q).where(
-        F.col(out_col).isNotNull() & (F.size(out_col) > 0)
+    return df.where(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)).withColumn(
+        out_col, q
     )
 
 

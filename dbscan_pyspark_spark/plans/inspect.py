@@ -53,9 +53,11 @@ def scan_columns(df: DataFrame) -> list[list[str]]:
 
 
 def broadcast_join_count(df: DataFrame) -> int:
-    return _executed_plan_str(df).count("BroadcastHashJoin") + _executed_plan_str(
-        df
-    ).count("BroadcastNestedLoopJoin")
+    """BroadcastHashJoin and BroadcastNestedLoopJoin nodes in the plan
+    ``df`` last executed (``_plan_nodes``' walk), so the plans of cached
+    relations are not counted. Classic sessions only."""
+    joins = ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
+    return sum(p.nodeName() in joins for p in _plan_nodes(df))
 
 
 def shuffle_count(df: DataFrame) -> int:

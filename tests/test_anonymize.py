@@ -345,11 +345,12 @@ def test_driver_paths_avoid_list_frames_and_noise_join(spark, monkeypatch):
         built.append(ddl)
         return local_frame(spark_, rows, ddl)
 
-    monkeypatch.setattr(_anonymize_module(), "_assign", _no_assign)
     monkeypatch.setattr(SparkSession, "createDataFrame", _no_lists)
     monkeypatch.setattr(kmember, "_local_frame", _spy)
 
-    metrics, best = eps_sweep(df, [0.01, 2.0, 4.0], 4)
+    with monkeypatch.context() as m:
+        m.setattr(_anonymize_module(), "_assign", _no_assign)
+        metrics, best = eps_sweep(df, [0.01, 2.0, 4.0], 4)
     assert len(metrics.collect()) == 3 and best in (2.0, 4.0)
     loss = information_loss(df, all_noise).first()
     assert (loss["n_clusters"], loss["n_noise"]) == (0, df.count())

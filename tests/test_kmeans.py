@@ -94,6 +94,21 @@ def test_empty_input(spark):
     assert kmeans_quantized(df, k=3, n_iter=2).count() == 0
 
 
+def test_quantized_rows_quantize_once(spark):
+    """The row filter reads the source column, so the optimized plan
+    evaluates the quantizing lambda once per row; a filter on its output
+    is pushed below the projection and repeats the lambda."""
+    df = spark.createDataFrame(
+        [(1, [0.5, 1.0]), (2, None), (3, []), (4, [2.0, 3.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = kmeans._quantized_rows(df, "embedding", 1000)
+    assert q._jdf.queryExecution().optimizedPlan().toString().count("transform(") == 1
+    assert sorted((r["vec_id"], r["_v"]) for r in q.collect()) == [
+        (1, [500, 1000]), (4, [2000, 3000])
+    ]
+
+
 def test_assignment_is_map_side_only(spark, monkeypatch):
     """The final assignment pass must not shuffle the points: the
     centroids join as one broadcast row and the argmin is one

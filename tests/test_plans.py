@@ -89,6 +89,26 @@ def test_assign_nearest_broadcasts_centroids(spark):
     assert not [e for e in exchanges if e.startswith("hashpartitioning")], exchanges
 
 
+def test_broadcast_join_count_counts_each_join_once(spark):
+    """One broadcast join counts 1 before and after it runs, and over a
+    cached relation: the AQE-final tree is walked, not its string, which
+    also holds the initial plan and the cached relation's plan."""
+    facts = spark.range(1000).withColumn("k", F.col("id") % 10)
+    dims = spark.range(10).withColumnRenamed("id", "k")
+    joined = facts.join(F.broadcast(dims), "k")
+    assert broadcast_join_count(joined) == 1
+    joined.collect()
+    assert broadcast_join_count(joined) == 1
+    cached = dims.persist()
+    try:
+        cached.count()
+        over_cache = facts.join(F.broadcast(cached), "k")
+        over_cache.collect()
+        assert broadcast_join_count(over_cache) == 1
+    finally:
+        cached.unpersist()
+
+
 def test_codegen_active_on_agg_path(spark):
     import __spark_entry__ as m
 
