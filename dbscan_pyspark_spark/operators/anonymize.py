@@ -134,11 +134,18 @@ def _generalize(
     distance to it, and ``_noise``. ``rows`` carries ``features`` and
     ``cluster_id``, NULL for noise. A clustered row takes its own
     cluster's ``w``-weighted centroid (``_means``). A noise row takes the
-    nearest centroid and its cluster id (``kmeans._assign`` against
-    ``_centroid_row``, ties to the lower id); with no cluster at all it
-    has none to take and is dropped."""
+    nearest centroid and its cluster id (``kmeans._assign`` against the
+    one centroid row, ties to the lower id); with no cluster at all the
+    row is empty and the noise row keeps a NULL cluster id, ``_d`` and
+    centroid."""
     own = rows.where(F.col("cluster_id").isNotNull())
     cents = _means(own, features, "cluster_id", dim, w).select("cluster_id", "centroid")
+    # ``_centroid_row`` without its empty-row filter, which would drop
+    # every noise row when there is no cluster
+    table = cents.agg(
+        F.collect_list(F.struct(F.col("cluster_id").alias("cid"), F.col("centroid").alias("c")))
+        .alias("_c")
+    )
     clustered = own.join(cents, "cluster_id").select(
         "*", dist(features, "centroid").alias("_d"), F.lit(False).alias("_noise")
     )
@@ -146,7 +153,7 @@ def _generalize(
     # argmin into the cross join's condition, running it twice
     noise = _assign(
         rows.where(F.col("cluster_id").isNull()).drop("cluster_id"),
-        _centroid_row(cents, "cluster_id", "centroid"),
+        table,
         v_col=features,
         out_col="cluster_id",
         dist=dist,
@@ -209,14 +216,25 @@ def anonymize(
     Output: DataFrame(id, features, an_features, sensitive, cluster_id,
     is_noise) — the sensitive attribute rides through untouched
     (``DBSCAN.py:84``).
+
+    Labels with no cluster at all leave no centroid to generalize to:
+    the action over the result fails with a readable error, instead of
+    publishing raw quasi-identifiers or dropping every row. The check is
+    an expression on ``an_features``, so it runs no job of its own.
     """
     if dim is None:
         dim = _dim_of(points, features)
     rows = points.join(labels.select(id_col, "cluster_id", "is_noise"), id_col)
+    no_cluster = F.raise_error(
+        F.lit("anonymize: the labels hold no cluster (every point is noise), so there is no "
+              "centroid to generalize to; choose a larger eps or a smaller min_pts")
+    )
     return _generalize(rows, features, _metric_fn(metric, dim), dim).select(
         id_col,
         features,
-        F.col("centroid").alias("an_features"),
+        F.when(F.col("centroid").isNull(), no_cluster)
+        .otherwise(F.col("centroid"))
+        .alias("an_features"),
         sensitive_col,
         "cluster_id",
         "is_noise",

@@ -490,6 +490,18 @@ def throttle_dedup(
     return events.withColumn(keep_col, keep)
 
 
+def _ewma_fold(vals, alpha: float, n: int = 0, ew: float | None = None):
+    """The state ``(n, ewma)`` after folding ``vals``, in order, into
+    ``(n, ew)`` by ``e <- alpha*v + (1-alpha)*e`` (the first value seeds
+    ``e``): the one recurrence of ``user_ewma(method='exact')`` and
+    ``streaming_user_ewma``. Callers drop NULL values first."""
+    for v in vals:
+        v = float(v)
+        ew = v if ew is None else alpha * v + (1.0 - alpha) * ew
+        n += 1
+    return n, ew
+
+
 def user_ewma(
     events: DataFrame,
     alpha: float = 0.5,
@@ -540,10 +552,7 @@ def user_ewma(
         if method == "pandas":
             ew = float(vals.ewm(alpha=alpha, adjust=False).mean().iloc[-1])
         else:
-            ew = None
-            for v in vals:
-                v = float(v)
-                ew = v if ew is None else alpha * v + (1.0 - alpha) * ew
+            _, ew = _ewma_fold(vals, alpha)
         return pd.DataFrame(
             {
                 user_col: [pdf[user_col].iloc[0]],

@@ -17,12 +17,9 @@ Scale/state design:
   scale where retaining shingle sets would itself be corpus-sized.
   Batch-internal dedup does keep exact shingle verification (the batch is
   small — shingles are in hand).
-- The store/output are written to ``ingest_batch=<id>`` partition
-  directories with per-partition overwrite, the idempotent-``foreachBatch``
-  pattern: a replayed micro-batch rewrites its own partitions bit-for-bit
-  instead of appending duplicates. The store read excludes the current
-  batch id, so a replay cannot match a document against its own failed
-  attempt.
+- The store and the output are ``ingest_batch=<id>`` partitions, written
+  and read through the micro-batch seam (``_batches``), which holds the
+  replay discipline.
 - Band join against the store is an equi-join on (band, band_hash); the
   store side prunes to candidate buckets, so state lookups stay
   proportional to collisions, not corpus size.
@@ -30,29 +27,22 @@ Scale/state design:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators.dedup import minhash_signatures, signature_match
 from dbscan_pyspark_spark.operators.pipeline import near_dup_dedup
+from dbscan_pyspark_spark.streaming._batches import (
+    micro_batch,
+    read_partitions,
+    start,
+    write_partition,
+)
 
 
-def _read_store(spark, store_dir: str, before_batch: int) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        store = spark.read.parquet(store_dir)
-    except AnalysisException as exc:
-        # ONLY path-not-found means "first batch, no store yet". Anything
-        # else (corrupt partition, permissions, transient FS fault) must
-        # fail the batch so the stream retries — silently skipping the
-        # store would admit near-dups of already-accepted docs forever.
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None
-        raise
-    return store.where(F.col("ingest_batch") < F.lit(before_batch))
-
-
+@micro_batch
 def process_near_dup_batch(
     batch: DataFrame,
     batch_id: int,
@@ -68,38 +58,34 @@ def process_near_dup_batch(
     """One micro-batch of the streaming near-dup filter (pure batch code,
     unit-testable without a stream; ``streaming_near_dup_filter`` wraps it
     in ``foreachBatch``)."""
-    if batch.isEmpty():
-        return
     spark = batch.sparkSession
-    batch = batch.persist()
     sig = minhash_signatures(batch, num_hashes, n, text_col, id_col).persist()
+    try:
+        store = read_partitions(spark, store_dir, batch_id)
+        if store is not None and not store.isEmpty():
+            dup_vs_store = signature_match(
+                sig, store, num_hashes, threshold, rows_per_band, id_col
+            )
+            survivors0 = batch.join(dup_vs_store, id_col, "left_anti")
+        else:
+            survivors0 = batch
 
-    store = _read_store(spark, store_dir, batch_id)
-    if store is not None and not store.isEmpty():
-        dup_vs_store = signature_match(
-            sig, store, num_hashes, threshold, rows_per_band, id_col
-        )
-        survivors0 = batch.join(dup_vs_store, id_col, "left_anti")
-    else:
-        survivors0 = batch
+        kept = near_dup_dedup(
+            survivors0,
+            threshold=threshold,
+            num_hashes=num_hashes,
+            rows_per_band=rows_per_band,
+            n=n,
+            text_col=text_col,
+            id_col=id_col,
+        ).drop("dup_group", "dup_group_size")
 
-    kept = near_dup_dedup(
-        survivors0,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        rows_per_band=rows_per_band,
-        n=n,
-        text_col=text_col,
-        id_col=id_col,
-    ).drop("dup_group", "dup_group_size")
-
-    kept.write.mode("overwrite").parquet(f"{output_dir}/ingest_batch={batch_id}")
-    kept_ids = spark.read.parquet(f"{output_dir}/ingest_batch={batch_id}").select(id_col)
-    sig.join(kept_ids, id_col).write.mode("overwrite").parquet(
-        f"{store_dir}/ingest_batch={batch_id}"
-    )
-    sig.unpersist()
-    batch.unpersist()
+        kept_ids = spark.read.parquet(
+            write_partition(kept, output_dir, batch_id)
+        ).select(id_col)
+        write_partition(sig.join(kept_ids, id_col), store_dir, batch_id)
+    finally:
+        sig.unpersist()
 
 
 def streaming_near_dup_filter(
@@ -118,26 +104,20 @@ def streaming_near_dup_filter(
     DataFrame; returns the ``StreamingQuery``. Survivors land under
     ``output_dir``, accepted-doc signatures under ``store_dir``, both
     partitioned by ``ingest_batch`` for idempotent replay."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_near_dup_batch(
-            batch,
-            batch_id,
-            store_dir,
-            output_dir,
+    return start(
+        docs,
+        checkpoint_dir,
+        partial(
+            process_near_dup_batch,
+            store_dir=store_dir,
+            output_dir=output_dir,
             threshold=threshold,
             num_hashes=num_hashes,
             rows_per_band=rows_per_band,
             n=n,
             text_col=text_col,
             id_col=id_col,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -212,6 +192,7 @@ def vector_match_vs_store(
     )
 
 
+@micro_batch
 def process_semantic_dedup_batch(
     batch: DataFrame,
     batch_id: int,
@@ -238,52 +219,22 @@ def process_semantic_dedup_batch(
     State is one row per accepted vector (id + dim floats + norm —
     the SemDeDup state is inherently the embedding corpus; bands are
     recomputed map-side from the fixed-seed plan-literal hyperplanes,
-    so the store never materializes signatures). Output/store land in
-    ``ingest_batch=<id>`` partition dirs with per-partition overwrite
-    — the idempotent-``foreachBatch`` replay pattern; the store read
-    excludes the current batch id, so a replayed batch cannot match
-    against its own failed attempt."""
-    if batch.isEmpty():
-        return
+    so the store never materializes signatures). Output and store are
+    ``ingest_batch=<id>`` partitions (``_batches``)."""
     spark = batch.sparkSession
     # a NULL/empty embedding can never match anything downstream
     # (_cosine_from_norms yields NULL, so it is neither deduped nor
     # dedup-able) — accepting one would write it to the vector store
     # PERMANENTLY; and inferring dim from an unfiltered first row
-    # crashes on int(None). Drop them before anything persists.
-    batch = batch.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
-    ).persist()
-    try:
-        _process_semantic_dedup_batch_inner(
-            batch, batch_id, store_dir, output_dir, threshold,
-            n_planes, rows_per_band, seed, plane_scale, id_col, vec_col,
-        )
-    finally:
-        batch.unpersist()
-
-
-def _process_semantic_dedup_batch_inner(
-    batch: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    output_dir: str,
-    threshold: float,
-    n_planes: int,
-    rows_per_band: int,
-    seed: int,
-    plane_scale: int | None,
-    id_col: str,
-    vec_col: str,
-) -> None:
-    spark = batch.sparkSession
+    # crashes on int(None)
+    batch = batch.where(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
     dim_row = batch.select(F.size(vec_col).alias("d")).first()
     if dim_row is None:
         # every row carried a NULL/empty embedding — nothing acceptable
         return
     dim = int(dim_row["d"])
 
-    store = _read_store(spark, store_dir, batch_id)
+    store = read_partitions(spark, store_dir, batch_id)
     if store is not None and not store.isEmpty():
         dup_vs_store = vector_match_vs_store(
             batch,
@@ -322,15 +273,10 @@ def _process_semantic_dedup_batch_inner(
         plane_scale=plane_scale,
     ).drop("dup_group", "dup_group_size")
 
-    kept.write.mode("overwrite").parquet(
-        f"{output_dir}/ingest_batch={batch_id}"
-    )
     kept_back = spark.read.parquet(
-        f"{output_dir}/ingest_batch={batch_id}"
+        write_partition(kept, output_dir, batch_id)
     ).select(id_col, vec_col)
-    kept_back.write.mode("overwrite").parquet(
-        f"{store_dir}/ingest_batch={batch_id}"
-    )
+    write_partition(kept_back, store_dir, batch_id)
 
 
 def streaming_semantic_dedup_filter(
@@ -350,13 +296,13 @@ def streaming_semantic_dedup_filter(
     ``vectors`` DataFrame; returns the ``StreamingQuery``. Survivors
     land under ``output_dir``, accepted vectors under ``store_dir``,
     both partitioned by ``ingest_batch`` for idempotent replay."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_semantic_dedup_batch(
-            batch,
-            batch_id,
-            store_dir,
-            output_dir,
+    return start(
+        vectors,
+        checkpoint_dir,
+        partial(
+            process_semantic_dedup_batch,
+            store_dir=store_dir,
+            output_dir=output_dir,
             threshold=threshold,
             n_planes=n_planes,
             rows_per_band=rows_per_band,
@@ -364,15 +310,11 @@ def streaming_semantic_dedup_filter(
             plane_scale=plane_scale,
             id_col=id_col,
             vec_col=vec_col,
-        )
-
-    return (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
+
+@micro_batch
 def process_exact_dedup_batch(
     batch: DataFrame,
     batch_id: int,
@@ -396,42 +338,32 @@ def process_exact_dedup_batch(
     content. NULL-text rows are dropped up front (a NULL fingerprint
     joins with nothing, so it would be re-accepted every batch and
     poison the store — the semantic filter's NULL-embedding rule).
-    Output/store land in ``ingest_batch=<id>`` partition dirs with
-    per-partition overwrite (idempotent-``foreachBatch`` replay); the
-    store read excludes the current batch id, so a replayed batch
-    cannot match against its own failed attempt."""
-    if batch.isEmpty():
-        return
+    Output and store are ``ingest_batch=<id>`` partitions
+    (``_batches``)."""
     spark = batch.sparkSession
     from dbscan_pyspark_spark.functions.text import fingerprint
 
-    batch = batch.where(F.col(text_col).isNotNull()).persist()
-    try:
-        fps = batch.select(F.col(id_col), fingerprint(text_col).alias("_fp"))
-        store = _read_store(spark, store_dir, batch_id)
-        if store is not None and not store.isEmpty():
-            fresh = fps.join(store.select("_fp"), "_fp", "left_anti")
-        else:
-            fresh = fps
-        winners = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-        kept = batch.join(winners.select(id_col), id_col, "left_semi")
-        if kept.isEmpty():
-            # every row matched the store (or was NULL-text): skipping
-            # the writes is replay-safe — a replayed all-dup batch
-            # recomputes as all-dup — and avoids a schema-less empty
-            # parquet partition the read-back cannot infer
-            return
-        kept.write.mode("overwrite").parquet(
-            f"{output_dir}/ingest_batch={batch_id}"
-        )
-        kept_ids = spark.read.parquet(
-            f"{output_dir}/ingest_batch={batch_id}"
-        ).select(id_col)
-        fps.join(kept_ids, id_col, "left_semi").select("_fp").write.mode(
-            "overwrite"
-        ).parquet(f"{store_dir}/ingest_batch={batch_id}")
-    finally:
-        batch.unpersist()
+    batch = batch.where(F.col(text_col).isNotNull())
+    fps = batch.select(F.col(id_col), fingerprint(text_col).alias("_fp"))
+    store = read_partitions(spark, store_dir, batch_id)
+    if store is not None and not store.isEmpty():
+        fresh = fps.join(store.select("_fp"), "_fp", "left_anti")
+    else:
+        fresh = fps
+    winners = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
+    kept = batch.join(winners.select(id_col), id_col, "left_semi")
+    if kept.isEmpty():
+        # every row matched the store (or was NULL-text): skipping
+        # the writes is replay-safe — a replayed all-dup batch
+        # recomputes as all-dup — and avoids a schema-less empty
+        # parquet partition the read-back cannot infer
+        return
+    kept_ids = spark.read.parquet(
+        write_partition(kept, output_dir, batch_id)
+    ).select(id_col)
+    write_partition(
+        fps.join(kept_ids, id_col, "left_semi").select("_fp"), store_dir, batch_id
+    )
 
 
 def streaming_exact_dedup_filter(
@@ -446,16 +378,14 @@ def streaming_exact_dedup_filter(
     DataFrame; returns the ``StreamingQuery``. Survivors land under
     ``output_dir``, accepted fingerprints under ``store_dir``, both
     partitioned by ``ingest_batch`` for idempotent replay."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_exact_dedup_batch(
-            batch, batch_id, store_dir, output_dir,
-            text_col=text_col, id_col=id_col,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        docs,
+        checkpoint_dir,
+        partial(
+            process_exact_dedup_batch,
+            store_dir=store_dir,
+            output_dir=output_dir,
+            text_col=text_col,
+            id_col=id_col,
+        ),
     )

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbscan_pyspark_spark.streaming._batches import micro_batch, start
+
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -90,7 +92,8 @@ def streaming_user_ewma(
     per-user exponentially-weighted moving average of ``value``.
 
     The EWMA recurrence (``e <- alpha*v + (1-alpha)*e`` in event-time
-    order) is order-dependent — no watermarked windowed aggregation can
+    order, NULL values skipped; ``operators.events._ewma_fold``, shared
+    with the batch ``user_ewma``) is order-dependent — no watermarked windowed aggregation can
     express it — so this is the genuine custom-state path: Arrow-batched
     per-group pandas transitions with the (count, ewma) state carried
     across micro-batches by the state store. Emits one updated row per
@@ -99,18 +102,18 @@ def streaming_user_ewma(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    from dbscan_pyspark_spark.operators.events import _ewma_fold
+
     def fn(key, pdfs, state: GroupState):
         n, ew = state.get if state.exists else (0, None)
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        # tie-break equal timestamps by event_id where available:
-        # the fold is order-dependent, and an unstable sort on a
-        # tied key would make results depend on arrival order
+        # NULL values carry no signal: dropped before the fold, as
+        # user_ewma drops them. Tie-break equal timestamps by event_id
+        # where available: the fold is order-dependent, and an unstable
+        # sort on a tied key would make results depend on arrival order
         _ord = [ts_col] + (["event_id"] if "event_id" in pdf.columns else [])
-        pdf = pdf.sort_values(_ord)
-        for v in pdf[value_col]:
-            v = float(v)
-            ew = v if ew is None else alpha * v + (1.0 - alpha) * ew
-            n += 1
+        pdf = pdf[pdf[value_col].notna()].sort_values(_ord)
+        n, ew = _ewma_fold(pdf[value_col], alpha, n, ew)
         if ew is not None:
             state.update((n, float(ew)))
             yield pd.DataFrame(
@@ -325,11 +328,10 @@ def streaming_materialized_agg(
     day's partition, not the table.
     """
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from dbscan_pyspark_spark.sources.io import upsert_parquet
+    from dbscan_pyspark_spark.sources.io import upsert_parquet
 
-        if batch_df.isEmpty():
-            return
+    @micro_batch
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(
             batch_df.sparkSession,
             path,
@@ -338,13 +340,7 @@ def streaming_materialized_agg(
             partition_col=partition_col,
         )
 
-    return (
-        agg_stream.writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(agg_stream, checkpoint_dir, _sink, output_mode="update")
 
 
 def streaming_kmeans_assign(
@@ -397,9 +393,8 @@ def streaming_dbscan_assign(
     """
     from dbscan_pyspark_spark.operators.dbscan import dbscan_assign
 
+    @micro_batch
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         out = dbscan_assign(
             batch_df,
             trained_points,
@@ -411,12 +406,7 @@ def streaming_dbscan_assign(
         )
         out.write.mode("append").parquet(sink_path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, checkpoint_dir, _sink)
 
 
 def streaming_user_running_stats(

@@ -5,8 +5,8 @@ A growing corpus's postings partition PERFECTLY by ingest batch: a
 document arrives in exactly one micro-batch, and its (term, doc, tf)
 rows depend on no other document — so "upsert" is just writing the
 batch's postings (and per-doc lengths) to ``ingest_batch=<id>``
-partition dirs with overwrite, the same replay-idempotency discipline
-as every streaming sink here. No read-modify-write, no merge job, no
+partition dirs with overwrite, the replay discipline of every
+streaming sink here (``_batches``). No read-modify-write, no merge job, no
 stale-row hazard: a replayed batch rewrites only its own partitions.
 
 The corpus-GLOBAL retrieval quantities (document frequency, N, avgdl)
@@ -28,10 +28,15 @@ the index.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.streaming._batches import micro_batch, start, write_partition
 
+
+@micro_batch
 def process_index_batch(
     batch: DataFrame,
     batch_id: int,
@@ -47,29 +52,19 @@ def process_index_batch(
     content changed). Docs whose normalized text has no tokens carry
     no postings and no length row — identical to how the batch
     operators treat them (they don't count toward N/avgdl)."""
-    if batch.isEmpty():
-        return
     from dbscan_pyspark_spark.operators.search import (
         _terms,
         inverted_postings,
     )
 
-    batch = batch.persist()
-    try:
-        postings = inverted_postings(batch, text_col=text_col, id_col=id_col)
-        doclens = (
-            _terms(batch, text_col, id_col)
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).cast("long").alias("dl"))
-        )
-        postings.write.mode("overwrite").parquet(
-            f"{index_dir}/postings/ingest_batch={batch_id}"
-        )
-        doclens.write.mode("overwrite").parquet(
-            f"{index_dir}/doclens/ingest_batch={batch_id}"
-        )
-    finally:
-        batch.unpersist()
+    postings = inverted_postings(batch, text_col=text_col, id_col=id_col)
+    doclens = (
+        _terms(batch, text_col, id_col)
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).cast("long").alias("dl"))
+    )
+    write_partition(postings, f"{index_dir}/postings", batch_id)
+    write_partition(doclens, f"{index_dir}/doclens", batch_id)
 
 
 def streaming_postings_index(
@@ -83,17 +78,10 @@ def streaming_postings_index(
     returns the ``StreamingQuery``. Each micro-batch accretes one
     ``ingest_batch`` partition under ``<index_dir>/postings`` and
     ``<index_dir>/doclens``."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_index_batch(
-            batch, batch_id, index_dir, text_col=text_col, id_col=id_col
-        )
-
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        docs,
+        checkpoint_dir,
+        partial(process_index_batch, index_dir=index_dir, text_col=text_col, id_col=id_col),
     )
 
 

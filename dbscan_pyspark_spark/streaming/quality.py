@@ -7,12 +7,11 @@ static reference — categorical mix drift (``category_drift``) and a
 declarative expectation suite (``validate``) — and the per-batch
 verdict rows land in ``monitor_batch=<id>`` partition directories.
 
-State/idempotency design (same discipline as the streaming near-dup
-filter's signature store): the monitors keep NO streaming state — the
+State/idempotency design: the monitors keep NO streaming state — the
 reference side is a static relation, each batch is scored alone, and a
-replayed micro-batch overwrites its own partition bit-for-bit instead
-of appending duplicate verdicts. Monitor output is a plain parquet
-table any dashboard can read.
+replayed micro-batch overwrites its own partition (``_batches``)
+instead of appending duplicate verdicts. Monitor output is a plain
+parquet table any dashboard can read.
 
 Scale: the reference histogram / rule thresholds are tiny relations
 (values × counts, rules × scalars) — the per-batch cost is one pass
@@ -23,10 +22,20 @@ For a very large reference corpus, pre-aggregate it once and pass the
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.streaming._batches import (
+    micro_batch,
+    read_partitions,
+    start,
+    write_partition,
+)
 
+
+@micro_batch
 def process_drift_batch(
     batch: DataFrame,
     batch_id: int,
@@ -39,22 +48,11 @@ def process_drift_batch(
     unit-testable without a stream; ``streaming_drift_monitor`` wraps
     it in ``foreachBatch``). Writes category_drift(reference, batch)
     rows + batch_id to the batch's own partition (replay-idempotent)."""
-    if batch.isEmpty():
-        return
     from dbscan_pyspark_spark.operators.pipeline import category_drift
 
-    # persist: isEmpty + the drift agg each re-read the source
-    # otherwise (the process_near_dup_batch discipline)
-    batch = batch.persist()
-    try:
-        drift = category_drift(reference, batch, col, top_n=top_n).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        drift.write.mode("overwrite").parquet(
-            f"{output_dir}/monitor_batch={batch_id}"
-        )
-    finally:
-        batch.unpersist()
+    drift = category_drift(reference, batch, col, top_n=top_n)
+    drift = drift.withColumn("batch_id", F.lit(batch_id))
+    write_partition(drift, output_dir, batch_id, "monitor_batch")
 
 
 def streaming_drift_monitor(
@@ -70,21 +68,20 @@ def streaming_drift_monitor(
     hour's event/language/source mix still the training mix?).
 
     Returns the started StreamingQuery (availableNow trigger)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_drift_batch(
-            batch_df, batch_id, reference, col, output_dir, top_n
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        stream,
+        checkpoint_dir,
+        partial(
+            process_drift_batch,
+            reference=reference,
+            col=col,
+            output_dir=output_dir,
+            top_n=top_n,
+        ),
     )
 
 
+@micro_batch
 def process_ks_batch(
     batch: DataFrame,
     batch_id: int,
@@ -100,24 +97,14 @@ def process_ks_batch(
     integer-exact statistic and overwrites its own partition)."""
     from dbscan_pyspark_spark.operators.pipeline import ks_drift
 
-    # persist: the emptiness probe + the two side scans re-read the
-    # source otherwise (the process_drift_batch discipline)
-    batch = batch.persist()
-    try:
-        # a batch with NO non-null values (not just no rows — an
-        # optional column can arrive all-null) has no place on a CDF:
-        # skip it rather than let ks_drift's empty-side ValueError
-        # kill the whole StreamingQuery inside foreachBatch
-        if batch.where(F.col(col).isNotNull()).isEmpty():
-            return
-        ks = ks_drift(reference, batch, col).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        ks.write.mode("overwrite").parquet(
-            f"{output_dir}/monitor_batch={batch_id}"
-        )
-    finally:
-        batch.unpersist()
+    # a batch with NO non-null values (not just no rows — an optional
+    # column can arrive all-null) has no place on a CDF: skip it rather
+    # than let ks_drift's empty-side ValueError kill the whole
+    # StreamingQuery inside foreachBatch
+    if batch.where(F.col(col).isNotNull()).isEmpty():
+        return
+    ks = ks_drift(reference, batch, col).withColumn("batch_id", F.lit(batch_id))
+    write_partition(ks, output_dir, batch_id, "monitor_batch")
 
 
 def streaming_ks_monitor(
@@ -134,19 +121,14 @@ def streaming_ks_monitor(
     distribution, without choosing bins up front?).
 
     Returns the started StreamingQuery (availableNow trigger)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_ks_batch(batch_df, batch_id, reference, col, output_dir)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        stream,
+        checkpoint_dir,
+        partial(process_ks_batch, reference=reference, col=col, output_dir=output_dir),
     )
 
 
+@micro_batch
 def process_expectations_batch(
     batch: DataFrame,
     batch_id: int,
@@ -156,22 +138,10 @@ def process_expectations_batch(
     """One micro-batch of the expectations monitor: run the
     ``validate`` rule suite on the batch, write (rule, violations,
     passed, batch_id) to the batch's own partition."""
-    if batch.isEmpty():
-        return
     from dbscan_pyspark_spark.operators.pipeline import validate
 
-    # persist: isEmpty + the predicate agg + each unique rule's
-    # distinct count would otherwise re-read the source per trigger
-    batch = batch.persist()
-    try:
-        report = validate(batch, rules).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        report.write.mode("overwrite").parquet(
-            f"{output_dir}/monitor_batch={batch_id}"
-        )
-    finally:
-        batch.unpersist()
+    report = validate(batch, rules).withColumn("batch_id", F.lit(batch_id))
+    write_partition(report, output_dir, batch_id, "monitor_batch")
 
 
 def streaming_expectations(
@@ -183,56 +153,20 @@ def streaming_expectations(
     """Per-micro-batch data-quality gate: the streaming deployment of
     the batch ``validate`` suite (did this batch ship nulls, range
     breaks, duplicate keys?). Returns the started StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_expectations_batch(batch_df, batch_id, rules, output_dir)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        stream,
+        checkpoint_dir,
+        partial(process_expectations_batch, rules=rules, output_dir=output_dir),
     )
 
 
 def _latest_sketch(spark, store_dir: str, before_batch: int) -> DataFrame | None:
     """Most recent MG summary snapshot with sketch_batch < before_batch
-    (excluding the current id, so a replayed batch cannot merge against
-    its own failed attempt — the near-dup store discipline)."""
-    from pyspark.errors import AnalysisException
-
-    # probe the store path BEFORE reading: cold start (no snapshot dir
-    # yet) is an expected state, not an exception to string-match — a
-    # Spark version changing the PATH_NOT_FOUND message must not turn
-    # every first micro-batch into a hard failure. Hadoop FS, not
-    # os.path: store_dir is any Hadoop-FS URI at scale. Guarded: on
-    # Spark Connect there is no _jvm — fall through to the
-    # read-and-classify path below instead of failing every call.
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(store_dir)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return None
-    except Exception:
-        pass
-    try:
-        store = spark.read.parquet(store_dir)
-    except AnalysisException as exc:
-        # fallback for races (dir created empty between probe and
-        # read): match the error CLASS first, message text last
-        get_class = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", lambda: None
-        )
-        err_class = get_class() or ""
-        if (
-            "PATH_NOT_FOUND" in err_class
-            or "PATH_NOT_FOUND" in str(exc)
-            or "Path does not exist" in str(exc)
-        ):
-            return None
-        raise
-    prior = store.where(F.col("sketch_batch") < F.lit(before_batch))
+    (``_batches.read_partitions``: a replayed batch cannot merge against
+    its own failed attempt), or None before the first snapshot."""
+    prior = read_partitions(spark, store_dir, before_batch, "sketch_batch")
+    if prior is None:
+        return None
     last = prior.agg(F.max("sketch_batch").alias("b")).first()["b"]
     if last is None:
         return None
@@ -241,6 +175,7 @@ def _latest_sketch(spark, store_dir: str, before_batch: int) -> DataFrame | None
     )
 
 
+@micro_batch
 def process_heavy_hitters_batch(
     batch: DataFrame,
     batch_id: int,
@@ -266,31 +201,9 @@ def process_heavy_hitters_batch(
     previous snapshot is retained because a checkpoint replay of THIS
     batch must re-merge against it), so the store's directory count —
     and the per-batch listing cost — stays O(1) too."""
-    if batch.isEmpty():
-        return
-    spark = batch.sparkSession
-    # persist: isEmpty + the sketch pass would otherwise re-read the
-    # source (the process_drift_batch discipline)
-    batch = batch.persist()
-    try:
-        _write_heavy_hitters_snapshot(
-            spark, batch, batch_id, key_col, k, store_dir, weight_col
-        )
-    finally:
-        batch.unpersist()
-
-
-def _write_heavy_hitters_snapshot(
-    spark,
-    batch: DataFrame,
-    batch_id: int,
-    key_col: str,
-    k: int,
-    store_dir: str,
-    weight_col: str | None = None,
-) -> None:
     from dbscan_pyspark_spark.operators.pipeline import _mg_partials
 
+    spark = batch.sparkSession
     _, partials = _mg_partials(batch, key_col, int(k), weight_col)
     summary = partials.groupBy("_mg_key").agg(F.sum("_mg_c").alias("_mg_c"))
     prior = _latest_sketch(spark, store_dir, batch_id)
@@ -327,9 +240,7 @@ def _write_heavy_hitters_snapshot(
             .alias("_mg_c"),
         )
     )
-    snapshot.write.mode("overwrite").parquet(
-        f"{store_dir}/sketch_batch={batch_id}"
-    )
+    write_partition(snapshot, store_dir, batch_id, "sketch_batch")
     _prune_superseded_snapshots(store_dir, batch_id)
 
 
@@ -376,18 +287,16 @@ def streaming_heavy_hitters(
     crawler traps, bot bursts, one exploding source). Returns the
     started StreamingQuery (availableNow trigger); read the current
     answer with :func:`heavy_hitters_snapshot`."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_heavy_hitters_batch(
-            batch_df, int(batch_id), key_col, k, store_dir, weight_col
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        stream,
+        checkpoint_dir,
+        partial(
+            process_heavy_hitters_batch,
+            key_col=key_col,
+            k=k,
+            store_dir=store_dir,
+            weight_col=weight_col,
+        ),
     )
 
 
@@ -416,6 +325,7 @@ def heavy_hitters_snapshot(spark, store_dir: str) -> DataFrame:
 # ---- incremental Count-Min Sketch ------------------------------------
 
 
+@micro_batch
 def process_cms_batch(
     batch: "DataFrame",
     batch_id: int,
@@ -434,13 +344,9 @@ def process_cms_batch(
     batch operator's sketch over the full ingested corpus EXACTLY
     (pinned by test) — the same mergeability that makes CMS the
     distributed counting summary makes it the *streaming* one."""
-    if batch.isEmpty():
-        return
     from dbscan_pyspark_spark.operators.pipeline import count_min_sketch
 
-    count_min_sketch(batch, key_col, depth, width).write.mode(
-        "overwrite"
-    ).parquet(f"{store_dir}/ingest_batch={batch_id}")
+    write_partition(count_min_sketch(batch, key_col, depth, width), store_dir, batch_id)
 
 
 def streaming_cms(
@@ -454,17 +360,12 @@ def streaming_cms(
     """Maintain a Count-Min Sketch over a streaming frame; returns the
     ``StreamingQuery``. Each micro-batch adds one partition of cells;
     :func:`cms_snapshot` folds them into the live sketch."""
-
-    def _sink(batch_df: "DataFrame", batch_id: int) -> None:
-        process_cms_batch(
-            batch_df, batch_id, store_dir, key_col, depth, width
-        )
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        df,
+        checkpoint_dir,
+        partial(
+            process_cms_batch, store_dir=store_dir, key_col=key_col, depth=depth, width=width
+        ),
     )
 
 

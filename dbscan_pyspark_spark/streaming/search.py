@@ -6,7 +6,7 @@ set (banned phrases, eval-set fragments, policy strings); matching
 docs are quarantined with per-phrase evidence, survivors flow on.
 Stateless across batches — the probe set is a config artifact, not
 state — so unlike the dedup filters there is no store, only the
-idempotent ``ingest_batch=<id>`` partition-overwrite sink discipline.
+idempotent ``ingest_batch=<id>`` partition-overwrite sink (``_batches``).
 
 Per-batch the stream output is EXACTLY the batch operator's answer on
 that batch's rows (pinned by test): a doc is quarantined iff
@@ -15,10 +15,15 @@ that batch's rows (pinned by test): a doc is quarantined iff
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbscan_pyspark_spark.streaming._batches import micro_batch, start, write_partition
 
+
+@micro_batch
 def process_phrase_filter_batch(
     batch: DataFrame,
     batch_id: int,
@@ -42,39 +47,25 @@ def process_phrase_filter_batch(
     behind and a doc could surface in both sinks (review finding).
     An empty overwrite leaves a data-less ``_SUCCESS`` partition,
     which a parent-dir read skips harmlessly."""
-    if batch.isEmpty():
-        return
     spark = batch.sparkSession
     from dbscan_pyspark_spark.operators.search import phrase_search
 
-    batch = batch.persist()
+    probes_df = spark.createDataFrame(probes, "phrase_id int, phrase_text string")
+    hits = phrase_search(batch, probes_df, text_col=text_col, id_col=id_col)
+    # per_doc is consumed twice (both sink joins); without the
+    # persist each consumer re-runs the whole broadcast slot join
+    # + both anchor-vote shuffles
+    per_doc = hits.groupBy(id_col).agg(
+        F.min("phrase_id").alias("first_phrase_id"),
+        F.sum("n_occurrences").cast("long").alias("n_phrase_hits"),
+    ).persist()
     try:
-        probes_df = spark.createDataFrame(
-            probes, "phrase_id int, phrase_text string"
+        write_partition(batch.join(per_doc, id_col), flagged_dir, batch_id)
+        write_partition(
+            batch.join(per_doc.select(id_col), id_col, "left_anti"), output_dir, batch_id
         )
-        hits = phrase_search(
-            batch, probes_df, text_col=text_col, id_col=id_col
-        )
-        # per_doc is consumed twice (both sink joins); without the
-        # persist each consumer re-runs the whole broadcast slot join
-        # + both anchor-vote shuffles
-        per_doc = hits.groupBy(id_col).agg(
-            F.min("phrase_id").alias("first_phrase_id"),
-            F.sum("n_occurrences").cast("long").alias("n_phrase_hits"),
-        ).persist()
-        try:
-            flagged = batch.join(per_doc, id_col)
-            kept = batch.join(per_doc.select(id_col), id_col, "left_anti")
-            flagged.write.mode("overwrite").parquet(
-                f"{flagged_dir}/ingest_batch={batch_id}"
-            )
-            kept.write.mode("overwrite").parquet(
-                f"{output_dir}/ingest_batch={batch_id}"
-            )
-        finally:
-            per_doc.unpersist()
     finally:
-        batch.unpersist()
+        per_doc.unpersist()
 
 
 def streaming_phrase_filter(
@@ -91,21 +82,15 @@ def streaming_phrase_filter(
     ``output_dir``, quarantined docs (with evidence columns) under
     ``flagged_dir``, both partitioned by ``ingest_batch`` for
     idempotent replay."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_phrase_filter_batch(
-            batch,
-            batch_id,
-            probes,
-            output_dir,
-            flagged_dir,
+    return start(
+        docs,
+        checkpoint_dir,
+        partial(
+            process_phrase_filter_batch,
+            probes=probes,
+            output_dir=output_dir,
+            flagged_dir=flagged_dir,
             text_col=text_col,
             id_col=id_col,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )

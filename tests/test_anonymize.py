@@ -132,6 +132,21 @@ def test_information_loss_and_sweep(spark):
     assert best in (2.0, 4.0)
 
 
+def test_anonymize_refuses_an_all_noise_level(spark):
+    """With every point noise there is no centroid to generalize to:
+    the anonymized release raises a readable error instead of silently
+    dropping every row, while information_loss still reports the
+    reference's zero-cluster row."""
+    rng = random.Random(5)
+    pts = [(i, [rng.uniform(0, 100), rng.uniform(0, 100)], i % 3) for i in range(20)]
+    df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
+    labels = dbscan(df, eps=0.01, min_pts=4)
+    with pytest.raises(Exception, match="labels hold no cluster"):
+        anonymize(df, labels).collect()
+    loss = information_loss(df, labels).first()
+    assert tuple(loss) == (0, 20, 0.0, float("inf"), float("inf"))
+
+
 def _dbscan_module():
     import importlib
 

@@ -412,7 +412,7 @@ def test_user_ewma_methods_agree(spark, sf_dir):
 def test_user_ewma_matches_streaming_final_state(spark, sf_dir):
     """The batch operator and the streaming applyInPandasWithState twin
     compute the same recurrence — single-batch streaming final state
-    must equal the batch answer."""
+    must equal the batch answer, a NULL value included: both skip it."""
     import json
     import tempfile
 
@@ -431,6 +431,8 @@ def test_user_ewma_matches_streaming_final_state(spark, sf_dir):
         .toJSON()
         .collect()
     )
+    first = json.loads(sample[0])
+    sample.append(json.dumps({**first, "event_id": 10**9, "value": None}))
     ev = spark.read.json(spark.sparkContext.parallelize(sample)).withColumn(
         "ts", F.to_timestamp("ts")
     )
@@ -448,16 +450,17 @@ def test_user_ewma_matches_streaming_final_state(spark, sf_dir):
         )
         q.awaitTermination(120)
     got = {
-        r["user_id"]: r["ewma"]
+        r["user_id"]: (r["n_events"], r["ewma"])
         for r in spark.sql("SELECT * FROM t_batch_vs_stream_ewma").collect()
     }
     batch = {
-        r["user_id"]: r["ewma"]
+        r["user_id"]: (r["n_events"], r["ewma"])
         for r in user_ewma(ev, alpha=0.5, method="exact").collect()
     }
     assert got.keys() == batch.keys()
     for u in got:
-        assert got[u] == pytest.approx(batch[u], rel=1e-12)
+        assert got[u][0] == batch[u][0]
+        assert got[u][1] == pytest.approx(batch[u][1], rel=1e-12)
 
 
 # ------------------------------------------------- partition invariance

@@ -85,6 +85,29 @@ def test_near_dup_batch_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(store).count() == 1
 
 
+def test_near_dup_batch_failure_releases_cached_frames(spark, tmp_path, monkeypatch):
+    """A batch whose dedup job fails must not leave the batch or its
+    signatures persisted for the rest of the session. The injected
+    failure reads its input first, so both cached frames are built
+    (the signatures through the store match) before it raises."""
+    from dbscan_pyspark_spark.streaming import dedup
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    b1 = spark.createDataFrame([(1, BASE)], "doc_id long, text string")
+    dedup.process_near_dup_batch(b1, 0, store, out, threshold=0.4)
+
+    def boom(df, **kwargs):
+        df.count()
+        raise RuntimeError("dedup failed")
+
+    monkeypatch.setattr(dedup, "near_dup_dedup", boom)
+    b2 = spark.createDataFrame([(2, BASE + " bis")], "doc_id long, text string")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="dedup failed"):
+        dedup.process_near_dup_batch(b2, 1, store, out, threshold=0.4)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_streaming_near_dup_filter_end_to_end(spark, tmp_path):
     from dbscan_pyspark_spark.streaming.dedup import streaming_near_dup_filter
 
